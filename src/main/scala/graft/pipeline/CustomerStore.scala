@@ -30,6 +30,15 @@ import org.apache.spark.sql.functions._
   * only the winner's state. Disjoint inserts/acks therefore both land;
   * racing writers can never tear the table. Readers are unaffected:
   * they see the last promoted state (snapshot isolation per scan).
+  *
+  * Skipping manifest: every commit stages per-file stats under
+  * `_stats/commit-<v>` (zones, KMV sample, bloom words, evolved-column
+  * extrema), and each instance consults them through one driver-
+  * resident [[StatsSnapshot]] — bloom, zone and sample lookups run no
+  * Spark job. The snapshot holds one entry per file basename in the
+  * manifest history (the set the `_stats` views read), up to ~18 KiB
+  * per entry at the default 2^17 bloom bits: 16 KiB of bloom words
+  * plus the 128-entry sample.
   */
 class CustomerStore(protected val spark: SparkSession, path: String,
     commitClock: () => Long = () => System.currentTimeMillis(),
@@ -45,6 +54,21 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     */
   private val promotionLock: Object =
     CustomerStore.promotionLockFor(new java.io.File(path).getAbsolutePath)
+
+  /** This instance's driver-resident view of the `_stats` manifest (see
+    * [[StatsSnapshot]]); every skipping consult reads it, none runs a
+    * Spark job.
+    */
+  private val manifest = new StatsSnapshot(new java.io.File(path, StatsManifest),
+    () => currentVersion(), readParquetRows(_, statsSchema))
+  /** `_stats` rows computed by [[stageStats]], keyed by staging dir until
+    * the commit point, then by final version until promotion hands them
+    * to [[manifest]].
+    */
+  private val stagedStats =
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[org.apache.spark.sql.Row]]()
+  private val committedStats =
+    new java.util.concurrent.ConcurrentHashMap[Long, Seq[org.apache.spark.sql.Row]]()
 
   // Finish (or discard) any commit interrupted by a crash before the
   // store is first read — see markUploaded's commit protocol.
@@ -96,32 +120,34 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * (the basename no longer exists), so vectors never have to be
     * rewritten on data commits.
     */
-  def deletionVectors(): DataFrame =
-    if (hasDeletes)
-      spark.read.schema(dvSchema)
-        .parquet(new java.io.File(path, Deletes).toString)
+  def deletionVectors(): DataFrame = {
+    val files = deletionVectorFiles()
+    if (files.nonEmpty)
+      spark.read.schema(dvSchema).parquet(files: _*)
         .select(col("file"), col("email"))
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dvSchema)
+  }
 
   /** (total vector rows, rows still matching a live data file) — the
     * live count is what merge-on-read reads pay for; compaction
-    * materializes the deletes and drives it back to zero.
+    * materializes the deletes and drives it back to zero. Read on the
+    * driver (vectors are metadata-scale, like the manifest), no job.
     */
   def deletionVectorStats(): (Long, Long) = {
-    val dv = deletionVectors().cache()
-    try {
-      val total = dv.count()
-      if (total == 0) return (0L, 0L)
-      val liveNames = (livePendingFiles().map(_._1) ++ {
-        val d = new java.io.File(path, "uploaded=true")
-        if (d.exists()) d.listFiles().toSeq.filter(_.getName.endsWith(".parquet")).map(_.getName)
-        else Seq.empty
-      })
-      import spark.implicits._
-      val live = dv.join(liveNames.toDF("file"), Seq("file"), "left_semi").count()
-      (total, live)
-    } finally dv.unpersist(): Unit
+    val files = deletionVectorFiles()
+    if (files.isEmpty) return (0L, 0L)
+    lazy val liveNames = (livePendingFiles().map(_._1) ++ {
+      val d = new java.io.File(path, "uploaded=true")
+      if (d.exists()) d.listFiles().toSeq.filter(_.getName.endsWith(".parquet")).map(_.getName)
+      else Seq.empty
+    }).toSet
+    var total, live = 0L
+    files.foreach(f => readParquetRows(f, dvSchema).foreach { r =>
+      total += 1
+      if (!r.isNullAt(0) && liveNames(r.getString(0))) live += 1
+    })
+    (total, live)
   }
 
   /** Anti-join a `_file`-carrying frame against the deletion vectors
@@ -1210,19 +1236,12 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       .groupBy(col("_f")).agg(count(lit(1)).as("_n")).collect()
       .map(r => (new java.io.File(new java.net.URI(r.getString(0)).getPath),
         r.getLong(1)))
-    def footerRows(f: java.io.File): Long = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-          new org.apache.hadoop.conf.Configuration(false)))
-      try r.getRecordCount finally r.close()
-    }
     touched.map { case (f, hits) =>
       // Hadoop's LocalFileSystem keeps a `.<name>.crc` sidecar; a swap
       // must retire it with the bytes it checksums or readers fail
       // with ChecksumException against the replacement.
       val crc = new java.io.File(f.getParentFile, s".${f.getName}.crc")
-      if (footerRows(f) == hits) {
+      if (parquetRowCount(Seq(f.getAbsolutePath)) == hits) {
         require(f.delete(), s"purge: could not remove fully-excised $f")
         if (crc.exists()) crc.delete(): Unit
       } else {
@@ -1358,13 +1377,10 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     recover()
     val files = livePendingFiles()
     if (files.isEmpty) return
-    val names = files.map(_._1).toSet
-    val zoneRows = zonesManifest()
-      .select(col("file"), col("commit_version"), col("min_id"), col("max_id"))
-      .collect()
-      .filter(r => names(r.getString(0)) && !r.isNullAt(2) && !r.isNullAt(3))
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
-      .toMap
+    val stats = manifest.current()
+    val zoneRows = files.flatMap { case (n, _) =>
+      stats.get(n).flatMap(s => s.idZone.map { case (mn, mx) => n -> ((s.version, mn, mx)) })
+    }.toMap
     if (zoneRows.isEmpty) { optimizeZorder(filesPerDelta); return }
     val vBase = zoneRows.values.map(_._1).min
     val delta = files.filter { case (n, _) =>
@@ -1516,18 +1532,9 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       exact: org.apache.spark.sql.Column): (DataFrame, Int, Int) = {
     recover()
     val files = livePendingFiles()
-    val zones = zonesManifest()
-      .select(col("file"), col("min_id"), col("max_id"),
-        col("min_hb"), col("max_hb"))
-      .collect().map { r =>
-        r.getString(0) -> ((
-          if (r.isNullAt(1) || r.isNullAt(2)) None
-          else Some((r.getLong(1), r.getLong(2))),
-          if (r.isNullAt(3) || r.isNullAt(4)) None
-          else Some((r.getLong(3), r.getLong(4)))))
-      }.toMap
+    val stats = manifest.current()
     val keep = files.filter { case (name, _) =>
-      zones.get(name).forall { case (idZ, hbZ) => idKeep(idZ) && hbKeep(hbZ) }
+      stats.get(name).forall(s => idKeep(s.idZone) && hbKeep(s.hbZone))
     }
     val rows =
       if (keep.isEmpty)
@@ -1598,15 +1605,16 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * are immutable, so in practice each file has exactly one commit's
     * entries). At 100 TB this is kilobytes per file against gigabytes
     * of data — the manifest the planner consults before any file is
-    * opened.
+    * opened. This DataFrame backs the public manifest views; the
+    * pruning consults read the same rule from [[manifest]] instead.
     */
   private def statsManifest(): DataFrame = {
-    val dir = new java.io.File(path, StatsManifest)
-    if (!dir.exists())
+    val files = StatsSnapshot.commitDirs(new java.io.File(path, StatsManifest)).values
+      .flatMap(d => graft.sources.ParquetGroups.parquetFilesIn(d.toString)).toSeq
+    if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], statsSchema)
-    val m = spark.read.schema(statsSchema)
-      .option("recursiveFileLookup", "true").parquet(dir.toString)
+    val m = spark.read.schema(statsSchema).parquet(files: _*)
       .select(statsSchema.fieldNames.map(col): _*)
     val latest = m.groupBy(col("file"))
       .agg(max(col("commit_version")).as("commit_version"))
@@ -1652,15 +1660,12 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     */
   def evolvedZoneKeepFiles[A](files: Seq[(String, A)], physCol: String,
       lo: Long, hi: Long): Seq[(String, A)] = {
-    val zones = evolvedZonesManifest()
-      .filter(col("ecol") === physCol)
-      .select(col("file"), col("min_v"), col("max_v"))
-      .collect().flatMap { r =>
-        if (r.isNullAt(1) || r.isNullAt(2)) None
-        else Some(r.getString(0) -> ((r.getLong(1), r.getLong(2))))
-      }.toMap
+    val stats = manifest.current()
     files.filter { case (name, _) =>
-      zones.get(name).forall { case (mn, mx) => mx >= lo && mn <= hi }
+      stats.get(name).flatMap(_.evolved.get(physCol)).forall {
+        case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
+        case _ => true
+      }
     }
   }
 
@@ -1688,13 +1693,9 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     recover() // consult post-commit state, same as every other read path
     val live = livePendingFiles().map(_._1)
     if (live.isEmpty) return (0L, 0L, 0L)
-    import spark.implicits._
-    val liveDf = live.toDF("file")
-    val total = zonesManifest().join(liveDf, Seq("file"))
-      .agg(coalesce(sum(col("n_rows")), lit(0L))).head().getLong(0)
-    val sample = sampleManifest().join(liveDf, Seq("file"))
-      .orderBy(col("s_h"), col("s_id")).limit(CustomerStore.SampleK)
-      .select(col("s_id")).collect().map(_.getLong(0))
+    val stats = live.flatMap(manifest.current().get)
+    val total = stats.flatMap(_.nRows).sum
+    val sample = manifestSample(stats).map(_._2)
     if (sample.isEmpty) return (total, total, 0L)
     val inRange = sample.count(id => id >= lo && id <= hi).toLong
     (total * inRange / sample.length, total, sample.length.toLong)
@@ -1719,12 +1720,8 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     */
   def estimateJoinOnId(batchIds: DataFrame): (Long, Long, Long) = {
     recover()
-    import spark.implicits._
-    val live = liveDataFiles().map(_._1).toDF("file")
-    val storeSample = sampleManifest().join(live, Seq("file"))
-      .orderBy(col("s_h"), col("s_id")).limit(SampleK)
-      .select(col("s_h"), col("s_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
+    val stats = manifest.current()
+    val storeSample = manifestSample(liveDataFiles().flatMap(f => stats.get(f._1)))
     val idCol = col(batchIds.columns.head).cast("long")
     val batchSample = batchIds
       .select(conv(substring(md5(idCol.cast("string")), 1, 8), 16, 10)
@@ -1744,6 +1741,12 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     val matches = l.count(p => sSet(p) && bSet(p)).toLong
     (matches * unionEst / k, unionEst, k.toLong)
   }
+
+  /** The table-level KMV sample of `stats`' files: the SampleK smallest
+    * (hash, id) pairs of their per-file samples (exact bottom-k merge).
+    */
+  private def manifestSample(stats: Seq[FileStats]): Seq[(Long, Long)] =
+    stats.flatMap(_.sample).sorted.take(SampleK)
 
   /** Live pending data files as (basename, absolute path). */
   private def livePendingFiles(): Seq[(String, String)] = {
@@ -1839,20 +1842,11 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     if (live.isEmpty) return Some(Seq.empty)
     val (_, liveVectors) = deletionVectorStats()
     if (liveVectors > 0L) return None
-    val names = live.map(_._1).toSet
-    val rows = evolvedZonesManifest()
-      .filter(col("ecol") === physCol)
-      .select(col("file"), col("min_v"), col("max_v"), col("commit_version"))
-      .collect()
-      .filter(r => names(r.getString(0)))
-      .groupBy(_.getString(0)).view
-      .mapValues(_.maxBy(_.getLong(3))).values.toSeq
-    if (rows.map(_.getString(0)).toSet != names) return None
-    val uploadedOf = live.map(f => f._1 -> f._3).toMap
-    Some(rows.groupBy(r => uploadedOf(r.getString(0))).toSeq.map { case (u, rs) =>
-      val mns = rs.filter(!_.isNullAt(1)).map(_.getLong(1))
-      val mxs = rs.filter(!_.isNullAt(2)).map(_.getLong(2))
-      (u, mns.minOption, mxs.maxOption)
+    val stats = manifest.current()
+    val extrema = live.map(f => (f._3, stats.get(f._1).flatMap(_.evolved.get(physCol))))
+    if (extrema.exists(_._2.isEmpty)) return None
+    Some(extrema.groupBy(_._1).toSeq.map { case (u, es) =>
+      (u, es.flatMap(_._2.get._1).minOption, es.flatMap(_._2.get._2).maxOption)
     }.sortBy(_._1))
   }
 
@@ -1867,19 +1861,21 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       : Option[Seq[(String, Long, Long, Long)]] = {
     val (_, liveVectors) = deletionVectorStats()
     if (liveVectors > 0L) return None
-    // One zone row per (immutable) file; keep the newest defensively
-    // and demand complete non-null coverage of the live set.
-    val zones = zonesManifest()
-      .select(col("file"), col("n_rows"), col("min_id"), col("max_id"),
-        col("commit_version"))
-      .collect()
-      .filter(r => names(r.getString(0)) &&
-        !r.isNullAt(1) && !r.isNullAt(2) && !r.isNullAt(3))
-      .groupBy(_.getString(0)).view
-      .mapValues(_.maxBy(_.getLong(4))).values.toSeq
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    if (zones.map(_._1).toSet != names) None // a live file lacks coverage
+    // Demand complete non-null coverage of the live set.
+    val stats = manifest.current()
+    val zones = names.toSeq.flatMap(n => stats.get(n).flatMap(s =>
+      for (r <- s.nRows; mn <- s.minId; mx <- s.maxId) yield (n, r, mn, mx)))
+    if (zones.size != names.size) None // a live file lacks coverage
     else Some(zones)
+  }
+
+  /** Total zone row count of the named files from the manifest alone —
+    * None unless every file is covered (the DSv2 scan's row estimate).
+    */
+  def manifestRowCount(names: Set[String]): Option[Long] = {
+    val stats = manifest.current()
+    val counts = names.toSeq.flatMap(n => stats.get(n).flatMap(_.nRows))
+    if (counts.size == names.size) Some(counts.sum) else None
   }
 
   /** Absolute paths of the committed deletion-vector parquet files
@@ -1919,23 +1915,15 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * metadata degrades to a read, never a wrong answer).
     */
   def zoneKeepFiles[A](files: Seq[(String, A)], lo: Long, hi: Long): Seq[(String, A)] = {
-    val zones = zonesManifest()
-      .select(col("file"), col("min_id"), col("max_id"))
-      .collect().flatMap { r =>
-        if (r.isNullAt(1) || r.isNullAt(2)) None
-        else Some(r.getString(0) -> ((r.getLong(1), r.getLong(2))))
-      }.toMap
+    val stats = manifest.current()
     files.filter { case (name, _) =>
-      zones.get(name).forall { case (mn, mx) => mx >= lo && mn <= hi }
+      stats.get(name).flatMap(_.idZone).forall { case (mn, mx) => mx >= lo && mn <= hi }
     }
   }
 
   /** Bloom-consulted selection of the pending files that may contain
-    * any of `emails`: probe each live file's latest manifest filter
-    * with the same xxhash64 expressions that built it (per-file `nbits`
-    * from the manifest, so mixed geometries probe correctly). A file
-    * with no manifest coverage is kept — missing stats degrade to a
-    * read, never a wrong answer. Returns (paths to open, total live).
+    * any of `emails` (see [[bloomKeepFiles]]). Returns (paths to open,
+    * total live).
     */
   private def prunePendingByBloom(emails: Seq[String]): (Seq[String], Int) = {
     val files = livePendingFiles()
@@ -1945,40 +1933,22 @@ class CustomerStore(protected val spark: SparkSession, path: String,
   /** Bloom-manifest file pruning for an email IN-list over an
     * arbitrary live-file list (the generic core of
     * [[pendingPointLookup]]'s consult, also the DSv2 planner's email
-    * prune). Returns the paths that MAY contain any of `emails`;
-    * uncovered files are kept.
+    * prune). Returns the paths that MAY contain any of `emails`:
+    * each covered file's latest filter is probed on the driver at the
+    * bit positions [[CustomerStore.bloomPositions]] computes — the
+    * very expression [[stageStats]] set them with, per file geometry,
+    * so mixed geometries probe correctly. A file with no manifest
+    * coverage is kept — missing stats degrade to a read, never a wrong
+    * answer.
     */
   def bloomKeepFiles(files: Seq[(String, String)], emails: Seq[String]): Seq[String] = {
     if (files.isEmpty || emails.isEmpty) return Seq.empty
-    import spark.implicits._
-    val bloom = bloomManifest() // manifest-scale: re-reading beats a checkpoint job
-    val covered = bloom.select(col("file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val coveredLive = files.filter { case (name, _) => covered(name) }
-    val mayContain: Set[String] =
-      if (coveredLive.isEmpty) Set.empty
-      else {
-        val filesDf = coveredLive.map(_._1).toDF("file")
-        val geom = filesDf.join(
-          bloom.select(col("file"), col("nbits")).distinct(), Seq("file"))
-        geom.crossJoin(broadcast(emails.toDF("k")))
-          .select(col("file"), col("k"),
-            explode(array((0 until BloomSeeds).map(s =>
-              pmod(xxhash64(col("k"), lit(s)), col("nbits"))): _*)).as("p"))
-          .select(col("file"), col("k"), expr("p DIV 64").as("w"),
-            expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))").as("b"))
-          // left join: a word with no set bits has no manifest row, and
-          // that absence is a definite miss for this probe bit
-          .join(bloom.select(col("file"), col("w"), col("bits")),
-            Seq("file", "w"), "left")
-          .withColumn("hit",
-            coalesce((col("bits").bitwiseAND(col("b"))) === col("b"), lit(false)))
-          .groupBy(col("file"), col("k")).agg(min(col("hit")).as("may"))
-          .filter(col("may")).select(col("file")).distinct()
-          .collect().map(_.getString(0)).toSet
-      }
-    val keep = files.filter { case (name, _) => mayContain(name) || !covered(name) }
-    keep.map(_._2)
+    val stats = manifest.current()
+    val positions = scala.collection.mutable.HashMap.empty[Long, Seq[Array[Long]]]
+    files.filter { case (name, _) =>
+      stats.get(name).flatMap(_.bloom).forall(b => b.nbits > 0 && b.mayContainAny(
+        positions.getOrElseUpdate(b.nbits, emails.map(bloomPositions(_, b.nbits)))))
+    }.map(_._2)
   }
 
   /** Email point lookup over the pending partition THROUGH the
@@ -2440,102 +2410,73 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     java.nio.file.Files.write(new java.io.File(tmp, "commit_ts").toPath,
       nextCommitTs().toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     java.nio.file.Files.write(new java.io.File(tmp, "operation").toPath,
-      s"$op\n${parquetRowCount(dir)}"
+      s"$op\n${parquetRowCount(graft.sources.ParquetGroups.parquetFilesIn(dir.toString))}"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
   }
 
-  /** Run independent staging chains concurrently (guide §2.6 "overlap
-    * independent jobs"). Every chain writes DISJOINT files inside the
-    * same not-yet-committed staging dir, so overlap cannot change what
-    * the commit contains: the commit point is still the single atomic
-    * rename AFTER every chain completes, and any chain failure
-    * abandons the staging dir unpromoted (exception rethrown, nothing
-    * ever commits half-staged). Fresh threads rather than a shared
-    * pool, so Spark's inheritable thread-local job properties
-    * (description, execution id) come from THIS caller at spawn and
-    * can never be a stale snapshot of an unrelated submitter. The
-    * chains' inputs are either caller-materialized checkpoints or
-    * plans whose concurrent re-evaluation equals today's sequential
-    * re-evaluation (each chain was its own action before).
+  /** Total row count of the given parquet files — footer-only,
+    * driver-side, cost ∝ files, opened through the session's Hadoop
+    * conf (so any file system the session is configured for works).
     */
-  private def stageConcurrently(chains: (() => Unit)*): Unit = {
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = chains.drop(1).map { c =>
-      val t = new Thread(() => try c()
-        catch { case e: Throwable => errs.add(e): Unit })
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    try chains.head()
-    catch { case e: Throwable => errs.add(e): Unit }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
-  }
-
-  /** Total row count of the parquet files in `dir` — footer-only,
-    * driver-side, cost ∝ files (the staged files it is used on were
-    * just written and are page-warm).
-    */
-  private def parquetRowCount(dir: java.io.File): Long =
-    if (!dir.isDirectory) 0L
-    else dir.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-          new org.apache.hadoop.conf.Configuration(false)))
-      try r.getRecordCount finally r.close()
-    }.sum
-
-  /** Drop ZERO-ROW part files from this commit's staged data dirs
-    * (footer-only consult, driver-side, ∝ staged files): Spark writes
-    * an empty part when a write's side is empty — e.g. an ack that
-    * drains a whole file leaves a 0-row pending replacement. Letting
-    * those promote would litter the live set with files that carry no
-    * rows, no zone coverage (stats derive from rows, so an empty file
-    * has none — disabling the manifest-aggregate shortcut until a
-    * compact), and a per-file open cost at every scan. Runs at the
-    * stats choke point, after each stage method's commit-unique
-    * renames and before anything records the staged names.
-    */
-  private def dropEmptyStagedFiles(tmp: java.io.File): Unit =
-    Seq("pending", "done", "pending-append", "done-append",
-        "merge-pending", "merge-done")
-      .map(new java.io.File(tmp, _)).filter(_.isDirectory)
-      .foreach(_.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+  private[pipeline] def parquetRowCount(files: Seq[String]): Long =
+    if (files.isEmpty) 0L
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      files.map { f =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-            new org.apache.hadoop.conf.Configuration(false)))
-        val empty = try r.getRecordCount == 0L finally r.close()
-        if (empty) require(f.delete(), s"could not drop empty staged part $f")
-      })
+            new org.apache.hadoop.fs.Path(f), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    }
+
+  /** Every row of a metadata-scale parquet file (manifest, deletion
+    * vectors), read on the driver without a job: `schema`'s columns in
+    * order, null where the file lacks one.
+    */
+  private def readParquetRows(file: String, schema: org.apache.spark.sql.types.StructType)
+      : Iterator[org.apache.spark.sql.Row] =
+    graft.sources.ParquetGroups.readAll(file, schema.fieldNames.toSeq).map(a =>
+      org.apache.spark.sql.Row.fromSeq(a.toSeq.map {
+        case u: org.apache.spark.unsafe.types.UTF8String => u.toString
+        case x => x
+      }))
 
   /** Stage this commit's SKIPPING STATS — per-file zone maps (row
-    * count, min/max id) and the per-file email bloom filter — computed
-    * from the staged data files themselves and promoted by the same
-    * atomic rename as the data, so the manifest advances exactly with
-    * the commit (never rebuilt per query; cost ∝ the commit's delta,
-    * one extra scan of freshly written, page-warm files). Entries key
-    * on the file BASENAME: staged names are commit-unique and survive
-    * promotion verbatim, so an entry written under `_staging` stays
-    * valid in the table. A file absent from the manifest (e.g. written
-    * before stats existed) is simply never skipped — stats are
-    * may-contain metadata, and missing metadata degrades to a read,
-    * never to a wrong answer.
+    * count, min/max id, min/max hash shard), the bottom-SampleK KMV
+    * sample, the email bloom filter and evolved-column extrema —
+    * computed from the staged data files themselves and promoted by
+    * the same atomic rename as the data, so the manifest advances
+    * exactly with the commit (never rebuilt per query; cost ∝ the
+    * commit's delta, one extra scan of freshly written, page-warm
+    * files). Entries key on the file BASENAME: staged names are
+    * commit-unique and survive promotion verbatim, so an entry written
+    * under `_staging` stays valid in the table. A file absent from the
+    * manifest (e.g. written before stats existed) is simply never
+    * skipped — stats are may-contain metadata, and missing metadata
+    * degrades to a read, never to a wrong answer.
+    *
+    * Shape: ONE scan job with no shuffle — each task folds its rows
+    * into per-file partial states with the TopKAggregator /
+    * BloomWordsAggregator `reduce`, the driver `merge`s and finishes
+    * them (the states are manifest-sized: one per staged file), and
+    * the rows go out in one local write. A staged file with no state
+    * has no rows and is deleted here — Spark writes an empty part when
+    * a write's side is empty (e.g. an ack that drains a whole file),
+    * and such a file would only add a per-scan open cost and a hole in
+    * the zone coverage. Staged names are Spark part names behind a
+    * commit prefix, so the scan's basename equals the listed name.
+    * The rows are kept for [[commitStaged]] to hand to [[manifest]].
     *
     * Must run AFTER each stage method's commit-unique renames (the
     * basenames it records are the promoted ones) and before the
     * atomic rename to `_staging`.
     */
   private def stageStats(tmp: java.io.File, v: Long): Unit = {
-    dropEmptyStagedFiles(tmp)
-    val dataDirs = Seq("pending", "done", "pending-append", "done-append",
+    val staged = Seq("pending", "done", "pending-append", "done-append",
         "merge-pending", "merge-done")
-      .map(new java.io.File(tmp, _))
-      .filter(d => d.isDirectory &&
-        d.listFiles().exists(_.getName.endsWith(".parquet")))
-    if (dataDirs.isEmpty) return
+      .flatMap(d => graft.sources.ParquetGroups.parquetFilesIn(new java.io.File(tmp, d).toString))
+    if (staged.isEmpty) return
     // Evolved NUMERIC columns get per-file zone stats beside the base
     // id zones (kind='e', keyed by PHYSICAL name so renames can't
     // detach a file's stats): every staged data file aligns to the
@@ -2555,91 +2496,51 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         org.apache.spark.sql.types.StringType)) ++
       evoNum.map { case (p, t) =>
         org.apache.spark.sql.types.StructField(p, t) })
-    val staged = spark.read.schema(keySchema)
-      .parquet(dataDirs.map(_.toString): _*)
-      .select(Seq(element_at(split(input_file_name(), "/"), -1).as("file"),
-        col("id"), col("email")) ++ evoNum.map { case (p, _) => col(p) }: _*)
     graft.util.Labeled(spark, "store: stage stats") {
-      // ALL stats grains from ONE per-file hash aggregate over ONE scan
-      // of the staged files (r16; guide §2.3 "aggregate before you
-      // shuffle", §2.4 "remove shuffles outright"): zones (row count,
-      // min/max id, min/max hash bucket), the bottom-SampleK KMV sample
-      // (TopKAggregator — map-side bounded partials), evolved-column
-      // extrema, AND the per-file Bloom bitset as a dense word array
-      // (BloomWordsAggregator fed the SAME pmod(xxhash64(email, seed))
-      // positions the manifest has always recorded, so the emitted
-      // (w, bits) rows are bit-identical to the old explode ×seeds →
-      // groupBy(file, word) second shuffle stage, which is gone). The
-      // aggregate's result is manifest-sized (one row per staged file),
-      // so it is pinned once (localCheckpoint — within-commit reuse,
-      // never cross-run) and the four manifest projections below are
-      // driver-cheap unions over it: a commit's stats cost is one
-      // aggregation job plus one tiny write, whatever the schema.
-      // (A cache() + single-write variant was measured and REJECTED:
-      // the union's branch tasks race the first fill and re-run the
-      // aggregate up to once per branch — workqueue/merge gates read
-      // 0.4-0.6s slower than this two-job shape.)
-      val bottomK = udaf(new graft.functions.TopKAggregator(SampleK))
-      val bloomWords = udaf(new graft.functions.BloomWordsAggregator(bloomBits))
-      val evoAggs = evoNum.flatMap { case (p, _) => Seq(
-        min(col(p).cast("long")).as(s"_emin_$p"),
-        max(col(p).cast("long")).as(s"_emax_$p")) }
-      val fileAgg = staged
-        .withColumn("neg_h",
-          -conv(substring(md5(col("id").cast("string")), 1, 8), 16, 10).cast("long"))
-        .withColumn("bpos", array((0 until BloomSeeds).map(s =>
-          pmod(xxhash64(col("email"), lit(s)), lit(bloomBits))): _*))
-        .groupBy(col("file"))
-        .agg(count(lit(1)).as("n_rows"),
-          Seq(min(col("id")).as("min_id"), max(col("id")).as("max_id"),
-          min(CustomerStore.hashBucket(col("id"))).as("min_hb"),
-          max(CustomerStore.hashBucket(col("id"))).as("max_hb"),
-          bottomK(col("neg_h"), col("id")).as("sample"),
-          bloomWords(col("bpos")).as("bwords")) ++ evoAggs: _*)
-        .localCheckpoint(true)
-      val zones = fileAgg
-        .select(col("file"), lit("z").as("kind"), lit(null).cast("long").as("w"),
-          lit(null).cast("long").as("bits"), lit(null).cast("long").as("nbits"),
-          col("n_rows"), col("min_id"), col("max_id"),
-          col("min_hb"), col("max_hb"),
-          lit(null).cast("long").as("s_h"), lit(null).cast("long").as("s_id"))
-      val sample = fileAgg
-        .select(col("file"), explode(col("sample")).as("p"))
-        .select(col("file"), lit("s").as("kind"), lit(null).cast("long").as("w"),
-          lit(null).cast("long").as("bits"), lit(null).cast("long").as("nbits"),
-          lit(null).cast("long").as("n_rows"),
-          lit(null).cast("long").as("min_id"), lit(null).cast("long").as("max_id"),
-          lit(null).cast("long").as("min_hb"), lit(null).cast("long").as("max_hb"),
-          (-col("p._1")).as("s_h"), col("p._2").as("s_id"))
-      // Only words with a set bit are manifest rows — same sparse
-      // representation the old bit_or aggregation emitted.
-      val bloom = fileAgg
-        .select(col("file"), posexplode(col("bwords")).as(Seq("w", "bits")))
-        .filter(col("bits") =!= 0L)
-        .select(col("file"), lit("b").as("kind"), col("w").cast("long").as("w"),
-          col("bits"),
-          lit(bloomBits).as("nbits"), lit(null).cast("long").as("n_rows"),
-          lit(null).cast("long").as("min_id"), lit(null).cast("long").as("max_id"),
-          lit(null).cast("long").as("min_hb"), lit(null).cast("long").as("max_hb"),
-          lit(null).cast("long").as("s_h"), lit(null).cast("long").as("s_id"))
-      // kind='e' rows: one per (file, evolved numeric column). An
-      // all-NULL column (a commit whose batch never carried it) yields
-      // NULL min/max — pruning treats that as no coverage for the file.
-      val evoRows = evoNum.map { case (p, _) =>
-        fileAgg.select(col("file"), lit("e").as("kind"),
-          lit(p).as("ecol"),
-          col(s"_emin_$p").as("min_v"), col(s"_emax_$p").as("max_v"))
-      }.reduceOption(_ unionByName _)
-      val dir = new java.io.File(tmp, "stats")
-      val baseRows = zones.unionByName(sample).unionByName(bloom)
-      evoRows.fold(baseRows)(e =>
-          baseRows.unionByName(e, allowMissingColumns = true))
-        .withColumn("commit_version", lit(v))
-        .coalesce(1).write.parquet(dir.toString)
-      val commitId = java.util.UUID.randomUUID().toString.take(8)
-      dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        require(f.renameTo(new java.io.File(dir, s"sts-$commitId-${f.getName}")),
-          s"staging rename failed for $f")
+      val rowsIn = spark.read.schema(keySchema).parquet(staged: _*)
+        .select(Seq(element_at(split(input_file_name(), "/"), -1).as("file"),
+          col("id"), CustomerStore.hashBucket(col("id")).as("hb"),
+          (-conv(substring(md5(col("id").cast("string")), 1, 8), 16, 10)
+            .cast("long")).as("neg_h"),
+          array((0 until BloomSeeds).map(s =>
+            bloomPosition(col("email"), s, lit(bloomBits))): _*).as("bpos")) ++
+          evoNum.map { case (p, _) => col(p).cast("long") }: _*)
+      val bottomK = new graft.functions.TopKAggregator(SampleK)
+      val bloomWords = new graft.functions.BloomWordsAggregator(bloomBits)
+      val states = FileStatsState.scan(rowsIn, bottomK, bloomWords, evoNum.size)
+      staged.filterNot(f => states.contains(new java.io.File(f).getName))
+        .foreach(f => require(new java.io.File(f).delete(), s"could not drop empty staged part $f"))
+      if (states.nonEmpty) {
+        def box(o: Option[Long]): Any = o.map(Long.box).orNull
+        def row(file: String, kind: String, w: Any = null, bits: Any = null,
+            nbits: Any = null, nRows: Any = null, minId: Any = null, maxId: Any = null,
+            minHb: Any = null, maxHb: Any = null, sH: Any = null, sId: Any = null,
+            ecol: Any = null, minV: Any = null, maxV: Any = null) =
+          org.apache.spark.sql.Row(file, kind, w, bits, nbits, nRows, minId, maxId,
+            minHb, maxHb, sH, sId, ecol, minV, maxV, v)
+        val rows = states.toSeq.sortBy(_._1).flatMap { case (f, s) =>
+          Seq(row(f, "z", nRows = s.nRows, minId = box(s.minId), maxId = box(s.maxId),
+            minHb = box(s.minHb), maxHb = box(s.maxHb))) ++
+          // KMV sample: bottom-k of the md5-word hash = top-k of its negation.
+          bottomK.finish(s.sample).map { case (negH, id) => row(f, "s", sH = -negH, sId = id) } ++
+          // Only words with a set bit are manifest rows (sparse words).
+          s.words.indices.filter(s.words(_) != 0L).map(w =>
+            row(f, "b", w = w.toLong, bits = s.words(w), nbits = bloomBits)) ++
+          // kind='e' rows: one per (file, evolved numeric column); an
+          // all-NULL column yields NULL min/max — no coverage for the file.
+          evoNum.indices.map(i => row(f, "e", ecol = evoNum(i)._1,
+            minV = box(s.evoMin(i)), maxV = box(s.evoMax(i))))
+        }
+        val dir = new java.io.File(tmp, "stats")
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(rows.asJava, statsSchema)
+          .coalesce(1).write.parquet(dir.toString)
+        val commitId = java.util.UUID.randomUUID().toString.take(8)
+        dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+          require(f.renameTo(new java.io.File(dir, s"sts-$commitId-${f.getName}")),
+            s"staging rename failed for $f")
+        }
+        stagedStats.put(tmp.getAbsolutePath, rows)
       }
     }
   }
@@ -2695,7 +2596,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     */
   private[pipeline] def applyStaged(): Unit = promotionLock.synchronized {
     val staging = new java.io.File(path, Staging)
-    if (!staging.exists()) return
+    if (!staging.exists()) { dropPromotedStats(); return }
     val pendingStage = new java.io.File(staging, "pending")
     val doneStage = new java.io.File(staging, "done-append")
     if (pendingStage.exists()) {
@@ -2907,9 +2808,22 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         new java.io.File(path, VersionFile).toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      // The counter now covers this commit's `_stats` dir: the rows its
+      // committer computed join the snapshot without a read-back.
+      Option(committedStats.remove(v.toLong)).foreach(manifest.absorb(v.toLong, _))
     }
     deleteRecursively(staging)
+    dropPromotedStats()
   }
+
+  /** Forget handed-over stats rows of commits already promoted (by a
+    * rival's recovery, say): the snapshot reads those from disk.
+    */
+  private def dropPromotedStats(): Unit =
+    if (!committedStats.isEmpty) {
+      val head = currentVersion()
+      committedStats.keySet.removeIf(_ <= head): Unit
+    }
 
   // ---- Optimistic concurrency (the commit point) ---------------------
 
@@ -2951,6 +2865,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     var v = stagedV
     var attempts = 0
     var committed = false
+    val stats = Option(stagedStats.remove(tmp.getAbsolutePath))
     while (!committed) {
       attempts += 1
       require(tmp.exists(), s"staged commit $tmp vanished before the commit point")
@@ -2989,6 +2904,8 @@ class CustomerStore(protected val spark: SparkSession, path: String,
             renumberStaged(tmp, v)
           }
           committed = tmp.renameTo(staging)
+          // Past the commit point: promotion hands the rows over.
+          if (committed) stats.foreach(committedStats.put(v, _))
         }
       }
     }
@@ -3255,7 +3172,7 @@ object CustomerStore {
         org.apache.spark.sql.types.LongType, nullable = false)))
 
   /** Per-file bloom geometry for the email point-lookup index: 2^17
-    * bits (2 KiB of words per file) holds ~8k keys per file at the
+    * bits (16 KiB of words per file) holds ~8k keys per file at the
     * ~16-bits-per-key fill that keeps the false-positive rate ~1%
     * (three probes against a ≲20%-full filter). Files are bounded by
     * the write batch here; a store whose files grow past that re-sizes
@@ -3264,6 +3181,88 @@ object CustomerStore {
     */
   private[pipeline] val DefaultBloomBits = 1L << 17
   private[pipeline] val BloomSeeds = 3
+
+  /** Bloom bit `seed` of an email: `pmod(xxhash64(email, seed), nbits)`
+    * — xxhash64 over the (email, seed) pair at its default seed, the
+    * expression the manifest has always been built with. The commit
+    * evaluates it in the stats scan ([[bloomPosition]]) and lookups on
+    * the driver ([[bloomPositions]]), so both probe identical bits.
+    */
+  private def bloomPositionExpr(email: org.apache.spark.sql.catalyst.expressions.Expression,
+      seed: Int, nbits: org.apache.spark.sql.catalyst.expressions.Expression)
+      : org.apache.spark.sql.catalyst.expressions.Expression = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
+    Pmod(new XxHash64(Seq(email, Literal(seed))), nbits)
+  }
+
+  private[pipeline] def bloomPosition(email: org.apache.spark.sql.Column, seed: Int,
+      nbits: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(bloomPositionExpr(ColumnBridge.expression(email), seed,
+      ColumnBridge.expression(nbits)))
+  }
+
+  /** The [[BloomSeeds]] bit positions of `email` in an `nbits` filter,
+    * evaluated on the driver (no job).
+    */
+  private[pipeline] def bloomPositions(email: String, nbits: Long): Array[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    Array.tabulate(BloomSeeds)(s => bloomPositionExpr(
+      Literal.create(email, org.apache.spark.sql.types.StringType), s, Literal(nbits))
+      .eval().asInstanceOf[Long])
+  }
+
+  /** Run independent staging chains concurrently (guide §2.6 "overlap
+    * independent jobs"): the first on the caller's thread, the rest on
+    * fresh daemon threads. Every chain writes DISJOINT files inside the
+    * same not-yet-committed staging dir, so overlap cannot change what
+    * the commit contains: the commit point is still the single atomic
+    * rename AFTER every chain completes, and any chain failure
+    * abandons the staging dir unpromoted (exception rethrown, nothing
+    * ever commits half-staged). Fresh threads rather than a shared
+    * pool, so Spark's inheritable thread-local job properties
+    * (description, execution id) come from THIS caller at spawn and
+    * can never be a stale snapshot of an unrelated submitter. The
+    * chains' inputs are either caller-materialized checkpoints or
+    * plans whose concurrent re-evaluation equals today's sequential
+    * re-evaluation (each chain was its own action before).
+    *
+    * Returns only once EVERY chain has finished — an interrupt of the caller
+    * cannot leave a chain writing into a staging dir its caller has
+    * abandoned. Every failure is kept: the first is thrown with the
+    * others attached via `addSuppressed`. An interrupt received while
+    * waiting is restored on the caller's thread and, when no chain
+    * failed, surfaces as an InterruptedException so the caller stops
+    * short of the commit point.
+    */
+  private[pipeline] def stageConcurrently(chains: (() => Unit)*): Unit = {
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = chains.drop(1).map { c =>
+      val t = new Thread(() => try c()
+        catch { case e: Throwable => errs.add(e): Unit })
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted = false
+    try chains.head()
+    catch {
+      case e: InterruptedException => interrupted = true; errs.add(e): Unit
+      case e: Throwable => errs.add(e): Unit
+    }
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(e => first.addSuppressed(e))
+      throw first
+    }
+    if (interrupted) throw new InterruptedException("staging chains interrupted")
+  }
 
   /** Ack/update batches at or below this size consult the per-file
     * bloom manifest to open only may-contain files; larger batches

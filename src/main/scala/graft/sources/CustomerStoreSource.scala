@@ -1317,16 +1317,9 @@ class CustomerStoreScan(path: String, versionAsOf: Option[Long],
         kept.map(p => new java.io.File(p.file).length()).sum)
     override def numRows(): java.util.OptionalLong =
       if (versionAsOf.nonEmpty || timestampAsOf.nonEmpty) java.util.OptionalLong.empty()
-      else {
-        val names = kept.map(_.basename).toSet
-        val rows = new CustomerStore(SparkSession.active, path).zonesManifest()
-          .select(org.apache.spark.sql.functions.col("file"),
-            org.apache.spark.sql.functions.col("n_rows"))
-          .collect().filter(r => !r.isNullAt(1) && names(r.getString(0)))
-          .map(r => (r.getString(0), r.getLong(1))).toMap
-        if (rows.keySet == names) java.util.OptionalLong.of(rows.values.sum)
-        else java.util.OptionalLong.empty()
-      }
+      else new CustomerStore(SparkSession.active, path)
+        .manifestRowCount(kept.map(_.basename).toSet)
+        .fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
