@@ -36,13 +36,4 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     groups.flatMap(_.oracles).toMap
-
-  /** Queries whose group opts into sf0.001 pre-warming (codegen/JIT
-    * buys a faster first timed run; harness-heavy gates' fixed costs
-    * don't shrink with SF — see [[QueryGroup.warmup]]). The bench's
-    * round-11 rework dropped its warmup leg (min-of-≥2-passes makes
-    * it redundant); kept for dev-time tooling.
-    */
-  def warmupQueries: Set[String] =
-    groups.filter(_.warmup).flatMap(_.queries.keys).toSet
 }

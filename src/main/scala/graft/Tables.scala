@@ -60,16 +60,4 @@ object Tables {
 trait QueryGroup {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   def oracles: Map[String, String]
-
-  /** Whether this group's queries benefit from the bench's sf0.001
-    * warmup pass. True for kernel/relational queries, where warmup
-    * compiles codegen classes and JIT-warms the hot loops so the first
-    * timed pass measures the operator. Groups whose cost is HARNESS
-    * (driving real streams with checkpoints, store lifecycles, Derby,
-    * multi-file layout writes) override to false: their fixed costs
-    * don't shrink at sf0.001, so warming them costs more wall-clock
-    * than a timed pass saves — the round-6 bench lost its multi-pass
-    * min exactly this way.
-    */
-  def warmup: Boolean = true
 }

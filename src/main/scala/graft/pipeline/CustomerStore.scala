@@ -20,6 +20,18 @@ import org.apache.spark.sql.functions._
   * shapes (anti-join insert, pruned scan, partition rewrite) carry over
   * unchanged.
   *
+  * Commits: every mutation — insert, ack, merge, delete, compaction,
+  * restore, purge, DDL, the txn and COPY INTO markers — builds ONE
+  * [[CustomerStore.Commit]] value (rows to add per partition, files to
+  * remove or "replace all", change rows, deletion-vector rows, a
+  * schema or constraints manifest) and lands it through the same three
+  * steps: [[stage]] writes it and its markers into a staging dir,
+  * [[checkNoConflict]] validates it at the commit point, and
+  * [[applyStaged]] promotes it with one per-target remove-then-move
+  * loop. Exclusivity (a replace or a metadata change conflicts with
+  * any interleaved commit) and deletion-vector truncation (a replace
+  * removes every vector file) derive from the value, not from flags.
+  *
   * Concurrency: writers stage into writer-unique `_staging.tmp-<id>`
   * dirs and contend only at the commit point (the atomic rename onto
   * `_staging`), with Delta-style optimistic retry — a loser finishes
@@ -175,19 +187,18 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * no-op). Returns the number of rows tombstoned.
     */
   def delete(emails: DataFrame): Long = {
-    val n = stageDelete(emails)
-    if (n > 0) applyStaged()
+    if (!tableExists) return 0L
+    recover()
+    val (n, c) = deleteCommit(emails)
+    c.foreach(commit)
     n
   }
 
-  /** Stage a delete commit up to and including the commit-point rename
-    * (no promotion) — separated from [[delete]] so crash-recovery
-    * specs can stop exactly at the commit point. Returns the number of
-    * rows tombstoned; 0 means nothing matched and nothing was staged.
+  /** The delete commit [[delete]] lands, with the number of rows it
+    * tombstones (None when nothing matched). Specs stage it to stop at
+    * the commit point.
     */
-  private[pipeline] def stageDelete(emails: DataFrame): Long = {
-    if (!tableExists) return 0L
-    recover()
+  private[pipeline] def deleteCommit(emails: DataFrame): (Long, Option[Commit]) = {
     val keys = emails.select(col("email").as("_del")).distinct()
     val hit = graft.util.Labeled(spark, "store: delete probe") {
       allWithFile()
@@ -196,25 +207,9 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         .localCheckpoint(true)
     }
     val n = hit.count()
-    if (n == 0) return 0L
-    val tmp = freshStagingTmp()
-    val dvDir = new java.io.File(tmp, "deletes")
-    val v = currentVersion() + 1
-    stageConcurrently(
-      () => {
-        graft.util.Labeled(spark, "store: stage data") {
-          hit.select(col("_file").as("file"), col("email")).write.parquet(dvDir.toString)
-        }
-        val commitId = java.util.UUID.randomUUID().toString.take(8)
-        dvDir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-          require(f.renameTo(new java.io.File(dvDir, s"del-$commitId-${f.getName}")),
-            s"staging rename failed for $f")
-        }
-      },
-      () => stageChanges(tmp,
-        changeRows(hit.drop("_file", "_del"), "delete_pre"), "DELETE", v))
-    commitStaged(tmp, v)
-    n
+    (n, Option.when(n > 0)(Commit("DELETE",
+      vectors = Some(hit.select(col("_file").as("file"), col("email"))),
+      changes = Some(changeRows(hit.drop("_file", "_del"), "delete_pre")))))
   }
 
   /** Survivor append: new files into the uploaded=false partition,
@@ -228,45 +223,30 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     val n = cached.count()
     if (n > 0) {
       recover()
-      stageAppend(cached)
-      applyStaged()
+      commit(appendCommit(cached))
     }
     cached.unpersist()
     n
   }
 
-  /** Stage an insert commit: the fresh pending rows (commit-unique
-    * file names, appended to the pending partition at promotion) plus
-    * their change-feed rows.
+  /** The insert commit [[appendRows]] lands: the fresh pending rows plus
+    * their change-feed rows, after the CHECK constraints pass.
     */
-  private[pipeline] def stageAppend(fresh: DataFrame): Unit = {
+  private[pipeline] def appendCommit(fresh: DataFrame): Commit = {
     enforceCheckConstraints(fresh, "insert")
-    val tmp = freshStagingTmp()
-    val stage = new java.io.File(tmp, "pending-append")
-    val v = currentVersion() + 1
-    // Two independent chains (guide §2.6): [data write → rename →
-    // stats] overlaps [change-feed write → markers]; stats needs the
-    // staged DATA files only, never the changelog.
-    stageConcurrently(
-      () => {
-        graft.util.Labeled(spark, "store: stage data") {
-          toPhysical(fresh.drop("uploaded"), dataLogicalSchema)
-            .write.parquet(stage.toString)
-        }
-        val commitId = java.util.UUID.randomUUID().toString.take(8)
-        stage.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-          require(f.renameTo(new java.io.File(stage, s"ins-$commitId-${f.getName}")),
-            s"staging rename failed for $f")
-        }
-        stageStats(tmp, v)
-      },
-      () => stageChanges(tmp, changeRows(fresh, "insert"), "WRITE", v))
-    commitStaged(tmp, v)
+    Commit("WRITE", pending = Some(fresh), changes = Some(changeRows(fresh, "insert")))
   }
 
   /** Change-feed projection: the full row plus the change kind. */
   private def changeRows(rows: DataFrame, kind: String): DataFrame =
     rows.select(lit(kind).as("change_type") +: tableSchema.fieldNames.map(col): _*)
+
+  /** The change rows of a feed-silent data commit (layout only). */
+  private def noChanges: DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType(
+        org.apache.spark.sql.types.StructField("change_type",
+          org.apache.spark.sql.types.StringType, nullable = false) +: tableSchema.fields))
 
   /** The store's change data feed — every mutation the store has
     * committed, as full rows tagged `insert` / `update` / `ack`
@@ -446,7 +426,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     val next = org.apache.spark.sql.types.StructType(
       cur.fields :+ org.apache.spark.sql.types.StructField(
         name, dataType, nullable = true, metadata = meta))
-    commitSchema(next, v, "ADD COLUMN")
+    commit(Commit("ADD COLUMN", manifest = Some(SchemaFile -> next.json)))
   }
 
   /** ADD a GENERATED column (Delta's `GENERATED ALWAYS AS (expr)`
@@ -512,7 +492,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     val next = org.apache.spark.sql.types.StructType(
       cur.fields :+ org.apache.spark.sql.types.StructField(
         name, dataType, nullable = true, metadata = meta))
-    commitSchema(next, v, "ADD COLUMN"): Unit
+    commit(Commit("ADD COLUMN", manifest = Some(SchemaFile -> next.json))): Unit
     addCheckConstraint(auto,
       s"$name IS NULL OR $name <=> CAST(($genExpr) AS ${dataType.sql})")
   }
@@ -592,7 +572,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       .withMetadata(f.metadata).putString("physical", physName(f)).build()
     val next = org.apache.spark.sql.types.StructType(
       cur.fields.updated(i, f.copy(dataType = to, metadata = meta)))
-    commitSchema(next, currentVersion() + 1, "ALTER COLUMN")
+    commit(Commit("ALTER COLUMN", manifest = Some(SchemaFile -> next.json)))
   }
 
   /** RENAME a payload column: metadata-only — the column's PHYSICAL
@@ -622,7 +602,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       .withMetadata(f.metadata).putString("physical", physName(f)).build()
     val next = org.apache.spark.sql.types.StructType(
       cur.fields.updated(i, f.copy(name = to, metadata = meta)))
-    commitSchema(next, currentVersion() + 1, "RENAME COLUMN")
+    commit(Commit("RENAME COLUMN", manifest = Some(SchemaFile -> next.json)))
   }
 
   /** DROP a payload column: metadata-only — the field leaves the
@@ -654,36 +634,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     requireUnconstrained(name, "dropColumn")
     val next = org.apache.spark.sql.types.StructType(
       cur.fields.filterNot(_.name.equalsIgnoreCase(name)))
-    commitSchema(next, currentVersion() + 1, "DROP COLUMN")
-  }
-
-  /** Stage + promote a schema manifest as a feed-silent versioned
-    * METADATA commit (shared by add/rename/drop). DDL racing DML is
-    * always a conflict (the rarest commit kind pays the strictest
-    * rule).
-    */
-  private def commitSchema(
-      next: org.apache.spark.sql.types.StructType, v: Long,
-      op: String): Long =
-    commitMetadata("schema", next.json, v, op)
-
-  private def commitMetadata(file: String, body: String, v: Long,
-      op: String): Long = {
-    val tmp = freshStagingTmp()
-    tmp.mkdirs()
-    val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    java.nio.file.Files.write(new java.io.File(tmp, file).toPath,
-      body.getBytes(utf8))
-    java.nio.file.Files.write(new java.io.File(tmp, "version").toPath,
-      v.toString.getBytes(utf8))
-    java.nio.file.Files.write(new java.io.File(tmp, "commit_ts").toPath,
-      nextCommitTs().toString.getBytes(utf8))
-    // Metadata commits are feed-silent by construction: 0 change rows.
-    java.nio.file.Files.write(new java.io.File(tmp, "operation").toPath,
-      s"$op\n0".getBytes(utf8))
-    commitStaged(tmp, v, fullReplace = true)
-    applyStaged()
-    v
+    commit(Commit("DROP COLUMN", manifest = Some(SchemaFile -> next.json)))
   }
 
   // ---- Persisted CHECK constraints ------------------------------------
@@ -729,9 +680,8 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     require(bad.isEmpty,
       s"addCheckConstraint: $name would be violated by ${bad.length}+ " +
         s"existing rows, e.g. ${bad.headOption.getOrElse("")}")
-    commitMetadata("constraints",
-      (cur :+ (name, sqlExpr)).map { case (n, e) => s"$n\t$e" }.mkString("\n"),
-      currentVersion() + 1, "ADD CONSTRAINT")
+    commit(Commit("ADD CONSTRAINT", manifest = Some(ConstraintsFile ->
+      (cur :+ (name, sqlExpr)).map { case (n, e) => s"$n\t$e" }.mkString("\n"))))
   }
 
   /** Drop a persisted CHECK constraint (versioned metadata commit). */
@@ -740,10 +690,9 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     val cur = checkConstraints()
     require(cur.exists(_._1.equalsIgnoreCase(name)),
       s"dropCheckConstraint: no constraint '$name'")
-    commitMetadata("constraints",
+    commit(Commit("DROP CONSTRAINT", manifest = Some(ConstraintsFile ->
       cur.filterNot(_._1.equalsIgnoreCase(name))
-        .map { case (n, e) => s"$n\t$e" }.mkString("\n"),
-      currentVersion() + 1, "DROP CONSTRAINT")
+        .map { case (n, e) => s"$n\t$e" }.mkString("\n"))))
   }
 
   /** Column names a persisted constraint expression references —
@@ -793,10 +742,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     */
   def currentVersion(): Long = {
     val f = new java.io.File(path, VersionFile)
-    if (f.exists())
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-    else 0L
+    if (f.exists()) readText(f).toLong else 0L
   }
 
   /** Time travel: the table as of commit `version`, reconstructed from
@@ -864,9 +810,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         // Line 1 is the timestamp; later lines (operation label,
         // change-row count) belong to [[history]].
         f.getName.stripPrefix("commit-").toLong ->
-          new String(java.nio.file.Files.readAllBytes(f.toPath),
-            java.nio.charset.StandardCharsets.UTF_8)
-            .linesIterator.next().trim.toLong
+          readText(f).linesIterator.next().trim.toLong
       }
       .sortBy(_._1)
   }
@@ -893,9 +837,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         .filter(f => f.isFile && f.getName.startsWith("commit-"))
         .map { f =>
           val v = f.getName.stripPrefix("commit-").toLong
-          val lines = new String(java.nio.file.Files.readAllBytes(f.toPath),
-            java.nio.charset.StandardCharsets.UTF_8)
-            .linesIterator.map(_.trim).toArray
+          val lines = readText(f).linesIterator.map(_.trim).toArray
           org.apache.spark.sql.Row(v, lines(0).toLong,
             if (lines.length > 1) lines(1) else null,
             if (lines.length > 2) java.lang.Long.valueOf(lines(2).toLong)
@@ -998,8 +940,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     // watermark exists to prevent (round-14 ADVICE, medium).
     val wm = math.max(feedLowWatermark(), cutoff)
     val tmp = new java.io.File(path, FeedWatermark + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      wm.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeText(tmp, wm.toString)
     // REPLACE_EXISTING (atomic where the fs supports it): a plain
     // renameTo onto an existing stale watermark fails on some
     // filesystems, and the old `|| dst.exists()` fallback could not
@@ -1191,14 +1132,8 @@ class CustomerStore(protected val spark: SparkSession, path: String,
             phys.filter(col("_file").isInCollection(touched)))
           .filter(!col("email").isInCollection(keys))
           .select(tableSchema.fieldNames.map(col).toIndexedSeq: _*)
-        val noChanges = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(
-            org.apache.spark.sql.types.StructField("change_type",
-              org.apache.spark.sql.types.StringType, nullable = false) +:
-              tableSchema.fields))
-        stageMergeCommit(survivors, touched, noChanges, "PURGE")
-        applyStaged()
+        commit(Commit.partitioned("PURGE", survivors)
+          .copy(remove = touched, changes = Some(noChanges)))
       }
 
       // 3. Deletion vectors (plain `email` column; all the purged
@@ -1278,10 +1213,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     */
   def feedLowWatermark(): Long = {
     val f = new java.io.File(path, FeedWatermark)
-    if (f.exists())
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-    else 0L
+    if (f.exists()) readText(f).toLong else 0L
   }
 
   /** Loud-failure guard for every range feed read: a non-empty range
@@ -1408,38 +1340,24 @@ class CustomerStore(protected val spark: SparkSession, path: String,
           .withColumn("_file", input_file_name()))
       .select(tableSchema.fieldNames.map(col): _*)
       .repartitionByRange(filesPerDelta, zkey)
-    stageMergeCommit(rows, delta.map(_._2),
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          org.apache.spark.sql.types.StructField("change_type",
-            org.apache.spark.sql.types.StringType, nullable = false) +: tableSchema.fields)),
-      "OPTIMIZE")
-    applyStaged()
+    commit(Commit.partitioned("OPTIMIZE", rows)
+      .copy(remove = delta.map(_._2), changes = Some(noChanges)))
   }
 
   /** Shared data-only rewrite commit (compaction / clustering): the
     * version advances, the feed stays silent (physical layout, not a
     * logical change), and the full rewrite MATERIALIZES every
-    * deletion-vector tombstone (all() below is vector-applied and
-    * every pre-rewrite file name is gone) — so the commit stages a
-    * truncation marker and promotion clears the vectors inside the
-    * idempotent replay (crash-safe: stats stay exact, not just
+    * deletion-vector tombstone (all() below is vector-applied) — a
+    * replace removes every live data file and vector file inside the
+    * idempotent promotion (crash-safe: stats stay exact, not just
     * never-wrong).
     */
   private def rewriteTable(shape: DataFrame => DataFrame): Unit = {
     if (!tableExists) return
     recover()
     val cur = all().localCheckpoint(true) // deletion vectors applied
-    stageFullCommit(
-      shape(cur.filter(!col("uploaded"))),
-      shape(cur.filter(col("uploaded"))),
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          org.apache.spark.sql.types.StructField("change_type",
-            org.apache.spark.sql.types.StringType, nullable = false) +: tableSchema.fields)),
-      "OPTIMIZE",
-      truncateDeletes = true)
-    applyStaged()
+    commit(Commit.partitioned("OPTIMIZE", cur, shape)
+      .copy(replaceAll = true, changes = Some(noChanges)))
   }
 
   /** RESTORE to an earlier committed version (the Delta RESTORE shape):
@@ -1476,15 +1394,8 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       !(col("_c") <=> col("_t"))).localCheckpoint(true)
     val updPre = changeRows(changed.select(col("_c.*")), "update_pre")
     val upd = changeRows(changed.select(col("_t.*")), "update")
-    stageFullCommit(
-      target.filter(!col("uploaded")),
-      target.filter(col("uploaded")),
-      ins.unionByName(del).unionByName(updPre).unionByName(upd),
-      "RESTORE",
-      // Full replace: every pre-restore file is gone, so the vectors
-      // truncate inside the commit's idempotent promotion.
-      truncateDeletes = true)
-    applyStaged()
+    commit(Commit.partitioned("RESTORE", target).copy(replaceAll = true,
+      changes = Some(ins.unionByName(del).unionByName(updPre).unionByName(upd))))
   }
 
   /** Zone-pruned id-range read over the pending partition: consult the
@@ -2002,6 +1913,13 @@ class CustomerStore(protected val spark: SparkSession, path: String,
   def markUploaded(ackedEmails: DataFrame): Unit = {
     if (!tableExists) return
     recover()
+    commit(ackCommit(ackedEmails))
+  }
+
+  /** The ack commit [[markUploaded]] lands (see there). Specs stage it
+    * to stop at the commit point.
+    */
+  private[pipeline] def ackCommit(ackedEmails: DataFrame): Commit = {
     val acked = ackedEmails.select(col("email").as("_ack")).distinct()
       .localCheckpoint(true)
     // Candidate pending rows, tagged with their physical file. The
@@ -2047,11 +1965,9 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       else candidates.filter(col("_file").isInCollection(touched))
         .join(acked, col("email") === col("_ack"), "left_anti")
         .select(tableSchema.fieldNames.map(col): _*)
-    stageMergeCommit(survivors.unionByName(moved), touched.toSeq,
-      changeRows(movedPre.drop("_file"), "ack_pre")
-        .unionByName(changeRows(moved, "ack")),
-      "UPDATE")
-    applyStaged()
+    Commit("UPDATE", pending = Some(survivors), done = Some(moved), remove = touched.toSeq,
+      changes = Some(changeRows(movedPre.drop("_file"), "ack_pre")
+        .unionByName(changeRows(moved, "ack"))))
   }
 
   // ---- Idempotent writer transactions (_txns registry) ----------------
@@ -2074,9 +1990,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     */
   def latestTxnVersion(appId: String): Option[Long] = {
     val f = new java.io.File(new java.io.File(path, Txns), txnFile(appId))
-    if (!f.exists()) None
-    else Some(new String(java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
+    Option.when(f.exists())(readText(f).toLong)
   }
 
   /** `appId` names a registry file — restrict to filesystem-safe chars
@@ -2117,7 +2031,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
 
   /** Run `op` (which stages at most one commit through the normal choke
     * points) with the (appId, version) marker threaded into its staging
-    * dir ([[freshStagingTmp]] writes it; promotion records it). Thread-
+    * dir ([[stage]] writes it; promotion records it). Thread-
     * local, matching the OCC model: a stager is thread-confined until
     * the commit point.
     */
@@ -2132,32 +2046,12 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       val out = op
       // The op had no effect (empty batch / all rows deduped away) so
       // no commit carried the marker: record the version in an
-      // effect-less feed-silent commit — a replay must still skip.
-      if (!txnSkippedAtCommit.get && currentVersion() == v0) commitMarkerOnly("TXN")
+      // effect-less feed-silent commit — a replay must still skip. It
+      // touches no files and no keys, so it composes with any
+      // interleaved commit.
+      if (!txnSkippedAtCommit.get && currentVersion() == v0) commit(Commit("TXN"))
       if (txnSkippedAtCommit.get) None else Some(out)
     } finally { activeTxn.remove(); txnSkippedAtCommit.remove() }
-  }
-
-  /** An effect-less commit whose only payload is the staged markers
-    * ([[freshStagingTmp]] wrote them from the thread-locals): version +
-    * registry advance, zero data files, zero feed rows. NOT a
-    * full-replace commit — it touches no files and no keys, so it
-    * composes with any interleaved commit.
-    */
-  private def commitMarkerOnly(op: String): Unit = {
-    val tmp = freshStagingTmp()
-    tmp.mkdirs()
-    writeStagedMarkers(tmp)
-    val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    val v = currentVersion() + 1
-    java.nio.file.Files.write(new java.io.File(tmp, "version").toPath,
-      v.toString.getBytes(utf8))
-    java.nio.file.Files.write(new java.io.File(tmp, "commit_ts").toPath,
-      nextCommitTs().toString.getBytes(utf8))
-    java.nio.file.Files.write(new java.io.File(tmp, "operation").toPath,
-      s"$op\n0".getBytes(utf8))
-    commitStaged(tmp, v)
-    applyStaged()
   }
 
   // ---- Incremental file ingest (_ingested registry) --------------------
@@ -2207,32 +2101,13 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     try {
       val v0 = currentVersion()
       val n = insertNew(Ingest.sequenced(Ingest.enrich(good)))
-      if (currentVersion() == v0) commitMarkerOnly("COPY INTO")
+      if (currentVersion() == v0) commit(Commit("COPY INTO"))
       (fresh.length.toLong, n, nBad)
     } finally activeIngest.remove()
   }
 
   private val activeIngest = new ThreadLocal[Option[Seq[String]]] {
     override def initialValue(): Option[Seq[String]] = None
-  }
-
-  /** Write any active thread-local markers (idempotent txn, ingested
-    * file names) into a staging dir — called by [[freshStagingTmp]] so
-    * EVERY staging path carries them, and by [[commitMarkerOnly]] for
-    * effect-less commits.
-    */
-  private def writeStagedMarkers(tmp: java.io.File): Unit = {
-    val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    activeTxn.get.foreach { case (app, ver) =>
-      tmp.mkdirs()
-      java.nio.file.Files.write(new java.io.File(tmp, "txn").toPath,
-        s"$app\n$ver".getBytes(utf8)): Unit
-    }
-    activeIngest.get.foreach { names =>
-      tmp.mkdirs()
-      java.nio.file.Files.write(new java.io.File(tmp, "ingested").toPath,
-        names.mkString("\n").getBytes(utf8)): Unit
-    }
   }
 
   /** MERGE apply (see [[CustomerStoreApi.merge]]): a FILE-LEVEL merge
@@ -2265,11 +2140,20 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     */
   protected def applyMerge(updates: DataFrame, inserts: DataFrame): Unit = {
     if (updates.isEmpty && inserts.isEmpty) return
-    // Inserts are re-checked in stageAppend/appendRows on the
-    // table-doesn't-exist path; here one scan covers both legs.
+    // Inserts are re-checked by appendCommit on the table-doesn't-exist
+    // path; here one scan covers both legs.
     enforceCheckConstraints(updates.unionByName(inserts), "merge")
     if (!tableExists) { appendRows(inserts): Unit; return }
     recover()
+    commit(mergeCommit(updates, inserts))
+  }
+
+  /** The file-level merge commit [[applyMerge]] lands: per partition,
+    * the touched files' survivors plus the updates and inserts as
+    * `mrg-` replacement files, the touched files removed. Specs stage
+    * it to stop at the commit point.
+    */
+  private[pipeline] def mergeCommit(updates: DataFrame, inserts: DataFrame): Commit = {
     val withFile = allWithFile()
     // Pre-image: the stored rows the updates replace, pinned before
     // the staged rewrite starts moving the files they live in.
@@ -2287,131 +2171,110 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       else withFile.filter(col("_file").isInCollection(touched))
         .join(updates.select(col("email").as("_ue")), col("email") === col("_ue"), "left_anti")
         .select(tableSchema.fieldNames.map(col): _*)
-    stageMergeCommit(
-      survivors.unionByName(updates).unionByName(inserts),
-      touched.toSeq,
-      changeRows(updatesPre.drop("_file"), "update_pre")
-        .unionByName(changeRows(updates, "update"))
-        .unionByName(changeRows(inserts, "insert")),
-      "MERGE")
-    applyStaged()
+    Commit.partitioned("MERGE", survivors.unionByName(updates).unionByName(inserts))
+      .copy(remove = touched.toSeq, changes = Some(
+        changeRows(updatesPre.drop("_file"), "update_pre")
+          .unionByName(changeRows(updates, "update"))
+          .unionByName(changeRows(inserts, "insert"))))
   }
 
-  /** Stage a file-level MERGE commit: per partition, the replacement
-    * rows as commit-unique `mrg-` files plus a `remove-<partition>`
-    * list naming the touched files promotion deletes. Same commit
-    * point and recovery rules as every staged mutation.
+  /** Stage `c` and pass its commit point — the ONE method that stages a
+    * commit; every mutation builds a [[Commit]] and lands it here.
+    * Layout of the writer-unique `_staging.tmp-<id>` dir (renamed onto
+    * `_staging` at the commit point, see [[applyStaged]]):
+    *   - `pending/`, `done/`, `deletes/`: parquet files for
+    *     `uploaded=false/`, `uploaded=true/` and `_deletes/`, each with a
+    *     `remove-<name>` list of the basenames deleted there first — a
+    *     replace lists every live file, which also truncates the vectors;
+    *   - `changelog/`, `stats/`: for `_changelog/commit-<v>/` and
+    *     `_stats/commit-<v>/`;
+    *   - `_schema` / `_constraints`: a metadata commit's manifest;
+    *   - markers, written once here: `version`, `commit_ts`, `operation`
+    *     (label + change-row count, for the `_commits` registry) and,
+    *     under [[withTxn]] / [[ingestNewFiles]], `txn` / `ingested`.
+    * Independent writes overlap (guide §2.6, [[stageConcurrently]]): the
+    * partition writes then the stats scan of their files, beside the
+    * vector write and the change-feed write. Data files are renamed
+    * commit-unique before stats run (stats key on the promoted
+    * basenames): `mrg-` when the commit removes files, else `ins-`.
+    * Returns the version the commit took.
     */
-  private[pipeline] def stageMergeCommit(replacement: DataFrame,
-      removeUris: Seq[String], changes: DataFrame,
-      op: String): Unit = {
-    val tmp = freshStagingTmp()
-    val commitId = java.util.UUID.randomUUID().toString.take(8)
+  private[pipeline] def stage(c: Commit): Long = {
+    val tmp = new java.io.File(path,
+      StagingTmp + "-" + java.util.UUID.randomUUID().toString.take(8))
+    tmp.mkdirs()
     val v = currentVersion() + 1
-    // Three independent chains (guide §2.6): the two partition
-    // replacement writes and the change-feed write share no files;
-    // stats follows the parallel block (it scans both staged data dirs
-    // and keys on the commit-unique promoted basenames).
-    def partitionChain(add: String, rm: String, up: Boolean): Unit = {
-      val stage = new java.io.File(tmp, add)
-      graft.util.Labeled(spark, "store: stage data") {
-        toPhysical(replacement.filter(col("uploaded") === up).drop("uploaded"),
-            dataLogicalSchema)
-          .write.parquet(stage.toString)
-      }
-      stage.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        require(f.renameTo(new java.io.File(stage, s"mrg-$commitId-${f.getName}")),
-          s"staging rename failed for $f")
-      }
-      val partToken = if (up) "uploaded=true" else "uploaded=false"
-      val names = removeUris
-        .filter(_.contains(s"/$partToken/"))
-        .map(u => u.substring(u.lastIndexOf('/') + 1))
-      java.nio.file.Files.write(new java.io.File(tmp, rm).toPath,
-        names.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+    DataTargets.foreach { case (name, dir) =>
+      val names =
+        if (c.replaceAll) graft.sources.ParquetGroups.parquetFilesIn(
+          new java.io.File(path, dir).toString).map(new java.io.File(_).getName)
+        else c.remove.filter(_.contains(s"/$dir/")).map(u => u.substring(u.lastIndexOf('/') + 1))
+      if (names.nonEmpty) writeText(new java.io.File(tmp, s"remove-$name"), names.mkString("\n"))
     }
-    stageConcurrently(
-      () => partitionChain("merge-pending", "remove-pending", up = false),
-      () => partitionChain("merge-done", "remove-done", up = true),
-      () => stageChanges(tmp, changes, op, v))
-    stageStats(tmp, v)
-    commitStaged(tmp, v)
+    val prefix = if (c.replaceAll || c.remove.nonEmpty) "mrg" else "ins"
+    val writes = Seq("pending" -> c.pending, "done" -> c.done).collect { case (name, Some(rows)) =>
+      () => stageData(toPhysical(rows.drop("uploaded"), dataLogicalSchema),
+        new java.io.File(tmp, name), prefix)
+    }
+    val chains: Seq[() => Unit] =
+      Option.when(writes.nonEmpty)(() => { stageConcurrently(writes: _*); stageStats(tmp, v) }).toSeq ++
+        c.vectors.map(dv => () => stageData(dv, new java.io.File(tmp, "deletes"), "del")) ++
+        c.changes.map(chg => () => stageChanges(tmp, chg, v))
+    if (chains.nonEmpty) stageConcurrently(chains: _*)
+    c.manifest.foreach { case (file, body) => writeText(new java.io.File(tmp, file), body) }
+    activeTxn.get.foreach { case (app, ver) => writeText(new java.io.File(tmp, "txn"), s"$app\n$ver") }
+    activeIngest.get.foreach(names =>
+      writeText(new java.io.File(tmp, "ingested"), names.mkString("\n")))
+    // The change-row count is a footer-only consult of the just-written
+    // changelog; the registry keeps it after vacuumFeed retires the feed.
+    writeText(new java.io.File(tmp, "operation"), c.op + "\n" + parquetRowCount(
+      graft.sources.ParquetGroups.parquetFilesIn(new java.io.File(tmp, "changelog").toString)))
+    writeText(new java.io.File(tmp, "version"), v.toString)
+    writeText(new java.io.File(tmp, "commit_ts"), nextCommitTs().toString)
+    commitStaged(tmp, c, v)
   }
 
-  /** Stage a FULL-replace commit of both partitions (the merge path),
-    * then atomically rename to `_staging` — same commit point and
-    * recovery rules as [[stageCommit]], but the done partition is
-    * replaced wholesale (`done` stage dir) rather than appended to
-    * (`done-append`).
+  /** Promote-and-return form of [[stage]]: every public mutation ends
+    * here. Returns the committed version.
     */
-  private[pipeline] def stageFullCommit(pending: DataFrame, done: DataFrame,
-      changes: DataFrame, op: String,
-      truncateDeletes: Boolean = false): Unit = {
-    val tmp = freshStagingTmp()
-    val v = currentVersion() + 1
-    // Three independent chains (guide §2.6): two partition writes plus
-    // the change-feed write; stats follows the parallel block.
-    stageConcurrently(
-      () => graft.util.Labeled(spark, "store: stage data") {
-        toPhysical(pending.drop("uploaded"), dataLogicalSchema)
-          .write.parquet(new java.io.File(tmp, "pending").toString)
-      },
-      () => graft.util.Labeled(spark, "store: stage data") {
-        toPhysical(done.drop("uploaded"), dataLogicalSchema)
-          .write.parquet(new java.io.File(tmp, "done").toString)
-      },
-      () => stageChanges(tmp, changes, op, v))
-    // A full replace materializes every deletion-vector tombstone, so
-    // the rewrite commits stage a truncation marker and promotion
-    // clears `_deletes/` INSIDE the idempotent replay — a crash
-    // between promotion steps can no longer leave stale (inert)
-    // vector rows inflating deletionVectorStats' total.
-    if (truncateDeletes)
-      java.nio.file.Files.write(new java.io.File(tmp, "truncate-deletes").toPath,
-        Array.emptyByteArray): Unit
-    stageStats(tmp, v)
-    // Full replace: ANY interleaved commit conflicts (the rewrite was
-    // derived from the whole pre-commit table).
-    commitStaged(tmp, v, fullReplace = true)
+  private def commit(c: Commit): Long = {
+    val v = stage(c)
+    applyStaged()
+    v
   }
 
-  /** Stage this commit's change-feed rows next to its data outputs,
-    * under commit-unique file names so crash replay cannot clobber
-    * files a previous promotion already landed in `_changelog/`.
-    * Stamps every row with this commit's version (last committed + 1)
-    * and stages the version marker the promotion advances the counter
-    * from — the stamp happens HERE, the single staging choke point,
-    * so every mutation path versions identically.
-    *
-    * `op` is the commit's OPERATION label (the DESCRIBE HISTORY verb:
-    * WRITE / UPDATE / MERGE / DELETE / OPTIMIZE / RESTORE / DDL verbs)
-    * — staged with the commit alongside its change-row count (a
-    * footer-only consult of the just-written, page-warm changelog) and
-    * promoted into the vacuum-surviving `_commits` registry, so
-    * [[history]] can describe commits whose feed dirs are long retired.
+  /** The staged data write: `df` as parquet under `dir`, parts renamed
+    * commit-unique so a crash replay can never clobber files an earlier
+    * promotion landed.
     */
-  private def stageChanges(tmp: java.io.File, changes: DataFrame,
-      op: String, v: Long): Unit = {
+  private def stageData(df: DataFrame, dir: java.io.File, prefix: String): Unit = {
+    graft.util.Labeled(spark, "store: stage data") {
+      df.write.parquet(dir.toString)
+    }
+    prefixParts(dir, prefix)
+  }
+
+  /** Rename every parquet part under `dir` to `<prefix>-<id>-<name>`. */
+  private def prefixParts(dir: java.io.File, prefix: String): Unit = {
+    val id = java.util.UUID.randomUUID().toString.take(8)
+    dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+      require(f.renameTo(new java.io.File(dir, s"$prefix-$id-${f.getName}")),
+        s"staging rename failed for $f")
+    }
+  }
+
+  /** Stage this commit's change-feed rows, every row stamped with the
+    * commit's version (renumbered at the commit point if a rival took
+    * it, see [[renumberStaged]]).
+    */
+  private def stageChanges(tmp: java.io.File, changes: DataFrame, v: Long): Unit = {
     val dir = new java.io.File(tmp, "changelog")
     graft.util.Labeled(spark, "store: stage changes") {
       toPhysical(changes.withColumn("commit_version", lit(v))
           .select(changeSchema.fieldNames.map(col): _*), changeSchema)
         .write.parquet(dir.toString)
     }
-    val commitId = java.util.UUID.randomUUID().toString.take(8)
-    dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-      require(f.renameTo(new java.io.File(dir, s"chg-$commitId-${f.getName}")),
-        s"staging rename failed for $f")
-    }
-    java.nio.file.Files.write(new java.io.File(tmp, "version").toPath,
-      v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // This commit's promotion timestamp, staged with the data so the
-    // _commits registry advances atomically with the commit itself.
-    java.nio.file.Files.write(new java.io.File(tmp, "commit_ts").toPath,
-      nextCommitTs().toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.write(new java.io.File(tmp, "operation").toPath,
-      s"$op\n${parquetRowCount(graft.sources.ParquetGroups.parquetFilesIn(dir.toString))}"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+    prefixParts(dir, "chg")
   }
 
   /** Total row count of the given parquet files — footer-only,
@@ -2468,13 +2331,11 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * commit prefix, so the scan's basename equals the listed name.
     * The rows are kept for [[commitStaged]] to hand to [[manifest]].
     *
-    * Must run AFTER each stage method's commit-unique renames (the
-    * basenames it records are the promoted ones) and before the
-    * atomic rename to `_staging`.
+    * Runs AFTER [[stage]]'s commit-unique renames (the basenames it
+    * records are the promoted ones) and before the commit point.
     */
   private def stageStats(tmp: java.io.File, v: Long): Unit = {
-    val staged = Seq("pending", "done", "pending-append", "done-append",
-        "merge-pending", "merge-done")
+    val staged = Seq("pending", "done")
       .flatMap(d => graft.sources.ParquetGroups.parquetFilesIn(new java.io.File(tmp, d).toString))
     if (staged.isEmpty) return
     // Evolved NUMERIC columns get per-file zone stats beside the base
@@ -2535,285 +2396,106 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         import scala.jdk.CollectionConverters._
         spark.createDataFrame(rows.asJava, statsSchema)
           .coalesce(1).write.parquet(dir.toString)
-        val commitId = java.util.UUID.randomUUID().toString.take(8)
-        dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-          require(f.renameTo(new java.io.File(dir, s"sts-$commitId-${f.getName}")),
-            s"staging rename failed for $f")
-        }
+        prefixParts(dir, "sts")
         stagedStats.put(tmp.getAbsolutePath, rows)
       }
     }
   }
 
-  /** Write both partition outputs to `_staging.tmp` and atomically
-    * rename it to `_staging` (the commit point). Separated from
-    * [[applyStaged]] so crash-recovery specs can stop exactly at the
-    * commit point. Partition column is carried by directory name, not
-    * file content, so both outputs drop `uploaded`.
-    */
-  private[pipeline] def stageCommit(moved: DataFrame, kept: DataFrame,
-      changes: DataFrame): Unit = {
-    val tmp = freshStagingTmp()
-    val v = currentVersion() + 1
-    // Three independent chains (guide §2.6): the two partition writes
-    // and the change-feed write share no files. Stats runs after the
-    // parallel block — it scans BOTH staged data dirs and keys on the
-    // commit-unique promoted basenames.
-    val doneStage = new java.io.File(tmp, "done-append")
-    stageConcurrently(
-      () => graft.util.Labeled(spark, "store: stage data") {
-        toPhysical(kept.drop("uploaded"), dataLogicalSchema)
-          .write.parquet(new java.io.File(tmp, "pending").toString)
-      },
-      () => {
-        graft.util.Labeled(spark, "store: stage data") {
-          toPhysical(moved.drop("uploaded"), dataLogicalSchema)
-            .write.parquet(doneStage.toString)
-        }
-        // Commit-unique file names now, so replay after a crash cannot
-        // clobber files a previous commit already promoted.
-        val commitId = java.util.UUID.randomUUID().toString.take(8)
-        doneStage.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-          require(f.renameTo(new java.io.File(doneStage, s"ack-$commitId-${f.getName}")),
-            s"staging rename failed for $f")
-        }
-      },
-      () => stageChanges(tmp, changes, "UPDATE", v))
-    stageStats(tmp, v) // after the renames: stats key on promoted basenames
-    // The `pending` stage swaps that whole partition — a full replace
-    // of the read set, so any interleaved commit conflicts.
-    commitStaged(tmp, v, fullReplace = true)
-  }
-
-  /** Promote a committed staging directory into the table. Idempotent:
-    * each step checks what a previous (crashed) attempt already did.
-    * Serialized per table path within the JVM: promotion moves files,
-    * and two concurrent promoters of the SAME staged commit would race
-    * each other's renames (loudly — renames are atomic, so the table
-    * could not tear — but spuriously). Cross-process, promotion safety
-    * rests on replay idempotence: a crashed promoter's successor
-    * completes the same steps.
+  /** Promote the committed `_staging` dir into the table. Idempotent:
+    * every step is a replay no-op once done, and the version marker is
+    * deleted first in the final cleanup — a staging dir without it is
+    * the remains of a finished promotion. Order: each staged target
+    * (remove list, then moves), the metadata manifests, the txn and
+    * ingest registries, the `_commits` entry, and last the version
+    * counter. Serialized per table path within the JVM: two concurrent
+    * promoters of the SAME staged commit would race each other's
+    * renames (loudly — renames are atomic, so the table could not tear
+    * — but spuriously). Cross-process, promotion safety rests on
+    * replay idempotence: a crashed promoter's successor completes the
+    * same steps.
     */
   private[pipeline] def applyStaged(): Unit = promotionLock.synchronized {
     val staging = new java.io.File(path, Staging)
-    if (!staging.exists()) { dropPromotedStats(); return }
-    val pendingStage = new java.io.File(staging, "pending")
-    val doneStage = new java.io.File(staging, "done-append")
-    if (pendingStage.exists()) {
-      val pendingDir = new java.io.File(path, "uploaded=false")
-      deleteRecursively(pendingDir)
-      require(pendingStage.renameTo(pendingDir), s"promote $pendingStage failed")
-    }
-    if (doneStage.exists()) {
-      val doneDir = new java.io.File(path, "uploaded=true")
-      doneDir.mkdirs()
-      doneStage.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        require(f.renameTo(new java.io.File(doneDir, f.getName)), s"promote $f failed")
-      }
-      deleteRecursively(doneStage)
-    }
-    // Insert commit: append the staged fresh files into the pending
-    // partition (names are commit-unique, so crash replay is a no-op
-    // for files a previous attempt already moved).
-    val pendAppend = new java.io.File(staging, "pending-append")
-    if (pendAppend.exists()) {
-      val pendingDir = new java.io.File(path, "uploaded=false")
-      pendingDir.mkdirs()
-      pendAppend.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        require(f.renameTo(new java.io.File(pendingDir, f.getName)), s"promote $f failed")
-      }
-      deleteRecursively(pendAppend)
-    }
-    // Full-replace done stage (the compaction path): swap the whole
-    // partition, mirroring the pending swap above.
-    val doneFull = new java.io.File(staging, "done")
-    if (doneFull.exists()) {
-      val doneDir = new java.io.File(path, "uploaded=true")
-      deleteRecursively(doneDir)
-      require(doneFull.renameTo(doneDir), s"promote $doneFull failed")
-    }
-    // File-level merge promotion: per partition, delete the touched
-    // files named in the remove-list (re-deleting a missing file is a
-    // replay no-op), then move the commit-unique replacement files in.
-    Seq(("merge-pending", "remove-pending", "uploaded=false"),
-        ("merge-done", "remove-done", "uploaded=true")).foreach { case (add, rm, part) =>
-      val rmList = new java.io.File(staging, rm)
-      val partDir = new java.io.File(path, part)
-      if (rmList.exists()) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(rmList.toPath).asScala
-          .filter(_.nonEmpty).foreach { name =>
-            val f = new java.io.File(partDir, name)
-            if (f.exists()) require(f.delete(), s"remove $f failed")
-          }
-      }
-      val addDir = new java.io.File(staging, add)
-      if (addDir.exists()) {
-        partDir.mkdirs()
-        addDir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-          require(f.renameTo(new java.io.File(partDir, f.getName)), s"promote $f failed")
+    val vm = new java.io.File(staging, "version")
+    if (vm.exists()) {
+      val v = readText(vm).toLong
+      stagedTargets(v).foreach { case (name, dst) => promoteStaged(staging, name, dst) }
+      Seq(SchemaFile, ConstraintsFile).map(new java.io.File(staging, _)).filter(_.exists())
+        .foreach(f => java.nio.file.Files.move(f.toPath, new java.io.File(path, f.getName).toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+      // Idempotent-txn registry: monotonic max, so a crash replay
+      // rewrites the same value and a late out-of-order commit can never
+      // roll the registry back.
+      val txn = new java.io.File(staging, "txn")
+      if (txn.exists()) {
+        val Array(app, ver) = readText(txn).split("\n").map(_.trim)
+        if (latestTxnVersion(app).forall(_ < ver.toLong)) {
+          val dir = new java.io.File(path, Txns)
+          dir.mkdirs()
+          val t = new java.io.File(dir, app + ".tmp")
+          writeText(t, ver)
+          java.nio.file.Files.move(t.toPath, new java.io.File(dir, app).toPath,
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
         }
-        deleteRecursively(addDir)
       }
-    }
-    // Deletion-vector promotion: append the staged (file, email)
-    // tombstone files into `_deletes/` (commit-unique names, so crash
-    // replay is a no-op for files a previous attempt already moved).
-    val dvStage = new java.io.File(staging, "deletes")
-    if (dvStage.exists()) {
-      val dvDir = new java.io.File(path, Deletes)
-      dvDir.mkdirs()
-      dvStage.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        require(f.renameTo(new java.io.File(dvDir, f.getName)), s"promote $f failed")
-      }
-      deleteRecursively(dvStage)
-    }
-    // Deletion-vector truncation (full-rewrite commits): the rewrite
-    // materialized every tombstone, so clearing `_deletes/` is part of
-    // the committed promotion — idempotent (clearing an absent dir is
-    // a no-op on replay), and a crash mid-promotion re-runs it.
-    if (new java.io.File(staging, "truncate-deletes").exists())
-      deleteRecursively(new java.io.File(path, Deletes))
-    // Schema promotion (additive-evolution commits): one atomic move
-    // onto `_schema`; a replay after a crash finds the staged file
-    // gone and skips (the move already landed).
-    val schemaStage = new java.io.File(staging, "schema")
-    if (schemaStage.exists())
-      java.nio.file.Files.move(schemaStage.toPath,
-        new java.io.File(path, SchemaFile).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    val constraintsStage = new java.io.File(staging, "constraints")
-    if (constraintsStage.exists())
-      java.nio.file.Files.move(constraintsStage.toPath,
-        new java.io.File(path, ConstraintsFile).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    // Change-feed promotion: append this commit's rows (already under
-    // commit-unique names, so replay after a crash is a no-op for
-    // files a previous attempt landed).
-    // Change-feed promotion into this commit's OWN directory
-    // (`_changelog/commit-<v>/`) — the per-commit layout feedSince
-    // prunes on and vacuumFeed retires wholesale.
-    val chgStage = new java.io.File(staging, "changelog")
-    if (chgStage.exists()) {
-      val vm = new java.io.File(staging, "version")
-      val v =
-        if (vm.exists())
-          new String(java.nio.file.Files.readAllBytes(vm.toPath),
-            java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        else currentVersion() + 1
-      val chgDir = new java.io.File(path, f"$Changelog%s/commit-$v%09d")
-      chgDir.mkdirs()
-      chgStage.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        require(f.renameTo(new java.io.File(chgDir, f.getName)), s"promote $f failed")
-      }
-      deleteRecursively(chgStage)
-    }
-    // Skipping-stats promotion into this commit's own manifest
-    // directory (`_stats/commit-<v>/`) — same per-commit layout and
-    // replay rules as the changelog, so the manifest can never
-    // describe a commit that did not land.
-    locally {
-      val st = new java.io.File(staging, "stats")
-      if (st.exists()) {
-        val vm = new java.io.File(staging, "version")
-        val v =
-          if (vm.exists())
-            new String(java.nio.file.Files.readAllBytes(vm.toPath),
-              java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-          else currentVersion() + 1
-        val dst = new java.io.File(path, f"$StatsManifest%s/commit-$v%09d")
-        dst.mkdirs()
-        st.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-          require(f.renameTo(new java.io.File(dst, f.getName)), s"promote $f failed")
-        }
-        deleteRecursively(st)
-      }
-    }
-    // Idempotent-txn registry promotion: record the staged (appId,
-    // version) under `_txns/` BEFORE the version counter advances —
-    // monotonic max, so a crash replay rewrites the same value and a
-    // late out-of-order commit can never roll the registry back.
-    val txnStage = new java.io.File(staging, "txn")
-    if (txnStage.exists()) {
-      val lines = java.nio.file.Files.readAllLines(txnStage.toPath)
-      val app = lines.get(0)
-      val ver = lines.get(1).trim.toLong
-      val dir = new java.io.File(path, Txns)
-      dir.mkdirs()
-      val dst = new java.io.File(dir, app)
-      val prev =
-        if (!dst.exists()) Long.MinValue
-        else new String(java.nio.file.Files.readAllBytes(dst.toPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      if (ver > prev) {
-        val t = new java.io.File(dir, app + ".tmp")
-        java.nio.file.Files.write(t.toPath,
-          ver.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(t.toPath, dst.toPath,
+      val ingested = new java.io.File(staging, "ingested")
+      if (ingested.exists()) {
+        val dir = new java.io.File(path, IngestedDir)
+        dir.mkdirs()
+        java.nio.file.Files.copy(ingested.toPath, new java.io.File(dir, f"commit-$v%09d").toPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
       }
-    }
-    // Ingest-registry promotion: the commit's loaded file names land in
-    // `_ingested/` under the commit's version (replay rewrites the same
-    // file — idempotent).
-    val ingStage = new java.io.File(staging, "ingested")
-    if (ingStage.exists()) {
-      val vm = new java.io.File(staging, "version")
-      val v =
-        if (vm.exists())
-          new String(java.nio.file.Files.readAllBytes(vm.toPath),
-            java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        else currentVersion() + 1
-      val dir = new java.io.File(path, IngestedDir)
-      dir.mkdirs()
-      java.nio.file.Files.copy(ingStage.toPath,
-        new java.io.File(dir, f"commit-$v%09d").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    }
-    // Version promotion: advance the counter to the staged commit's
-    // version (atomic tmp+rename; replay after a crash rewrites the
-    // same value, so promotion stays idempotent).
-    val vMarker = new java.io.File(staging, "version")
-    if (vMarker.exists()) {
-      val v = new String(java.nio.file.Files.readAllBytes(vMarker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      // Commit→timestamp registry entry (idempotent: crash replay
-      // rewrites the same staged value). Written BEFORE the version
-      // counter advances, so a registry entry can lag the counter only
-      // inside an in-flight promotion, never the other way. Line 1 is
-      // the promotion timestamp; lines 2-3 (when staged) are the
-      // operation label and change-row count [[history]] serves —
-      // registry entries survive vacuumFeed, so the history of a
-      // retired commit stays describable.
-      val tsMarker = new java.io.File(staging, "commit_ts")
-      if (tsMarker.exists()) {
-        val reg = new java.io.File(path, Commits)
-        reg.mkdirs()
-        val utf8 = java.nio.charset.StandardCharsets.UTF_8
-        val ts = new String(
-          java.nio.file.Files.readAllBytes(tsMarker.toPath), utf8).trim
-        val opMarker = new java.io.File(staging, "operation")
-        val entry =
-          if (opMarker.exists())
-            ts + "\n" + new String(
-              java.nio.file.Files.readAllBytes(opMarker.toPath), utf8).trim
-          else ts
-        java.nio.file.Files.write(
-          new java.io.File(reg, s"commit-$v").toPath, entry.getBytes(utf8)): Unit
-      }
+      // Registry entry before the counter: an entry can lag the counter
+      // only inside an in-flight promotion, never the other way. Line 1
+      // is the promotion timestamp, lines 2-3 the operation label and
+      // change-row count [[history]] serves.
+      val reg = new java.io.File(path, Commits)
+      reg.mkdirs()
+      writeText(new java.io.File(reg, s"commit-$v"),
+        readText(new java.io.File(staging, "commit_ts")) + "\n" +
+          readText(new java.io.File(staging, "operation")))
       val vTmp = new java.io.File(path, VersionFile + ".tmp")
-      java.nio.file.Files.write(vTmp.toPath,
-        v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      writeText(vTmp, v.toString)
       java.nio.file.Files.move(vTmp.toPath,
         new java.io.File(path, VersionFile).toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       // The counter now covers this commit's `_stats` dir: the rows its
       // committer computed join the snapshot without a read-back.
-      Option(committedStats.remove(v.toLong)).foreach(manifest.absorb(v.toLong, _))
+      Option(committedStats.remove(v)).foreach(manifest.absorb(v, _))
+      require(vm.delete(), s"could not retire $vm")
     }
     deleteRecursively(staging)
     dropPromotedStats()
+  }
+
+  /** Staged target name → the table dir its parquet files promote into. */
+  private def stagedTargets(v: Long): Seq[(String, java.io.File)] =
+    DataTargets.map { case (name, dir) => name -> new java.io.File(path, dir) } ++ Seq(
+      "changelog" -> new java.io.File(path, f"$Changelog%s/commit-$v%09d"),
+      "stats" -> new java.io.File(path, f"$StatsManifest%s/commit-$v%09d"))
+
+  /** Promote one staged target: delete the basenames its `remove-<name>`
+    * list names from `dst`, then move its staged parquet files in. Both
+    * halves are replay no-ops: a removed file stays removed, and staged
+    * names are commit-unique and leave staging as they land.
+    */
+  private[pipeline] def promoteStaged(staging: java.io.File, name: String,
+      dst: java.io.File): Unit = {
+    val rm = new java.io.File(staging, s"remove-$name")
+    if (rm.exists()) readText(rm).split("\n").filter(_.nonEmpty).foreach { n =>
+      val f = new java.io.File(dst, n)
+      if (f.exists()) require(f.delete(), s"remove $f failed")
+    }
+    val add = new java.io.File(staging, name)
+    if (add.exists()) {
+      dst.mkdirs()
+      add.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+        require(f.renameTo(new java.io.File(dst, f.getName)), s"promote $f failed")
+      }
+      deleteRecursively(add)
+    }
   }
 
   /** Forget handed-over stats rows of commits already promoted (by a
@@ -2827,21 +2509,6 @@ class CustomerStore(protected val spark: SparkSession, path: String,
 
   // ---- Optimistic concurrency (the commit point) ---------------------
 
-  /** A writer-unique staging directory (`_staging.tmp-<id>`), so two
-    * concurrent stagers can prepare commits side by side — only the
-    * rename onto `_staging` (the commit point) is contended.
-    */
-  private def freshStagingTmp(): java.io.File = {
-    val f = new java.io.File(path,
-      StagingTmp + "-" + java.util.UUID.randomUUID().toString.take(8))
-    deleteRecursively(f)
-    // Any active idempotent-txn / ingest-registry markers ride EVERY
-    // staging dir, so whichever stage method the wrapped op uses, the
-    // markers promote atomically with its commit.
-    writeStagedMarkers(f)
-    f
-  }
-
   /** The commit point, with Delta-style optimistic concurrency.
     * Renaming `tmp` onto `_staging` is atomic and fails while a rival
     * writer's committed-but-unpromoted staging occupies it. The loser
@@ -2854,10 +2521,11 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * email/id keys — and (3) re-numbers the staged commit onto the new
     * head ([[renumberStaged]]) and retries. A real conflict aborts
     * with [[ConcurrentCommitException]] and the table keeps ONLY the
-    * rival's state — never a torn mix.
+    * rival's state — never a torn mix. Writers stage side by side in
+    * writer-unique `_staging.tmp-<id>` dirs; only this rename is
+    * contended. Returns the version the commit took.
     */
-  private def commitStaged(tmp: java.io.File, stagedV: Long,
-      fullReplace: Boolean = false): Unit = {
+  private def commitStaged(tmp: java.io.File, c: Commit, stagedV: Long): Long = {
     val staging = new java.io.File(path, Staging)
     // The version this commit was DERIVED from — conflict checks always
     // span (base, head], however many times the commit is re-numbered.
@@ -2889,8 +2557,8 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         // construction; it must skip, not abort).
         val txnMarker = new java.io.File(tmp, "txn")
         if (txnMarker.exists()) {
-          val lines = java.nio.file.Files.readAllLines(txnMarker.toPath)
-          if (latestTxnVersion(lines.get(0)).exists(_ >= lines.get(1).trim.toLong)) {
+          val Array(app, ver) = readText(txnMarker).split("\n").map(_.trim)
+          if (latestTxnVersion(app).exists(_ >= ver.toLong)) {
             deleteRecursively(tmp)
             txnSkippedAtCommit.set(true)
             committed = true
@@ -2899,42 +2567,49 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         if (!committed) {
           val head = currentVersion()
           if (head >= v) {
-            checkNoConflict(tmp, base, head, fullReplace)
+            checkNoConflict(tmp, c, base, head)
             v = head + 1
             renumberStaged(tmp, v)
           }
           committed = tmp.renameTo(staging)
           // Past the commit point: promotion hands the rows over.
-          if (committed) stats.foreach(committedStats.put(v, _))
+          if (committed) {
+            stats.foreach(committedStats.put(v, _))
+            commitPointHook()
+          }
         }
       }
     }
+    v
   }
 
-  /** Abort unless this staged commit is safe to re-apply on top of the
-    * interleaved commits in `(baseV, headV]`. Two independent checks:
-    * physical — every file the commit removes (partition-qualified
-    * `remove-*` lists) or tombstones (deletion-vector basenames, either
-    * partition) must still exist, which catches feed-silent rewrites
-    * like compact/OPTIMIZE; logical — no interleaved change row shares
-    * an email or id with this commit's change rows, which catches
-    * UNIQUE-violating concurrent inserts and lost-update races.
+  /** Spec seam: runs right after each successful commit-point rename,
+    * before promotion — where a crash image of the table is taken.
     */
-  private def checkNoConflict(tmp: java.io.File, baseV: Long, headV: Long,
-      fullReplace: Boolean): Unit = {
-    if (fullReplace)
+  @volatile private[pipeline] var commitPointHook: () => Unit = () => ()
+
+  /** Abort unless this staged commit is safe to re-apply on top of the
+    * interleaved commits in `(baseV, headV]`. An exclusive commit (a
+    * replace or a metadata change, derived from the whole table state)
+    * always conflicts. Otherwise two independent checks: physical —
+    * every file the commit removes (its `remove-*` lists) or tombstones
+    * (deletion-vector basenames, either partition) must still exist,
+    * which catches feed-silent rewrites like compact/OPTIMIZE; logical
+    * — no interleaved change row shares an email or id with this
+    * commit's change rows, which catches UNIQUE-violating concurrent
+    * inserts and lost-update races.
+    */
+  private def checkNoConflict(tmp: java.io.File, c: Commit, baseV: Long, headV: Long): Unit = {
+    if (c.exclusive)
       throw new ConcurrentCommitException(
-        s"full-table rewrite staged against version $baseV conflicts with " +
-          s"interleaved commits up to $headV")
-    import scala.jdk.CollectionConverters._
+        s"${c.op}: full-table rewrite or metadata commit staged against version " +
+          s"$baseV conflicts with interleaved commits up to $headV")
     def gone(part: String, name: String): Boolean =
       !new java.io.File(new java.io.File(path, part), name).exists()
-    val missingListed = Seq("remove-pending" -> "uploaded=false",
-        "remove-done" -> "uploaded=true").flatMap { case (rm, part) =>
-      val f = new java.io.File(tmp, rm)
+    val missingListed = DataTargets.flatMap { case (name, dir) =>
+      val f = new java.io.File(tmp, s"remove-$name")
       if (!f.exists()) Nil
-      else java.nio.file.Files.readAllLines(f.toPath).asScala
-        .filter(_.nonEmpty).filter(gone(part, _)).map(n => s"$part/$n").toSeq
+      else readText(f).split("\n").toSeq.filter(_.nonEmpty).filter(gone(dir, _)).map(n => s"$dir/$n")
     }
     val dvDir = new java.io.File(tmp, "deletes")
     val missingVectored =
@@ -2979,20 +2654,22 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         spark.read.parquet(dir.toString)
           .withColumn("commit_version", lit(newV))
           .coalesce(1).write.parquet(out.toString)
-        val commitId = java.util.UUID.randomUUID().toString.take(8)
-        out.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-          require(f.renameTo(new java.io.File(out, s"$prefix-$commitId-${f.getName}")),
-            s"renumber rename failed for $f")
-        }
+        prefixParts(out, prefix)
         deleteRecursively(dir)
         require(out.renameTo(dir), s"renumber swap $out -> $dir failed")
       }
     }
-    java.nio.file.Files.write(new java.io.File(tmp, "version").toPath,
-      newV.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.write(new java.io.File(tmp, "commit_ts").toPath,
-      nextCommitTs().toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeText(new java.io.File(tmp, "version"), newV.toString)
+    writeText(new java.io.File(tmp, "commit_ts"), nextCommitTs().toString)
   }
+
+  private def writeText(f: java.io.File, s: String): Unit =
+    java.nio.file.Files.write(f.toPath, s.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+
+  /** A small metadata file's contents, trimmed. */
+  private def readText(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8).trim
 
   /** Crash recovery, run at open and before each commit: a committed
     * staging directory is applied to completion; an uncommitted
@@ -3113,6 +2790,45 @@ object CustomerStore {
   private[pipeline] val StatsManifest = "_stats"
   private[pipeline] val Deletes = "_deletes"
   private[pipeline] val FeedWatermark = "_feed_watermark"
+  /** Staged target name → table dir of the targets a commit both adds
+    * files to and removes files from (see [[CustomerStore.stage]]).
+    */
+  private[pipeline] val DataTargets =
+    Seq("pending" -> "uploaded=false", "done" -> "uploaded=true", "deletes" -> Deletes)
+
+  /** One commit, described as data — the shape of a Delta log entry:
+    * the files it adds and removes plus what it records. Every mutation
+    * builds one and lands it through [[CustomerStore.stage]].
+    *
+    * @param op         the DESCRIBE HISTORY operation label
+    * @param pending    table rows to add to the uploaded=false partition
+    * @param done       table rows to add to the uploaded=true partition
+    * @param remove     partition-qualified data-file paths to remove
+    * @param replaceAll remove every live data file and deletion vector
+    * @param changes    change-feed rows (`change_type` + table columns)
+    * @param vectors    deletion-vector (file basename, email) rows to add
+    * @param manifest   (table file, body) of a schema or constraints manifest
+    */
+  private[pipeline] final case class Commit(op: String,
+      pending: Option[DataFrame] = None, done: Option[DataFrame] = None,
+      remove: Seq[String] = Nil, replaceAll: Boolean = false,
+      changes: Option[DataFrame] = None, vectors: Option[DataFrame] = None,
+      manifest: Option[(String, String)] = None) {
+    /** A replace or a metadata commit derives from the whole table
+      * state, so it conflicts with ANY interleaved commit.
+      */
+    def exclusive: Boolean = replaceAll || manifest.nonEmpty
+  }
+
+  private[pipeline] object Commit {
+    /** A commit adding `rows` to both partitions by their `uploaded`
+      * value, each side shaped by `shape` (a clustering or coalesce).
+      */
+    def partitioned(op: String, rows: DataFrame,
+        shape: DataFrame => DataFrame = identity): Commit =
+      Commit(op, pending = Some(shape(rows.filter(!col("uploaded")))),
+        done = Some(shape(rows.filter(col("uploaded")))))
+  }
   /** Idempotent-writer transaction registry (Delta txnAppId/txnVersion):
     * one file per appId holding its latest committed version.
     */

@@ -23,11 +23,6 @@ import graft.util.{DataSkipping, Fs}
   */
 object Layout extends QueryGroup {
 
-  // Harness-heavy: the cost is real streams/stores/files, not codegen
-  // — warming at sf0.001 pays the fixed harness bill without making
-  // the timed pass faster (see QueryGroup.warmup).
-  override def warmup: Boolean = false
-
   private def cents(c: org.apache.spark.sql.Column) = floor(c * 100)
 
   private def events(s: SparkSession, dir: String): DataFrame =

@@ -18,61 +18,11 @@ import graft.sources.JsonLines
   */
 object PipelineParity extends QueryGroup {
 
-  // Harness-heavy: the cost is real streams/stores/files, not codegen
-  // — warming at sf0.001 pays the fixed harness bill without making
-  // the timed pass faster (see QueryGroup.warmup).
-  override def warmup: Boolean = false
-
   import graft.util.Fs
   private def withTempDir[T](prefix: String)(f: java.nio.file.Path => T): T =
     Fs.withTempDir(prefix)(f)
 
-  /** [[withTempDir]] plus a scoped shuffle-partition reduction for the
-    * gates that RUN A STREAM (r15 optimization round, guide §2.2/§2.5:
-    * partition count is a scale dial, and here it is the number of
-    * state-store instances and sink files every micro-batch commits).
-    * The fixture streams carry a few thousand rows per trigger, and 32
-    * HDFS-backed state stores / 32-way micro-batch shuffles cost more
-    * in per-store init+commit+fsync than they buy in parallelism —
-    * StreamingParity has run its gates at 4 since round 7 (measured
-    * there: stream-stream join 13.7s → 4.4s). Results are unchanged by
-    * construction: partition count never changes what a keyed state or
-    * an aggregate computes, and every gate's output is an aggregate or
-    * a REQUIREd comparison, not a file layout. The partition count is
-    * baked into each checkpoint at query start; both runs of a
-    * resume-style gate execute inside ONE scope, so the checkpoint
-    * stays self-consistent. A production stream sizes this to its key
-    * cardinality instead (the same note as StreamingParity's).
-    *
-    * Concurrency guard (r16, closing the r15 ADVICE item): the
-    * override still mutates the session-wide conf — a `newSession()`
-    * scoping was MEASURED and REJECTED (each cloned session rebuilds
-    * its SessionState and plan caches: the 8 stream gates read
-    * +0.3-0.8s each, ~+6s across the 19 scoped gates) — but the
-    * single-writer assumption is now ENFORCED, not assumed: a second
-    * concurrent scope on the same session fails loudly instead of
-    * silently running unrelated work at 4 partitions.
-    */
-  private def withStreamTempDir[T](s: SparkSession, prefix: String)(
-      f: (SparkSession, java.nio.file.Path) => T): T =
-    Fs.withTempDir(prefix) { tmp =>
-      require(PipelineParity.streamScopes.incrementAndGet() == 1,
-        "withStreamTempDir mutates the session-global shuffle-partition " +
-          "conf; concurrent stream gates on one session are not supported")
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try f(s, tmp)
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prev)
-        PipelineParity.streamScopes.decrementAndGet(): Unit
-      }
-    }
-
-  /** In-flight [[withStreamTempDir]] scopes (shared with
-    * StreamingParity's twin helper — one session, one guard).
-    */
-  private[queries] val streamScopes =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  import StreamGates.withStreamTempDir
   private def appendLines(dir: java.nio.file.Path, lines: Seq[String]): Unit =
     Fs.appendToPartFile(dir, lines)
 

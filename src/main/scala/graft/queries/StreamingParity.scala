@@ -37,11 +37,6 @@ import graft.streaming.EventStreams
   */
 object StreamingParity extends QueryGroup {
 
-  // Harness-heavy: the cost is real streams/stores/files, not codegen
-  // — warming at sf0.001 pays the fixed harness bill without making
-  // the timed pass faster (see QueryGroup.warmup).
-  override def warmup: Boolean = false
-
   private val GAP_MS = 1800000L
   private val WATERMARK_DELAY_MS = 7200000L
 
@@ -60,45 +55,7 @@ object StreamingParity extends QueryGroup {
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** Run `f` with a scratch dir for the stream's sink + checkpoint,
-    * deleting it afterwards. The result must be detached from the dir
-    * (localCheckpoint) before returning.
-    *
-    * The streaming segment runs with a reduced shuffle-partition count
-    * (baked into the checkpoint at query start → number of state
-    * stores): the parity corpora are a few hundred thousand rows, and
-    * 32 HDFS-backed state stores cost more in per-store init/commit
-    * than they buy in parallelism. Measured at sf0.1: 8 partitions
-    * took the stream-stream join 13.7s → 10.3s cold (round 5); 4
-    * partitions took it to ~4.4s and session_window to ~4.7s warm
-    * (round 7) — past that the state-store savings flatten while the
-    * compute serializes. A production stream sizes this to its key
-    * cardinality instead.
-    *
-    * Concurrency guard (r16, closing the r15 ADVICE item): the
-    * override still mutates the session-wide conf — a `newSession()`
-    * scoping was measured and rejected in PipelineParity (cloned
-    * sessions rebuild SessionState/plan caches, +0.3-0.8s per gate) —
-    * but the single-writer assumption is now ENFORCED: a second
-    * concurrent scope fails loudly instead of silently running
-    * unrelated work at the stream partition count.
-    */
-  private def withTempDir[T](s: SparkSession, prefix: String)(
-      f: (SparkSession, java.nio.file.Path) => T): T =
-    graft.util.Fs.withTempDir(prefix) { tmp =>
-      require(PipelineParity.streamScopes.incrementAndGet() == 1,
-        "stream-gate scope mutates the session-global shuffle-partition " +
-          "conf; concurrent stream gates on one session are not supported")
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", StreamPartitions.toString)
-      try f(s, tmp)
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prev)
-        PipelineParity.streamScopes.decrementAndGet(): Unit
-      }
-    }
-
-  private val StreamPartitions = 4
+  import StreamGates.withStreamTempDir
 
   /** The four parity counts in ONE Spark action: both sides are
     * key-unique by construction, so a full-outer join on the key
@@ -133,7 +90,7 @@ object StreamingParity extends QueryGroup {
       val batch = Tables(s, dir, "events").withColumn("us", expr("ts DIV 1000"))
 
       // --- streaming side: file source → completedSessions → parquet sink
-      val streamed = withTempDir(s, "graft-parity-") { (s, tmp) =>
+      val streamed = withStreamTempDir(s, "graft-parity-") { (s, tmp) =>
         // events.parquet is a single FILE; the file stream source
         // derives basePath from the path and requires a directory, so
         // address the file through a glob — globbed paths resolve
@@ -205,7 +162,7 @@ object StreamingParity extends QueryGroup {
       val batchFps = Tables(s, dir, "documents")
         .select(contentFingerprint(col("text")).as("fp")).distinct()
         .localCheckpoint(true)
-      val streamedFps = withTempDir(s, "graft-dedup-parity-") { (s, tmp) =>
+      val streamedFps = withStreamTempDir(s, "graft-dedup-parity-") { (s, tmp) =>
         s.readStream.schema(documentsSchema)
           .parquet(s"$dir/{documents.parquet}")
           .select(contentFingerprint(col("text")).as("fp"))
@@ -240,7 +197,7 @@ object StreamingParity extends QueryGroup {
       val batchKept = model.feats
         .filter(TextAnalysis.pocketDot(model.pocketW) > 0)
         .select(col("doc_id")).localCheckpoint(true)
-      val streamedKept = withTempDir(s, "graft-modelfilter-parity-") { (s, tmp) =>
+      val streamedKept = withStreamTempDir(s, "graft-modelfilter-parity-") { (s, tmp) =>
         TextAnalysis.classifierFeatures(
             s.readStream.schema(documentsSchema)
               .parquet(s"$dir/{documents.parquet}"))
@@ -280,7 +237,7 @@ object StreamingParity extends QueryGroup {
         DedupQueries.contamGrams(s, dir).filter(col("split") === "eval")
           .select(col("doc_id"), col("g")),
         mBits, bloom).localCheckpoint(true)
-      val streamFlagged = withTempDir(s, "graft-bloomfilter-parity-") { (s, tmp) =>
+      val streamFlagged = withStreamTempDir(s, "graft-bloomfilter-parity-") { (s, tmp) =>
         val evalStream = DedupQueries.contamGramsOf(
           s.readStream.schema(documentsSchema)
             .parquet(s"$dir/{documents.parquet}")
@@ -311,7 +268,7 @@ object StreamingParity extends QueryGroup {
     "streaming_hourly_parity" -> ((s, dir) => {
       import s.implicits._
       val batch = Tables(s, dir, "events").withColumn("us", expr("ts DIV 1000"))
-      val streamed = withTempDir(s, "graft-hourly-parity-") { (s, tmp) =>
+      val streamed = withStreamTempDir(s, "graft-hourly-parity-") { (s, tmp) =>
         EventStreams.hourlyCounts(
             s.readStream.schema(eventsSchema)
               .parquet(s"$dir/{events.parquet}")
@@ -361,7 +318,7 @@ object StreamingParity extends QueryGroup {
       import s.implicits._
       val w = Events.ATTR_W_US
       val batch = Tables(s, dir, "events").withColumn("us", expr("ts DIV 1000"))
-      val streamed = withTempDir(s, "graft-parity-") { (s, tmp) =>
+      val streamed = withStreamTempDir(s, "graft-parity-") { (s, tmp) =>
         val stream = s.readStream.schema(eventsSchema)
           .parquet(s"$dir/{events.parquet}")
           .select(col("user_id"), col("event_id"), col("ts"),
@@ -420,7 +377,7 @@ object StreamingParity extends QueryGroup {
       import s.implicits._
       val w = Events.FUNNEL_W_US
       val batch = Tables(s, dir, "events").withColumn("us", expr("ts DIV 1000"))
-      val streamed = withTempDir(s, "graft-parity-") { (s, tmp) =>
+      val streamed = withStreamTempDir(s, "graft-parity-") { (s, tmp) =>
         val stream = s.readStream.schema(eventsSchema)
           .parquet(s"$dir/{events.parquet}")
           .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
@@ -472,7 +429,7 @@ object StreamingParity extends QueryGroup {
         .select(col("event_id"), col("user_id"), col("event_type"),
           expr("ts DIV 1000").as("us"))
         .localCheckpoint(true)
-      val streamed = withTempDir(s, "graft-join-parity-") { (s, tmp) =>
+      val streamed = withStreamTempDir(s, "graft-join-parity-") { (s, tmp) =>
         EventStreams.viewsBeforePurchases(
             s.readStream.schema(eventsSchema)
               .parquet(s"$dir/{events.parquet}")
@@ -519,7 +476,7 @@ object StreamingParity extends QueryGroup {
     "streaming_sessionwindow_parity" -> ((s, dir) => {
       import s.implicits._
       val batch = Tables(s, dir, "events").withColumn("us", expr("ts DIV 1000"))
-      val streamed = withTempDir(s, "graft-sessionwin-parity-") { (s, tmp) =>
+      val streamed = withStreamTempDir(s, "graft-sessionwin-parity-") { (s, tmp) =>
         EventStreams.sessionCounts(
             s.readStream.schema(eventsSchema)
               .parquet(s"$dir/{events.parquet}")
@@ -577,7 +534,7 @@ object StreamingParity extends QueryGroup {
       val docs = Tables(s, dir, "documents")
       val batchFps = docs.select(contentFingerprint(col("text")).as("fp"))
         .distinct().localCheckpoint(true)
-      val streamedFps = withTempDir(s, "graft-resume-") { (s, tmp) =>
+      val streamedFps = withStreamTempDir(s, "graft-resume-") { (s, tmp) =>
         def addHalf(pred: org.apache.spark.sql.Column, name: String): Unit = {
           val stage = s"$tmp/stage_$name"
           docs.filter(pred).coalesce(1).write.parquet(stage)
@@ -620,7 +577,7 @@ object StreamingParity extends QueryGroup {
       val batchCounts = Tables(s, dir, "events")
         .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
         .localCheckpoint(true)
-      val streamedCounts = withTempDir(s, "graft-totals-parity-") { (s, tmp) =>
+      val streamedCounts = withStreamTempDir(s, "graft-totals-parity-") { (s, tmp) =>
         EventStreams.runningUserTotals(
             s.readStream.schema(eventsSchema)
               .parquet(s"$dir/{events.parquet}")
@@ -682,7 +639,7 @@ object StreamingParity extends QueryGroup {
         .select(hOf.as("h"), col("event_id"))
         .orderBy(col("h"), col("event_id")).limit(K)
         .localCheckpoint(true)
-      val streamedSketch = withTempDir(s, "graft-kmv-parity-") { (s, tmp) =>
+      val streamedSketch = withStreamTempDir(s, "graft-kmv-parity-") { (s, tmp) =>
         val topk = new graft.functions.TopKAggregator(K).toColumn
         s.readStream.schema(eventsSchema)
           .parquet(s"$dir/{events.parquet}")

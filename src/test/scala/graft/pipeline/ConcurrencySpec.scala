@@ -32,10 +32,10 @@ class ConcurrencySpec extends SparkSpec {
     store.insertNew(Ingest.enrich(rows(1L to 10L)))                     // v1
     // Rival commits (rename onto _staging) but never promotes — the
     // exact window a concurrent writer's commit attempt lands in.
-    store.stageAppend(Ingest.enrich(rows(Seq(101L))))
+    store.stage(store.appendCommit(Ingest.enrich(rows(Seq(101L)))))
     // Our commit: keys disjoint from the rival's. commitStaged must
     // promote the rival, re-number (rival took version 2), and land.
-    store.stageAppend(Ingest.enrich(rows(Seq(202L))))
+    store.stage(store.appendCommit(Ingest.enrich(rows(Seq(202L)))))
     store.recover() // promote our commit
     assert(store.currentVersion() === 3L)
     assert(store.all().count() === 12L)
@@ -59,8 +59,8 @@ class ConcurrencySpec extends SparkSpec {
       .withColumn("email", lit("race@example.com")))
     val dup2 = Ingest.enrich(rows(Seq(901L))
       .withColumn("email", lit("race@example.com")))
-    store.stageAppend(dup)   // rival wins the commit point (unpromoted)
-    val e = intercept[ConcurrentCommitException] { store.stageAppend(dup2) }
+    store.stage(store.appendCommit(dup))   // rival wins the commit point (unpromoted)
+    val e = intercept[ConcurrentCommitException] { store.stage(store.appendCommit(dup2)) }
     assert(e.getMessage.contains("emails/ids"))
     store.recover()
     // Exactly the winner's row; the loser's staged dir is inert.
@@ -72,10 +72,10 @@ class ConcurrencySpec extends SparkSpec {
   test("conflicting concurrent id reuse (distinct emails): loser aborts, UNIQUE(id) holds") {
     val (store, _) = freshStore()
     store.insertNew(Ingest.enrich(rows(1L to 5L)))                      // v1
-    store.stageAppend(Ingest.enrich(rows(Seq(700L))))    // email u700@
+    store.stage(store.appendCommit(Ingest.enrich(rows(Seq(700L)))))    // email u700@
     val clash = Ingest.enrich(rows(Seq(700L))
       .withColumn("email", lit("other700@example.com"))) // same id, new email
-    intercept[ConcurrentCommitException] { store.stageAppend(clash) }
+    intercept[ConcurrentCommitException] { store.stage(store.appendCommit(clash)) }
     store.recover()
     assert(store.all().filter(col("id") === 700L).count() === 1L)
   }
@@ -94,12 +94,14 @@ class ConcurrencySpec extends SparkSpec {
     // Rival: a feed-silent data-only rewrite of the victim file
     // (compact/OPTIMIZE shape) — commits, stays unpromoted.
     val rewritten = store.all().limit(0) // replacement may be empty: remove-only
-    store.stageMergeCommit(rewritten, Seq(victim), emptyChanges, "OPTIMIZE")
+    store.stage(CustomerStore.Commit.partitioned("OPTIMIZE", rewritten)
+      .copy(remove = Seq(victim), changes = Some(emptyChanges)))
     // Us: a file-level commit whose remove-list names the same file.
     // Feed-silent rivals leave no key overlap — only the physical
     // read-set check can catch this.
     val e = intercept[ConcurrentCommitException] {
-      store.stageMergeCommit(rewritten, Seq(victim), emptyChanges, "OPTIMIZE")
+      store.stage(CustomerStore.Commit.partitioned("OPTIMIZE", rewritten)
+        .copy(remove = Seq(victim), changes = Some(emptyChanges)))
     }
     assert(e.getMessage.contains(victimName))
     store.recover()
@@ -111,7 +113,7 @@ class ConcurrencySpec extends SparkSpec {
     val (store, _) = freshStore()
     store.insertNew(Ingest.enrich(rows(1L to 8L)))                      // v1
     // Rival wins the commit point with a disjoint insert.
-    store.stageAppend(Ingest.enrich(rows(Seq(300L))))
+    store.stage(store.appendCommit(Ingest.enrich(rows(Seq(300L)))))
     val cur = store.all().localCheckpoint(true)
     val emptyChanges = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -120,8 +122,8 @@ class ConcurrencySpec extends SparkSpec {
           org.apache.spark.sql.types.StringType, nullable = false) +:
           CustomerSchema.tableSchema.fields))
     intercept[ConcurrentCommitException] {
-      store.stageFullCommit(cur.filter(!col("uploaded")),
-        cur.filter(col("uploaded")), emptyChanges, "OPTIMIZE")
+      store.stage(CustomerStore.Commit.partitioned("OPTIMIZE", cur)
+        .copy(replaceAll = true, changes = Some(emptyChanges)))
     }
     store.recover()
     assert(store.all().count() === 9L) // base + rival's insert, no tear

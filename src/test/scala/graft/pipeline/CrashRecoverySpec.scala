@@ -36,9 +36,10 @@ class CrashRecoverySpec extends SparkSpec {
     (moved, kept)
   }
 
-  private def ackChanges(moved: org.apache.spark.sql.DataFrame) =
-    moved.select(lit("ack").as("change_type") +:
-      CustomerSchema.tableSchema.fieldNames.map(col): _*)
+  private def ackCommit(store: CustomerStore, emails: Seq[String]) = {
+    import spark.implicits._
+    store.ackCommit(emails.toDF("email"))
+  }
 
   private def feedAcks(path: String): Long =
     new CustomerStore(spark, path).changeFeed()
@@ -59,8 +60,7 @@ class CrashRecoverySpec extends SparkSpec {
     val path = tmpDir("crash") + "/c"
     val store = seed(path, 10)
     val acked = (1 to 5).map(i => s"user$i@example.com")
-    val (moved, kept) = ackFrames(store, acked)
-    store.stageCommit(moved, kept, ackChanges(moved)) // crash: applyStaged never runs
+    store.stage(ackCommit(store, acked)) // crash: applyStaged never runs
     assert(new File(path, CustomerStore.Staging).exists())
     assertConsistent(path, 10, acked.toSet)
     assert(!new File(path, CustomerStore.Staging).exists(), "staging not cleaned up")
@@ -72,13 +72,10 @@ class CrashRecoverySpec extends SparkSpec {
     val path = tmpDir("crash") + "/c"
     val store = seed(path, 8)
     val acked = Seq("user2@example.com", "user7@example.com")
-    val (moved, kept) = ackFrames(store, acked)
-    store.stageCommit(moved, kept, ackChanges(moved))
-    // Simulate the partial apply: promote only the pending swap.
+    store.stage(ackCommit(store, acked))
+    // Simulate the partial apply: promote only the pending partition.
     val staging = new File(path, CustomerStore.Staging)
-    val pendingDir = new File(path, "uploaded=false")
-    CustomerStore.deleteRecursively(pendingDir)
-    assert(new File(staging, "pending").renameTo(pendingDir))
+    store.promoteStaged(staging, "pending", new File(path, "uploaded=false"))
     // At this instant the acked rows exist only in the staged files.
     assertConsistent(path, 8, acked.toSet)
   }
@@ -89,7 +86,7 @@ class CrashRecoverySpec extends SparkSpec {
     val (moved, kept) = ackFrames(store, Seq("user1@example.com"))
     // Write the staging payload but never reach the commit rename.
     val tmp = new File(path, CustomerStore.StagingTmp)
-    moved.drop("uploaded").write.parquet(new File(tmp, "done-append").toString)
+    moved.drop("uploaded").write.parquet(new File(tmp, "done").toString)
     kept.drop("uploaded").write.parquet(new File(tmp, "pending").toString)
     assertConsistent(path, 6, Set.empty) // table untouched, ack never happened
     assert(!tmp.exists(), "uncommitted staging not discarded")
@@ -106,12 +103,7 @@ class CrashRecoverySpec extends SparkSpec {
     import spark.implicits._
     val extra = Ingest.enrich(Seq((99L, "X", "Y", "x99@example.com", "555-99"))
       .toDF("id", "first_name", "last_name", "email", "phone")).localCheckpoint(true)
-    val tmp = new File(path, CustomerStore.StagingTmp)
-    extra.drop("uploaded").write.parquet(new File(tmp, "pending-append").toString)
-    extra.select(lit("insert").as("change_type") +:
-        CustomerSchema.tableSchema.fieldNames.map(col): _*)
-      .write.parquet(new File(tmp, "changelog").toString)
-    require(tmp.renameTo(new File(path, CustomerStore.Staging)))
+    store.stage(store.appendCommit(extra))
     val reopened = new CustomerStore(spark, path) // recovery promotes both
     assert(reopened.all().count() === 5, "committed insert must be finished on reopen")
     assert(reopened.changeFeed().filter(col("change_type") === "insert").count() === 5,
@@ -122,8 +114,7 @@ class CrashRecoverySpec extends SparkSpec {
     val path = tmpDir("crash") + "/c"
     val store = seed(path, 5)
     val acked = Seq("user3@example.com")
-    val (moved, kept) = ackFrames(store, acked)
-    store.stageCommit(moved, kept, ackChanges(moved))
+    store.stage(ackCommit(store, acked))
     store.applyStaged()
     store.applyStaged() // replay of a finished commit is a no-op
     assertConsistent(path, 5, acked.toSet)

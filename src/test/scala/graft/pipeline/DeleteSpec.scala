@@ -116,7 +116,9 @@ class DeleteSpec extends SparkSpec {
     // Stage up to and including the commit-point rename, then "crash"
     // (no promotion). The commit is durable: a fresh open must apply
     // it — rows gone, feed rows present once, version advanced.
-    assert(store.stageDelete(Seq("u4@example.com", "u6@example.com").toDF("email")) === 2L)
+    val (n, c) = store.deleteCommit(Seq("u4@example.com", "u6@example.com").toDF("email"))
+    c.foreach(store.stage(_): Unit)
+    assert(n === 2L)
     val reopened = new CustomerStore(spark, s"$dir/store") // ctor recovers
     assert(reopened.all().count() === 6L)
     assert(reopened.deletionVectorStats()._2 === 2L)

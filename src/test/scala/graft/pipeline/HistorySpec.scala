@@ -92,7 +92,7 @@ class HistorySpec extends SparkSpec {
     val path = s"${tmpDir("graft-history-")}/store"
     val store = new CustomerStore(spark, path)
     store.insertNew(Ingest.enrich(rows(1L to 3L)))                      // v1
-    store.stageAppend(Ingest.enrich(rows(Seq(20L, 21L))))
+    store.stage(store.appendCommit(Ingest.enrich(rows(Seq(20L, 21L)))))
     // Crash: promotion never ran; the commit point (rename) is passed.
     assert(new java.io.File(path, CustomerStore.Staging).exists())
     val reopened = new CustomerStore(spark, path) // constructor recovers

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.LongType
 
 import graft.SparkSpec
@@ -45,11 +46,19 @@ class JobBudgetSpec extends SparkSpec {
       .toDF("id", "first_name", "last_name", "email", "phone"))
       .withColumn("score", $"id" % 10)
 
-  test("manifest consults run no Spark job; a commit's stats phase runs at most two") {
+  /** The budget fixture: an evolved numeric column plus three
+    * 100-row insert commits.
+    */
+  private def fixture(): (CustomerStore, String) = {
     val path = tmpDir("budget") + "/s"
     val store = new CustomerStore(spark, path)
     store.addColumn("score", LongType)
     for (c <- 0 until 3) store.insertNew(batch((1 + c * 100).toLong to ((c + 1) * 100).toLong))
+    (store, path)
+  }
+
+  test("manifest consults run no Spark job; a commit's stats phase runs at most two") {
+    val (store, path) = fixture()
 
     val (_, insertJobs) = jobsOf(store.insertNew(batch(301L to 400L)))
     val insertStats = insertJobs.count(_ == "store: stage stats")
@@ -79,5 +88,25 @@ class JobBudgetSpec extends SparkSpec {
       store.manifestRowCount(names)
     }
     assert(consultJobs.isEmpty, s"manifest consults ran jobs: $consultJobs")
+  }
+
+  /** Total Spark jobs per commit kind on the fixture, pinned as upper
+    * bounds: a commit path that adds a job (an empty-side write, an
+    * extra count) fails here.
+    */
+  test("each commit kind stays within its total job budget") {
+    val (store, _) = fixture()
+    val budgets = Seq[(String, () => Any)](
+      "insert" -> (() => store.insertNew(batch(401L to 500L))),
+      "ack" -> (() => store.markUploaded(Seq("user7@example.com").toDF("email"))),
+      "merge" -> (() => store.merge(batch(Seq(8L, 9L, 601L)).withColumn("phone", lit("999")))),
+      "delete" -> (() => store.delete(Seq("user11@example.com").toDF("email"))),
+      "compact" -> (() => store.compact()))
+    val counts = budgets.map { case (kind, op) => kind -> jobsOf(op())._2.size }
+    val pinned = Map("insert" -> 16, "ack" -> 15, "merge" -> 29, "delete" -> 6,
+      "compact" -> 7)
+    counts.foreach { case (kind, n) =>
+      assert(n <= pinned(kind), s"$kind commit ran $n Spark jobs; budget ${pinned(kind)}")
+    }
   }
 }

@@ -204,20 +204,9 @@ class MergeSpec extends SparkSpec {
     store.insertNew(rows(
       (1L, "Ann", "A", "ann@example.com", "555-1"),
       (2L, "Bob", "B", "bob@example.com", "555-2"))): Unit
-    val withFile = store.all().withColumn("_file", input_file_name())
-    val touched = withFile.filter(col("email") === "ann@example.com")
-      .select("_file").distinct().collect().map(_.getString(0)).toSeq
     val updated = store.all().filter(col("email") === "ann@example.com")
       .withColumn("first_name", lit("Ann2")).localCheckpoint(true)
-    val survivors = withFile
-      .filter(col("_file").isInCollection(touched))
-      .filter(col("email") =!= "ann@example.com")
-      .select(CustomerSchema.tableSchema.fieldNames.map(col): _*)
-    store.stageMergeCommit(
-      survivors.unionByName(updated), touched,
-      updated.select(lit("update").as("change_type") +:
-        CustomerSchema.tableSchema.fieldNames.map(col): _*),
-      "MERGE")
+    store.stage(store.mergeCommit(updated, updated.limit(0)))
     // Crash: promotion never ran; the commit point (rename) is passed.
     assert(new File(path, CustomerStore.Staging).exists())
     val reopened = new CustomerStore(spark, path) // constructor recovers
@@ -241,9 +230,8 @@ class MergeSpec extends SparkSpec {
     val updated = next.filter(col("email") === "ann@example.com")
       .select(lit("update").as("change_type") +:
         CustomerSchema.tableSchema.fieldNames.map(col): _*)
-    store.stageFullCommit(
-      next.filter(!col("uploaded")), next.filter(col("uploaded")), updated,
-      "MERGE")
+    store.stage(CustomerStore.Commit.partitioned("MERGE", next)
+      .copy(replaceAll = true, changes = Some(updated)))
     // Crash: promotion never ran; the commit point (rename) is passed.
     assert(new File(path, CustomerStore.Staging).exists())
     val reopened = new CustomerStore(spark, path) // constructor recovers

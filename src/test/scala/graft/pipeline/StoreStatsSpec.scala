@@ -275,20 +275,10 @@ class StoreStatsSpec extends SparkSpec {
     val store = seed(path, 50)
     // Stage an ack commit but crash before promotion (CrashRecoverySpec
     // pattern): the staged manifests must land when recovery replays.
-    val acked = {
+    locally {
       import spark.implicits._
-      Seq("user3@example.com").toDF("email").select(col("email").as("_ack"))
+      store.stage(store.ackCommit(Seq("user3@example.com").toDF("email")))
     }
-    val pending = store.all().filter(!col("uploaded"))
-    val moved = pending.join(acked, col("email") === col("_ack"), "left_semi")
-      .withColumn("uploaded", lit(true))
-      .withColumn("modified_ts", current_timestamp())
-      .select(CustomerSchema.tableSchema.fieldNames.map(col): _*)
-    val kept = pending.join(acked, col("email") === col("_ack"), "left_anti")
-      .select(CustomerSchema.tableSchema.fieldNames.map(col): _*)
-    store.stageCommit(moved, kept,
-      moved.select(lit("ack").as("change_type") +:
-        CustomerSchema.tableSchema.fieldNames.map(col): _*))
     assert(!new File(path, f"_stats/commit-${2L}%09d").exists())
     val reopened = new CustomerStore(spark, path) // recovery promotes
     assert(new File(path, f"_stats/commit-${2L}%09d").exists())

@@ -92,7 +92,7 @@ class TxnSpec extends SparkSpec {
     // (app, 9) marker — exactly what another writer's txnInsert looks
     // like the instant after its commit-point rename.
     store.activeTxn.set(Some(("app", 9L)))
-    try store.stageAppend(Ingest.enrich(rows(Seq(100L))))
+    try store.stage(store.appendCommit(Ingest.enrich(rows(Seq(100L))))): Unit
     finally store.activeTxn.remove()
     // Our txnInsert for the SAME (app, 9): the fast-path check sees no
     // registry entry yet (rival unpromoted), but the commit point
