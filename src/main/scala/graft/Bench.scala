@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE compact JSON line:
   * {"metric":"total","value":N,"unit":"sec","sf":"...",
@@ -15,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * MINIMUM is reported — the min is the run least polluted by
   * neighbors, and for a deterministic single-JVM workload it is the
   * statistic that converges to the true cost. Memoized family builds
-  * (verified-pairs, IVF index — see SessionCache) are evicted between
+  * (verified-pairs, IVF index — see IndexStore) are evicted between
   * passes so every pass re-pays the build: the min still charges the
   * family bill to its first member in name order, same attribution as
   * a single pass.
@@ -56,28 +55,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val t0Run = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "600").toDouble
     def elapsedS: Double = (System.nanoTime() - t0Run) / 1e9
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The JVM-wide codegen class cache holds 100 entries by default;
-      // ~170 queries × several codegen stages each cycle it completely
-      // between passes, so every pass re-pays each query's generated-
-      // class compile (~0.5-1s on the bigger kernels — text_lm_score
-      // measured 2.0s/pass vs 1.2s warm from exactly this in round 9).
-      // Size it to hold the whole inventory so pass 2+ is genuinely
-      // warm; a few thousand compiled classes are megabytes, noise
-      // against the 128 GiB heap.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.envCores)
     // noop sink, not count(): count() lets Catalyst prune every computed
     // column out of projection-only queries, timing a metadata scan
     // instead of the operator. The noop writer materializes every row.
@@ -126,9 +107,9 @@ object Bench {
     while (p <= passes && !aborted && (p == 1 || nextPassFits)) {
       // Re-pay memoized AND persisted builds each pass, so the min is a
       // real end-to-end cost, not build-once-probe-thrice. Scoped to
-      // the benched dir: invalidateAll would clobber artifacts of
-      // other dirs/processes sharing the store root (a co-running
-      // test JVM would lose parquet files mid-read). Fixture-store
+      // the benched dir: dropping the whole store would clobber
+      // artifacts of other dirs/processes sharing the store root (a
+      // co-running test JVM would lose parquet files mid-read). Fixture-store
       // TEMPLATES (util.FixtureStores) are deliberately exempt: they
       // are test scaffolding the parity gates clone, not operator
       // builds — rebuilding them per pass charged ~47% of a round-11

@@ -5,7 +5,6 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end demo of the reference pipeline on Spark: generate a CSV
   * (with the reference's error cases), ingest → validate → dedup-insert
@@ -17,13 +16,7 @@ import org.apache.spark.sql.SparkSession
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.envCores)
 
     // CSV with a header row + the reference's error shapes: a bad id, an
     // empty email, a duplicate email (assets/MOCK_BAD_DATA.csv cases).

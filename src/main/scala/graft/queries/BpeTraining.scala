@@ -133,19 +133,16 @@ object BpeTraining extends QueryGroup {
 
   /** The trained tokenizer is a build artifact: merge table + segmented
     * vocabulary persist as one atomic [[graft.util.IndexStore]] group
-    * (train once, load after), with the session memo on top.
+    * (train once, load after).
     */
-  private val trainedCache = new graft.util.SessionCache[(DataFrame, DataFrame)]
-
-  private def trained(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    trainedCache.getOrCompute(s, dir) {
-      val loaded = graft.util.IndexStore.loadOrBuildAll(
-        s, dir, s"bpe_merges_k$BPE_MERGES" :: s"bpe_vocab_segments_k$BPE_MERGES" :: Nil) {
-        val (m, g) = train(s, dir)
-        Seq(m, g)
-      }
-      (loaded(0), loaded(1))
+  private def trained(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val loaded = graft.util.IndexStore.loadOrBuildAll(
+      s, dir, s"bpe_merges_k$BPE_MERGES" :: s"bpe_vocab_segments_k$BPE_MERGES" :: Nil) {
+      val (m, g) = train(s, dir)
+      Seq(m, g)
     }
+    (loaded(0), loaded(1))
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_bpe_merges" -> ((s, dir) =>

@@ -285,48 +285,32 @@ object Similarity extends QueryGroup {
     (assign(all, cent, IVF_ASSIGN_R).localCheckpoint(true), cent)
   }
 
-  /** The trained index is a build artifact — memoized per
-    * (session, dir) exactly like a persisted vector index would be
-    * loaded once in production; probe queries pay only the list join.
+  /** The trained index is a build artifact — loaded once per session
+    * exactly like a persisted vector index would be in production;
+    * probe queries pay only the list join. `all` (the collection to
+    * train on) is evaluated only when the index must be built.
+    * `prefix` gives each training set its own artifact names, so the
+    * full-collection index (`ivf`), the incremental query's base
+    * (`ivf_base`, trained on vec_id % 10 != 0) and the composed
+    * lifecycle gate's base (`ivf_lc`, vec_id % 10 ∉ {0, 7} — the
+    * collection before either arrival batch) coexist in the store.
     */
-  private val ivfCache = new graft.util.SessionCache[(DataFrame, DataFrame)]
-
   private def ivfIndexCached(s: SparkSession, dir: String,
-      all: DataFrame): (DataFrame, DataFrame) =
+      all: => DataFrame, prefix: String = "ivf"): (DataFrame, DataFrame) = {
     // The assignments + centroids persist as one atomic artifact group
     // (see [[graft.util.IndexStore]]): a fresh session LOADS the
     // trained index instead of re-running the Lloyd rounds, which is
     // what "the index is a build artifact" means in production.
-    ivfCache.getOrCompute(s, dir) {
-      val loaded = graft.util.Labeled(s, "sim: ivf train") {
-        graft.util.IndexStore.loadOrBuildAll(
-          s, dir, s"ivf_postings_l${IVF_LISTS}r${IVF_ITERS}a$IVF_ASSIGN_R" ::
-            s"ivf_centroids_l${IVF_LISTS}r$IVF_ITERS" :: Nil) {
-          val (a, c) = ivfIndex(all)
-          Seq(a, c)
-        }
-      }
-      (loaded(0), loaded(1))
-    }
-
-  /** Base-subset IVF index for the incremental-maintenance query
-    * (trained on vec_id % 10 != 0 only) — its own artifact names so
-    * the full-collection index and the base index coexist in the
-    * store.
-    */
-  private val ivfBaseCache = new graft.util.SessionCache[(DataFrame, DataFrame)]
-
-  private def ivfBaseIndexCached(s: SparkSession, dir: String,
-      base: DataFrame): (DataFrame, DataFrame) =
-    ivfBaseCache.getOrCompute(s, dir) {
-      val loaded = graft.util.IndexStore.loadOrBuildAll(
-        s, dir, s"ivf_base_postings_l${IVF_LISTS}r${IVF_ITERS}a$IVF_ASSIGN_R" ::
-          s"ivf_base_centroids_l${IVF_LISTS}r$IVF_ITERS" :: Nil) {
-        val (a, c) = ivfIndex(base)
+    val loaded = graft.util.Labeled(s, "sim: ivf train") {
+      graft.util.IndexStore.loadOrBuildAll(
+        s, dir, s"${prefix}_postings_l${IVF_LISTS}r${IVF_ITERS}a$IVF_ASSIGN_R" ::
+          s"${prefix}_centroids_l${IVF_LISTS}r$IVF_ITERS" :: Nil) {
+        val (a, c) = ivfIndex(all)
         Seq(a, c)
       }
-      (loaded(0), loaded(1))
     }
+    (loaded(0), loaded(1))
+  }
 
   /** The IVF probe stage shared by `sim_ivf_ann` and
     * `sim_ivf_incremental`: rank the query's IVF_PROBES nearest lists
@@ -501,57 +485,32 @@ object Similarity extends QueryGroup {
     (finalAssign.select(col("vec_id"), col("m"), col("code")), codebook)
   }
 
-  private val pqCache = new graft.util.SessionCache[(DataFrame, DataFrame)]
-
   private def pqIndexCached(s: SparkSession, dir: String,
-      all: DataFrame): (DataFrame, DataFrame) =
-    pqCache.getOrCompute(s, dir) {
-      val loaded = graft.util.IndexStore.loadOrBuildAll(
-        s, dir, s"pq_codes_m${PQ_M}k${PQ_K}r$PQ_ITERS" ::
-          s"pq_codebook_m${PQ_M}k${PQ_K}r$PQ_ITERS" :: Nil) {
-        val (codes, cb) = pqIndex(all)
-        Seq(codes, cb)
-      }
-      (loaded(0), loaded(1))
+      all: DataFrame): (DataFrame, DataFrame) = {
+    val loaded = graft.util.IndexStore.loadOrBuildAll(
+      s, dir, s"pq_codes_m${PQ_M}k${PQ_K}r$PQ_ITERS" ::
+        s"pq_codebook_m${PQ_M}k${PQ_K}r$PQ_ITERS" :: Nil) {
+      val (codes, cb) = pqIndex(all)
+      Seq(codes, cb)
     }
-
-  /** Base index of the composed lifecycle gate (trained on vec_id %
-    * 10 ∉ {0, 7} — the collection before either arrival batch), its
-    * own artifact names so it coexists with the full and %10-base
-    * indexes in the store.
-    */
-  private val ivfLcCache = new graft.util.SessionCache[(DataFrame, DataFrame)]
-
-  private def ivfLcIndexCached(s: SparkSession, dir: String,
-      base: DataFrame): (DataFrame, DataFrame) =
-    ivfLcCache.getOrCompute(s, dir) {
-      val loaded = graft.util.IndexStore.loadOrBuildAll(
-        s, dir, s"ivf_lc_postings_l${IVF_LISTS}r${IVF_ITERS}a$IVF_ASSIGN_R" ::
-          s"ivf_lc_centroids_l${IVF_LISTS}r$IVF_ITERS" :: Nil) {
-        val (a, c) = ivfIndex(base)
-        Seq(a, c)
-      }
-      (loaded(0), loaded(1))
-    }
+    (loaded(0), loaded(1))
+  }
 
   /** The persisted degree-[[BEAM_GRAPH_K]] kNN graph over the full
     * collection — (vec_id, rank, neighbor_id, cos_ppm) edges from the
-    * IVF probe, built once per (session, dir) and loaded by BOTH
-    * sim_knn_graph (top-TOP_K prefix) and the beam-search traversal.
-    * The build is the n^1.5 IVF-graph law (SCALING.md); sharing the
-    * artifact is what keeps it one bill.
+    * IVF probe, built once and loaded by BOTH sim_knn_graph
+    * (top-TOP_K prefix) and the beam-search traversal. The build is
+    * the n^1.5 IVF-graph law (SCALING.md); sharing the artifact is
+    * what keeps it one bill.
     */
-  private val knnGraphMemo = new graft.util.SessionCache[DataFrame]
-
   private def knnGraphCached(s: SparkSession, dir: String): DataFrame =
-    knnGraphMemo.getOrCompute(s, dir) {
-      val all = quantized(s, dir)
-      val (postings, cent) = ivfIndexCached(s, dir, all)
-      graft.util.Labeled(s, "sim: knn graph build") {
-        graft.util.IndexStore.loadOrBuild(s, dir,
-          s"knn_graph_l${IVF_LISTS}r${IVF_ITERS}a${IVF_ASSIGN_R}p${GRAPH_PROBES}k$BEAM_GRAPH_K")(
-          ivfProbe(all, postings, cent, GRAPH_PROBES, BEAM_GRAPH_K, sorted = false)
-            .withColumnRenamed("query_id", "vec_id"))
+    graft.util.Labeled(s, "sim: knn graph build") {
+      graft.util.IndexStore.loadOrBuild(s, dir,
+        s"knn_graph_l${IVF_LISTS}r${IVF_ITERS}a${IVF_ASSIGN_R}p${GRAPH_PROBES}k$BEAM_GRAPH_K") {
+        val all = quantized(s, dir)
+        val (postings, cent) = ivfIndexCached(s, dir, all)
+        ivfProbe(all, postings, cent, GRAPH_PROBES, BEAM_GRAPH_K, sorted = false)
+          .withColumnRenamed("query_id", "vec_id")
       }
     }
 
@@ -577,10 +536,8 @@ object Similarity extends QueryGroup {
     * seeds a query's beam from the entries of its [[ENTRY_PROBES]]
     * nearest centroids: cost ∝ queries × (lists + probes × per-list),
     * never × collection.
-    */
-  private val beamLayerMemo = new graft.util.SessionCache[(DataFrame, DataFrame)]
-
-  /** Entries and long edges are two deterministic projections of the
+    *
+    * Entries and long edges are two deterministic projections of the
     * SAME per-list centrality ranking, so both artifacts build from
     * ONE window pass over the postings (r16; guide §1.2 — the old
     * shape ran the identical postings × broadcast(centroids) join +
@@ -588,13 +545,12 @@ object Similarity extends QueryGroup {
     * manifest-sized (one row per vector) and checkpointed once; the
     * two artifacts' CONTENTS are unchanged (same names, same rows).
     */
-  private def beamLayersCached(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    beamLayerMemo.getOrCompute(s, dir) {
-      val (postings, cent) = ivfIndexCached(s, dir, quantized(s, dir))
-      val loaded = graft.util.Labeled(s, "sim: beam layers build") {
-        graft.util.IndexStore.loadOrBuildAll(s, dir,
+  private def beamLayersCached(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val loaded = graft.util.Labeled(s, "sim: beam layers build") {
+      graft.util.IndexStore.loadOrBuildAll(s, dir,
         s"beam_entries_l${IVF_LISTS}r${IVF_ITERS}a${IVF_ASSIGN_R}e${ENTRY_PER_LIST}hyb" ::
           s"beam_long_l${IVF_LISTS}r${IVF_ITERS}a${IVF_ASSIGN_R}m${LONG_MULTS.size}" :: Nil) {
+        val (postings, cent) = ivfIndexCached(s, dir, quantized(s, dir))
         val w = Window.partitionBy(col("list_id"))
           .orderBy(cosPpm(qdot(col("qv"), col("cv")), col("sq"), col("c_sq")).desc,
             col("vec_id"))
@@ -627,9 +583,9 @@ object Similarity extends QueryGroup {
           .select(col("src"), col("dst")).distinct()
         Seq(entries, longE)
       }
-      }
-      (loaded(0), loaded(1))
     }
+    (loaded(0), loaded(1))
+  }
 
   private def beamEntriesCached(s: SparkSession, dir: String): DataFrame =
     beamLayersCached(s, dir)._1
@@ -693,15 +649,6 @@ object Similarity extends QueryGroup {
       .agg(count(lit(1)), count(col("_hit"))).head()
     val (total, hit) = (r.getLong(0), r.getLong(1))
     require(hit * 10L >= total * 9L, s"$stage recall $hit/$total fell below 0.9")
-  }
-
-  /** Drop the memoized IVF/PQ indexes (long-lived-JVM hook; required
-    * only if a cached dir's data is rewritten mid-session).
-    * [[graft.util.SessionCache.clearAll]] clears every module at once.
-    */
-  def clearCaches(): Unit = {
-    ivfCache.clear(); pqCache.clear(); ivfBaseCache.clear(); ivfLcCache.clear()
-    knnGraphMemo.clear()
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -885,7 +832,7 @@ object Similarity extends QueryGroup {
       val all = quantized(s, dir)
       val base = all.filter(col("vec_id") % 10 =!= 0)
       val delta = all.filter(col("vec_id") % 10 === 0)
-      val (basePost, cent) = ivfBaseIndexCached(s, dir, base)
+      val (basePost, cent) = ivfIndexCached(s, dir, base, "ivf_base")
       val deltaPost = assign(delta, cent, IVF_ASSIGN_R)
       ivfProbe(all.filter(col("vec_id") % 100 === 0),
         basePost.unionByName(deltaPost), cent, IVF_INC_PROBES)
@@ -916,7 +863,7 @@ object Similarity extends QueryGroup {
       val delta2 = all.filter(col("vec_id") % 10 === 7)
       // Fixed query set, present and live in every state.
       val queries = all.filter(col("vec_id") % 100 === 1 && col("vec_id") % 9 =!= 4)
-      val (basePost, cent) = ivfLcIndexCached(s, dir, base)
+      val (basePost, cent) = ivfIndexCached(s, dir, base, "ivf_lc")
       val v1Name = s"ivf_lc_post_l${IVF_LISTS}r${IVF_ITERS}a${IVF_ASSIGN_R}_v1"
       // v1 INSERT: assign ONLY the delta against the persisted
       // centroids (cost ∝ batch), append to the postings.

@@ -56,6 +56,31 @@ object TextAnalysis extends QueryGroup {
         bigrams.distinct().groupBy(col("bg")).agg(count(lit(1)).as("df")))
     }
 
+  /** The persisted (doc_id, t, tf) posting lists served by
+    * text_search_conjunctive and text_search_bm25 — one definition
+    * under the one artifact name.
+    */
+  private def searchPostingsTf(s: SparkSession, dir: String): DataFrame =
+    graft.util.IndexStore.loadOrBuild(s, dir, "search_postings_tf")(
+      Tables.forKernels(s, dir, "documents")
+        .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
+        .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf")))
+
+  /** The search workload over a (t, df) table: the SEARCH_TERMS rarest
+    * terms with df ≥ 3, consecutive pairs → SEARCH_TERMS − 1 two-term
+    * queries (query_id, t). The windows run over ≤8 term rows.
+    */
+  private def searchQueryTerms(dfx: DataFrame): DataFrame = {
+    val wTop = Window.orderBy(col("df").asc, col("t"))
+    val top = dfx.filter(col("df") >= 3)
+      .orderBy(col("df").asc, col("t")).limit(SEARCH_TERMS)
+      .withColumn("r", row_number().over(wTop))
+    top.filter(col("r") <= SEARCH_TERMS - 1)
+      .select(col("r").cast("long").as("query_id"), col("t"))
+      .unionByName(top.filter(col("r") >= 2)
+        .select((col("r") - 1).cast("long").as("query_id"), col("t")))
+  }
+
   /** The 5 rarest adjacent bigrams with doc-df ≥ 3, split into their
     * two probe terms — the deterministic phrase workload fixture.
     */
@@ -145,9 +170,6 @@ object TextAnalysis extends QueryGroup {
       }
       PocketModel(feats, hist, pocket._1, pocket._2)
     }
-
-  /** Drop the memoized trained model (long-lived-JVM hook). */
-  def clearCaches(): Unit = pocketCache.clear()
 
   /** Shared SQL fragments so Spark and oracle stay in lockstep. */
   private def inList(items: Seq[String]): String =
@@ -350,22 +372,9 @@ object TextAnalysis extends QueryGroup {
     // lists — the inverted-index contract. The global windows run
     // over ≤8 term rows, never the corpus.
     "text_search_conjunctive" -> ((s, dir) => {
-      val tf = graft.util.IndexStore.loadOrBuildAll(
-        s, dir, "search_postings_tf" :: Nil) {
-        Seq(Tables.forKernels(s, dir, "documents")
-          .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
-          .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf")))
-      }.head
+      val tf = searchPostingsTf(s, dir)
       val dfx = tf.groupBy(col("t")).agg(count(lit(1)).as("df"))
-      val wTop = Window.orderBy(col("df").asc, col("t")) // ≤8 rows
-      val top = dfx
-        .filter(col("df") >= 3)
-        .orderBy(col("df").asc, col("t")).limit(SEARCH_TERMS)
-        .withColumn("r", row_number().over(wTop))
-      val qterms = top.filter(col("r") <= SEARCH_TERMS - 1)
-        .select(col("r").cast("long").as("query_id"), col("t"))
-        .unionByName(top.filter(col("r") >= 2)
-          .select((col("r") - 1).cast("long").as("query_id"), col("t")))
+      val qterms = searchQueryTerms(dfx)
       val post = tf.join(dfx, "t")
         .withColumn("score", expr("tf * 1000000 DIV df"))
       val wRank = Window.partitionBy(col("query_id"))
@@ -399,25 +408,13 @@ object TextAnalysis extends QueryGroup {
     // matched posting lists + one keyed join against the doc-length
     // table — posting-list mass, not corpus mass, at 100 TB.
     "text_search_bm25" -> ((s, dir) => {
-      val tf = graft.util.IndexStore.loadOrBuildAll(
-        s, dir, "search_postings_tf" :: Nil) {
-        Seq(Tables.forKernels(s, dir, "documents")
-          .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
-          .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf")))
-      }.head
+      val tf = searchPostingsTf(s, dir)
       val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       // 1-row corpus stats (the only crossJoin — broadcast literal).
       val corpus = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dlt"))
         .withColumn("avgdl", expr("dlt DIV n_docs"))
       val dfx = tf.groupBy(col("t")).agg(count(lit(1)).as("df"))
-      val wTop = Window.orderBy(col("df").asc, col("t")) // ≤8 rows
-      val top = dfx.filter(col("df") >= 3)
-        .orderBy(col("df").asc, col("t")).limit(SEARCH_TERMS)
-        .withColumn("r", row_number().over(wTop))
-      val qterms = top.filter(col("r") <= SEARCH_TERMS - 1)
-        .select(col("r").cast("long").as("query_id"), col("t"))
-        .unionByName(top.filter(col("r") >= 2)
-          .select((col("r") - 1).cast("long").as("query_id"), col("t")))
+      val qterms = searchQueryTerms(dfx)
       // Prune to the query terms' posting lists FIRST, then attach
       // per-doc length (keyed join) and per-term df (tiny, AQE
       // broadcasts) — the index-serving join order.

@@ -177,16 +177,12 @@ object UnigramLm extends QueryGroup {
     m * UNI_K + (x - (1L << m)) * UNI_K / (1L << m)
   }
 
-  private val trainedCache = new graft.util.SessionCache[Seq[DataFrame]]
-
   /** (vocab, per-word segmentation) — one atomic persisted group. */
   private def model(s: SparkSession, dir: String): Seq[DataFrame] =
-    trainedCache.getOrCompute(s, dir) {
-      graft.util.IndexStore.loadOrBuildAll(s, dir,
-        Seq(s"unigram_vocab_w${UNI_MAXW}_p${UNI_MAXP}_s$UNI_SEED",
-          s"unigram_seg_w${UNI_MAXW}_p${UNI_MAXP}_s$UNI_SEED")) {
-        train(s, dir)
-      }
+    graft.util.IndexStore.loadOrBuildAll(s, dir,
+      Seq(s"unigram_vocab_w${UNI_MAXW}_p${UNI_MAXP}_s$UNI_SEED",
+        s"unigram_seg_w${UNI_MAXW}_p${UNI_MAXP}_s$UNI_SEED")) {
+      train(s, dir)
     }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -9,9 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * table, trained IVF index) as parquet under a content-addressed
   * directory — the production contract for expensive index builds:
   * build once, persist, and let every later session LOAD instead of
-  * retrain. [[SessionCache]] remains the per-session memo of the
-  * *load*, so repeated queries in one session don't even re-open the
-  * parquet footer.
+  * retrain. A per-session memo of the *load* sits on top, so repeated
+  * queries in one session don't even re-open the parquet footer.
   *
   * Addressing: artifacts live at `<root>/<fingerprint(dataDir)>/<name>`
   * where the fingerprint hashes the data dir's path plus every parquet
@@ -110,42 +109,53 @@ object IndexStore {
     stale.length
   }
 
+  /** The per-session load memo: (fingerprint dir, names) → the loaded
+    * frames. Keyed by the data fingerprint, so a regenerated data dir
+    * misses it; [[invalidate]] and [[SessionCache.clearAll]] drop it.
+    * A build may load other artifacts (nested calls share this memo).
+    */
+  private val loaded = new SessionCache[Seq[DataFrame]]
+
   /** Load `names` artifacts for `dir`, or run `build` ONCE to produce
     * all of them and persist each before loading. A build of several
     * coupled artifacts (IVF assignments + centroids) is atomic as a
     * group: if any member is missing, the group rebuilds. Stale
-    * fingerprints of the same data dir are garbage-collected here.
+    * fingerprints of the same data dir are garbage-collected here. A
+    * repeat load in the same session returns the memoized frames and
+    * opens nothing.
     */
   def loadOrBuildAll(s: SparkSession, dir: String, names: Seq[String])(
       build: => Seq[DataFrame]): Seq[DataFrame] = {
     val fp = fingerprint(dir)
     val fpDir = new File(rootDir, fp)
-    val dirs = names.map(n => new File(fpDir, n))
-    val key = dirs.head.getPath
-    val lock = locks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-      // gc under a per-FINGERPRINT lock, not the per-artifact lock:
-      // two loadOrBuildAll calls for DIFFERENT artifacts of the same
-      // data dir hold different artifact locks, and without this inner
-      // lock both would sweep the same stale siblings concurrently.
-      // (deleteRecursively tolerates a vanished child, but the sweep
-      // itself should not race.) Leaf lock — never held while taking
-      // another, so the artifact→fingerprint order cannot deadlock.
-      val fpLock = locks.computeIfAbsent("fp:" + fpDir.getPath, _ => new Object)
-      fpLock.synchronized {
-        writeMeta(fpDir, dir)
-        gc(dir, keepFingerprint = fp): Unit
-      }
-      if (!dirs.forall(d => new File(d, "_SUCCESS").isFile)) {
-        val built = build
-        require(built.length == names.length,
-          s"build produced ${built.length} frames for ${names.length} names")
-        built.zip(dirs).foreach { case (df, d) =>
-          df.write.mode("overwrite").parquet(d.getPath)
+    loaded.getOrCompute(s, (fpDir.getPath +: names).mkString("|")) {
+      val dirs = names.map(n => new File(fpDir, n))
+      val key = dirs.head.getPath
+      val lock = locks.computeIfAbsent(key, _ => new Object)
+      lock.synchronized {
+        // gc under a per-FINGERPRINT lock, not the per-artifact lock:
+        // two loadOrBuildAll calls for DIFFERENT artifacts of the same
+        // data dir hold different artifact locks, and without this inner
+        // lock both would sweep the same stale siblings concurrently.
+        // (deleteRecursively tolerates a vanished child, but the sweep
+        // itself should not race.) Leaf lock — never held while taking
+        // another, so the artifact→fingerprint order cannot deadlock.
+        val fpLock = locks.computeIfAbsent("fp:" + fpDir.getPath, _ => new Object)
+        fpLock.synchronized {
+          writeMeta(fpDir, dir)
+          gc(dir, keepFingerprint = fp): Unit
+        }
+        if (!dirs.forall(d => new File(d, "_SUCCESS").isFile)) {
+          val built = build
+          require(built.length == names.length,
+            s"build produced ${built.length} frames for ${names.length} names")
+          built.zip(dirs).foreach { case (df, d) =>
+            df.write.mode("overwrite").parquet(d.getPath)
+          }
         }
       }
+      dirs.map(d => s.read.parquet(d.getPath))
     }
-    dirs.map(d => s.read.parquet(d.getPath))
   }
 
   def loadOrBuild(s: SparkSession, dir: String, name: String)(
@@ -160,12 +170,13 @@ object IndexStore {
     if (m.isFile) Some(m.lastModified) else None
   }
 
-  /** Drop every persisted artifact for `dir` (current fingerprint). */
-  def invalidate(dir: String): Unit =
-    deleteRecursively(new File(rootDir, fingerprint(dir)))
-
-  /** Drop the whole store — the bench hook that makes every pass
+  /** Drop every persisted artifact for `dir` (current fingerprint)
+    * and its memoized loads — the bench hook that makes every pass
     * re-pay its builds.
     */
-  def invalidateAll(): Unit = deleteRecursively(new File(rootDir))
+  def invalidate(dir: String): Unit = {
+    val fpDir = new File(rootDir, fingerprint(dir))
+    loaded.removeIf(_.startsWith(fpDir.getPath + "|"))
+    deleteRecursively(fpDir)
+  }
 }

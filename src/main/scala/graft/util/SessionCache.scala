@@ -6,10 +6,11 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Session-scoped memo cache for expensive build artifacts (verified
-  * near-dup pairs, component labels, trained IVF index). Entries are
-  * keyed by (session, data dir) and assume the dir is immutable while
-  * cached — the same contract a persisted index makes.
+/** Session-scoped memo cache for expensive derived values (the
+  * IndexStore load memo, shingle and gram tables, the trained quality
+  * model). Entries are keyed by (session, key) and assume the data
+  * behind the key is immutable while cached — the same contract a
+  * persisted index makes.
   *
   * Unlike a bare ConcurrentHashMap, entries do not outlive the
   * SparkContext that built them: the first insert against a context
@@ -58,7 +59,20 @@ final class SessionCache[V] {
         case _: IllegalStateException => hooked.remove(sc); return build
       }
     }
-    val v = map.computeIfAbsent((s, key), _ => build)
+    // get → build → putIfAbsent, never computeIfAbsent (the
+    // FixtureStores.template rule): `build` runs outside the map's
+    // locks, so it may itself call getOrCompute on this instance — the
+    // IndexStore memo's nested loads do — where a nested computeIfAbsent
+    // throws "Recursive update" whenever the two keys share a bin. Two
+    // threads racing one cold key may both build; the first insert wins
+    // and both return it.
+    val v = map.get((s, key)) match {
+      case null =>
+        val built = build
+        val prior = map.putIfAbsent((s, key), built)
+        if (prior == null) built else prior
+      case hit => hit
+    }
     // Close the remaining race: a stop whose ApplicationEnd was
     // dispatched before our listener registered would strand entries
     // inserted after it — self-evict on observation.
@@ -72,6 +86,9 @@ final class SessionCache[V] {
   def size: Int = map.size
 
   def clear(): Unit = map.clear()
+
+  /** Drop the entries whose key matches `p`, in every session. */
+  def removeIf(p: String => Boolean): Unit = map.keySet.removeIf(k => p(k._2)): Unit
 }
 
 object SessionCache {
@@ -86,7 +103,8 @@ object SessionCache {
 
   /** Drop every entry in every live cache instance — the one-call
     * invalidation hook for long-lived JVMs that rewrite a cached data
-    * dir (per-module `clearCaches()` hooks cover the targeted case).
+    * dir (`IndexStore.invalidate` covers the targeted case for loaded
+    * artifacts).
     */
   def clearAll(): Unit = instances.removeIf { ref =>
     val c = ref.get()

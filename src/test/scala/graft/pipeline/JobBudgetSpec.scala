@@ -1,13 +1,11 @@
 package graft.pipeline
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.LongType
 
 import graft.SparkSpec
+import graft.SparkSpec.jobsOf
 
 /** Spark job budgets of the store's manifest paths: every skipping
   * consult is answered from the driver-resident manifest snapshot (no
@@ -16,30 +14,6 @@ import graft.SparkSpec
   */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
-
-  /** `op`'s result and the descriptions of the Spark jobs it ran (on
-    * this thread and the staging threads it spawns).
-    */
-  private def jobsOf[T](op: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).filter(_.getProperty("graft.spec.budget") == tag)
-          .foreach(p => seen.add(Option(p.getProperty("spark.job.description")).getOrElse("")))
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.budget", tag)
-    try {
-      val out = op
-      org.apache.spark.SpecBus.drain(sc)
-      (out, seen.asScala.toSeq)
-    } finally {
-      sc.setLocalProperty("graft.spec.budget", null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def batch(ids: Seq[Long]): DataFrame =
     Ingest.enrich(ids.map(i => (i, s"F$i", s"L$i", s"user$i@example.com", s"555-$i"))

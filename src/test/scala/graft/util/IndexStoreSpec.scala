@@ -32,6 +32,10 @@ class IndexStoreSpec extends AnyFunSuite {
       assert(IndexStore.loadOrBuild(spark, dataDir, "art")(build).count() === 5)
       assert(builds === 1)
       assert(IndexStore.artifactMtime(dataDir, "art").get === m1)
+      // ...and a repeat load in the same session opens nothing: the
+      // load memo answers without a footer-read job.
+      assert(SparkSpec.jobsOf(IndexStore.loadOrBuild(spark, dataDir, "art")(build))._2.isEmpty)
+      assert(builds === 1)
       // Explicit invalidation re-pays the build.
       IndexStore.invalidate(dataDir)
       assert(IndexStore.loadOrBuild(spark, dataDir, "art")(build).count() === 5)

@@ -35,4 +35,15 @@ class SessionCacheSpec extends SparkSpec {
     SessionCache.clearAll()
     assert(a.size === 0 && b.size === 0)
   }
+
+  test("a build may nest getOrCompute on the same instance, even within one bin") {
+    // Equal hashCodes put both keys in one map bin, where a nested
+    // computeIfAbsent throws "Recursive update".
+    assert("Aa".hashCode === "BB".hashCode)
+    val cache = new SessionCache[String]
+    val outer = cache.getOrCompute(spark, "Aa")(cache.getOrCompute(spark, "BB")("bb") + "+aa")
+    assert(outer === "bb+aa")
+    assert(cache.getOrCompute(spark, "BB")("rebuilt") === "bb")
+    assert(cache.getOrCompute(spark, "Aa")("rebuilt") === "bb+aa")
+  }
 }
