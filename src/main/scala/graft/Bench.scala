@@ -75,7 +75,8 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     // Fixture-store templates are test scaffolding the parity gates
-    // clone, not operators: build them ALL up front and publish the
+    // clone, not operators: build them ALL up front (none when no
+    // selected query is a parity gate) and publish the
     // cost as a separate "fixture_s" setup figure. Lazily riding the
     // first gate that touched a template charged whole template builds
     // to arbitrary alphabetical victims (the round-14 driver artifact
@@ -87,7 +88,7 @@ object Bench {
     // templates build lazily inside their gates (pre-round-15
     // behavior), so a tiny abort-path budget still aborts promptly.
     val fixDeadline = tFix + (0.35 * budgetS * 1e9).toLong
-    try graft.queries.PipelineParity.prebuildTemplates(spark, sfDir, fixDeadline)
+    try graft.queries.PipelineParity.prebuildTemplates(spark, sfDir, names, fixDeadline)
     catch { case e: Throwable => System.err.println(s"[bench] prebuild: $e") }
     val fixtureS = (System.nanoTime() - tFix) / 1e9
     val best = scala.collection.mutable.Map[String, Double]()

@@ -8,8 +8,9 @@ import org.apache.spark.sql.DataFrame
 /** Query profiler and plan auditor. Usage:
   *   runMain graft.Explain <sfDir> <queryName> [queryName...]
   *
-  * Prebuilds the fixture-store templates (as the bench does, so gate
-  * numbers are operator cost), then runs the named queries through the
+  * Prebuilds the fixture-store templates when a named query is a
+  * parity gate (as the bench does, so gate numbers are operator
+  * cost), then runs the named queries through the
   * bench's noop sink for two passes, dropping the memoized and
   * persisted builds before each pass. Per pass and query it prints the
   * wall time and a histogram of the Spark jobs it ran, grouped by job
@@ -38,7 +39,7 @@ object Explain {
         }
     })
 
-    try graft.queries.PipelineParity.prebuildTemplates(spark, sfDir, Long.MaxValue)
+    try graft.queries.PipelineParity.prebuildTemplates(spark, sfDir, names)
     catch { case e: Throwable => System.err.println(s"[explain] prebuild: $e") }
 
     val last = scala.collection.mutable.Map[String, DataFrame]()

@@ -2281,7 +2281,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * driver-side, cost ∝ files, opened through the session's Hadoop
     * conf (so any file system the session is configured for works).
     */
-  private[pipeline] def parquetRowCount(files: Seq[String]): Long =
+  private[graft] def parquetRowCount(files: Seq[String]): Long =
     if (files.isEmpty) 0L
     else {
       val conf = spark.sessionState.newHadoopConf()
@@ -2299,7 +2299,8 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     */
   private def readParquetRows(file: String, schema: org.apache.spark.sql.types.StructType)
       : Iterator[org.apache.spark.sql.Row] =
-    graft.sources.ParquetGroups.readAll(file, schema.fieldNames.toSeq).map(a =>
+    graft.sources.ParquetGroups.readAll(file, schema.fieldNames.toSeq,
+        schema.fields.map(f => f.name -> f.dataType).toMap).map(a =>
       org.apache.spark.sql.Row.fromSeq(a.toSeq.map {
         case u: org.apache.spark.unsafe.types.UTF8String => u.toString
         case x => x

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** End-to-end jobs wiring the pipeline stages together — the two
   * services of the reference as Spark jobs (SURVEY §3.1-3.2).
@@ -30,16 +31,26 @@ object IngestJob {
 object UploadJob {
 
   /** One crmIntegrator poll cycle (uploader.go:99-114): work-queue scan →
-    * bounded-concurrency POST → mark acked. Returns #acked.
+    * bounded-concurrency POST → mark acked. Returns the cycle's outcome
+    * tally, outcome ("201", "503", "SocketTimeoutException", …) → rows;
+    * the counting job is the one that runs the POSTs, and only the
+    * "201" rows are marked.
     */
-  def pollOnce(store: CustomerStoreApi, url: String, concurrency: Int = 25): Long = {
-    val pending = store.pending()
-    val acked = HttpSink.upload(pending, url, concurrency).cache()
-    val n = acked.count()
-    if (n > 0) store.markUploaded(acked)
-    acked.unpersist()
-    n
+  def pollCycle(store: CustomerStoreApi, url: String,
+      concurrency: Int = 25): Map[String, Long] = {
+    val outcomes = HttpSink.outcomes(store.pending(), url, concurrency).cache()
+    try {
+      val counts = outcomes.groupBy("outcome").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      if (counts.contains(HttpSink.Acked))
+        store.markUploaded(outcomes.filter(col("outcome") === HttpSink.Acked).select("email"))
+      counts
+    } finally outcomes.unpersist()
   }
+
+  /** [[pollCycle]]'s ack count. */
+  def pollOnce(store: CustomerStoreApi, url: String, concurrency: Int = 25): Long =
+    pollCycle(store, url, concurrency).getOrElse(HttpSink.Acked, 0L)
 
   /** The scheduler loop (uploader.go:71-97): wake on signal or backoff
     * timer, poll, reset backoff on any success; run until the work queue

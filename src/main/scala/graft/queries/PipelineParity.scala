@@ -483,17 +483,19 @@ object PipelineParity extends QueryGroup {
         "an all-duplicate batch still records its version")           // v3
     }
 
-  /** Build every fixture-store template for `dir`. The bench calls
-    * this ONCE before pass 1 and publishes the elapsed time as a
-    * separate `fixture_s` setup figure — template construction is
-    * scaffolding, and letting it lazily ride the first gate that
-    * touched it charged a whole template build to whichever query ran
-    * first in name order (round-14: the driver published a 203s
-    * `pipeline_asof_timestamp` that was mostly the clockIMA build
-    * under contention).
+  /** Build every fixture-store template for `dir`, or nothing when
+    * no query in `selected` belongs to this group (only its gates
+    * clone templates). The bench calls this ONCE before pass 1 and
+    * publishes the elapsed time as a separate `fixture_s` setup figure
+    * — template construction is scaffolding, and letting it lazily
+    * ride the first gate that touched it charged a whole template
+    * build to whichever query ran first in name order (round-14: the
+    * driver published a 203s `pipeline_asof_timestamp` that was mostly
+    * the clockIMA build under contention).
     */
-  def prebuildTemplates(s: SparkSession, dir: String,
+  def prebuildTemplates(s: SparkSession, dir: String, selected: Seq[String],
                         deadlineNanos: Long = Long.MaxValue): Unit = {
+    if (!selected.exists(queries.contains)) return
     // Stop STARTING template builds past the deadline (a tiny bench
     // budget must abort promptly, not sit in setup) — anything not
     // prebuilt lazily rides the first gate that touches it, exactly

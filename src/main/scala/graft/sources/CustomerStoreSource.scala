@@ -386,19 +386,14 @@ class StoreChangesMicroBatchStream(path: String, fromExclusive: Long,
         // have no dir and cost 0. Bytes come from file lengths, rows
         // from parquet footers — both driver-side metadata consults
         // proportional to the admitted lag, never a data read.
-        val dirs = store.feedDirsIn(from, commitCapped).toMap
+        val st = store
+        val dirs = st.feedDirsIn(from, commitCapped).toMap
         def files(v: Long): Seq[java.io.File] = dirs.get(v)
           .flatMap(d => Option(new java.io.File(d).listFiles()))
           .fold(Seq.empty[java.io.File])(_.toSeq)
         val sizes = dirs.keys.map(v => v -> files(v).map(_.length()).sum).toMap
-        def rowsOf(v: Long): Long =
-          files(v).filter(_.getName.endsWith(".parquet")).map { f =>
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-                new org.apache.hadoop.conf.Configuration(false)))
-            try r.getRecordCount finally r.close()
-          }.sum
+        def rowsOf(v: Long): Long = st.parquetRowCount(
+          files(v).filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath))
         var v = from
         var bytes = 0L
         var rows = 0L
@@ -450,7 +445,8 @@ case class StoreChangesReaderFactory(required: Array[String],
       // translate the requested logical names at the file boundary;
       // positions are preserved so the projected row is unchanged.
       // Logical types ride along so an int evolved column decodes to
-      // its exact Int (type-widening twin of the data readers).
+      // its exact Int (type-widening twin of the data readers);
+      // readAll's values are owned, so rows wrap them uncopied.
       private val it: Iterator[Array[Any]] =
         ParquetGroups.parquetFilesIn(
           partition.asInstanceOf[StoreChangesPartition].dir)
@@ -1285,7 +1281,7 @@ class CustomerStoreScan(path: String, versionAsOf: Option[Long],
         ParquetGroups.readAll(f, Seq("change_type", "email")).collect {
           case Array(ct: UTF8String, email: UTF8String)
               if !ct.toString.endsWith("_pre") || ct.toString == "delete_pre" =>
-            email.clone()
+            email
         }
       }
     }.toSet
@@ -1367,9 +1363,16 @@ case class StoreReaderFactory(required: Array[String],
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case p: StoreDataPartition =>
-        new StoreDataReader(p, required, filters, phys, types)
+        val name = UTF8String.fromString(p.basename)
+        val tombstones = p.dvFiles.iterator.flatMap { f =>
+          ParquetGroups.readAll(f, Seq("file", "email")).collect {
+            case Array(fn: UTF8String, email: UTF8String) if fn == name => email
+          }
+        }.toSet
+        new StoreFileReader(p.file, Some(p.uploaded), tombstones, required,
+          filters, phys, types)
       case p: StoreSnapshotPartition =>
-        new StoreSnapshotReader(p, required, filters, phys, types)
+        new StoreFileReader(p.file, None, p.skipEmails, required, filters, phys, types)
       case p: StoreDeltaPartition =>
         new StoreDeltaReader(p, required, filters, phys, types)
     }
@@ -1451,21 +1454,25 @@ private[sources] abstract class StoreRowReader(required: Array[String],
     }))
 }
 
-/** Streams one current-state data file through the VECTORIZED parquet
-  * reader (pages → columnar batches, rows served as views): projected
-  * read → deletion-vector anti-join (this file's tombstoned emails) →
-  * pushed filters → projected row. `uploaded` is a directory constant.
+/** Streams one store file through the VECTORIZED parquet reader
+  * (pages → columnar batches, rows served as views): projected read →
+  * skipped-email anti-join → pushed filters → projected row. Serves
+  * both file kinds, which differ only in data: a live data file
+  * carries `uploaded` in its directory (`uploaded` is Some) and skips
+  * its deletion-vector tombstones; a snapshot file stores `uploaded`
+  * as a column and skips the emails the time-travel delta touches.
   */
-class StoreDataReader(p: StoreDataPartition, required: Array[String],
-    filters: Array[Filter], phys: Map[String, String] = Map.empty,
-    types: Map[String, org.apache.spark.sql.types.DataType] = Map.empty)
+class StoreFileReader(file: String, uploaded: Option[Boolean],
+    skipEmails: Set[UTF8String], required: Array[String],
+    filters: Array[Filter], phys: Map[String, String],
+    types: Map[String, org.apache.spark.sql.types.DataType])
     extends StoreRowReader(required, filters) {
 
   // Columns to decode: requested ∪ filter-referenced ∪ email (for the
-  // tombstone check); `uploaded` is never physical in data files.
+  // skip check); a directory-constant `uploaded` is never physical.
   private val readCols: Seq[String] =
     (required ++ filters.flatMap(_.references) ++ Seq("id", "email"))
-      .distinct.filter(_ != "uploaded").toSeq
+      .distinct.filter(c => uploaded.isEmpty || c != "uploaded").toSeq
   // Files store PHYSICAL names (column mapping) — translate at the
   // cursor boundary, logical everywhere above.
   private def pn(c: String): String = phys.getOrElse(c, c)
@@ -1474,63 +1481,22 @@ class StoreDataReader(p: StoreDataPartition, required: Array[String],
   private val pnTypes = readCols.flatMap(c =>
     types.get(c).map(pn(c) -> _)).toMap
 
-  private val tombstones: Set[UTF8String] = {
-    val name = UTF8String.fromString(p.basename)
-    p.dvFiles.iterator.flatMap { f =>
-      ParquetGroups.readAll(f, Seq("file", "email")).collect {
-        case Array(fn: UTF8String, email: UTF8String) if fn == name => email.clone()
-      }
-    }.toSet
-  }
-
   private val cursor =
-    new ParquetGroups.VectorizedFileRows(p.file, readCols.map(pn), pnTypes)
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (cursor.advance()) {
-      val get: String => Any = {
-        case "uploaded" => p.uploaded
-        case c => cursor.value(pn(c))
-      }
-      val email = get("email").asInstanceOf[UTF8String]
-      if ((tombstones.isEmpty || !tombstones.contains(email)) && passes(get)) {
-        current = project(get)
-        return true
-      }
+    new ParquetGroups.VectorizedFileRows(file, readCols.map(pn), pnTypes)
+  private val valueOf: String => Any = uploaded match {
+    case Some(u) => {
+      case "uploaded" => u
+      case c => cursor.value(pn(c))
     }
-    false
+    case None => c => cursor.value(pn(c))
   }
-  override def get(): InternalRow = current
-  override def close(): Unit = cursor.close()
-}
-
-/** Streams one snapshot file of a time-travel scan (all table columns
-  * physical, `uploaded` included) through the vectorized reader,
-  * dropping delta-touched emails.
-  */
-class StoreSnapshotReader(p: StoreSnapshotPartition, required: Array[String],
-    filters: Array[Filter], phys: Map[String, String] = Map.empty,
-    types: Map[String, org.apache.spark.sql.types.DataType] = Map.empty)
-    extends StoreRowReader(required, filters) {
-
-  private val readCols: Seq[String] =
-    (required ++ filters.flatMap(_.references) ++ Seq("id", "email"))
-      .distinct.toSeq
-  private def pn(c: String): String = phys.getOrElse(c, c)
-  private val pnTypes = readCols.flatMap(c =>
-    types.get(c).map(pn(c) -> _)).toMap
-
-  private val cursor =
-    new ParquetGroups.VectorizedFileRows(p.file, readCols.map(pn), pnTypes)
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     while (cursor.advance()) {
-      val get: String => Any = c => cursor.value(pn(c))
-      val email = get("email").asInstanceOf[UTF8String]
-      if (!p.skipEmails.contains(email) && passes(get)) {
-        current = project(get)
+      val email = valueOf("email").asInstanceOf[UTF8String]
+      if ((skipEmails.isEmpty || !skipEmails.contains(email)) && passes(valueOf)) {
+        current = project(valueOf)
         return true
       }
     }
@@ -1566,13 +1532,9 @@ class StoreDeltaReader(p: StoreDeltaPartition, required: Array[String],
       val v = row(0).asInstanceOf[Long]
       val ct = row(1).asInstanceOf[UTF8String].toString
       if (!ct.endsWith("_pre") || ct == "delete_pre") {
-        val email = row(cols.indexOf("email")).asInstanceOf[UTF8String].clone()
+        val email = row(cols.indexOf("email")).asInstanceOf[UTF8String]
         val prev = winners.get(email)
-        if (prev == null || v > prev._1)
-          winners.put(email, (v, ct, row.map {
-            case s: UTF8String => s.clone()
-            case x => x
-          }))
+        if (prev == null || v > prev._1) winners.put(email, (v, ct, row))
       }
     }
     import scala.jdk.CollectionConverters._

@@ -2,35 +2,26 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Projected parquet reading for the graft-store DSv2 partition
-  * readers. Two decode paths, both opening ONE file with a
-  * name-projected schema so column pruning reaches the page level:
+/** Projected parquet reading for the store's own files: data files,
+  * snapshots, change-feed commits, deletion vectors and the `_stats`
+  * manifest. One decode path, Spark's own `VectorizedParquetRecordReader`
+  * ([[VectorizedFileRows]]), opening ONE file with a name-projected
+  * schema so column pruning reaches the page level: pages decode into
+  * columnar batches wholesale and rows are served as views over the
+  * batch. [[readAll]] is the same cursor for callers that keep rows.
   *
-  *  - [[VectorizedFileRows]] — Spark's own
-  *    `VectorizedParquetRecordReader` (the in-file decode the
-  *    table-scale data/snapshot readers use): pages decode into
-  *    columnar batches wholesale and rows are served as views over
-  *    the batch. This is the 100 TB decode constant; measured vs the
-  *    Group path in SCALING.md's r14 row.
-  *  - [[readAll]]/[[open]] — the parquet-mr example API's
-  *    Group-per-row decode, kept for the METADATA-scale reads
-  *    (deletion vectors, feed commits, time-travel deltas) where rows
-  *    are few by design and the Group path's zero-setup simplicity
-  *    wins.
-  *
-  * Decode covers exactly the store's physical types: INT64, BINARY
-  * (UTF8), BOOLEAN, and timestamps as either INT96 (Spark's default
-  * parquet output) or annotated INT64 (MICROS/MILLIS) — both mapped
-  * to Catalyst micros-since-epoch.
+  * Decode covers exactly the store's physical types: INT32, INT64,
+  * BINARY (UTF8), BOOLEAN, and timestamps as either INT96 (Spark's
+  * default parquet output) or annotated INT64 (MICROS/MILLIS) — both
+  * served as Catalyst micros-since-epoch. Spark's reader owns every
+  * type rule (INT96 arithmetic, timestamp units, int32→int64
+  * promotion); this file only picks the Catalyst type to request.
   */
 object ParquetGroups {
 
@@ -42,8 +33,7 @@ object ParquetGroups {
     * row).
     */
   final class VectorizedFileRows(file: String, columns: Seq[String],
-      requestedTypes: Map[String, org.apache.spark.sql.types.DataType] =
-        Map.empty)
+      requestedTypes: Map[String, DataType] = Map.empty)
       extends AutoCloseable {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
@@ -146,106 +136,26 @@ object ParquetGroups {
     finally r.close()
   }
 
-  /** Open `file` projected to `columns` (names present in the file;
-    * missing names are ignored so callers can ask for logically-known
-    * columns a given layout lacks). Returns (reader, projected schema
-    * field order).
-    */
-  def open(file: String, columns: Seq[String]): (ParquetReader[Group], Seq[String]) = {
-    val full = fileSchema(file)
-    val present = columns.filter(full.containsField)
-    val projected = new MessageType(full.getName,
-      present.map(n => full.getType(full.getFieldIndex(n))): _*)
-    val conf = new Configuration(false)
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projected.toString)
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(), new HPath(file))
-      .withConf(conf)
-      .build()
-    (reader, present)
-  }
-
-  /** Julian epoch day of 1970-01-01 (public constant from the parquet
-    * INT96 timestamp layout: 8 LE bytes nanos-of-day + 4 LE bytes
-    * julian day).
-    */
-  private val UnixEpochJulianDay = 2440588L
-
-  private def int96ToMicros(bytes: Array[Byte]): Long = {
-    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt.toLong
-    (julianDay - UnixEpochJulianDay) * 86400L * 1000000L + nanosOfDay / 1000L
-  }
-
-  /** Decode field `fi` of `g` to the Catalyst-internal value for the
-    * store's column types (Long, UTF8String, Boolean, timestamp
-    * micros). Null when the field is absent in this row.
-    */
-  def value(g: Group, fi: Int): Any = {
-    if (g.getFieldRepetitionCount(fi) == 0) return null
-    val t = g.getType.getType(fi).asPrimitiveType()
-    t.getPrimitiveTypeName match {
-      case PrimitiveType.PrimitiveTypeName.INT64 =>
-        val v = g.getLong(fi, 0)
-        t.getLogicalTypeAnnotation match {
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            ts.getUnit match {
-              case LogicalTypeAnnotation.TimeUnit.MILLIS => v * 1000L
-              case LogicalTypeAnnotation.TimeUnit.MICROS => v
-              case LogicalTypeAnnotation.TimeUnit.NANOS => v / 1000L
-            }
-          case _ => v
-        }
-      case PrimitiveType.PrimitiveTypeName.INT32 => g.getInteger(fi, 0).toLong
-      case PrimitiveType.PrimitiveTypeName.BOOLEAN => g.getBoolean(fi, 0)
-      case PrimitiveType.PrimitiveTypeName.INT96 =>
-        int96ToMicros(g.getInt96(fi, 0).getBytes)
-      case PrimitiveType.PrimitiveTypeName.BINARY =>
-        UTF8String.fromBytes(g.getBinary(fi, 0).getBytes)
-      case other =>
-        throw new UnsupportedOperationException(
-          s"graft-store reader: unsupported parquet type $other for field ${t.getName}")
-    }
-  }
-
-  /** Read an entire small parquet file (metadata-scale: deletion
-    * vectors, feed commits) as decoded rows of the requested columns.
+  /** Every row of one parquet file as owned arrays: `columns` in
+    * order, null where the file lacks one, decoded by
+    * [[VectorizedFileRows]] under the declared LOGICAL `types` (keyed
+    * by the requested names). Strings are cloned out of the cursor's
+    * reused batch, so rows may be kept. Rows stream one batch at a
+    * time and the cursor closes when exhausted.
     *
-    * `types` (keyed by the requested column names) declares each
-    * column's LOGICAL Catalyst type; [[value]] decodes int32 to Long
-    * by default, so an IntegerType column narrows back to its exact
-    * Int here — the Group-path twin of the vectorized reader's
-    * logical-type service, needed wherever an int evolved column (or
-    * a pre-widening narrow file) flows through a feed or delta read.
+    * A column without a declared type decodes to its physical type:
+    * an INT32 column is an Int, so callers that want Long over
+    * int32 files declare `LongType`.
     */
   def readAll(file: String, columns: Seq[String],
-      types: Map[String, org.apache.spark.sql.types.DataType] = Map.empty)
-      : Iterator[Array[Any]] = {
-    val (reader, present) = open(file, columns)
-    val presentIdx = columns.map(present.indexOf)
-    val narrowToInt: Array[Boolean] = columns.map(c =>
-      types.get(c).contains(org.apache.spark.sql.types.IntegerType)).toArray
-    new Iterator[Array[Any]] {
-      private var nextGroup: Group = reader.read()
-      override def hasNext: Boolean = {
-        if (nextGroup == null) reader.close()
-        nextGroup != null
-      }
-      override def next(): Array[Any] = {
-        val g = nextGroup
-        nextGroup = reader.read()
-        if (nextGroup == null) reader.close()
-        presentIdx.zipWithIndex.map { case (i, c) =>
-          if (i < 0) null
-          else value(g, i) match {
-            case l: java.lang.Long if narrowToInt(c) =>
-              java.lang.Integer.valueOf(l.intValue())
-            case v => v
-          }
-        }.toArray
-      }
-    }
+      types: Map[String, DataType] = Map.empty): Iterator[Array[Any]] = {
+    val rows = new VectorizedFileRows(file, columns, types)
+    Iterator.continually(rows.advance())
+      .takeWhile { has => if (!has) rows.close(); has }
+      .map(_ => columns.iterator.map(c => rows.value(c) match {
+        case s: UTF8String => s.clone()
+        case v => v
+      }).toArray)
   }
 
   /** Data files inside a directory (feed commit dir, snapshot dir). */

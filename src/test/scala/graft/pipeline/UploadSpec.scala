@@ -98,6 +98,27 @@ class UploadSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("pollCycle counts each outcome and marks only the 201 rows") {
+    withStub(failEvery = 2) { (url, requests, accepted) =>
+      val store = seedStore(storeFactories.head._2, 10)
+      val counts = UploadJob.pollCycle(store, url, concurrency = 2)
+      assert(counts.keySet === Set(HttpSink.Acked, "503"))
+      assert(counts(HttpSink.Acked) === accepted.get().toLong)
+      assert(counts.values.sum === 10L)
+      assert(requests.get() === 10)
+      assert(store.all().filter("uploaded").count() === counts(HttpSink.Acked))
+      assert(store.pending().count() === counts("503"))
+    }
+    // A closed port: every POST fails before a response exists.
+    val closed = new java.net.ServerSocket(0, 1, java.net.InetAddress.getByName("127.0.0.1"))
+    val port = closed.getLocalPort
+    closed.close()
+    val store = seedStore(storeFactories.head._2, 4)
+    val counts = UploadJob.pollCycle(store, s"http://127.0.0.1:$port/customers", concurrency = 2)
+    assert(counts === Map("ConnectException" -> 4L))
+    assert(store.pending().count() === 4)
+  }
+
   test("backoff follows fibonacci and resets on success") {
     val b = new Backoff()
     val seq = (1 to 6).map(_ => b.nextInterval())
