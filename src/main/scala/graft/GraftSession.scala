@@ -29,6 +29,10 @@ object GraftSession {
       // warm; a few thousand compiled classes are megabytes, noise
       // against the 128 GiB heap.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // The events table's `ts` contract (see Tables.apply): the nanos
+      // generation reads as its long, the micros one as TIMESTAMP.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -12,21 +12,23 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** One base table, its schema resolved from the file's footer on the
+    * driver ([[graft.sources.ParquetGroups.read]]): no Spark job and no
+    * session conf written, every action still scans the file.
+    *
+    * The events table has shipped with `ts` as TIMESTAMP(NANOS) (which
+    * Spark 4 rejects unless read as long) and as TIMESTAMP(MICROS,
+    * isAdjustedToUTC=false). Both generations come back under the same
+    * query-facing contract — `ts` as epoch-NANOS BIGINT — so every
+    * downstream `ts DIV 1000` keeps meaning "microseconds". That rests
+    * on two parquet settings [[GraftSession]] sets once per session:
+    *  - nanosAsLong reads the nanos generation as the long verbatim;
+    *  - inferTimestampNTZ=false reads the micros generation as
+    *    TIMESTAMP (epoch micros verbatim, no session-timezone math),
+    *    which the branch below rescales to nanos.
+    */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // The events table has shipped with `ts` as TIMESTAMP(NANOS) (which
-    // Spark 4 rejects unless read as long) and as TIMESTAMP(MICROS,
-    // isAdjustedToUTC=false). Normalize BOTH generations to the same
-    // query-facing contract — `ts` as epoch-NANOS BIGINT — so every
-    // downstream `ts DIV 1000` keeps meaning "microseconds":
-    //  - nanosAsLong reads the nanos generation as the long verbatim;
-    //  - inferTimestampNTZ=false reads the micros generation as
-    //    TIMESTAMP (epoch micros verbatim, no session-timezone math),
-    //    which the branch below rescales to nanos.
-    // Both confs are idempotent runtime settings, applied here so
-    // queries work under any caller-provided session.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = graft.sources.ParquetGroups.read(spark, s"$dir/$name.parquet")
     if (name == "events" &&
         df.schema("ts").dataType != org.apache.spark.sql.types.LongType)
       df.withColumn("ts",

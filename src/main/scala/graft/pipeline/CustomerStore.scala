@@ -1180,7 +1180,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         require(f.delete(), s"purge: could not remove fully-excised $f")
         if (crc.exists()) crc.delete(): Unit
       } else {
-        val keep = spark.read.parquet(f.getAbsolutePath)
+        val keep = graft.sources.ParquetGroups.read(spark, f.getAbsolutePath)
           .filter(!col(emailCol).isInCollection(keys))
         // Dot-prefixed sibling dir: invisible to Spark's globs, same
         // filesystem as the target so the final move is an atomic
@@ -2615,7 +2615,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     val dvDir = new java.io.File(tmp, "deletes")
     val missingVectored =
       if (!dvDir.isDirectory) Nil
-      else spark.read.parquet(dvDir.toString).select("file").distinct()
+      else graft.sources.ParquetGroups.read(spark, dvDir.toString).select("file").distinct()
         .collect().toSeq.map(_.getString(0))
         .filter(n => gone("uploaded=false", n) && gone("uploaded=true", n))
     val missing = missingListed ++ missingVectored
@@ -2652,7 +2652,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       if (dir.isDirectory) {
         val out = new java.io.File(tmp, name + ".renum")
         deleteRecursively(out)
-        spark.read.parquet(dir.toString)
+        graft.sources.ParquetGroups.read(spark, dir.toString)
           .withColumn("commit_version", lit(newV))
           .coalesce(1).write.parquet(out.toString)
         prefixParts(out, prefix)

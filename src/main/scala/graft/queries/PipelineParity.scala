@@ -1165,7 +1165,7 @@ object PipelineParity extends QueryGroup {
           .unionByName(base.filter(col("id") <= t1)
             .select(col("id").as("k"), lit("b").as("tag")))
           .write.mode("overwrite").parquet(dimPath)
-        s.read.parquet(dimPath).createOrReplaceTempView("graft_rtf_dim")
+        graft.sources.ParquetGroups.read(s, dimPath).createOrReplaceTempView("graft_rtf_dim")
         val before = graft.sources.CustomerStoreScan.runtimePruneCalls.get()
         val q = s.sql(
           s"""SELECT /*+ BROADCAST(d) */ count(*) AS n_matched, sum(t.id) AS id_sum
@@ -2531,7 +2531,7 @@ object PipelineParity extends QueryGroup {
       val docs = Tables(s, dir, "documents")
       val out = withTempDir("graft-partitioned-") { tmp =>
         docs.write.partitionBy("lang").parquet(s"$tmp/corpus")
-        val part = s.read.parquet(s"$tmp/corpus")
+        val part = graft.sources.ParquetGroups.read(s, s"$tmp/corpus")
         val en = part.filter(col("lang") === "en")
           .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("c")).head()
         val all = part.agg(count(lit(1)).as("n"),

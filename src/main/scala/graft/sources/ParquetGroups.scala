@@ -1,11 +1,16 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.SeekableInputStream
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Projected parquet reading for the store's own files: data files,
@@ -22,6 +27,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * served as Catalyst micros-since-epoch. Spark's reader owns every
   * type rule (INT96 arithmetic, timestamp units, int32→int64
   * promotion); this file only picks the Catalyst type to request.
+  *
+  * It is also where main code opens a parquet DataFrame whose schema
+  * it does not declare: [[read]] pins the schema [[sparkSchema]]
+  * resolves from one footer on the driver, so no read runs Spark's
+  * schema-inference job.
   */
 object ParquetGroups {
 
@@ -39,7 +49,11 @@ object ParquetGroups {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
     import org.apache.spark.sql.types._
 
-    private val full = fileSchema(file)
+    // One conf, one stream, one footer per file: the footer read here
+    // is handed to the reader below instead of being read again.
+    private val conf = new Configuration(false)
+    private val (input, stream, footer) = openFooter(new HPath(file), conf)
+    private val full = footer.getFileMetaData.getSchema
     val present: Seq[String] = columns.filter(full.containsField)
 
     // Catalyst view of the projection: the caller's LOGICAL type when
@@ -52,7 +66,7 @@ object ParquetGroups {
     // narrow (int) evolved columns exact through the connector: an
     // int32 file under a widened bigint column decodes straight into
     // a Long vector, and an int column stays an Int.
-    private val catalystTypes: Array[DataType] = present.map { n =>
+    private val catalystTypes: Array[DataType] = orClose(stream)(present.map { n =>
       val t = full.getType(full.getFieldIndex(n)).asPrimitiveType()
       val fileType: DataType = t.getPrimitiveTypeName match {
         case PrimitiveType.PrimitiveTypeName.INT96 => TimestampType
@@ -73,7 +87,7 @@ object ParquetGroups {
         case Some(LongType) if fileType == IntegerType => LongType
         case _ => fileType
       }
-    }.toArray
+    }.toArray)
 
     private val reader = new VectorizedParquetRecordReader(false, 4096)
     locally {
@@ -81,11 +95,12 @@ object ParquetGroups {
       // hardcodes int96AsTimestamp=false and cannot read Spark's
       // default INT96 output): a one-file split + a task context whose
       // conf carries the requested Catalyst schema and the same
-      // parquet-interpretation flags ParquetFileFormat sets.
+      // parquet-interpretation flags ParquetFileFormat sets. The reader
+      // takes the open stream and footer (all three must be given, or
+      // it reopens the file) and closes the stream with itself.
       val requested = StructType(present.zip(catalystTypes).map {
         case (n, dt) => StructField(n, dt)
       })
-      val conf = new Configuration(false)
       conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
         classOf[ParquetReadSupport].getName)
       conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
@@ -95,10 +110,10 @@ object ParquetGroups {
       conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", false)
       conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
       val split = new org.apache.hadoop.mapred.FileSplit(
-        new HPath(file), 0, new java.io.File(file).length(), Array.empty[String])
+        input.getPath, 0, input.getLength, Array.empty[String])
       val attempt = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
         conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
-      reader.initialize(split, attempt)
+      orClose(stream)(reader.initialize(split, attempt, Some(input), Some(stream), Some(footer)))
     }
 
     private val extract: Array[(InternalRow, Int) => Any] = catalystTypes.map {
@@ -128,12 +143,88 @@ object ParquetGroups {
     override def close(): Unit = reader.close()
   }
 
+  /** Open `file` and read its whole footer from that one stream. The
+    * caller owns the stream: [[VectorizedFileRows]] hands all three to
+    * Spark's reader, [[readFooter]] closes it at once.
+    */
+  private def openFooter(file: HPath, conf: Configuration)
+      : (HadoopInputFile, SeekableInputStream, ParquetMetadata) = {
+    val input = HadoopInputFile.fromPath(file, conf)
+    val stream = input.newStream()
+    orClose(stream)((input, stream, ParquetFileReader.readFooter(
+      input, HadoopReadOptions.builder(conf, file).build(), stream)))
+  }
+
+  /** `body`, closing `stream` if it throws. */
+  private def orClose[T](stream: java.io.Closeable)(body: => T): T =
+    try body catch { case e: Throwable => stream.close(); throw e }
+
+  private def readFooter(file: HPath, conf: Configuration): ParquetMetadata = {
+    val (_, stream, footer) = openFooter(file, conf)
+    stream.close()
+    footer
+  }
+
   /** The file's full schema (footer read only). */
-  def fileSchema(file: String): MessageType = {
-    val conf = new Configuration(false)
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf))
-    try r.getFooter.getFileMetaData.getSchema
-    finally r.close()
+  def fileSchema(file: String): MessageType =
+    readFooter(new HPath(file), new Configuration(false)).getFileMetaData.getSchema
+
+  /** The schema Spark's parquet inference returns for `paths`, resolved
+    * from ONE footer read on the driver instead of Spark's inference job
+    * (`mergeSchemasInParallel` runs a job even for a single footer).
+    * The footer is picked by Spark's own rule (`ParquetUtils.inferSchema`
+    * without mergeSchema): over the leaf files of every path, sorted by
+    * path, a `_common_metadata`, else a `_metadata`, else the first data
+    * file; hidden names (a leading `_` or `.`) are never listed. It converts
+    * through Spark's `readSchemaFromFooter`, so the stored Spark row
+    * schema wins when present and the session's parquet settings
+    * (nanosAsLong, inferTimestampNTZ, int96AsTimestamp, binaryAsString)
+    * apply exactly as they do in inference. A missing path, or one
+    * with no data file, fails naming the paths.
+    */
+  def sparkSchema(spark: SparkSession, paths: String*): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val leaves = paths.flatMap(p => leafFiles(new HPath(p), conf))
+      .map(_.getPath).sortBy(_.toString)
+    val pick = Summaries.flatMap(n => leaves.find(_.getName == n)).headOption
+      .orElse(leaves.find(f => !Summaries.contains(f.getName)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet data file to resolve a schema from under ${paths.mkString(", ")}"))
+    ParquetFileFormat.readSchemaFromFooter(new Footer(pick, readFooter(pick, conf)),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** `spark.read.parquet(paths: _*)` with the schema pinned by
+    * [[sparkSchema]]: the same frame, without the inference job. Only
+    * metadata is resolved; every action still scans the files.
+    */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(sparkSchema(spark, paths: _*)).parquet(paths: _*)
+
+  /** Parquet summary files, in the order Spark's inference prefers them. */
+  private val Summaries = Seq("_common_metadata", "_metadata")
+
+  /** Spark's file-index listing: a file path is its own leaf; a
+    * directory contributes its files and recurses into its
+    * subdirectories, skipping hidden names (a leading `.`, or a
+    * leading `_` outside a `key=value` partition name) except the
+    * summary files.
+    */
+  private def leafFiles(path: HPath, conf: Configuration): Seq[FileStatus] = {
+    val fs = path.getFileSystem(conf)
+    val root = try fs.getFileStatus(path) catch {
+      case e: java.io.FileNotFoundException =>
+        throw new java.io.FileNotFoundException(s"parquet path does not exist: $path")
+          .initCause(e)
+    }
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter { c =>
+        val n = c.getPath.getName
+        val hidden = n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+        !hidden || Summaries.contains(n)
+      }.flatMap(walk)
+    walk(root)
   }
 
   /** Every row of one parquet file as owned arrays: `columns` in

@@ -107,7 +107,7 @@ object StreamingView {
   def read(spark: SparkSession, stateDir: String,
       emptySchema: StructType = stateSchema): DataFrame =
     latestState(stateDir) match {
-      case Some((_, dir)) => spark.read.parquet(dir.toString)
+      case Some((_, dir)) => graft.sources.ParquetGroups.read(spark, dir.toString)
       case None =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
@@ -137,7 +137,7 @@ object StreamingView {
           sum(w * expr(e).cast("long")).as(n)
         }.tail: _*)
     val prev = latestState(stateDir) match {
-      case Some((_, dir)) => spark.read.parquet(dir.toString)
+      case Some((_, dir)) => graft.sources.ParquetGroups.read(spark, dir.toString)
       case None =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], delta.schema)

@@ -1,5 +1,6 @@
 package graft.util
 
+import graft.sources.ParquetGroups
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,7 +25,7 @@ object DataSkipping {
     * artifact you persist per table snapshot and maintain per commit.
     */
   def collectStats(spark: SparkSession, dir: String, cols: Seq[String]): DataFrame =
-    spark.read.parquet(dir)
+    ParquetGroups.read(spark, dir)
       .select(input_file_name().as("_file") +: cols.map(col): _*)
       .groupBy(col("_file"))
       .agg(count(lit(1)).as("n_rows"),
@@ -54,8 +55,8 @@ object DataSkipping {
       .reduce(_ && _)
     val df =
       if (keep.isEmpty)
-        spark.read.parquet(dir).filter(exact).limit(0)
-      else spark.read.parquet(keep: _*).filter(exact)
+        ParquetGroups.read(spark, dir).filter(exact).limit(0)
+      else ParquetGroups.read(spark, keep: _*).filter(exact)
     (df, keep.size, total)
   }
 
@@ -86,7 +87,7 @@ object DataSkipping {
       bits: Long = DEFAULT_BLOOM_BITS): DataFrame = {
     val pos = explode(array((0 until BLOOM_SEEDS).map(s =>
       pmod(xxhash64(col(keyCol), lit(s)), lit(bits))): _*)).as("p")
-    spark.read.parquet(dir)
+    ParquetGroups.read(spark, dir)
       .select(input_file_name().as("_file"), col(keyCol))
       .select(col("_file"), pos)
       .select(col("_file"), expr("p DIV 64").as("w"),
@@ -164,8 +165,8 @@ object DataSkipping {
     val keep = pruneBloom(spark, bloom, keyCol, keys, bits)
     val exact = col(keyCol).isin(keys: _*)
     val df =
-      if (keep.isEmpty) spark.read.parquet(dir).filter(exact).limit(0)
-      else spark.read.parquet(keep: _*).filter(exact)
+      if (keep.isEmpty) ParquetGroups.read(spark, dir).filter(exact).limit(0)
+      else ParquetGroups.read(spark, keep: _*).filter(exact)
     (df, keep.size, total)
   }
 

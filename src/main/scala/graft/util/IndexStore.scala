@@ -154,7 +154,7 @@ object IndexStore {
           }
         }
       }
-      dirs.map(d => s.read.parquet(d.getPath))
+      dirs.map(d => graft.sources.ParquetGroups.read(s, d.getPath))
     }
   }
 

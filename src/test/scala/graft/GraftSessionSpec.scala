@@ -27,6 +27,8 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "4096")
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") === "false")
     assert(spark.sql("SELECT simhash64('a b c')").head().getLong(0) ===
       graft.functions.TextKernels.simhash64(
         org.apache.spark.unsafe.types.UTF8String.fromString("a b c")))

@@ -43,6 +43,24 @@ class IndexStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("an artifact on disk but not memoized loads without a Spark job") {
+    withTempRoot {
+      val dataDir = Files.createTempDirectory("graft-idx-data-").toString
+      spark.range(10).write.parquet(s"$dataDir/t.parquet")
+      var builds = 0
+      def build = { builds += 1; spark.range(5).toDF("v") }
+      IndexStore.loadOrBuild(spark, dataDir, "art")(build): Unit
+      // A new session's view: the memo is empty, the artifact persisted.
+      // Its schema comes from one footer read on the driver.
+      SessionCache.clearAll()
+      val (loaded, jobs) =
+        SparkSpec.jobsOf(IndexStore.loadOrBuild(spark, dataDir, "art")(build))
+      assert(jobs.isEmpty, s"loading a persisted artifact ran Spark jobs: $jobs")
+      assert(builds === 1)
+      assert(loaded.count() === 5)
+    }
+  }
+
   test("rewriting the source data orphans the persisted artifact") {
     withTempRoot {
       val dataDir = Files.createTempDirectory("graft-idx-data-").toString
