@@ -10,6 +10,8 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = GraftSession(GraftSession.envCores)
     new java.io.File(outDir).mkdirs()
+    val failed = Seq.newBuilder[String]
+    var ok = 0
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -18,13 +20,18 @@ object Verify {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+        ok += 1
       } catch { case e: Throwable =>
+        failed += name
         // e.toString + top frames, not getMessage: an NPE's message is
         // null and a bare "failed: null" line is undebuggable.
         System.err.println(s"[verify] $name failed: $e\n  at " +
           e.getStackTrace.take(6).mkString("\n  at "))
       }
     }
+    val failures = failed.result()
+    System.err.println(s"[verify] $ok ok, ${failures.size} failed: " +
+      failures.mkString(", "))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -262,60 +262,44 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * them by the same atomic rename, so the feed can never show a
     * change whose data commit did not land (and recovery completes
     * both or neither).
+    *
+    * "The whole feed" means from genesis: this is [[feedSince]]`(0,
+    * currentVersion())`, so once [[vacuumFeed]] has retired any commit
+    * it fails as loudly as any range starting below the watermark.
+    * Readers that want the retained suffix say so explicitly:
+    * `feedSince(feedLowWatermark(), head)`.
     */
-  def changeFeed(): DataFrame = {
-    val dirs = commitDirs()
-    // "The whole feed" means from genesis: once vacuumFeed has retired
-    // any commit, a full-feed read can no longer be served completely
-    // and must fail as loudly as the equivalent feedSince(0, head)
-    // (round-14 ADVICE: an inconsistent loud-failure surface is a
-    // silent-loss trap for consumers). Readers that want the retained
-    // suffix say so explicitly: feedSince(feedLowWatermark(), head).
-    if (dirs.nonEmpty) requireFeedRange(0L, dirs.map(_._1).max)
-    if (dirs.nonEmpty)
-      readPhysical(changeSchema,
-        Seq(new java.io.File(path, Changelog).toString), recursive = true)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], changeSchema)
-  }
+  def changeFeed(): DataFrame = feedSince(0L, currentVersion())
 
-  /** The feed restricted to commits in `(fromExclusive, toInclusive]`,
-    * reading ONLY those commits' directories — the feed is laid out
-    * one directory per commit (`_changelog/commit-<v>/`), so an
-    * incremental consumer's replay lists the log and opens just the
-    * delta, never scanning history (manifest-level pruning; at 100 TB
-    * the feed is the big artifact and this is what keeps catch-up
-    * proportional to the lag, not the lifetime).
+  /** The feed restricted to commits in `(fromExclusive, toInclusive]`:
+    * the connector's change-feed read (`feedFrom` / `feedTo`, see
+    * [[graft.sources.StoreChangesScan]]). The feed is laid out one
+    * directory per commit (`_changelog/commit-<v>/`), so the scan
+    * plans one input partition per commit in range and never opens
+    * history outside it — catch-up cost tracks the lag, not the
+    * table's lifetime. A range below the retention horizon fails here,
+    * when the read is defined.
     */
   def feedSince(fromExclusive: Long, toInclusive: Long): DataFrame = {
-    requireFeedRange(fromExclusive, toInclusive)
-    val dirs = commitDirs()
-      .filter { case (v, _) => v > fromExclusive && v <= toInclusive }
-      .map(_._2.toString)
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], changeSchema)
-    else
-      readPhysical(changeSchema, dirs)
+    requireFeedRangeAt(path, fromExclusive, toInclusive)
+    connectorRead("feedFrom" -> fromExclusive, "feedTo" -> toInclusive)
   }
 
-  /** (version, dir) for every commit directory present in the log. */
-  private def commitDirs(): Seq[(Long, java.io.File)] = {
-    val root = new java.io.File(path, Changelog)
-    if (!root.exists()) Seq.empty
-    else root.listFiles().toSeq
-      .filter(d => d.isDirectory && d.getName.startsWith("commit-"))
-      .map(d => d.getName.stripPrefix("commit-").toLong -> d)
-      .sortBy(_._1)
-  }
+  /** A read of this store through the `graft-store` connector with the
+    * given history options — the one implementation of time travel and
+    * the change feed.
+    */
+  private def connectorRead(opts: (String, Long)*): DataFrame =
+    opts.foldLeft(spark.read.format("graft-store").option("path", path)) {
+      case (r, (k, v)) => r.option(k, v)
+    }.load()
 
   /** The CURRENT table schema: the fixed base contract plus any
     * additively-evolved columns recorded by the last promoted
     * `_schema` manifest (see [[addColumn]]). Every read path — live
-    * scans, snapshots, the feed, `asOf` replay, the DSv2 connector —
-    * presents THIS schema; files and feed rows written before an
-    * evolution lack the column physically and read as typed NULLs
+    * scans, snapshots, and the DSv2 connector (which serves `asOf` and
+    * the feed) — presents THIS schema; files and feed rows written
+    * before an evolution lack the column physically and read as typed NULLs
     * (the Iceberg/Delta additive-evolution read contract).
     */
   override def tableSchema: org.apache.spark.sql.types.StructType = {
@@ -374,12 +358,9 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * dead physical columns (a later DROP) are never requested.
     */
   private def readPhysical(logical: org.apache.spark.sql.types.StructType,
-      paths: Seq[String], recursive: Boolean = false): DataFrame = {
-    val r0 = spark.read.schema(physicalize(logical))
-    val r = if (recursive) r0.option("recursiveFileLookup", "true") else r0
-    r.parquet(paths: _*)
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(physicalize(logical)).parquet(paths: _*)
       .select(logical.fields.map(f => col(physName(f)).as(f.name)).toIndexedSeq: _*)
-  }
 
   /** The table's data-file schema: every column but the partition
     * directory's `uploaded`.
@@ -740,60 +721,23 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * rename of the version file), so a crash can never leave the
     * version ahead of or behind the data.
     */
-  def currentVersion(): Long = {
-    val f = new java.io.File(path, VersionFile)
-    if (f.exists()) readText(f).toLong else 0L
-  }
+  def currentVersion(): Long = currentVersionAt(path)
 
-  /** Time travel: the table as of commit `version`, reconstructed from
-    * the NEAREST snapshot checkpoint at or below `version` plus a
-    * replay of just the feed delta `(snapshot, version]` — per email
-    * (the merge key, unique in every committed state) the row with the
-    * greatest effective version wins. With no snapshot the replay runs
-    * from genesis. `asOf(currentVersion())` equals [[all]]; `asOf(0)`
-    * is empty. Cost: one key-partitioned window over snapshot+delta —
-    * the log-structured reconstruction every transactional table
-    * format uses, and the per-commit feed layout means only the
-    * delta's directories are ever opened.
+  /** Time travel: the table as of commit `version` — the connector's
+    * `versionAsOf` read ([[graft.sources.CustomerStoreScan]]). It plans
+    * the NEWEST snapshot checkpoint at or below `version` plus ONE task
+    * that replays the feed delta `(snapshot, version]` in memory, per
+    * email (the merge key, unique in every committed state) keeping the
+    * row with the greatest commit version; with no snapshot the replay
+    * runs from genesis. `asOf(currentVersion())` equals [[all]];
+    * `asOf(0)` is empty. Cost bound: that one task holds every email
+    * the delta touches, so the delta since the newest snapshot must
+    * stay metadata-scale — [[writeSnapshot]] is the lever that resets
+    * it. A version the retained history cannot reconstruct (its feed
+    * vacuumed and no snapshot at or below it) fails here, when the
+    * read is defined.
     */
-  def asOf(version: Long): DataFrame = {
-    val base = snapshotVersions().filter(_ <= version).sorted.lastOption
-    if (base.isEmpty && version > 0) {
-      // Replay-from-genesis needs the log to actually START at genesis:
-      // commit-1 missing means the history below the requested version
-      // was vacuumed (including the everything-vacuumed case, where the
-      // old `forall` check passed vacuously and asOf returned an EMPTY
-      // table instead of erroring). Retention violations must be loud.
-      val oldest = commitDirs().headOption.map(_._1)
-      require(oldest.exists(_ <= 1L),
-        s"cannot reconstruct version $version: commits before " +
-          s"${oldest.getOrElse(version + 1)} were vacuumed and no snapshot at " +
-          "or below the requested version exists")
-    }
-    // `delete_pre` rows ride along as TOMBSTONES: a delete commit has
-    // no post-image, so its pre-image (kept despite the _pre filter)
-    // is the marker — if it wins the per-email last-writer window the
-    // email was deleted as of `version` and the row is dropped below.
-    val delta = feedSince(base.getOrElse(0L), version)
-      .filter(!col("change_type").endsWith("_pre") ||
-        col("change_type") === "delete_pre")
-      .select(col("commit_version") +: col("change_type") +:
-        tableSchema.fieldNames.map(col): _*)
-    val merged = base match {
-      case Some(v0) =>
-        readPhysical(tableSchema, Seq(snapshotDir(v0).toString))
-          .select(lit(v0).as("commit_version") +: lit("snapshot").as("change_type") +:
-            tableSchema.fieldNames.map(col): _*)
-          .unionByName(delta)
-      case None => delta
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("email")).orderBy(col("commit_version").desc)
-    merged
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-      .filter(col("change_type") =!= "delete_pre")
-      .select(tableSchema.fieldNames.map(col): _*)
-  }
+  def asOf(version: Long): DataFrame = connectorRead("versionAsOf" -> version)
 
   /** (version, promotion timestamp millis) for every commit recorded
     * in the `_commits` registry — tiny metadata files written at
@@ -886,18 +830,26 @@ class CustomerStore(protected val spark: SparkSession, path: String,
   }
 
   /** Timestamp time travel: the table as of wall time `tsMillis` — the
-    * LAST commit whose promotion timestamp is ≤ tsMillis, resolved
-    * through the `_commits` registry and reconstructed by [[asOf]].
-    * A timestamp before the first commit yields the empty version 0;
-    * the commit clock is injectable (constructor), so tests and the
-    * driver gate plant deterministic timestamps instead of wall time.
+    * connector's `timestampAsOf` read, resolved by [[versionAt]] and
+    * served like [[asOf]]. A timestamp before the first commit yields
+    * the empty version 0; the commit clock is injectable (constructor),
+    * so tests and the parity gates plant deterministic timestamps
+    * instead of wall time.
     */
-  def asOfTimestamp(tsMillis: Long): DataFrame = {
+  def asOfTimestamp(tsMillis: Long): DataFrame = connectorRead("timestampAsOf" -> tsMillis)
+
+  /** The version a wall time denotes: the LAST commit whose promotion
+    * timestamp in the `_commits` registry is ≤ `tsMillis` (0 before
+    * the first commit). The one timestamp resolution behind
+    * [[asOfTimestamp]] and the connector's `timestampAsOf` /
+    * `feedFromTimestamp` options. A store that has commits but no
+    * registry cannot date them and fails loudly.
+    */
+  def versionAt(tsMillis: Long): Long = {
     val ts = commitTimestamps()
     require(ts.nonEmpty || currentVersion() == 0L,
       "store has commits but no timestamp registry (created pre-timestamps?)")
-    val v = ts.filter(_._2 <= tsMillis).map(_._1).maxOption.getOrElse(0L)
-    asOf(v)
+    ts.filter(_._2 <= tsMillis).map(_._1).maxOption.getOrElse(0L)
   }
 
   /** Checkpoint the CURRENT table state as the snapshot for
@@ -929,13 +881,13 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     */
   def vacuumFeed(): Int = {
     val cutoff = snapshotVersions().sorted.lastOption.getOrElse(return 0)
-    val retired = commitDirs().filter(_._1 <= cutoff)
+    val retired = commitDirsAt(path).filter(_._1 <= cutoff)
     // Persist the retention horizon (monotonic) BEFORE deleting the
     // retired dirs: a crash between the two steps then OVER-rejects —
     // the range is still physically readable but refused — which is
     // the safe direction. The previous order (delete, then promote)
     // left a window where the watermark was low while the dirs were
-    // already gone, so requireFeedRange passed and catch-up reads
+    // already gone, so the range check passed and catch-up reads
     // silently returned partial history — exactly the loss the
     // watermark exists to prevent (round-14 ADVICE, medium).
     val wm = math.max(feedLowWatermark(), cutoff)
@@ -1102,7 +1054,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       val emailPhys = physName(tableSchema("email"))
 
       // 1. Retained feed commits, then snapshots.
-      val feedFiles = commitDirs().flatMap { case (_, d) =>
+      val feedFiles = commitDirsAt(path).flatMap { case (_, d) =>
         Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
           .filter(_.getName.endsWith(".parquet"))
       }
@@ -1211,21 +1163,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * (compact) legitimately have no dir, which is why availability is
     * a watermark check, not dir contiguity.
     */
-  def feedLowWatermark(): Long = {
-    val f = new java.io.File(path, FeedWatermark)
-    if (f.exists()) readText(f).toLong else 0L
-  }
-
-  /** Loud-failure guard for every range feed read: a non-empty range
-    * starting below the retention horizon cannot be served completely.
-    */
-  private def requireFeedRange(fromExclusive: Long, toInclusive: Long): Unit = {
-    val wm = feedLowWatermark()
-    require(toInclusive <= fromExclusive || fromExclusive >= wm,
-      s"change feed ($fromExclusive, $toInclusive] is unavailable: commits at or " +
-        s"below version $wm were vacuumed — read from feedFrom >= $wm, or " +
-        "reconstruct state via a snapshot (asOf)")
-  }
+  def feedLowWatermark(): Long = feedLowWatermarkAt(path)
 
   /** Small-file maintenance: rewrite both partitions into
     * `targetFilesPerPartition` files under the SAME staged-commit
@@ -1813,12 +1751,8 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * toInclusive, in version order — the delta a time-travel scan
     * replays on top of its snapshot base.
     */
-  def feedDirsIn(fromExclusive: Long, toInclusive: Long): Seq[(Long, String)] = {
-    requireFeedRange(fromExclusive, toInclusive)
-    commitDirs()
-      .filter { case (v, _) => v > fromExclusive && v <= toInclusive }
-      .map { case (v, d) => (v, d.getAbsolutePath) }
-  }
+  def feedDirsIn(fromExclusive: Long, toInclusive: Long): Seq[(Long, String)] =
+    feedDirsAt(path, fromExclusive, toInclusive)
 
   /** Zone-manifest file pruning for `id BETWEEN lo AND hi` over an
     * arbitrary live-file list: keep a file iff its latest zone entry
@@ -2628,6 +2562,10 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       val mine = readPhysical(changeSchema, Seq(chg.toString))
         .select(col("id"), col("email")).distinct().localCheckpoint(true)
       if (mine.limit(1).count() > 0) {
+        // The connector plans a feed read from the store's files alone
+        // (no second CustomerStore, so no recover() under this lock: a
+        // rival's commit point taken meanwhile must make OUR rename fail,
+        // not be promoted from here behind the head we already read).
         val theirs = feedSince(baseV, headV).select(col("id"), col("email")).distinct()
         val overlap = theirs.join(mine.select("email"), Seq("email"), "left_semi")
           .unionByName(theirs.join(mine.select("id"), Seq("id"), "left_semi")
@@ -2666,11 +2604,6 @@ class CustomerStore(protected val spark: SparkSession, path: String,
 
   private def writeText(f: java.io.File, s: String): Unit =
     java.nio.file.Files.write(f.toPath, s.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-
-  /** A small metadata file's contents, trimmed. */
-  private def readText(f: java.io.File): String =
-    new String(java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim
 
   /** Crash recovery, run at open and before each commit: a committed
     * staging directory is applied to completion; an uncommitted
@@ -2724,6 +2657,63 @@ object CustomerStore {
         java.nio.charset.StandardCharsets.UTF_8))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
   }
+
+  /** The promoted version counter of the store at `path` — file IO
+    * only, like [[schemaAt]]: no session and no recovery, so the
+    * connector's change-feed planning can run while a committer holds
+    * the promotion lock (see `checkNoConflict`).
+    */
+  def currentVersionAt(path: String): Long = {
+    val f = new java.io.File(path, VersionFile)
+    if (f.exists()) readText(f).toLong else 0L
+  }
+
+  /** The feed-retention horizon of the store at `path` (see
+    * [[CustomerStore.feedLowWatermark]]).
+    */
+  private[pipeline] def feedLowWatermarkAt(path: String): Long = {
+    val f = new java.io.File(path, FeedWatermark)
+    if (f.exists()) readText(f).toLong else 0L
+  }
+
+  /** Loud-failure guard for every range feed read: a non-empty range
+    * starting below the retention horizon cannot be served completely.
+    */
+  private[pipeline] def requireFeedRangeAt(path: String, fromExclusive: Long,
+      toInclusive: Long): Unit = {
+    val wm = feedLowWatermarkAt(path)
+    require(toInclusive <= fromExclusive || fromExclusive >= wm,
+      s"change feed ($fromExclusive, $toInclusive] is unavailable: commits at or " +
+        s"below version $wm were vacuumed — read from feedFrom >= $wm, or " +
+        "reconstruct state via a snapshot (asOf)")
+  }
+
+  /** (version, dir) for every commit directory in the feed at `path`. */
+  private[pipeline] def commitDirsAt(path: String): Seq[(Long, java.io.File)] = {
+    val root = new java.io.File(path, Changelog)
+    if (!root.exists()) Seq.empty
+    else root.listFiles().toSeq
+      .filter(d => d.isDirectory && d.getName.startsWith("commit-"))
+      .map(d => d.getName.stripPrefix("commit-").toLong -> d)
+      .sortBy(_._1)
+  }
+
+  /** Feed commit directories of the store at `path` with fromExclusive
+    * < version ≤ toInclusive, in version order, after the retention
+    * check — file IO only (see [[currentVersionAt]]).
+    */
+  def feedDirsAt(path: String, fromExclusive: Long,
+      toInclusive: Long): Seq[(Long, String)] = {
+    requireFeedRangeAt(path, fromExclusive, toInclusive)
+    commitDirsAt(path)
+      .filter { case (v, _) => v > fromExclusive && v <= toInclusive }
+      .map { case (v, d) => (v, d.getAbsolutePath) }
+  }
+
+  /** A small metadata file's contents, trimmed. */
+  private[pipeline] def readText(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8).trim
 
   /** Feed-row schema of the store at `path` (tracks [[schemaAt]]). */
   def changeSchemaAt(path: String): org.apache.spark.sql.types.StructType =

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
 /** The one scope every stream-running parity gate (PipelineParity,
   * StreamingParity) runs in: a scratch dir for the stream's sink and
@@ -50,4 +51,21 @@ private[queries] object StreamGates {
         finally s.conf.set("spark.sql.shuffle.partitions", prev)
       } finally scopes.decrementAndGet(): Unit
     }
+
+  /** Run `stream` to completion (`Trigger.AvailableNow`, append mode)
+    * into a parquet sink under `tmp`, then read the output back with
+    * the stream's own schema pinned (no inference job) and detach it
+    * from `tmp` (localCheckpoint), so it outlives the scope.
+    */
+  def drain(stream: Dataset[_], tmp: java.nio.file.Path): DataFrame = {
+    stream.writeStream.format("parquet")
+      .option("path", s"$tmp/out")
+      .option("checkpointLocation", s"$tmp/ckpt")
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    stream.sparkSession.read.schema(stream.schema).parquet(s"$tmp/out")
+      .localCheckpoint(true)
+  }
 }

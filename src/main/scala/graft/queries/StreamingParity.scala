@@ -55,7 +55,7 @@ object StreamingParity extends QueryGroup {
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  import StreamGates.withStreamTempDir
+  import StreamGates.{drain, withStreamTempDir}
 
   /** The four parity counts in ONE Spark action: both sides are
     * key-unique by construction, so a full-outer join on the key
@@ -101,25 +101,11 @@ object StreamingParity extends QueryGroup {
             col("ts"),
             col("event_type"), col("value"))
           .as[EventStreams.UserEvent]
-        EventStreams.completedSessions(stream)
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        s.read.schema(StructType(Seq(
-            StructField("user_id", LongType),
-            StructField("session_start", TimestampType),
-            StructField("session_end", TimestampType),
-            StructField("n_events", LongType))))
-          .parquet(s"$tmp/out")
+        drain(EventStreams.completedSessions(stream), tmp)
           .select(col("user_id"),
             unix_millis(col("session_start")).as("start_ms"),
             unix_millis(col("session_end")).as("end_ms"),
             col("n_events"))
-          .localCheckpoint(true) // detach from the temp dir before cleanup
       }
 
       // --- batch twin (events_sessionize grouping) + modeled watermark
@@ -163,20 +149,10 @@ object StreamingParity extends QueryGroup {
         .select(contentFingerprint(col("text")).as("fp")).distinct()
         .localCheckpoint(true)
       val streamedFps = withStreamTempDir(s, "graft-dedup-parity-") { (s, tmp) =>
-        s.readStream.schema(documentsSchema)
+        drain(s.readStream.schema(documentsSchema)
           .parquet(s"$dir/{documents.parquet}")
           .select(contentFingerprint(col("text")).as("fp"))
-          .dropDuplicates("fp")
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        s.read.schema(StructType(Seq(StructField("fp", StringType))))
-          .parquet(s"$tmp/out")
-          .localCheckpoint(true)
+          .dropDuplicates("fp"), tmp)
       }
       parityCounts(s, streamedFps, batchFps, Seq("fp"),
         Seq("n_stream", "n_batch", "n_only_stream", "n_only_batch"))
@@ -198,21 +174,11 @@ object StreamingParity extends QueryGroup {
         .filter(TextAnalysis.pocketDot(model.pocketW) > 0)
         .select(col("doc_id")).localCheckpoint(true)
       val streamedKept = withStreamTempDir(s, "graft-modelfilter-parity-") { (s, tmp) =>
-        TextAnalysis.classifierFeatures(
+        drain(TextAnalysis.classifierFeatures(
             s.readStream.schema(documentsSchema)
               .parquet(s"$dir/{documents.parquet}"))
           .filter(TextAnalysis.pocketDot(model.pocketW) > 0)
-          .select(col("doc_id"))
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        s.read.schema(StructType(Seq(StructField("doc_id", LongType))))
-          .parquet(s"$tmp/out")
-          .localCheckpoint(true)
+          .select(col("doc_id")), tmp)
       }
       parityCounts(s, streamedKept, batchKept, Seq("doc_id"),
         Seq("n_stream", "n_batch", "n_only_stream", "n_only_batch"))
@@ -242,18 +208,7 @@ object StreamingParity extends QueryGroup {
           s.readStream.schema(documentsSchema)
             .parquet(s"$dir/{documents.parquet}")
             .filter(trainEvalSplit(col("text")) === "eval"))
-        DedupQueries.bloomFlaggedPairs(evalStream, mBits, bloom)
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        s.read.schema(StructType(Seq(
-            StructField("doc_id", LongType), StructField("g", StringType))))
-          .parquet(s"$tmp/out")
-          .localCheckpoint(true)
+        drain(DedupQueries.bloomFlaggedPairs(evalStream, mBits, bloom), tmp)
       }
       parityCounts(s, streamFlagged, batchFlagged, Seq("doc_id", "g"),
         Seq("n_stream", "n_batch", "n_only_stream", "n_only_batch"))
@@ -269,25 +224,12 @@ object StreamingParity extends QueryGroup {
       import s.implicits._
       val batch = Tables(s, dir, "events").withColumn("us", expr("ts DIV 1000"))
       val streamed = withStreamTempDir(s, "graft-hourly-parity-") { (s, tmp) =>
-        EventStreams.hourlyCounts(
+        drain(EventStreams.hourlyCounts(
             s.readStream.schema(eventsSchema)
               .parquet(s"$dir/{events.parquet}")
               .select(col("ts"),
-                col("event_type")))
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        s.read.schema(StructType(Seq(
-            StructField("hour", TimestampType),
-            StructField("event_type", StringType),
-            StructField("n", LongType))))
-          .parquet(s"$tmp/out")
+                col("event_type"))), tmp)
           .select(unix_millis(col("hour")).as("hour_ms"), col("event_type"), col("n"))
-          .localCheckpoint(true)
       }
       val wmMs = batch.agg(expr("max(us) DIV 1000")).head().getLong(0) - WATERMARK_DELAY_MS
       val batchFinal = batch
@@ -324,21 +266,7 @@ object StreamingParity extends QueryGroup {
           .select(col("user_id"), col("event_id"), col("ts"),
             col("event_type"), col("value"))
           .as[EventStreams.AttrEvent]
-        EventStreams.attributedPurchases(stream, w)
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        s.read.schema(StructType(Seq(
-            StructField("user_id", LongType),
-            StructField("purchase_event_id", LongType),
-            StructField("channel", StringType),
-            StructField("cents", LongType))))
-          .parquet(s"$tmp/out")
-          .localCheckpoint(true)
+        drain(EventStreams.attributedPurchases(stream, w), tmp)
       }
       val wmMs = batch.agg(max(expr("us DIV 1000"))).head().getLong(0) -
         WATERMARK_DELAY_MS
@@ -382,20 +310,7 @@ object StreamingParity extends QueryGroup {
           .parquet(s"$dir/{events.parquet}")
           .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
           .as[EventStreams.FunnelEvent]
-        EventStreams.viewConversions(stream, w)
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        s.read.schema(StructType(Seq(
-            StructField("user_id", LongType),
-            StructField("view_event_id", LongType),
-            StructField("stage", LongType))))
-          .parquet(s"$tmp/out")
-          .localCheckpoint(true)
+        drain(EventStreams.viewConversions(stream, w), tmp)
       }
       val wmMs = batch.agg(max(expr("us DIV 1000"))).head().getLong(0) -
         WATERMARK_DELAY_MS
@@ -430,27 +345,12 @@ object StreamingParity extends QueryGroup {
           expr("ts DIV 1000").as("us"))
         .localCheckpoint(true)
       val streamed = withStreamTempDir(s, "graft-join-parity-") { (s, tmp) =>
-        EventStreams.viewsBeforePurchases(
+        drain(EventStreams.viewsBeforePurchases(
             s.readStream.schema(eventsSchema)
               .parquet(s"$dir/{events.parquet}")
               .select(col("event_id"), col("user_id"), col("event_type"),
-                col("ts")))
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        s.read.schema(StructType(Seq(
-            StructField("purchase_id", LongType),
-            StructField("user_id", LongType),
-            StructField("p_ts", TimestampType),
-            StructField("view_id", LongType),
-            StructField("v_ts", TimestampType))))
-          .parquet(s"$tmp/out")
+                col("ts"))), tmp)
           .select(col("purchase_id"), col("view_id"))
-          .localCheckpoint(true)
       }
       val views = batch.filter(col("event_type") === "view")
         .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
@@ -477,26 +377,13 @@ object StreamingParity extends QueryGroup {
       import s.implicits._
       val batch = Tables(s, dir, "events").withColumn("us", expr("ts DIV 1000"))
       val streamed = withStreamTempDir(s, "graft-sessionwin-parity-") { (s, tmp) =>
-        EventStreams.sessionCounts(
+        drain(EventStreams.sessionCounts(
             s.readStream.schema(eventsSchema)
               .parquet(s"$dir/{events.parquet}")
               .select(col("user_id"),
-                col("ts")))
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        s.read.schema(StructType(Seq(
-            StructField("session_start", TimestampType),
-            StructField("user_id", LongType),
-            StructField("n_events", LongType))))
-          .parquet(s"$tmp/out")
+                col("ts"))), tmp)
           .select(col("user_id"),
             unix_millis(col("session_start")).as("start_ms"), col("n_events"))
-          .localCheckpoint(true)
       }
       val byUser = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
       val cum = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)

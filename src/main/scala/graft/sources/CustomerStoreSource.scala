@@ -48,16 +48,21 @@ import graft.pipeline.{CustomerSchema, CustomerStore}
   *    committed (file, email) tombstones — merge-on-read, identical
   *    to the API path's [[CustomerStore.all]].
   *
-  * Time travel (`versionAsOf` / `timestampAsOf`, semantics pinned
-  * against [[CustomerStore.asOf]]): the scan plans the NEWEST snapshot
-  * checkpoint at or below the version plus one delta partition
-  * replaying the feed `(snapshot, v]`; snapshot readers drop emails
-  * the delta touches (any delta row outranks every snapshot row), and
-  * the delta reader resolves per-email last-writer-wins in memory.
-  * The delta is retention-bounded by checkpoint cadence — the same
-  * bound that keeps `asOf` itself fast — so the in-memory resolution
-  * and the driver-side touched-email set are metadata-scale, not
-  * table-scale.
+  * History is served here and only here: [[CustomerStore.asOf]],
+  * [[CustomerStore.asOfTimestamp]], [[CustomerStore.changeFeed]] and
+  * [[CustomerStore.feedSince]] are reads of this connector.
+  *
+  * Time travel (`versionAsOf` / `timestampAsOf`): the version (a
+  * timestamp through [[CustomerStore.versionAt]]) is resolved and
+  * validated once, when the table is loaded ([[TimeTravel]]). The scan
+  * plans the NEWEST snapshot checkpoint at or below the version plus
+  * one delta partition replaying the feed `(snapshot, v]`; snapshot
+  * readers drop emails the delta touches (any delta row outranks every
+  * snapshot row), and the delta reader resolves per-email
+  * last-writer-wins in memory. The delta is retention-bounded by
+  * checkpoint cadence ([[CustomerStore.writeSnapshot]]), so the
+  * in-memory resolution and the driver-side touched-email set are
+  * metadata-scale, not table-scale.
   */
 class CustomerStoreSource extends TableProvider with DataSourceRegister
     with CreatableRelationProvider with StreamSinkProvider {
@@ -203,9 +208,11 @@ class CustomerStoreSource extends TableProvider with DataSourceRegister
     val feedFromTs = Option(properties.get("feedFromTimestamp")).map(_.toLong)
     require(feedFromV.isEmpty || feedFromTs.isEmpty,
       "graft-store: feedFrom and feedFromTimestamp are mutually exclusive")
+    // Commit timestamps are integer millis, so "before ts" is "at or
+    // before ts - 1" (and nothing is before Long.MinValue).
     val feedFrom = feedFromV.orElse(feedFromTs.map { ts =>
-      new graft.pipeline.CustomerStore(SparkSession.active, path)
-        .commitTimestamps().filter(_._2 < ts).map(_._1).maxOption.getOrElse(0L)
+      if (ts == Long.MinValue) 0L
+      else new CustomerStore(SparkSession.active, path).versionAt(ts - 1)
     })
     val feedTo = Option(properties.get("feedTo")).map(_.toLong)
     val maxCommits = Option(properties.get("maxCommitsPerTrigger")).map(_.toLong)
@@ -246,8 +253,11 @@ class CustomerStoreSource extends TableProvider with DataSourceRegister
   *
   * Planning lists the per-commit feed directories in `(from, to]` —
   * one input partition per commit, so a consumer's catch-up read opens
-  * exactly its lag, never the table or the feed's history (the same
-  * manifest-level pruning [[CustomerStore.feedSince]] does). Rows are
+  * exactly its lag, never the table or the feed's history. Batch
+  * planning reads the store's metadata files only and builds no
+  * [[CustomerStore]] (so runs no recovery): the store's commit-point
+  * conflict check reads the interleaved feed through it while holding
+  * the promotion lock. Rows are
   * the feed verbatim: post-images tagged insert/update/ack, `_pre`
   * retractions, `delete_pre` tombstones. Read-only by construction.
   * A range starting below the feed low-watermark (vacuumed commits)
@@ -299,10 +309,9 @@ class StoreChangesScan(path: String, fromExclusive: Long,
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new StoreChangesMicroBatchStream(path, fromExclusive, toInclusive,
       required, maxCommitsPerTrigger, maxBytesPerTrigger, maxRowsPerTrigger)
-  private lazy val dirs: Seq[(Long, String)] = {
-    val store = new CustomerStore(SparkSession.active, path)
-    store.feedDirsIn(fromExclusive, toInclusive.getOrElse(store.currentVersion()))
-  }
+  private lazy val dirs: Seq[(Long, String)] =
+    CustomerStore.feedDirsAt(path, fromExclusive,
+      toInclusive.getOrElse(CustomerStore.currentVersionAt(path)))
   override def planInputPartitions(): Array[InputPartition] =
     dirs.map { case (_, d) => StoreChangesPartition(d): InputPartition }.toArray
   override def createReaderFactory(): PartitionReaderFactory =
@@ -538,6 +547,16 @@ object StoreMetaReaderFactory extends PartitionReaderFactory {
 class CustomerStoreTable(val path: String, val versionAsOf: Option[Long],
     val timestampAsOf: Option[Long]) extends Table with SupportsRead with SupportsWrite
     with SupportsDelete {
+  /** The time-travel target, resolved and validated once, at load: a
+    * version the retained history cannot reconstruct (or a timestamp a
+    * registry-less store cannot date) fails when the read is defined.
+    */
+  private val travel: Option[TimeTravel] =
+    if (versionAsOf.isEmpty && timestampAsOf.isEmpty) None
+    else {
+      val store = new CustomerStore(SparkSession.active, path)
+      Some(TimeTravel(store, versionAsOf.getOrElse(store.versionAt(timestampAsOf.get))))
+    }
   override def name(): String = s"graft_store($path)"
   override def schema(): StructType = CustomerStore.schemaAt(path)
   // AUTOMATIC_SCHEMA_EVOLUTION gates `MERGE WITH SCHEMA EVOLUTION`:
@@ -550,7 +569,7 @@ class CustomerStoreTable(val path: String, val versionAsOf: Option[Long],
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CustomerStoreScanBuilder(path, versionAsOf, timestampAsOf)
+    new CustomerStoreScanBuilder(path, travel)
 
   /** SQL `DELETE FROM graft_store.\`path\` WHERE …` — the row-level
     * mutation face of the same merge-on-read machinery the API's
@@ -566,11 +585,10 @@ class CustomerStoreTable(val path: String, val versionAsOf: Option[Long],
     * metadata-scale operation into a table rewrite at 100 TB.
     */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    versionAsOf.isEmpty && timestampAsOf.isEmpty &&
-      filters.forall(f => CustomerStoreDelete.toColumn(f).isDefined)
+    travel.isEmpty && filters.forall(f => CustomerStoreDelete.toColumn(f).isDefined)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
-    require(versionAsOf.isEmpty && timestampAsOf.isEmpty,
+    require(travel.isEmpty,
       "graft-store: a time-travel table is read-only")
     val s = SparkSession.active
     val cond = filters.iterator
@@ -596,7 +614,7 @@ class CustomerStoreTable(val path: String, val versionAsOf: Option[Long],
     * writes against a time-travel read are rejected loudly.
     */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    require(versionAsOf.isEmpty && timestampAsOf.isEmpty,
+    require(travel.isEmpty,
       "graft-store: a time-travel table is read-only")
     new WriteBuilder {
       override def build(): Write = new V1Write {
@@ -793,8 +811,7 @@ private[sources] object CustomerStoreDelete {
   }
 }
 
-class CustomerStoreScanBuilder(path: String, versionAsOf: Option[Long],
-    timestampAsOf: Option[Long]) extends ScanBuilder
+class CustomerStoreScanBuilder(path: String, travel: Option[TimeTravel]) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with SupportsPushDownAggregates {
 
@@ -863,7 +880,7 @@ class CustomerStoreScanBuilder(path: String, versionAsOf: Option[Long],
   }
 
   private def doResolve(aggregation: Aggregation): Option[StoreAggPush] = {
-    if (versionAsOf.nonEmpty || timestampAsOf.nonEmpty) return None
+    if (travel.nonEmpty) return None
     // The one pushed-filter shape that stays manifest-exact: the
     // partition predicate. Anything else refuses to the data path.
     val partitionOnly = pushed.forall {
@@ -955,7 +972,7 @@ class CustomerStoreScanBuilder(path: String, versionAsOf: Option[Long],
   override def build(): Scan = aggPush match {
     case Some(p) => new CustomerStoreAggScan(path, p)
     case None =>
-      new CustomerStoreScan(path, versionAsOf, timestampAsOf, required, pushed)
+      new CustomerStoreScan(path, travel, required, pushed)
   }
 }
 
@@ -1167,8 +1184,8 @@ object CustomerStoreScan {
     }
 }
 
-class CustomerStoreScan(path: String, versionAsOf: Option[Long],
-    timestampAsOf: Option[Long], required: StructType, filters: Array[Filter])
+class CustomerStoreScan(path: String, travel: Option[TimeTravel],
+    required: StructType, filters: Array[Filter])
     extends Scan with Batch with SupportsRuntimeV2Filtering
     with SupportsReportStatistics {
 
@@ -1195,7 +1212,7 @@ class CustomerStoreScan(path: String, versionAsOf: Option[Long],
   // resolves these against the scan's output, and a pruned-away
   // column would fail resolution at plan time.
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (versionAsOf.isEmpty && timestampAsOf.isEmpty)
+    if (travel.isEmpty)
       Array("id", "email").filter(required.fieldNames.contains)
         .map(org.apache.spark.sql.connector.expressions.Expressions.column)
     else Array.empty
@@ -1212,13 +1229,7 @@ class CustomerStoreScan(path: String, versionAsOf: Option[Long],
   // consult, no data file opened; recomputed if a runtime filter
   // arrives after an explain already forced the plan.
   private def planned: (Array[InputPartition], Int, Int) = cache.getOrElse {
-    val spark = SparkSession.active
-    val store = new CustomerStore(spark, path)
-    val p = versionAsOf.orElse(timestampAsOf.map(ts =>
-      store.commitTimestamps().filter(_._2 <= ts).map(_._1).maxOption.getOrElse(0L))) match {
-      case Some(v) => planTimeTravel(store, v)
-      case None => planCurrent(store)
-    }
+    val p = travel.fold(planCurrent(new CustomerStore(SparkSession.active, path)))(planTimeTravel)
     cache = Some(p)
     p
   }
@@ -1261,22 +1272,11 @@ class CustomerStoreScan(path: String, versionAsOf: Option[Long],
     (parts, bloomPruned.size, all.size)
   }
 
-  private def planTimeTravel(store: CustomerStore, v: Long)
-      : (Array[InputPartition], Int, Int) = {
-    if (v <= 0L) return (Array.empty, 0, 0)
-    val base = store.snapshotFilesFor(v)
-    if (base.isEmpty) {
-      val oldest = store.feedDirsIn(0L, v).headOption.map(_._1)
-      require(oldest.exists(_ <= 1L),
-        s"cannot reconstruct version $v: commits before " +
-          s"${oldest.getOrElse(v + 1)} were vacuumed and no snapshot at or " +
-          "below the requested version exists")
-    }
-    val feedDirs = store.feedDirsIn(base.map(_._1).getOrElse(0L), v).map(_._2)
+  private def planTimeTravel(t: TimeTravel): (Array[InputPartition], Int, Int) = {
     // Emails the delta touches (post-images and delete tombstones): any
     // delta row outranks every snapshot row for its email, so snapshot
     // readers drop these outright. Delta-scale (retention-bounded).
-    val touched: Set[UTF8String] = feedDirs.flatMap { d =>
+    val touched: Set[UTF8String] = t.feedDirs.flatMap { d =>
       ParquetGroups.parquetFilesIn(d).iterator.flatMap { f =>
         ParquetGroups.readAll(f, Seq("change_type", "email")).collect {
           case Array(ct: UTF8String, email: UTF8String)
@@ -1285,12 +1285,12 @@ class CustomerStoreScan(path: String, versionAsOf: Option[Long],
         }
       }
     }.toSet
-    val snapParts = base.toSeq.flatMap(_._2).map { f =>
+    val snapParts = t.snapshot.toSeq.flatMap(_._2).map { f =>
       StoreSnapshotPartition(f, touched): InputPartition
     }
     val deltaParts =
-      if (feedDirs.isEmpty) Seq.empty
-      else Seq(StoreDeltaPartition(feedDirs): InputPartition)
+      if (t.feedDirs.isEmpty) Seq.empty
+      else Seq(StoreDeltaPartition(t.feedDirs): InputPartition)
     val parts = (snapParts ++ deltaParts).toArray
     (parts, parts.length, parts.length)
   }
@@ -1305,14 +1305,14 @@ class CustomerStoreScan(path: String, versionAsOf: Option[Long],
     */
   override def estimateStatistics(): Statistics = new Statistics {
     private val kept: Seq[StoreDataPartition] =
-      if (versionAsOf.nonEmpty || timestampAsOf.nonEmpty) Seq.empty
+      if (travel.nonEmpty) Seq.empty
       else planned._1.toSeq.collect { case p: StoreDataPartition => p }
     override def sizeInBytes(): java.util.OptionalLong =
-      if (versionAsOf.nonEmpty || timestampAsOf.nonEmpty) java.util.OptionalLong.empty()
+      if (travel.nonEmpty) java.util.OptionalLong.empty()
       else java.util.OptionalLong.of(
         kept.map(p => new java.io.File(p.file).length()).sum)
     override def numRows(): java.util.OptionalLong =
-      if (versionAsOf.nonEmpty || timestampAsOf.nonEmpty) java.util.OptionalLong.empty()
+      if (travel.nonEmpty) java.util.OptionalLong.empty()
       else new CustomerStore(SparkSession.active, path)
         .manifestRowCount(kept.map(_.basename).toSet)
         .fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
@@ -1326,14 +1326,40 @@ class CustomerStoreScan(path: String, versionAsOf: Option[Long],
 
   override def description(): String = {
     val (_, kept, total) = planned
-    val travel = versionAsOf.map(v => s", versionAsOf=$v")
-      .orElse(timestampAsOf.map(ts => s", timestampAsOf=$ts")).getOrElse("")
+    val tt = travel.fold("")(t => s", versionAsOf=${t.version}")
     val rt = if (runtimeFilters.isEmpty) ""
       else s", RuntimeFilters: [${runtimeFilters.mkString(", ")}]"
-    s"GraftStore path=$path$travel, files=$kept/$total, " +
+    s"GraftStore path=$path$tt, files=$kept/$total, " +
       s"ReadSchema: ${required.simpleString}, " +
       s"PushedFilters: [${filters.mkString(", ")}]$rt"
   }
+}
+
+/** A time-travel read resolved against the store's files: the newest
+  * snapshot checkpoint at or below `version` (its version and parquet
+  * files) and the feed commit dirs `(snapshot, version]` replayed on
+  * top of it.
+  */
+case class TimeTravel(version: Long, snapshot: Option[(Long, Seq[String])],
+    feedDirs: Seq[String])
+
+object TimeTravel {
+  /** Resolve `v` against `store`, failing loudly when the retained
+    * history cannot reconstruct it: with no snapshot at or below `v`
+    * the replay runs from genesis, so the feed must still start there.
+    */
+  def apply(store: CustomerStore, v: Long): TimeTravel =
+    if (v <= 0L) TimeTravel(v, None, Nil)
+    else {
+      val base = store.snapshotFilesFor(v)
+      val dirs = store.feedDirsIn(base.map(_._1).getOrElse(0L), v)
+      val oldest = dirs.headOption.map(_._1)
+      require(base.nonEmpty || oldest.exists(_ <= 1L),
+        s"cannot reconstruct version $v: commits before " +
+          s"${oldest.getOrElse(v + 1)} were vacuumed and no snapshot at or " +
+          "below the requested version exists")
+      TimeTravel(v, base, dirs.map(_._2))
+    }
 }
 
 /** One live data file of the current snapshot: `uploaded` carried by
@@ -1506,11 +1532,13 @@ class StoreFileReader(file: String, uploaded: Option[Boolean],
   override def close(): Unit = cursor.close()
 }
 
-/** Replays the feed delta of a time-travel scan in one task:
-  * per-email last-writer-wins by commit_version over the post-image +
-  * delete-tombstone rows, tombstone winners dropped — the in-memory
-  * form of [[graft.pipeline.CustomerStore.asOf]]'s window, sound
-  * because the delta is retention-bounded (checkpoint cadence), never
+/** Replays the feed delta of a time-travel scan in one task — the
+  * store's one time-travel reconstruction ([[CustomerStore.asOf]] and
+  * `VERSION AS OF` both land here): per-email last-writer-wins by
+  * commit_version over the post-image + delete-tombstone rows,
+  * tombstone winners dropped. The task holds every email the delta
+  * touches, which is sound because the delta is retention-bounded by
+  * checkpoint cadence ([[CustomerStore.writeSnapshot]]), never
   * table-scale.
   */
 class StoreDeltaReader(p: StoreDeltaPartition, required: Array[String],

@@ -292,18 +292,25 @@ class PlanContractsSpec extends SparkSpec {
       "probe join missing")
   }
 
-  test("asOf reconstruction shuffles once on the merge key") {
+  test("asOf and feedSince plan as one graft-store scan, no exchange") {
     val store = new graft.pipeline.CustomerStore(spark, tmpDir("plan-asof") + "/store")
     store.insertNew(graft.pipeline.Ingest.enrich {
       import spark.implicits._
       Seq((1L, "A", "A", "a@example.com", "p")).toDF(
         "id", "first_name", "last_name", "email", "phone")
     }): Unit
-    val p = store.asOf(1L).queryExecution.executedPlan.toString
-    // One exchange: hashpartitioning(email) feeding the replay window.
-    assert(count(p, "Exchange hashpartitioning") === 1,
-      s"snapshot replay should shuffle exactly once on email:\n$p")
-    assert(p.contains("Window"), "replay argmax window missing")
+    // Time travel and the feed are reads of the connector: the replay
+    // runs inside the scan (one delta task), never as a shuffle + window.
+    for ((what, df, scan) <- Seq(
+        ("asOf(1)", store.asOf(1L), "GraftStore path=.*versionAsOf=1"),
+        ("feedSince(0, 1)", store.feedSince(0L, 1L),
+          "GraftStoreChanges path=.*commits=\\(0, 1\\]"))) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(count(p, "BatchScan") === 1 && count(p, scan) === 1,
+        s"$what must plan as one graft-store scan:\n$p")
+      assert(!p.contains("Exchange") && !p.contains("Window"),
+        s"$what must not shuffle or window:\n$p")
+    }
   }
 
   test("q10 top-20 plans as TakeOrderedAndProject with the flag filter pushed") {

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.SparkSpec
 import graft.pipeline.{CustomerStore, Ingest}
@@ -159,9 +160,10 @@ class CustomerStoreSourceSpec extends SparkSpec {
   test("versionAsOf matches asOf at every version, including delete and genesis replay") {
     val path = tmpDir("dsv2-asof") + "/store"
     val store = buildStore(path)
+    val model = new SparkHistoryModel(spark, store, path)
     for (v <- 0L to store.currentVersion()) {
       val viaCat = cat(path, "versionAsOf" -> v.toString)
-      assert(key(viaCat) === key(store.asOf(v)), s"versionAsOf=$v diverged from asOf")
+      assert(key(viaCat) === key(model.asOf(v)), s"versionAsOf=$v diverged from asOf")
     }
   }
 
@@ -174,8 +176,9 @@ class CustomerStoreSourceSpec extends SparkSpec {
     store.insertNew(block(101L, 120L)): Unit // v3
     store.delete(Seq("u5@example.com", "u105@example.com").toDF("email")): Unit // v4
     store.vacuumFeed(): Unit // log before the snapshot retired: replay MUST use it
+    val model = new SparkHistoryModel(spark, store, path)
     for (v <- 2L to 4L)
-      assert(key(cat(path, "versionAsOf" -> v.toString)) === key(store.asOf(v)),
+      assert(key(cat(path, "versionAsOf" -> v.toString)) === key(model.asOf(v)),
         s"versionAsOf=$v diverged from asOf after vacuum")
   }
 
@@ -188,9 +191,10 @@ class CustomerStoreSourceSpec extends SparkSpec {
     store.insertNew(block(21L, 30L)): Unit // v2 @ 200
     now = 300L
     store.delete(Seq("u4@example.com").toDF("email")): Unit // v3 @ 300
+    val model = new SparkHistoryModel(spark, store, path)
     for (ts <- Seq(50L, 100L, 150L, 250L, 999L))
       assert(key(cat(path, "timestampAsOf" -> ts.toString)) ===
-        key(store.asOfTimestamp(ts)), s"timestampAsOf=$ts diverged")
+        key(model.asOfTimestamp(ts)), s"timestampAsOf=$ts diverged")
   }
 
   test("append via the writer API runs the UNIQUE first-wins insert through the commit protocol") {
@@ -235,7 +239,7 @@ class CustomerStoreSourceSpec extends SparkSpec {
     val store = buildStore(path)
     assert(key(spark.sql(s"SELECT * FROM graft_store.`$path`")) === key(store.all()))
     assert(key(spark.sql(s"SELECT * FROM graft_store.`$path` VERSION AS OF 2")) ===
-      key(store.asOf(2L)))
+      key(new SparkHistoryModel(spark, store, path).asOf(2L)))
     val before = store.all().count()
     spark.sql(
       s"""INSERT INTO graft_store.`$path`
@@ -252,7 +256,8 @@ class CustomerStoreSourceSpec extends SparkSpec {
     val path = tmpDir("dsv2-ttf") + "/store"
     val store = buildStore(path)
     val q = cat(path, "versionAsOf" -> "3").filter(col("id") >= 2001L)
-    assert(key(q) === key(store.asOf(3L).filter(col("id") >= 2001L)))
+    val model = new SparkHistoryModel(spark, store, path)
+    assert(key(q) === key(model.asOf(3L).filter(col("id") >= 2001L)))
   }
 
   test("SQL ALTER TABLE routes ADD/RENAME/DROP COLUMN through column mapping") {
@@ -536,7 +541,7 @@ class CustomerStoreSourceSpec extends SparkSpec {
     val path = tmpDir("dsv2-rtf") + "/store"
     buildStore(path)
     def scan(): CustomerStoreScan =
-      new CustomerStoreScanBuilder(path, None, None).build()
+      new CustomerStoreScanBuilder(path, None).build()
         .asInstanceOf[CustomerStoreScan]
     val all = scan().planInputPartitions().length
     assert(all >= 3, "fixture must span several files")
@@ -559,7 +564,8 @@ class CustomerStoreSourceSpec extends SparkSpec {
     val keptBloom = s2.planInputPartitions().length
     assert(keptBloom < all && keptBloom > 0, s"bloom runtime prune kept $keptBloom of $all")
     // Time-travel scans advertise no runtime-filter attributes.
-    assert(new CustomerStoreScanBuilder(path, Some(2L), None).build()
+    assert(new CustomerStoreScanBuilder(path,
+        Some(TimeTravel(new CustomerStore(spark, path), 2L))).build()
       .asInstanceOf[CustomerStoreScan].filterAttributes().isEmpty)
   }
 
@@ -821,9 +827,10 @@ class CustomerStoreSourceSpec extends SparkSpec {
       df.select(col("commit_version"), col("change_type"), col("email"))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
         .toSeq.sorted
-    assert(keyOf(cdc(0L, None)) === keyOf(store.changeFeed()),
+    val model = new SparkHistoryModel(spark, store, path)
+    assert(keyOf(cdc(0L, None)) === keyOf(model.changeFeed()),
       "(0, head] must be the whole feed")
-    assert(keyOf(cdc(2L, Some(4L))) === keyOf(store.feedSince(2L, 4L)))
+    assert(keyOf(cdc(2L, Some(4L))) === keyOf(model.feedSince(2L, 4L)))
     assert(cdc(5L, None).count() === 0L)
     // One input partition per commit dir in range; column pruning works.
     val slice = cdc(1L, Some(3L))
@@ -847,11 +854,13 @@ class CustomerStoreSourceSpec extends SparkSpec {
       df.select(col("commit_version"), col("change_type"), col("email"))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
         .toSeq.sorted
+    val model = new SparkHistoryModel(spark, store, path)
     // a timestamp at or before the first commit serves the whole feed
-    assert(keyOf(cdcTs(reg.head._2)) === keyOf(store.changeFeed()))
+    assert(keyOf(cdcTs(reg.head._2)) === keyOf(model.changeFeed()))
+    assert(keyOf(cdcTs(Long.MinValue)) === keyOf(model.changeFeed()))
     // a timestamp exactly at commit v3's promotion INCLUDES v3 onward
     val t3 = reg.find(_._1 == 3L).get._2
-    assert(keyOf(cdcTs(t3)) === keyOf(store.feedSince(2L, 5L)))
+    assert(keyOf(cdcTs(t3)) === keyOf(model.feedSince(2L, 5L)))
     // a timestamp beyond the head serves nothing (forward-only start)
     assert(cdcTs(reg.last._2 + 60000L).count() === 0L)
     // version- and timestamp-addressed starts are mutually exclusive
@@ -859,6 +868,27 @@ class CustomerStoreSourceSpec extends SparkSpec {
       spark.read.format("graft-store").option("path", path)
         .option("feedFrom", 0).option("feedFromTimestamp", t3).load()
     }
+  }
+
+  test("timestamp reads fail loudly on a store whose commit registry is gone") {
+    val path = tmpDir("dsv2-noreg") + "/store"
+    val store = new CustomerStore(spark, path)
+    store.insertNew(block(1L, 10L)): Unit // v1
+    store.insertNew(block(21L, 30L)): Unit // v2
+    store.delete(Seq("u4@example.com").toDF("email")): Unit // v3
+    val ts = store.commitTimestamps().last._2
+    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(path, "_commits"))
+    // All three timestamp-addressed reads resolve through versionAt: none
+    // may fall back to version 0 (an empty table, or the whole feed).
+    for ((what, read) <- Seq[(String, () => DataFrame)](
+        "asOfTimestamp" -> (() => store.asOfTimestamp(ts)),
+        "timestampAsOf" -> (() => cat(path, "timestampAsOf" -> ts.toString)),
+        "feedFromTimestamp" -> (() => cat(path, "feedFromTimestamp" -> ts.toString)))) {
+      val e = intercept[IllegalArgumentException](read().collect())
+      assert(e.getMessage.contains("no timestamp registry"), s"$what: ${e.getMessage}")
+    }
+    // Version-addressed reads need no registry.
+    assert(store.asOf(3L).count() === 19L)
   }
 
   test("streaming CDC source: offsets are commit versions, exactly-once across restart") {
@@ -1155,4 +1185,83 @@ class CustomerStoreSourceSpec extends SparkSpec {
       Or(AlwaysTrue(), StringContains("email", "\u0000")))
     assert(CustomerStoreDelete.toColumn(exotic).isDefined)
   }
+}
+
+/** The Spark-side history reads the store ran before the connector
+  * became their one implementation, verbatim over the store's files —
+  * the reference model [[CustomerStoreSourceSpec]] holds the
+  * connector's time-travel and change-feed scans to: a window over
+  * snapshot + feed for `asOf`, plain parquet reads of `_changelog` for
+  * the feed.
+  */
+final class SparkHistoryModel(spark: SparkSession, store: CustomerStore, path: String) {
+
+  private def tableSchema: StructType = CustomerStore.schemaAt(path)
+  private def changeSchema: StructType = CustomerStore.changeSchemaAt(path)
+
+  private def physName(f: StructField): String =
+    if (f.metadata.contains("physical")) f.metadata.getString("physical") else f.name
+
+  private def readPhysical(logical: StructType, paths: Seq[String],
+      recursive: Boolean = false): DataFrame = {
+    val r0 = spark.read.schema(StructType(logical.fields.map(f =>
+      StructField(physName(f), f.dataType, f.nullable))))
+    val r = if (recursive) r0.option("recursiveFileLookup", "true") else r0
+    r.parquet(paths: _*)
+      .select(logical.fields.map(f => col(physName(f)).as(f.name)).toIndexedSeq: _*)
+  }
+
+  private def noChanges: DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], changeSchema)
+
+  /** Every commit dir in the log, vacuumed or not. */
+  private def commitDirs(): Seq[Long] =
+    Option(new java.io.File(path, "_changelog").listFiles()).toSeq.flatten
+      .filter(d => d.isDirectory && d.getName.startsWith("commit-"))
+      .map(_.getName.stripPrefix("commit-").toLong).sorted
+
+  def changeFeed(): DataFrame =
+    if (store.feedDirsIn(0L, store.currentVersion()).isEmpty) noChanges
+    else readPhysical(changeSchema,
+      Seq(new java.io.File(path, "_changelog").toString), recursive = true)
+
+  def feedSince(fromExclusive: Long, toInclusive: Long): DataFrame = {
+    val dirs = store.feedDirsIn(fromExclusive, toInclusive).map(_._2)
+    if (dirs.isEmpty) noChanges else readPhysical(changeSchema, dirs)
+  }
+
+  def asOf(version: Long): DataFrame = {
+    val base = store.snapshotFilesFor(version)
+    if (base.isEmpty && version > 0) {
+      val oldest = commitDirs().headOption
+      require(oldest.exists(_ <= 1L),
+        s"cannot reconstruct version $version: commits before " +
+          s"${oldest.getOrElse(version + 1)} were vacuumed and no snapshot at " +
+          "or below the requested version exists")
+    }
+    // `delete_pre` rows ride along as TOMBSTONES: if one wins the
+    // per-email last-writer window the email was deleted as of `version`.
+    val delta = feedSince(base.map(_._1).getOrElse(0L), version)
+      .filter(!col("change_type").endsWith("_pre") ||
+        col("change_type") === "delete_pre")
+      .select(col("commit_version") +: col("change_type") +:
+        tableSchema.fieldNames.map(col): _*)
+    val merged = base match {
+      case Some((v0, files)) =>
+        readPhysical(tableSchema, files)
+          .select(lit(v0).as("commit_version") +: lit("snapshot").as("change_type") +:
+            tableSchema.fieldNames.map(col): _*)
+          .unionByName(delta)
+      case None => delta
+    }
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("email")).orderBy(col("commit_version").desc)
+    merged
+      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+      .filter(col("change_type") =!= "delete_pre")
+      .select(tableSchema.fieldNames.map(col): _*)
+  }
+
+  def asOfTimestamp(tsMillis: Long): DataFrame =
+    asOf(store.commitTimestamps().filter(_._2 <= tsMillis).map(_._1).maxOption.getOrElse(0L))
 }
