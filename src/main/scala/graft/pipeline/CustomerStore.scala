@@ -1,7 +1,10 @@
 package graft.pipeline
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StagedWrite
 
 /** Parquet-backed state table with the `customers` contract the
   * reference keeps in Postgres (csv-crm-upload database/database.go):
@@ -45,7 +48,8 @@ import org.apache.spark.sql.functions._
   *
   * Skipping manifest: every commit stages per-file stats under
   * `_stats/commit-<v>` (zones, KMV sample, bloom words, evolved-column
-  * extrema), and each instance consults them through one driver-
+  * extrema), folded while its data files are written, and each
+  * instance consults them through one driver-
   * resident [[StatsSnapshot]] — bloom, zone and sample lookups run no
   * Spark job. The snapshot holds one entry per file basename in the
   * manifest history (the set the `_stats` views read), up to ~18 KiB
@@ -216,17 +220,22 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * through the SAME staged-commit protocol as every other mutation
     * (stage data + change-feed rows, atomic rename = commit point,
     * idempotent promotion) — an insert and its feed rows land together
-    * or not at all.
+    * or not at all. The row count is the staged write's own: nothing
+    * counts `fresh` beforehand, and a write that reached no row
+    * discards its staging dir and commits nothing.
     */
   protected def appendRows(fresh: DataFrame): Long = {
-    val cached = fresh.cache()
-    val n = cached.count()
-    if (n > 0) {
-      recover()
-      commit(appendCommit(cached))
+    recover()
+    val c = appendCommit(fresh)
+    val staged = stageFiles(c)
+    if (staged.dataRows == 0L) {
+      stagedStats.remove(staged.tmp.getAbsolutePath)
+      deleteRecursively(staged.tmp)
+    } else {
+      commitStaged(staged.tmp, c, staged.version)
+      applyStaged()
     }
-    cached.unpersist()
-    n
+    staged.dataRows
   }
 
   /** The insert commit [[appendRows]] lands: the fresh pending rows plus
@@ -763,13 +772,17 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * one row per commit, newest first, with the commit's promotion
     * timestamp, its operation label (WRITE / UPDATE / MERGE / DELETE /
     * OPTIMIZE / RESTORE / ADD|RENAME|DROP COLUMN / ADD|DROP
-    * CONSTRAINT) and its change-feed row count (0 for feed-silent
-    * layout and DDL commits). Served ENTIRELY from the `_commits`
-    * registry — tiny per-commit metadata files that survive
-    * [[vacuumFeed]], so history keeps describing commits whose feed
-    * dirs are long retired, and the read costs O(commits) driver-side
-    * metadata, never a data or feed scan. Entries written before the
-    * operation label existed surface NULL operation/row count
+    * CONSTRAINT), its change-feed row count (0 for feed-silent layout
+    * and DDL commits) and its `operation_metrics` (Delta's
+    * operationMetrics): `rows_added` / `rows_removed` / `rows_updated`
+    * (its insert, delete_pre, and update + ack change rows),
+    * `files_added` / `files_removed` (data files), `bytes_added` and
+    * `stage_ms`, all taken from the commit's own staged writes. Served
+    * ENTIRELY from the `_commits` registry — tiny per-commit metadata
+    * files that survive [[vacuumFeed]], so history keeps describing
+    * commits whose feed dirs are long retired, and the read costs
+    * O(commits) driver-side metadata, never a data or feed scan.
+    * Entries written before a field existed surface it NULL
     * (may-describe metadata degrades to unknown, never to a wrong
     * claim).
     */
@@ -785,6 +798,11 @@ class CustomerStore(protected val spark: SparkSession, path: String,
           org.apache.spark.sql.Row(v, lines(0).toLong,
             if (lines.length > 1) lines(1) else null,
             if (lines.length > 2) java.lang.Long.valueOf(lines(2).toLong)
+            else null,
+            if (lines.length > 3) lines(3).split(",").filter(_.nonEmpty).map { kv =>
+              val Array(k, n) = kv.split("=", 2)
+              k -> n.toLong
+            }.toMap
             else null)
         }
         .sortBy(-_.getLong(0))
@@ -864,7 +882,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     if (!dst.exists()) {
       val tmp = new java.io.File(path, s"$Snapshots/.tmp-$v")
       deleteRecursively(tmp)
-      toPhysical(all(), tableSchema).write.parquet(tmp.toString)
+      StagedWrite(toPhysical(all(), tableSchema), tmp, "snap"): Unit
       require(tmp.renameTo(dst), s"snapshot rename $tmp -> $dst failed")
     }
     v
@@ -1139,7 +1157,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         // rename; stale leftovers from a crashed attempt are swept.
         val tmp = new java.io.File(f.getParentFile, s".purge-${f.getName}")
         deleteRecursively(tmp)
-        keep.coalesce(1).write.parquet(tmp.toString)
+        StagedWrite(keep.coalesce(1), tmp, "purge"): Unit
         val parts = tmp.listFiles().filter(_.getName.endsWith(".parquet"))
         require(parts.length == 1, s"purge: expected one part under $tmp")
         val newCrc = new java.io.File(tmp, s".${parts(0).getName}.crc")
@@ -2124,48 +2142,104 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     *     `_stats/commit-<v>/`;
     *   - `_schema` / `_constraints`: a metadata commit's manifest;
     *   - markers, written once here: `version`, `commit_ts`, `operation`
-    *     (label + change-row count, for the `_commits` registry) and,
-    *     under [[withTxn]] / [[ingestNewFiles]], `txn` / `ingested`.
-    * Independent writes overlap (guide §2.6, [[stageConcurrently]]): the
-    * partition writes then the stats scan of their files, beside the
-    * vector write and the change-feed write. Data files are renamed
-    * commit-unique before stats run (stats key on the promoted
-    * basenames): `mrg-` when the commit removes files, else `ins-`.
+    *     (label + change-row count), `metrics` (see [[stageFiles]]), both
+    *     for the `_commits` registry, and, under [[withTxn]] /
+    *     [[ingestNewFiles]], `txn` / `ingested`.
     * Returns the version the commit took.
     */
   private[pipeline] def stage(c: Commit): Long = {
+    val staged = stageFiles(c)
+    commitStaged(staged.tmp, c, staged.version)
+  }
+
+  /** Write `c`'s files and markers into a fresh writer-unique staging
+    * dir, up to (not including) the commit point. Every data, vector
+    * and change-feed file is written by [[StagedWrite]] in its target's
+    * own job, straight under its final commit-unique name (`mrg-` data
+    * files when the commit removes files, else `ins-`; `del-`, `chg-`):
+    * the partition writes fold their skipping stats while they write
+    * (the `sts-` file follows on the driver, [[stageStats]]), beside
+    * the vector write and the change-feed write, which counts its rows
+    * by change type (guide §2.6, [[stageConcurrently]]). The write results are the commit's
+    * numbers: the `operation` marker's change-row count, the insert's
+    * row count ([[appendRows]]) and the `metrics` marker — rows added
+    * (`insert` change rows), removed (`delete_pre`) and updated
+    * (`update` and `ack`), data files added and removed, bytes added
+    * and the staging ms. A failed write removes the staging dir.
+    */
+  private def stageFiles(c: Commit): Staged = {
+    val t0 = System.nanoTime()
     val tmp = new java.io.File(path,
       StagingTmp + "-" + java.util.UUID.randomUUID().toString.take(8))
     tmp.mkdirs()
-    val v = currentVersion() + 1
-    DataTargets.foreach { case (name, dir) =>
-      val names =
-        if (c.replaceAll) graft.sources.ParquetGroups.parquetFilesIn(
-          new java.io.File(path, dir).toString).map(new java.io.File(_).getName)
-        else c.remove.filter(_.contains(s"/$dir/")).map(u => u.substring(u.lastIndexOf('/') + 1))
-      if (names.nonEmpty) writeText(new java.io.File(tmp, s"remove-$name"), names.mkString("\n"))
+    try {
+      val v = currentVersion() + 1
+      val removed = DataTargets.map { case (name, dir) =>
+        val names =
+          if (c.replaceAll) graft.sources.ParquetGroups.parquetFilesIn(
+            new java.io.File(path, dir).toString).map(new java.io.File(_).getName)
+          else c.remove.filter(_.contains(s"/$dir/")).map(u => u.substring(u.lastIndexOf('/') + 1))
+        if (names.nonEmpty) writeText(new java.io.File(tmp, s"remove-$name"), names.mkString("\n"))
+        name -> names.size
+      }.toMap
+      val prefix = if (c.replaceAll || c.remove.nonEmpty) "mrg" else "ins"
+      val fold = statsFold()
+      var data = Seq.empty[StagedWrite.WrittenFile[FileStatsState]]
+      var changes = StagedWrite.Written[mutable.Map[String, Long]](Nil)
+      val writes = Seq("pending" -> c.pending, "done" -> c.done).collect { case (name, Some(rows)) =>
+        val phys = toPhysical(rows.drop("uploaded"), dataLogicalSchema)
+        val dir = new java.io.File(tmp, name)
+        () => {
+          val w = graft.util.Labeled(spark, "store: stage data") {
+            StagedWrite(phys, dir, prefix, Some(fold.columns(phys.columns.toSet) -> fold))
+          }
+          // A partition side no row reached still leaves the part Spark
+          // writes for an empty job; such a file only adds an open.
+          w.files.filter(_.rows == 0L).foreach(f => require(new java.io.File(dir, f.name).delete(),
+            s"could not drop empty staged part ${f.name}"))
+          synchronized { data = data ++ w.files.filter(_.rows > 0L) }
+        }
+      }
+      val chains: Seq[() => Unit] =
+        Option.when(writes.nonEmpty)(() => {
+          stageConcurrently(writes: _*)
+          stageStats(tmp, v, data, fold)
+        }).toSeq ++
+          c.vectors.map(dv => () => graft.util.Labeled(spark, "store: stage data") {
+            StagedWrite(dv, new java.io.File(tmp, "deletes"), "del"): Unit
+          }) ++
+          c.changes.map(chg => () => changes = graft.util.Labeled(spark, "store: stage changes") {
+            StagedWrite(toPhysical(chg.withColumn("commit_version", lit(v))
+                .select(changeSchema.fieldNames.map(col): _*), changeSchema),
+              new java.io.File(tmp, "changelog"), "chg", Some(Seq(col("change_type")) -> ChangeKinds))
+          })
+      if (chains.nonEmpty) stageConcurrently(chains: _*)
+      c.manifest.foreach { case (file, body) => writeText(new java.io.File(tmp, file), body) }
+      activeTxn.get.foreach { case (app, ver) => writeText(new java.io.File(tmp, "txn"), s"$app\n$ver") }
+      activeIngest.get.foreach(names =>
+        writeText(new java.io.File(tmp, "ingested"), names.mkString("\n")))
+      // The registry keeps the change-row count after vacuumFeed
+      // retires the feed.
+      writeText(new java.io.File(tmp, "operation"), c.op + "\n" + changes.rows)
+      val kinds = changes.files.flatMap(_.state).foldLeft(ChangeKinds.zero())(ChangeKinds.merge)
+      val metrics = Seq(
+        "rows_added" -> kinds.getOrElse("insert", 0L),
+        "rows_removed" -> kinds.getOrElse("delete_pre", 0L),
+        "rows_updated" -> (kinds.getOrElse("update", 0L) + kinds.getOrElse("ack", 0L)),
+        "files_added" -> data.size.toLong,
+        "files_removed" -> (removed("pending") + removed("done")).toLong,
+        "bytes_added" -> data.map(_.bytes).sum,
+        "stage_ms" -> (System.nanoTime() - t0) / 1000000L)
+      writeText(new java.io.File(tmp, "metrics"), metrics.map { case (k, n) => s"$k=$n" }.mkString("\n"))
+      writeText(new java.io.File(tmp, "version"), v.toString)
+      writeText(new java.io.File(tmp, "commit_ts"), nextCommitTs().toString)
+      Staged(tmp, v, data.map(_.rows).sum)
+    } catch {
+      case e: Throwable =>
+        stagedStats.remove(tmp.getAbsolutePath)
+        if (tmp.exists()) deleteRecursively(tmp)
+        throw e
     }
-    val prefix = if (c.replaceAll || c.remove.nonEmpty) "mrg" else "ins"
-    val writes = Seq("pending" -> c.pending, "done" -> c.done).collect { case (name, Some(rows)) =>
-      () => stageData(toPhysical(rows.drop("uploaded"), dataLogicalSchema),
-        new java.io.File(tmp, name), prefix)
-    }
-    val chains: Seq[() => Unit] =
-      Option.when(writes.nonEmpty)(() => { stageConcurrently(writes: _*); stageStats(tmp, v) }).toSeq ++
-        c.vectors.map(dv => () => stageData(dv, new java.io.File(tmp, "deletes"), "del")) ++
-        c.changes.map(chg => () => stageChanges(tmp, chg, v))
-    if (chains.nonEmpty) stageConcurrently(chains: _*)
-    c.manifest.foreach { case (file, body) => writeText(new java.io.File(tmp, file), body) }
-    activeTxn.get.foreach { case (app, ver) => writeText(new java.io.File(tmp, "txn"), s"$app\n$ver") }
-    activeIngest.get.foreach(names =>
-      writeText(new java.io.File(tmp, "ingested"), names.mkString("\n")))
-    // The change-row count is a footer-only consult of the just-written
-    // changelog; the registry keeps it after vacuumFeed retires the feed.
-    writeText(new java.io.File(tmp, "operation"), c.op + "\n" + parquetRowCount(
-      graft.sources.ParquetGroups.parquetFilesIn(new java.io.File(tmp, "changelog").toString)))
-    writeText(new java.io.File(tmp, "version"), v.toString)
-    writeText(new java.io.File(tmp, "commit_ts"), nextCommitTs().toString)
-    commitStaged(tmp, c, v)
   }
 
   /** Promote-and-return form of [[stage]]: every public mutation ends
@@ -2177,55 +2251,11 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     v
   }
 
-  /** The staged data write: `df` as parquet under `dir`, parts renamed
-    * commit-unique so a crash replay can never clobber files an earlier
-    * promotion landed.
-    */
-  private def stageData(df: DataFrame, dir: java.io.File, prefix: String): Unit = {
-    graft.util.Labeled(spark, "store: stage data") {
-      df.write.parquet(dir.toString)
-    }
-    prefixParts(dir, prefix)
-  }
-
-  /** Rename every parquet part under `dir` to `<prefix>-<id>-<name>`. */
-  private def prefixParts(dir: java.io.File, prefix: String): Unit = {
-    val id = java.util.UUID.randomUUID().toString.take(8)
-    dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-      require(f.renameTo(new java.io.File(dir, s"$prefix-$id-${f.getName}")),
-        s"staging rename failed for $f")
-    }
-  }
-
-  /** Stage this commit's change-feed rows, every row stamped with the
-    * commit's version (renumbered at the commit point if a rival took
-    * it, see [[renumberStaged]]).
-    */
-  private def stageChanges(tmp: java.io.File, changes: DataFrame, v: Long): Unit = {
-    val dir = new java.io.File(tmp, "changelog")
-    graft.util.Labeled(spark, "store: stage changes") {
-      toPhysical(changes.withColumn("commit_version", lit(v))
-          .select(changeSchema.fieldNames.map(col): _*), changeSchema)
-        .write.parquet(dir.toString)
-    }
-    prefixParts(dir, "chg")
-  }
-
-  /** Total row count of the given parquet files — footer-only,
-    * driver-side, cost ∝ files, opened through the session's Hadoop
-    * conf (so any file system the session is configured for works).
+  /** Total row count of the given parquet files, from their footers
+    * ([[graft.sources.ParquetGroups.rowCount]]).
     */
   private[graft] def parquetRowCount(files: Seq[String]): Long =
-    if (files.isEmpty) 0L
-    else {
-      val conf = spark.sessionState.newHadoopConf()
-      files.map { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f), conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-    }
+    graft.sources.ParquetGroups.rowCount(spark, files)
 
   /** Every row of a metadata-scale parquet file (manifest, deletion
     * vectors), read on the driver without a job: `schema`'s columns in
@@ -2240,102 +2270,49 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         case x => x
       }))
 
-  /** Stage this commit's SKIPPING STATS — per-file zone maps (row
-    * count, min/max id, min/max hash shard), the bottom-SampleK KMV
-    * sample, the email bloom filter and evolved-column extrema —
-    * computed from the staged data files themselves and promoted by
-    * the same atomic rename as the data, so the manifest advances
-    * exactly with the commit (never rebuilt per query; cost ∝ the
-    * commit's delta, one extra scan of freshly written, page-warm
-    * files). Entries key on the file BASENAME: staged names are
-    * commit-unique and survive promotion verbatim, so an entry written
-    * under `_staging` stays valid in the table. A file absent from the
-    * manifest (e.g. written before stats existed) is simply never
-    * skipped — stats are may-contain metadata, and missing metadata
-    * degrades to a read, never to a wrong answer.
-    *
-    * Shape: ONE scan job with no shuffle — each task folds its rows
-    * into per-file partial states with the TopKAggregator /
-    * BloomWordsAggregator `reduce`, the driver `merge`s and finishes
-    * them (the states are manifest-sized: one per staged file), and
-    * the rows go out in one local write. A staged file with no state
-    * has no rows and is deleted here — Spark writes an empty part when
-    * a write's side is empty (e.g. an ack that drains a whole file),
-    * and such a file would only add a per-scan open cost and a hole in
-    * the zone coverage. Staged names are Spark part names behind a
-    * commit prefix, so the scan's basename equals the listed name.
-    * The rows are kept for [[commitStaged]] to hand to [[manifest]].
-    *
-    * Runs AFTER [[stage]]'s commit-unique renames (the basenames it
-    * records are the promoted ones) and before the commit point.
+  /** The skipping-stats fold of this commit's partition writes: per
+    * staged file, the row count, id and hash-shard zones, the
+    * bottom-[[SampleK]] KMV sample of the md5-word hash, the email bloom
+    * words and the extrema of every evolved NUMERIC column (keyed by
+    * PHYSICAL name, so renames cannot detach a file's stats; min/max
+    * zones only help range pruning on ordered types).
     */
-  private def stageStats(tmp: java.io.File, v: Long): Unit = {
-    val staged = Seq("pending", "done")
-      .flatMap(d => graft.sources.ParquetGroups.parquetFilesIn(new java.io.File(tmp, d).toString))
-    if (staged.isEmpty) return
-    // Evolved NUMERIC columns get per-file zone stats beside the base
-    // id zones (kind='e', keyed by PHYSICAL name so renames can't
-    // detach a file's stats): every staged data file aligns to the
-    // current schema at write time, so the columns are always present
-    // in staged files. Non-numeric evolved columns are skipped —
-    // min/max zones only help range/equality pruning on ordered types.
-    val evoNum: Seq[(String, org.apache.spark.sql.types.DataType)] =
-      evolvedFields.collect {
-        case f if f.dataType == org.apache.spark.sql.types.LongType ||
-            f.dataType == org.apache.spark.sql.types.IntegerType =>
-          (physicalNameOf(f), f.dataType)
-      }
-    val keySchema = org.apache.spark.sql.types.StructType(
-      Seq(org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("email",
-        org.apache.spark.sql.types.StringType)) ++
-      evoNum.map { case (p, t) =>
-        org.apache.spark.sql.types.StructField(p, t) })
+  private def statsFold(): StatsFold = {
+    val evoNum = evolvedFields.collect {
+      case f if f.dataType == org.apache.spark.sql.types.LongType ||
+          f.dataType == org.apache.spark.sql.types.IntegerType => physicalNameOf(f)
+    }
+    new StatsFold(evoNum, bloomBits)
+  }
+
+  /** Stage this commit's SKIPPING STATS from the states its partition
+    * writes folded ([[statsFold]]) — computed while the data files were
+    * written, and promoted by the same atomic rename as the data, so the
+    * manifest advances exactly with the commit (never rebuilt per
+    * query, and no file is read back). Entries key on the file
+    * BASENAME: staged names are final and survive promotion verbatim,
+    * so an entry written under `_staging` stays valid in the table. A
+    * file absent from the manifest (e.g. written before stats existed)
+    * is simply never skipped — stats are may-contain metadata, and
+    * missing metadata degrades to a read, never to a wrong answer.
+    *
+    * Shape: no Spark job. The driver finishes each file's merged state
+    * into `_stats` rows (zone, KMV sample, sparse bloom words, evolved
+    * extrema) and writes them as one local parquet file
+    * ([[org.apache.spark.sql.graft.StagedWrite.local]]), the way
+    * [[graft.sources.ParquetGroups.readAll]] reads such files back. The
+    * rows are kept for [[commitStaged]] to hand to [[manifest]].
+    */
+  private def stageStats(tmp: java.io.File, v: Long,
+      files: Seq[StagedWrite.WrittenFile[FileStatsState]], fold: StatsFold): Unit =
     graft.util.Labeled(spark, "store: stage stats") {
-      val rowsIn = spark.read.schema(keySchema).parquet(staged: _*)
-        .select(Seq(element_at(split(input_file_name(), "/"), -1).as("file"),
-          col("id"), CustomerStore.hashBucket(col("id")).as("hb"),
-          (-conv(substring(md5(col("id").cast("string")), 1, 8), 16, 10)
-            .cast("long")).as("neg_h"),
-          array((0 until BloomSeeds).map(s =>
-            bloomPosition(col("email"), s, lit(bloomBits))): _*).as("bpos")) ++
-          evoNum.map { case (p, _) => col(p).cast("long") }: _*)
-      val bottomK = new graft.functions.TopKAggregator(SampleK)
-      val bloomWords = new graft.functions.BloomWordsAggregator(bloomBits)
-      val states = FileStatsState.scan(rowsIn, bottomK, bloomWords, evoNum.size)
-      staged.filterNot(f => states.contains(new java.io.File(f).getName))
-        .foreach(f => require(new java.io.File(f).delete(), s"could not drop empty staged part $f"))
-      if (states.nonEmpty) {
-        def box(o: Option[Long]): Any = o.map(Long.box).orNull
-        def row(file: String, kind: String, w: Any = null, bits: Any = null,
-            nbits: Any = null, nRows: Any = null, minId: Any = null, maxId: Any = null,
-            minHb: Any = null, maxHb: Any = null, sH: Any = null, sId: Any = null,
-            ecol: Any = null, minV: Any = null, maxV: Any = null) =
-          org.apache.spark.sql.Row(file, kind, w, bits, nbits, nRows, minId, maxId,
-            minHb, maxHb, sH, sId, ecol, minV, maxV, v)
-        val rows = states.toSeq.sortBy(_._1).flatMap { case (f, s) =>
-          Seq(row(f, "z", nRows = s.nRows, minId = box(s.minId), maxId = box(s.maxId),
-            minHb = box(s.minHb), maxHb = box(s.maxHb))) ++
-          // KMV sample: bottom-k of the md5-word hash = top-k of its negation.
-          bottomK.finish(s.sample).map { case (negH, id) => row(f, "s", sH = -negH, sId = id) } ++
-          // Only words with a set bit are manifest rows (sparse words).
-          s.words.indices.filter(s.words(_) != 0L).map(w =>
-            row(f, "b", w = w.toLong, bits = s.words(w), nbits = bloomBits)) ++
-          // kind='e' rows: one per (file, evolved numeric column); an
-          // all-NULL column yields NULL min/max — no coverage for the file.
-          evoNum.indices.map(i => row(f, "e", ecol = evoNum(i)._1,
-            minV = box(s.evoMin(i)), maxV = box(s.evoMax(i))))
-        }
-        val dir = new java.io.File(tmp, "stats")
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(rows.asJava, statsSchema)
-          .coalesce(1).write.parquet(dir.toString)
-        prefixParts(dir, "sts")
+      val rows = fold.rows(files.flatMap(f => f.state.map(f.name -> _)), v)
+      if (rows.nonEmpty) {
+        StagedWrite.local(spark, statsSchema, rows, new java.io.File(tmp, "stats"),
+          "sts-" + java.util.UUID.randomUUID().toString.take(8)): Unit
         stagedStats.put(tmp.getAbsolutePath, rows)
       }
     }
-  }
 
   /** Promote the committed `_staging` dir into the table. Idempotent:
     * every step is a replay no-op once done, and the version marker is
@@ -2384,12 +2361,15 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       // Registry entry before the counter: an entry can lag the counter
       // only inside an in-flight promotion, never the other way. Line 1
       // is the promotion timestamp, lines 2-3 the operation label and
-      // change-row count [[history]] serves.
+      // change-row count, line 4 the staged metrics [[history]] serves.
       val reg = new java.io.File(path, Commits)
       reg.mkdirs()
+      val metrics = new java.io.File(staging, "metrics")
       writeText(new java.io.File(reg, s"commit-$v"),
         readText(new java.io.File(staging, "commit_ts")) + "\n" +
-          readText(new java.io.File(staging, "operation")))
+          readText(new java.io.File(staging, "operation")) +
+          (if (metrics.exists()) "\n" + readText(metrics).split("\n").map(_.trim).mkString(",")
+           else ""))
       val vTmp = new java.io.File(path, VersionFile + ".tmp")
       writeText(vTmp, v.toString)
       java.nio.file.Files.move(vTmp.toPath,
@@ -2468,7 +2448,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     var v = stagedV
     var attempts = 0
     var committed = false
-    val stats = Option(stagedStats.remove(tmp.getAbsolutePath))
+    var stats = Option(stagedStats.remove(tmp.getAbsolutePath))
     while (!committed) {
       attempts += 1
       require(tmp.exists(), s"staged commit $tmp vanished before the commit point")
@@ -2504,7 +2484,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
           if (head >= v) {
             checkNoConflict(tmp, c, base, head)
             v = head + 1
-            renumberStaged(tmp, v)
+            stats = renumberStaged(tmp, v, stats)
           }
           committed = tmp.renameTo(staging)
           // Past the commit point: promotion hands the rows over.
@@ -2580,26 +2560,33 @@ class CustomerStore(protected val spark: SparkSession, path: String,
   }
 
   /** Re-stamp a staged commit onto a new head version: rewrite the
-    * `commit_version` baked into its staged changelog and stats rows,
-    * then the `version` marker and a fresh `commit_ts` (the commit
-    * lands NOW, not when it was first staged).
+    * `commit_version` baked into its staged changelog (a staged write
+    * of the read-back rows) and stats rows (`stats`, the rows
+    * [[stageStats]] kept, rewritten on the driver), then the `version`
+    * marker and a fresh `commit_ts` (the commit lands NOW, not when it
+    * was first staged). Returns the re-stamped stats rows.
     */
-  private def renumberStaged(tmp: java.io.File, newV: Long): Unit = {
-    Seq("changelog" -> "chg", "stats" -> "sts").foreach { case (name, prefix) =>
-      val dir = new java.io.File(tmp, name)
-      if (dir.isDirectory) {
-        val out = new java.io.File(tmp, name + ".renum")
-        deleteRecursively(out)
-        graft.sources.ParquetGroups.read(spark, dir.toString)
-          .withColumn("commit_version", lit(newV))
-          .coalesce(1).write.parquet(out.toString)
-        prefixParts(out, prefix)
-        deleteRecursively(dir)
-        require(out.renameTo(dir), s"renumber swap $out -> $dir failed")
-      }
+  private def renumberStaged(tmp: java.io.File, newV: Long,
+      stats: Option[Seq[org.apache.spark.sql.Row]]): Option[Seq[org.apache.spark.sql.Row]] = {
+    val changelog = new java.io.File(tmp, "changelog")
+    if (changelog.isDirectory) {
+      val out = new java.io.File(tmp, "changelog.renum")
+      deleteRecursively(out)
+      StagedWrite(graft.sources.ParquetGroups.read(spark, changelog.toString)
+        .withColumn("commit_version", lit(newV)).coalesce(1), out, "chg"): Unit
+      deleteRecursively(changelog)
+      require(out.renameTo(changelog), s"renumber swap $out -> $changelog failed")
+    }
+    val restamped = stats.map(_.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.init :+ newV)))
+    restamped.foreach { rows =>
+      val dir = new java.io.File(tmp, "stats")
+      deleteRecursively(dir)
+      StagedWrite.local(spark, statsSchema, rows, dir,
+        "sts-" + java.util.UUID.randomUUID().toString.take(8)): Unit
     }
     writeText(new java.io.File(tmp, "version"), newV.toString)
     writeText(new java.io.File(tmp, "commit_ts"), nextCommitTs().toString)
+    restamped
   }
 
   private def writeText(f: java.io.File, s: String): Unit =
@@ -2811,6 +2798,27 @@ object CustomerStore {
     def exclusive: Boolean = replaceAll || manifest.nonEmpty
   }
 
+  /** A commit written into its staging dir `tmp`, not yet past the
+    * commit point: the version it was staged at and the data rows its
+    * partition writes wrote.
+    */
+  private final case class Staged(tmp: java.io.File, version: Long, dataRows: Long)
+
+  /** The change-feed write's fold: rows per `change_type`. */
+  private object ChangeKinds extends StagedWrite.FileFold[mutable.Map[String, Long]] {
+    def zero(): mutable.Map[String, Long] = mutable.HashMap.empty
+    def add(s: mutable.Map[String, Long], row: org.apache.spark.sql.catalyst.InternalRow)
+        : mutable.Map[String, Long] = {
+      val k = row.getUTF8String(0).toString
+      s(k) = s.getOrElse(k, 0L) + 1L
+      s
+    }
+    def merge(a: mutable.Map[String, Long], b: mutable.Map[String, Long]): mutable.Map[String, Long] = {
+      b.foreach { case (k, n) => a(k) = a.getOrElse(k, 0L) + n }
+      a
+    }
+  }
+
   private[pipeline] object Commit {
     /** A commit adding `rows` to both partitions by their `uploaded`
       * value, each side shaped by `shape` (a clustering or coalesce).
@@ -2842,8 +2850,8 @@ object CustomerStore {
   private[pipeline] def genConstraintName(name: String): String = s"gen_$name"
 
   /** Schema of [[CustomerStore.history]] (the DESCRIBE HISTORY face).
-    * `operation` / `n_change_rows` are nullable: a registry entry
-    * written before the label existed reads as unknown.
+    * `operation` / `n_change_rows` / `operation_metrics` are nullable: a
+    * registry entry written before the field existed reads as unknown.
     */
   val historySchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Seq(
@@ -2854,7 +2862,10 @@ object CustomerStore {
       org.apache.spark.sql.types.StructField("operation",
         org.apache.spark.sql.types.StringType, nullable = true),
       org.apache.spark.sql.types.StructField("n_change_rows",
-        org.apache.spark.sql.types.LongType, nullable = true)))
+        org.apache.spark.sql.types.LongType, nullable = true),
+      org.apache.spark.sql.types.StructField("operation_metrics",
+        org.apache.spark.sql.types.MapType(org.apache.spark.sql.types.StringType,
+          org.apache.spark.sql.types.LongType, valueContainsNull = false), nullable = true)))
 
   /** Schema of [[CustomerStore.detail]] (the DESCRIBE DETAIL face). */
   val detailSchema: org.apache.spark.sql.types.StructType =
@@ -2892,8 +2903,9 @@ object CustomerStore {
   /** Bloom bit `seed` of an email: `pmod(xxhash64(email, seed), nbits)`
     * — xxhash64 over the (email, seed) pair at its default seed, the
     * expression the manifest has always been built with. The commit
-    * evaluates it in the stats scan ([[bloomPosition]]) and lookups on
-    * the driver ([[bloomPositions]]), so both probe identical bits.
+    * evaluates it in its write-time stats fold ([[bloomPosition]]) and
+    * lookups on the driver ([[bloomPositions]]), so both probe
+    * identical bits.
     */
   private def bloomPositionExpr(email: org.apache.spark.sql.catalyst.expressions.Expression,
       seed: Int, nbits: org.apache.spark.sql.catalyst.expressions.Expression)

@@ -188,11 +188,11 @@ private[pipeline] object StatsSnapshot {
   }
 }
 
-/** One staged file's partial skipping stats while
-  * [[CustomerStore]]'s stats scan folds its rows in: row count, id and
+/** One staged file's partial skipping stats while [[StatsFold]] folds
+  * the rows a partition write writes into it: row count, id and
   * hash-shard extrema, the KMV sample and bloom words as
   * [[graft.functions.TopKAggregator]] / [[graft.functions.BloomWordsAggregator]]
-  * buffers, and evolved-column extrema. Scan tasks `add` rows, the
+  * buffers, and evolved-column extrema. Write tasks `add` rows, the
   * driver `merge`s the tasks' states per file.
   */
 private[pipeline] final class FileStatsState(nEvo: Int,
@@ -212,29 +212,29 @@ private[pipeline] final class FileStatsState(nEvo: Int,
   def evoMin(i: Int): Option[Long] = Option.when(evoSeen(i))(evoMn(i))
   def evoMax(i: Int): Option[Long] = Option.when(evoSeen(i))(evoMx(i))
 
-  /** Fold one scan row: (file, id, hb, neg_h, bloom positions, evolved…). */
+  /** Fold one projected row: (id, hb, neg_h, bloom positions, evolved…). */
   def add(r: InternalRow, topK: graft.functions.TopKAggregator,
       bloom: graft.functions.BloomWordsAggregator): Unit = {
     nRows += 1
-    if (!r.isNullAt(1)) {
-      val id = r.getLong(1)
+    if (!r.isNullAt(0)) {
+      val id = r.getLong(0)
       if (!ids || id < mnId) mnId = id
       if (!ids || id > mxId) mxId = id
       ids = true
-      if (!r.isNullAt(3)) sample = topK.reduce(sample, (r.getLong(3), id))
+      if (!r.isNullAt(2)) sample = topK.reduce(sample, (r.getLong(2), id))
     }
-    if (!r.isNullAt(2)) {
-      val hb = r.getLong(2)
+    if (!r.isNullAt(1)) {
+      val hb = r.getLong(1)
       if (!hbs || hb < mnHb) mnHb = hb
       if (!hbs || hb > mxHb) mxHb = hb
       hbs = true
     }
     words = bloom.reduce(words,
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(r.getArray(4).toLongArray()))
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(r.getArray(3).toLongArray()))
     var i = 0
     while (i < nEvo) {
-      if (!r.isNullAt(5 + i)) {
-        val x = r.getLong(5 + i)
+      if (!r.isNullAt(4 + i)) {
+        val x = r.getLong(4 + i)
         if (!evoSeen(i) || x < evoMn(i)) evoMn(i) = x
         if (!evoSeen(i) || x > evoMx(i)) evoMx(i) = x
         evoSeen(i) = true
@@ -267,19 +267,57 @@ private[pipeline] final class FileStatsState(nEvo: Int,
   }
 }
 
-private[pipeline] object FileStatsState {
-  /** One job, no shuffle: per-file states built in the scan tasks over
-    * `rows` (file, id, hb, neg_h, bloom positions, evolved columns…),
-    * merged per file on the driver.
+/** The stats fold of a staged partition write: the Catalyst columns it
+  * evaluates per written row (id, its hash shard, the negated md5-word
+  * hash the KMV sample keeps the bottom-k of, the email's bloom bit
+  * positions, and each evolved numeric column `evoCols` as a long —
+  * NULL where the written frame lacks it), the per-file
+  * [[FileStatsState]] it folds them into, and the `_stats` rows a
+  * finished state becomes.
+  */
+private[pipeline] final class StatsFold(evoCols: Seq[String], bloomBits: Long)
+    extends org.apache.spark.sql.graft.StagedWrite.FileFold[FileStatsState] {
+  import org.apache.spark.sql.functions._
+
+  private val topK = new graft.functions.TopKAggregator(CustomerStore.SampleK)
+  private val bloom = new graft.functions.BloomWordsAggregator(bloomBits)
+
+  /** The fold's columns over a written frame with columns `present`. */
+  def columns(present: Set[String]): Seq[org.apache.spark.sql.Column] =
+    Seq(col("id"), CustomerStore.hashBucket(col("id")),
+      (-conv(substring(md5(col("id").cast("string")), 1, 8), 16, 10).cast("long")),
+      array((0 until CustomerStore.BloomSeeds).map(s =>
+        CustomerStore.bloomPosition(col("email"), s, lit(bloomBits))): _*)) ++
+      evoCols.map(p => if (present(p)) col(p).cast("long") else lit(null).cast("long"))
+
+  def zero(): FileStatsState = new FileStatsState(evoCols.size, topK.zero, bloom.zero)
+  def add(s: FileStatsState, row: org.apache.spark.sql.catalyst.InternalRow): FileStatsState = {
+    s.add(row, topK, bloom)
+    s
+  }
+  def merge(a: FileStatsState, b: FileStatsState): FileStatsState = a.merge(b, topK, bloom)
+
+  /** The `_stats` rows of `states` (by file basename) at version `v`, in
+    * file order: one zone row, the KMV sample rows, one row per bloom
+    * word with a set bit, and one extrema row per evolved column (an
+    * all-NULL column yields NULL min/max — no coverage for the file).
     */
-  def scan(rows: org.apache.spark.sql.DataFrame, topK: graft.functions.TopKAggregator,
-      bloom: graft.functions.BloomWordsAggregator, nEvo: Int): Map[String, FileStatsState] =
-    rows.queryExecution.toRdd.mapPartitions { it =>
-      val m = mutable.HashMap.empty[String, FileStatsState]
-      it.foreach { r =>
-        m.getOrElseUpdate(r.getUTF8String(0).toString,
-          new FileStatsState(nEvo, topK.zero, bloom.zero)).add(r, topK, bloom)
-      }
-      m.iterator
-    }.collect().groupMapReduce(_._1)(_._2)(_.merge(_, topK, bloom))
+  def rows(states: Seq[(String, FileStatsState)], v: Long): Seq[Row] = {
+    def box(o: Option[Long]): Any = o.map(Long.box).orNull
+    def row(file: String, kind: String, w: Any = null, bits: Any = null,
+        nb: Any = null, nRows: Any = null, minId: Any = null, maxId: Any = null,
+        minHb: Any = null, maxHb: Any = null, sH: Any = null, sId: Any = null,
+        ecol: Any = null, minV: Any = null, maxV: Any = null) =
+      Row(file, kind, w, bits, nb, nRows, minId, maxId, minHb, maxHb, sH, sId, ecol, minV, maxV, v)
+    states.sortBy(_._1).flatMap { case (f, s) =>
+      Seq(row(f, "z", nRows = s.nRows, minId = box(s.minId), maxId = box(s.maxId),
+        minHb = box(s.minHb), maxHb = box(s.maxHb))) ++
+        // KMV sample: bottom-k of the md5-word hash = top-k of its negation.
+        topK.finish(s.sample).map { case (negH, id) => row(f, "s", sH = -negH, sId = id) } ++
+        s.words.indices.filter(s.words(_) != 0L).map(w =>
+          row(f, "b", w = w.toLong, bits = s.words(w), nb = bloomBits)) ++
+        evoCols.indices.map(i => row(f, "e", ecol = evoCols(i),
+          minV = box(s.evoMin(i)), maxV = box(s.evoMax(i))))
+    }
+  }
 }

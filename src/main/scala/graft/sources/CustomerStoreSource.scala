@@ -302,7 +302,8 @@ class StoreChangesScan(path: String, fromExclusive: Long,
     toInclusive: Option[Long], required: StructType,
     maxCommitsPerTrigger: Option[Long] = None,
     maxBytesPerTrigger: Option[Long] = None,
-    maxRowsPerTrigger: Option[Long] = None) extends Scan with Batch {
+    maxRowsPerTrigger: Option[Long] = None)
+    extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
@@ -314,6 +315,9 @@ class StoreChangesScan(path: String, fromExclusive: Long,
       toInclusive.getOrElse(CustomerStore.currentVersionAt(path)))
   override def planInputPartitions(): Array[InputPartition] =
     dirs.map { case (_, d) => StoreChangesPartition(d): InputPartition }.toArray
+  /** The feed files in range: their bytes and footer row counts. */
+  override def estimateStatistics(): Statistics =
+    StoreScanStats(dirs.flatMap { case (_, d) => ParquetGroups.parquetFilesIn(d) })
   override def createReaderFactory(): PartitionReaderFactory =
     StoreChangesReaderFactory(required.fieldNames,
       CustomerStore.physicalMapAt(path),
@@ -510,7 +514,9 @@ class CustomerStoreMetaTable(path: String, which: String)
           val store = new CustomerStore(SparkSession.active, path)
           val df = if (which == "history") store.history() else store.detail()
           val rows = df.collect().toSeq.map { r =>
-            required.fieldNames.toSeq.map(n => r.get(r.fieldIndex(n)))
+            required.fieldNames.toSeq.map(n =>
+              org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(
+                r.get(r.fieldIndex(n))))
           }
           Array(StoreMetaPartition(rows))
         }
@@ -523,6 +529,7 @@ class CustomerStoreMetaTable(path: String, which: String)
     }
 }
 
+/** Metadata rows, already in Catalyst's internal representation. */
 case class StoreMetaPartition(rows: Seq[Seq[Any]]) extends InputPartition
 
 object StoreMetaReaderFactory extends PartitionReaderFactory {
@@ -533,10 +540,7 @@ object StoreMetaReaderFactory extends PartitionReaderFactory {
       private var current: InternalRow = _
       override def next(): Boolean = {
         if (!it.hasNext) return false
-        current = InternalRow.fromSeq(it.next().map {
-          case s: String => UTF8String.fromString(s)
-          case v => v
-        })
+        current = InternalRow.fromSeq(it.next())
         true
       }
       override def get(): InternalRow = current
@@ -1297,26 +1301,31 @@ class CustomerStoreScan(path: String, travel: Option[TimeTravel],
 
   override def planInputPartitions(): Array[InputPartition] = planned._1
 
-  /** CBO/AQE statistics from the SAME manifest consult as planning:
-    * sizeInBytes = the kept files' on-disk bytes, numRows = their zone
-    * row counts (an upper bound while deletion vectors are live —
-    * statistics are estimates, pruning/filtering stays exact). Time
-    * travel reports unknown.
+  /** CBO/AQE statistics from the SAME consult as planning. A current
+    * read reports the kept files' on-disk bytes and their zone row
+    * counts (an upper bound while deletion vectors are live —
+    * statistics are estimates, pruning/filtering stays exact). A time
+    * travel read reports the bytes and footer row counts of the
+    * snapshot files and feed files it opens (an upper bound too: the
+    * replay drops superseded rows).
     */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val kept: Seq[StoreDataPartition] =
-      if (travel.nonEmpty) Seq.empty
-      else planned._1.toSeq.collect { case p: StoreDataPartition => p }
-    override def sizeInBytes(): java.util.OptionalLong =
-      if (travel.nonEmpty) java.util.OptionalLong.empty()
-      else java.util.OptionalLong.of(
-        kept.map(p => new java.io.File(p.file).length()).sum)
-    override def numRows(): java.util.OptionalLong =
-      if (travel.nonEmpty) java.util.OptionalLong.empty()
-      else new CustomerStore(SparkSession.active, path)
-        .manifestRowCount(kept.map(_.basename).toSet)
-        .fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
-  }
+  override def estimateStatistics(): Statistics =
+    if (travel.nonEmpty)
+      StoreScanStats(planned._1.toSeq.flatMap {
+        case p: StoreSnapshotPartition => Seq(p.file)
+        case p: StoreDeltaPartition => p.feedDirs.flatMap(ParquetGroups.parquetFilesIn)
+        case _ => Nil
+      })
+    else new Statistics {
+      private val kept: Seq[StoreDataPartition] =
+        planned._1.toSeq.collect { case p: StoreDataPartition => p }
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.of(kept.map(p => new java.io.File(p.file).length()).sum)
+      override def numRows(): java.util.OptionalLong =
+        new CustomerStore(SparkSession.active, path)
+          .manifestRowCount(kept.map(_.basename).toSet)
+          .fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
+    }
 
   override def createReaderFactory(): PartitionReaderFactory =
     StoreReaderFactory(required.fieldNames, filters,
@@ -1335,6 +1344,16 @@ class CustomerStoreScan(path: String, travel: Option[TimeTravel],
   }
 }
 
+/** Statistics of a scan that opens `files` whole: their on-disk bytes
+  * and their footer row counts (read on the driver when asked).
+  */
+private[sources] final case class StoreScanStats(files: Seq[String]) extends Statistics {
+  override def sizeInBytes(): java.util.OptionalLong =
+    java.util.OptionalLong.of(files.map(f => new java.io.File(f).length()).sum)
+  override def numRows(): java.util.OptionalLong =
+    java.util.OptionalLong.of(ParquetGroups.rowCount(SparkSession.active, files))
+}
+
 /** A time-travel read resolved against the store's files: the newest
   * snapshot checkpoint at or below `version` (its version and parquet
   * files) and the feed commit dirs `(snapshot, version]` replayed on
@@ -1346,18 +1365,21 @@ case class TimeTravel(version: Long, snapshot: Option[(Long, Seq[String])],
 object TimeTravel {
   /** Resolve `v` against `store`, failing loudly when the retained
     * history cannot reconstruct it: with no snapshot at or below `v`
-    * the replay runs from genesis, so the feed must still start there.
+    * the replay runs from genesis, so nothing may have been vacuumed.
+    * A missing feed dir is not evidence of vacuuming — feed-silent
+    * commits (DDL, compaction) have none, and the first commit may be
+    * one — so the check reads the feed low-watermark, the same
+    * retention horizon [[CustomerStore.feedDirsIn]] enforces.
     */
   def apply(store: CustomerStore, v: Long): TimeTravel =
     if (v <= 0L) TimeTravel(v, None, Nil)
     else {
       val base = store.snapshotFilesFor(v)
+      val wm = store.feedLowWatermark()
+      require(base.nonEmpty || wm == 0L,
+        s"cannot reconstruct version $v: commits up to $wm were vacuumed " +
+          "and no snapshot at or below the requested version exists")
       val dirs = store.feedDirsIn(base.map(_._1).getOrElse(0L), v)
-      val oldest = dirs.headOption.map(_._1)
-      require(base.nonEmpty || oldest.exists(_ <= 1L),
-        s"cannot reconstruct version $v: commits before " +
-          s"${oldest.getOrElse(v + 1)} were vacuumed and no snapshot at or " +
-          "below the requested version exists")
       TimeTravel(v, base, dirs.map(_._2))
     }
 }

@@ -249,6 +249,18 @@ object ParquetGroups {
       }).toArray)
   }
 
+  /** Total row count of the given parquet files — footer-only,
+    * driver-side, cost ∝ files, opened through the session's Hadoop
+    * conf (so any file system the session is configured for works).
+    */
+  def rowCount(spark: SparkSession, files: Seq[String]): Long =
+    if (files.isEmpty) 0L
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      files.map(f => readFooter(new HPath(f), conf).getBlocks.stream()
+        .mapToLong(_.getRowCount).sum()).sum
+    }
+
   /** Data files inside a directory (feed commit dir, snapshot dir). */
   def parquetFilesIn(dir: String): Seq[String] = {
     val d = new java.io.File(dir)

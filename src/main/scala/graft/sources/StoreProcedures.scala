@@ -86,10 +86,8 @@ object StoreProcedures {
         SparkSession.active, input.getUTF8String(0).toString))
       val resolved: Array[InternalRow] = df.collect().map { r =>
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          r.toSeq.map {
-            case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-            case v => v: Any
-          }.toArray): InternalRow
+          r.toSeq.map(org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst)
+            .toArray): InternalRow
       }
       val schema = df.schema
       java.util.Collections.singletonList(new LocalScan {
@@ -231,7 +229,7 @@ object StoreProcedures {
     },
     new MetaProc("history",
       "the commit history (DESCRIBE HISTORY): version, timestamp, " +
-        "operation, change-row count per commit, newest first") {
+        "operation, change-row count and operation metrics per commit, newest first") {
       override def run(store: CustomerStore): org.apache.spark.sql.DataFrame =
         store.history()
     },

@@ -131,7 +131,7 @@ class HistorySpec extends SparkSpec {
     store.delete(Seq("u2@example.com").toDF("email"))                   // v2
     val h = spark.sql(s"CALL graft_store.history('$path')")
     assert(h.columns.toSeq ===
-      Seq("commit_version", "commit_ts", "operation", "n_change_rows"))
+      Seq("commit_version", "commit_ts", "operation", "n_change_rows", "operation_metrics"))
     assert(h.orderBy(col("commit_version")).collect()
       .map(r => (r.getLong(0), r.getString(2), r.getLong(3))).toSeq ===
       Seq((1L, "WRITE", 4L), (2L, "DELETE", 1L)))
@@ -147,7 +147,7 @@ class HistorySpec extends SparkSpec {
     val hist = spark.read.format("graft-store").option("path", path)
       .option("history", true).load()
     assert(hist.columns.toSeq ===
-      Seq("commit_version", "commit_ts", "operation", "n_change_rows"))
+      Seq("commit_version", "commit_ts", "operation", "n_change_rows", "operation_metrics"))
     assert(hist.orderBy(col("commit_version")).collect().toSeq ===
       store.history().orderBy(col("commit_version")).collect().toSeq)
     // column pruning survives the metadata scan

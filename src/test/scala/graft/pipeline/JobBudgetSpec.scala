@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.LongType
 
 import graft.SparkSpec
@@ -9,8 +9,10 @@ import graft.SparkSpec.jobsOf
 
 /** Spark job budgets of the store's manifest paths: every skipping
   * consult is answered from the driver-resident manifest snapshot (no
-  * job), and a commit's stats phase is one scan plus one write. A
-  * regression back to Spark-side consults fails here.
+  * job), and a commit's stats phase runs no job at all (the stats are
+  * folded while the data files are written, and the manifest file is
+  * written on the driver). A regression back to Spark-side consults or
+  * a stats re-scan fails here.
   */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
@@ -36,10 +38,10 @@ class JobBudgetSpec extends SparkSpec {
 
     val (_, insertJobs) = jobsOf(store.insertNew(batch(301L to 400L)))
     val insertStats = insertJobs.count(_ == "store: stage stats")
-    assert(insertStats >= 1 && insertStats <= 2, s"insert commit stats phase: $insertJobs")
+    assert(insertStats === 0, s"insert commit stats phase: $insertJobs")
     val (_, ackJobs) = jobsOf(store.markUploaded(Seq("user7@example.com").toDF("email")))
     val ackStats = ackJobs.count(_ == "store: stage stats")
-    assert(ackStats >= 1 && ackStats <= 2, s"ack commit stats phase: $ackJobs")
+    assert(ackStats === 0, s"ack commit stats phase: $ackJobs")
 
     val keys = Seq("user13@example.com", "user377@example.com")
     val ((_, kept, total), lookupJobs) = jobsOf(store.pendingPointLookup(keys))
@@ -77,10 +79,47 @@ class JobBudgetSpec extends SparkSpec {
       "delete" -> (() => store.delete(Seq("user11@example.com").toDF("email"))),
       "compact" -> (() => store.compact()))
     val counts = budgets.map { case (kind, op) => kind -> jobsOf(op())._2.size }
-    val pinned = Map("insert" -> 16, "ack" -> 15, "merge" -> 29, "delete" -> 6,
-      "compact" -> 7)
+    val pinned = Map("insert" -> 11, "ack" -> 13, "merge" -> 27, "delete" -> 6,
+      "compact" -> 5)
     counts.foreach { case (kind, n) =>
       assert(n <= pinned(kind), s"$kind commit ran $n Spark jobs; budget ${pinned(kind)}")
     }
+  }
+
+  /** Each commit kind's `operation_metrics` on the fixture, pinned: the
+    * numbers come from the commit's own staged writes, with no job.
+    */
+  test("each commit kind records its operation metrics") {
+    val (store, _) = fixture()
+    def sizeBytes(): Long = store.detail().head().getLong(2)
+    def metrics(v: Long): Map[String, Long] =
+      store.history().filter(col("commit_version") === v).head().getMap[String, Long](4).toMap
+    val ops = Seq[(String, () => Any)](
+      "insert" -> (() => store.insertNew(batch(401L to 500L))),
+      "ack" -> (() => store.markUploaded(Seq("user7@example.com").toDF("email"))),
+      "merge" -> (() => store.merge(batch(Seq(8L, 9L, 601L)).withColumn("phone", lit("999")))),
+      "delete" -> (() => store.delete(Seq("user11@example.com").toDF("email"))),
+      "compact" -> (() => store.compact()))
+    val seen = ops.map { case (kind, op) =>
+      val before = sizeBytes()
+      op()
+      kind -> ((metrics(store.currentVersion()), sizeBytes() - before))
+    }.toMap
+    def counts(kind: String): Map[String, Long] =
+      seen(kind)._1.removedAll(Seq("stage_ms", "bytes_added"))
+    def rows(added: Long, removed: Long, updated: Long, filesAdded: Long, filesRemoved: Long) =
+      Map("rows_added" -> added, "rows_removed" -> removed, "rows_updated" -> updated,
+        "files_added" -> filesAdded, "files_removed" -> filesRemoved)
+    assert(counts("insert") === rows(100, 0, 0, 1, 0))
+    assert(counts("ack") === rows(0, 0, 1, 2, 1))        // one pending file split in two
+    assert(counts("merge") === rows(1, 0, 2, 3, 1))
+    assert(counts("delete") === rows(0, 1, 0, 0, 0))     // a deletion vector, no data file
+    assert(counts("compact") === rows(0, 0, 0, 2, 7))    // one file per partition
+    // bytes_added is the added data files' size on disk
+    assert(seen("insert")._1("bytes_added") === seen("insert")._2)
+    assert(seen("compact")._1("bytes_added") === sizeBytes())
+    assert(seen("delete")._1("bytes_added") === 0L)
+    assert(Seq("ack", "merge").forall(seen(_)._1("bytes_added") > 0L), s"$seen")
+    assert(seen.values.forall(_._1.get("stage_ms").exists(_ >= 0L)), s"stage_ms: $seen")
   }
 }

@@ -234,4 +234,24 @@ class TimeTravelSpec extends SparkSpec {
     assert(pre.head.getString(2) === "555-1",
       "pre-image must carry the OLD payload, not the update's")
   }
+
+  test("a store whose first commit is feed-silent time travels from genesis") {
+    val path = tmpDir("tt-silent-first") + "/store"
+    val store = new CustomerStore(spark, path)
+    assert(store.addColumn("tier", org.apache.spark.sql.types.LongType) === 1L) // v1, no feed dir
+    store.insertNew(rows((1L, "Ann", "A", "ann@example.com", "555-1"),
+      (2L, "Bob", "B", "bob@example.com", "555-2"))): Unit                   // v2
+    assert(store.asOf(1L).count() === 0L)
+    assert(snapshotKey(store.asOf(2L)) === snapshotKey(store.all()))
+    assert(spark.read.format("graft-store").option("path", path)
+      .option("versionAsOf", 2L).load().count() === 2L)
+    store.insertNew(rows((3L, "Cai", "C", "cai@example.com", "555-3"))): Unit // v3
+    assert(store.writeSnapshot() === 3L)
+    assert(store.vacuumFeed() === 2)
+    // With the snapshot gone, nothing at or below version 2 is left to
+    // replay from: the retention horizon, not a missing dir, refuses.
+    CustomerStore.deleteRecursively(new java.io.File(path, "_snapshots/v-000000003"))
+    val e = intercept[IllegalArgumentException] { store.asOf(2L).count() }
+    assert(e.getMessage.contains("cannot reconstruct version 2"), e.getMessage)
+  }
 }

@@ -1185,6 +1185,24 @@ class CustomerStoreSourceSpec extends SparkSpec {
       Or(AlwaysTrue(), StringContains("email", "\u0000")))
     assert(CustomerStoreDelete.toColumn(exotic).isDefined)
   }
+
+  test("change-feed and time-travel scans report the bytes and rows of the files they open") {
+    val path = tmpDir("dsv2-stats") + "/store"
+    val store = buildStore(path)
+    assert(store.writeSnapshot() === 5L)
+    store.insertNew(block(3001L, 3010L)): Unit // v6
+    def files(dir: String): Seq[String] = ParquetGroups.parquetFilesIn(s"$path/$dir")
+    def bytes(fs: Seq[String]): BigInt = BigInt(fs.map(new java.io.File(_).length()).sum)
+    val feed = cat(path, "feedFrom" -> "1", "feedTo" -> "4").queryExecution.optimizedPlan.stats
+    val feedFiles = (2 to 4).flatMap(v => files(f"_changelog/commit-$v%09d"))
+    assert(feed.sizeInBytes === bytes(feedFiles))
+    assert(feed.rowCount === Some(BigInt(store.feedSince(1L, 4L).count())))
+    // time travel to v6 opens the v5 snapshot and the v6 feed delta
+    val travel = cat(path, "versionAsOf" -> "6").queryExecution.optimizedPlan.stats
+    val travelFiles = files("_snapshots/v-000000005") ++ files("_changelog/commit-000000006")
+    assert(travel.sizeInBytes === bytes(travelFiles))
+    assert(travel.rowCount === Some(BigInt(store.asOf(5L).count() + store.feedSince(5L, 6L).count())))
+  }
 }
 
 /** The Spark-side history reads the store ran before the connector
