@@ -5,15 +5,28 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.StagedWrite
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Parquet-backed state table with the `customers` contract the
   * reference keeps in Postgres (csv-crm-upload database/database.go):
   * unique id+email enforced as anti-join dedup (the Spark idiom for
   * "INSERT that doesn't violate UNIQUE" — init-db.sh:13,16), point
   * updates as partition-pruned rewrites, and the uploaded work-queue
-  * flag as a partition column so `pending()` prunes to the
-  * uploaded=false partition exactly like the reference's upload_idx
-  * index scan (init-db.sh:25, database.go:18).
+  * flag as a partition column.
+  *
+  * Reads: every live-row read — [[all]], `pending()`, the pending
+  * point/range/rectangle reads and the commits' probes — is the
+  * `graft-store` connector's current-snapshot scan
+  * ([[graft.sources.CustomerStoreScan]]) planned over THIS store: its
+  * live-file listing, its driver-resident [[StatsSnapshot]] and one
+  * driver read of the deletion vectors, with no second store and no
+  * recovery while it plans. The scan makes the one file-pruning
+  * decision (partition directory, id zone, evolved-column zone, email
+  * bloom) and applies the one tombstone rule (each file's own vector
+  * rows); `pending()`'s `uploaded = false` filter prunes to the
+  * pending partition exactly like the reference's upload_idx index
+  * scan (init-db.sh:25, database.go:18). Each row's data file is the
+  * scan's `_file` metadata column.
   *
   * Scale: partitioning by a boolean splits the table into hot (pending)
   * and cold (done) halves; the hot half is what the uploader rescans,
@@ -56,7 +69,7 @@ import org.apache.spark.sql.graft.StagedWrite
   * per entry at the default 2^17 bloom bits: 16 KiB of bloom words
   * plus the 128-entry sample.
   */
-class CustomerStore(protected val spark: SparkSession, path: String,
+class CustomerStore(protected val spark: SparkSession, private[graft] val path: String,
     commitClock: () => Long = () => System.currentTimeMillis(),
     bloomBits: Long = CustomerStore.DefaultBloomBits)
     extends CustomerStoreApi {
@@ -94,34 +107,26 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     new java.io.File(path).exists() &&
       new java.io.File(path).listFiles().exists(f => f.getName.startsWith("uploaded="))
 
-  def all(): DataFrame =
-    if (tableExists) allWithFile().select(tableSchema.fieldNames.map(col): _*)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
+  def all(): DataFrame = liveRead()
 
-  /** The live table with each row's physical file URI in `_file`,
-    * DELETION VECTORS APPLIED. `_file` is captured at the scan (before
-    * the anti-join — `input_file_name()` is a task-local scan function
-    * and returns nothing above a shuffle), so file-level commit paths
-    * (ack, merge) can keep selecting touched files through it.
+  /** The live table through the connector's current-snapshot scan,
+    * planned over this store (see the class doc): the files it may open
+    * are pinned here, when the read is defined, and `only` restricts them
+    * to the named data files (basenames) — a file set the store's own
+    * consult chose (the touched files of a commit, a Z-order delta, a
+    * hash-shard zone). With `withFile` each row also carries its data
+    * file's absolute path in `_file`, the connector's metadata column.
     */
-  private def allWithFile(): DataFrame =
-    withVectorsApplied(
-      spark.read.schema(physicalize(tableSchema)).parquet(path)
-        .withColumn("_file", input_file_name())
-        .select(col("_file") +:
-          tableSchema.fields.map(f => col(physName(f)).as(f.name)).toIndexedSeq: _*)
-        .select(tableSchema.fieldNames.map(col) :+ col("_file"): _*))
+  private def liveRead(only: Option[Set[String]] = None, withFile: Boolean = false): DataFrame = {
+    val table = new graft.sources.CustomerStoreTable(path, None, None,
+      Some(graft.sources.StoreRead(this, liveFiles(), only)))
+    val rows = org.apache.spark.sql.graft.PlanDataFrame.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(table, None, None))
+    if (withFile) rows.select(col("*"), col(graft.sources.CustomerStoreTable.FileColumn))
+    else rows
+  }
 
   // ---- Merge-on-read deletion vectors --------------------------------
-
-  /** True iff any deletion-vector file exists (fast path: readers skip
-    * the anti-join entirely on vector-free tables).
-    */
-  private def hasDeletes: Boolean = {
-    val d = new java.io.File(path, Deletes)
-    d.isDirectory && d.listFiles().exists(_.getName.endsWith(".parquet"))
-  }
 
   private def dvSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("file",
@@ -145,39 +150,29 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dvSchema)
   }
 
+  /** Every committed deletion-vector row as data-file basename → the
+    * emails it tombstones there, read on the driver (vectors are
+    * metadata-scale, like the manifest), no job — the one read behind
+    * each scan's tombstone sets ([[liveFiles]]) and
+    * [[deletionVectorStats]].
+    */
+  private def tombstoneRows(): Map[String, Seq[UTF8String]] =
+    deletionVectorFiles().flatMap(f =>
+      graft.sources.ParquetGroups.readAll(f, Seq("file", "email")).collect {
+        case Array(file: UTF8String, email: UTF8String) => file.toString -> email
+      }).groupMap(_._1)(_._2)
+
   /** (total vector rows, rows still matching a live data file) — the
     * live count is what merge-on-read reads pay for; compaction
-    * materializes the deletes and drives it back to zero. Read on the
-    * driver (vectors are metadata-scale, like the manifest), no job.
+    * materializes the deletes and drives it back to zero.
     */
   def deletionVectorStats(): (Long, Long) = {
-    val files = deletionVectorFiles()
-    if (files.isEmpty) return (0L, 0L)
-    lazy val liveNames = (livePendingFiles().map(_._1) ++ {
-      val d = new java.io.File(path, "uploaded=true")
-      if (d.exists()) d.listFiles().toSeq.filter(_.getName.endsWith(".parquet")).map(_.getName)
-      else Seq.empty
-    }).toSet
-    var total, live = 0L
-    files.foreach(f => readParquetRows(f, dvSchema).foreach { r =>
-      total += 1
-      if (!r.isNullAt(0) && liveNames(r.getString(0))) live += 1
-    })
-    (total, live)
+    val rows = tombstoneRows()
+    if (rows.isEmpty) return (0L, 0L)
+    val live = liveDataFiles().map(_._1).toSet
+    (rows.values.map(_.size.toLong).sum,
+      rows.collect { case (f, es) if live(f) => es.size.toLong }.sum)
   }
-
-  /** Anti-join a `_file`-carrying frame against the deletion vectors
-    * (match on basename + email). No-op on vector-free tables.
-    */
-  private def withVectorsApplied(df: DataFrame): DataFrame =
-    if (!hasDeletes) df
-    else {
-      val dv = deletionVectors()
-        .select(col("file").as("_dvf"), col("email").as("_dve"))
-      df.join(dv,
-        element_at(split(col("_file"), "/"), -1) === col("_dvf") &&
-          col("email") === col("_dve"), "left_anti")
-    }
 
   /** Merge-on-read DELETE: tombstone every live row whose email is in
     * `emails` WITHOUT touching any data file — the commit stages only
@@ -185,8 +180,9 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * retraction feed rows (full pre-images, weight −1 under the
     * standard `_pre` convention, so every incremental consumer
     * subtracts them with no new code), and promotes them by the same
-    * atomic rename as every mutation. Readers anti-join the vectors
-    * ([[allWithFile]]); [[compact]] materializes them physically.
+    * atomic rename as every mutation. Readers drop each file's
+    * tombstoned emails ([[liveRead]]); [[compact]] materializes them
+    * physically.
     * An empty match commits nothing (the reference's empty-batch
     * no-op). Returns the number of rows tombstoned.
     */
@@ -205,7 +201,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
   private[pipeline] def deleteCommit(emails: DataFrame): (Long, Option[Commit]) = {
     val keys = emails.select(col("email").as("_del")).distinct()
     val hit = graft.util.Labeled(spark, "store: delete probe") {
-      allWithFile()
+      liveRead(withFile = true)
         .join(keys, col("email") === col("_del"), "left_semi")
         .withColumn("_file", element_at(split(col("_file"), "/"), -1))
         .localCheckpoint(true)
@@ -361,15 +357,6 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       logical: org.apache.spark.sql.types.StructType): DataFrame =
     df.select(logical.fields.filter(f => df.columns.contains(f.name))
       .map(f => col(f.name).as(physName(f))).toIndexedSeq: _*)
-
-  /** Read parquet written with physical names, presenting `logical`.
-    * Missing physical columns (files older than an ADD) null-fill;
-    * dead physical columns (a later DROP) are never requested.
-    */
-  private def readPhysical(logical: org.apache.spark.sql.types.StructType,
-      paths: Seq[String]): DataFrame =
-    spark.read.schema(physicalize(logical)).parquet(paths: _*)
-      .select(logical.fields.map(f => col(physName(f)).as(f.name)).toIndexedSeq: _*)
 
   /** The table's data-file schema: every column but the partition
     * directory's `uploaded`.
@@ -1095,13 +1082,11 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       if (nLive > 0) {
         val touched = hit.select(col("_file")).distinct()
           .collect().map(_.getString(0)).toSeq
-        // Survivors: the touched files' rows with OTHER keys' vectors
-        // applied (the replacement files make those vectors inert too),
+        // Survivors: the touched files' live rows (OTHER keys' vectors
+        // applied — the replacement files make those vectors inert too),
         // minus the purged keys.
-        val survivors = withVectorsApplied(
-            phys.filter(col("_file").isInCollection(touched)))
+        val survivors = liveRead(Some(touched.map(baseName).toSet))
           .filter(!col("email").isInCollection(keys))
-          .select(tableSchema.fieldNames.map(col).toIndexedSeq: _*)
         commit(Commit.partitioned("PURGE", survivors)
           .copy(remove = touched, changes = Some(noChanges)))
       }
@@ -1290,12 +1275,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         .cast("long")))
     val zkey = graft.util.DataSkipping.zorderKey(
       idBucket, CustomerStore.hashBucket(col("id")), 6)
-    val rows = withVectorsApplied(
-        readPhysical(dataLogicalSchema, delta.map(_._2))
-          .withColumn("uploaded", lit(false))
-          .withColumn("_file", input_file_name()))
-      .select(tableSchema.fieldNames.map(col): _*)
-      .repartitionByRange(filesPerDelta, zkey)
+    val rows = liveRead(Some(delta.map(_._1).toSet)).repartitionByRange(filesPerDelta, zkey)
     commit(Commit.partitioned("OPTIMIZE", rows)
       .copy(remove = delta.map(_._2), changes = Some(noChanges)))
   }
@@ -1354,19 +1334,16 @@ class CustomerStore(protected val spark: SparkSession, path: String,
       changes = Some(ins.unionByName(del).unionByName(updPre).unionByName(upd))))
   }
 
-  /** Zone-pruned id-range read over the pending partition: consult the
-    * per-commit zone manifest and OPEN only live files whose
-    * [min_id, max_id] intersects [lo, hi]; a file without manifest
-    * coverage degrades to a read, never a wrong answer. The exact
-    * predicate is re-applied to the opened files and deletion vectors
-    * are honored. Returns (rows, filesRead, filesTotal) so callers can
-    * assert the skip actually happened.
+  /** Zone-pruned id-range read over the pending partition: the scan
+    * consults the per-commit zone manifest and OPENS only live files
+    * whose [min_id, max_id] intersects [lo, hi]; a file without
+    * manifest coverage degrades to a read, never a wrong answer. The
+    * exact predicate is re-applied to the opened files and deletion
+    * vectors are honored. Returns (rows, filesRead, filesTotal) so
+    * callers can assert the skip actually happened.
     */
   def pendingRangeRead(lo: Long, hi: Long): (DataFrame, Int, Int) =
-    zonePrunedPendingRead(
-      idZ => idZ.forall { case (mn, mx) => mx >= lo && mn <= hi },
-      _ => true,
-      col("id") >= lo && col("id") <= hi)
+    pendingRead(col("id") >= lo && col("id") <= hi)
 
   /** TWO-dimensional zone-pruned read over the pending partition: open
     * only live files whose [min_id,max_id] × [min_hb,max_hb] zone
@@ -1374,47 +1351,38 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * band). After [[optimizeZorder]] every file's rectangle is tight
     * in BOTH dimensions, so id-only reads, shard-only reads, and true
     * rectangles all prune — a single-key clustering ([[optimize]])
-    * serves only its leading column. Missing stats degrade to a read,
-    * never a wrong answer; the exact predicate is re-applied and
-    * deletion vectors are honored. Returns (rows, filesRead,
-    * filesTotal) so callers can assert the skip happened.
+    * serves only its leading column. The shard band is no pushable
+    * filter, so its zone consult restricts the scan's files and the
+    * scan prunes the id range. Missing stats degrade to a read, never
+    * a wrong answer; the exact predicate is re-applied and deletion
+    * vectors are honored. Returns (rows, filesRead, filesTotal) so
+    * callers can assert the skip happened.
     */
   def pendingRectRead(idLo: Long, idHi: Long, hbLo: Long, hbHi: Long)
-      : (DataFrame, Int, Int) =
-    zonePrunedPendingRead(
-      _.forall { case (mn, mx) => mx >= idLo && mn <= idHi },
-      _.forall { case (mn, mx) => mx >= hbLo && mn <= hbHi },
-      col("id") >= idLo && col("id") <= idHi &&
-        CustomerStore.hashBucket(col("id")).between(hbLo, hbHi))
-
-  /** Shared zone-consulted pending read: keep a live file iff its
-    * latest zone entry passes BOTH dimension tests (a missing entry or
-    * a null dimension keeps the file — may-contain metadata degrades
-    * to a read), then re-apply the exact predicate to the opened
-    * files.
-    */
-  private def zonePrunedPendingRead(
-      idKeep: Option[(Long, Long)] => Boolean,
-      hbKeep: Option[(Long, Long)] => Boolean,
-      exact: org.apache.spark.sql.Column): (DataFrame, Int, Int) = {
-    recover()
-    val files = livePendingFiles()
+      : (DataFrame, Int, Int) = {
     val stats = manifest.current()
-    val keep = files.filter { case (name, _) =>
-      stats.get(name).forall(s => idKeep(s.idZone) && hbKeep(s.hbZone))
+    val inBand = livePendingFiles().map(_._1).filter(n => stats.get(n).flatMap(_.hbZone)
+      .forall { case (mn, mx) => mx >= hbLo && mn <= hbHi }).toSet
+    pendingRead(col("id") >= idLo && col("id") <= idHi &&
+      CustomerStore.hashBucket(col("id")).between(hbLo, hbHi), Some(inBand))
+  }
+
+  /** The pending rows matching `cond`, with the files the planned scan
+    * keeps and the pending files it chose them from — read off the very
+    * scan the rows come from (planning runs no job). A condition the
+    * optimizer folds to false plans no scan and keeps no file.
+    */
+  private def pendingRead(cond: org.apache.spark.sql.Column,
+      only: Option[Set[String]] = None): (DataFrame, Int, Int) = {
+    val rows = liveRead(only).filter(!col("uploaded") && cond)
+    rows.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    } match {
+      case Some(scan: graft.sources.CustomerStoreScan) =>
+        val (kept, total) = scan.filesKept
+        (rows, kept, total)
+      case _ => (rows, 0, livePendingFiles().size)
     }
-    val rows =
-      if (keep.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-      else
-        withVectorsApplied(
-          readPhysical(dataLogicalSchema, keep.map(_._2))
-            .filter(exact)
-            .withColumn("uploaded", lit(false))
-            .withColumn("_file", input_file_name()))
-          .select(tableSchema.fieldNames.map(col): _*)
-    (rows, keep.size, files.size)
   }
 
   private def snapshotDir(v: Long): java.io.File =
@@ -1645,10 +1613,10 @@ class CustomerStore(protected val spark: SparkSession, path: String,
   // transactional table format's scan planning follows.
 
   /** Every live data file as (basename, absolute path, uploaded
-    * partition value) — the current snapshot's complete file list.
+    * partition value) — the current snapshot's complete file list, as
+    * the last promoted state shows it (a listing, no recovery).
     */
   def liveDataFiles(): Seq[(String, String, Boolean)] = {
-    recover()
     val done = {
       val d = new java.io.File(path, "uploaded=true")
       if (!d.exists()) Seq.empty
@@ -1656,6 +1624,17 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         .map(f => (f.getName, f.getAbsolutePath, true))
     }
     livePendingFiles().map { case (n, p) => (n, p, false) } ++ done
+  }
+
+  /** The current snapshot as one read sees it: the live data files and
+    * each one's tombstoned emails, from one listing and one driver read
+    * of the deletion vectors. Runs no recovery and takes no lock, so a
+    * read plans while a committer holds the promotion lock.
+    */
+  private[graft] def liveFiles(): LiveFiles = {
+    val files = liveDataFiles()
+    val names = files.map(_._1).toSet
+    LiveFiles(files, tombstoneRows().collect { case (f, es) if names(f) => f -> es.toSet })
   }
 
   /** COUNT(*)/MIN(id)/MAX(id) over the live table FROM THE ZONE
@@ -1668,9 +1647,9 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * answers (0, None, None).
     */
   def manifestAggregates(): Option[(Long, Option[Long], Option[Long])] = {
-    val live = liveDataFiles()
-    if (live.isEmpty) return Some((0L, None, None))
-    coveredZoneRows(live.map(_._1).toSet).map { zones =>
+    val live = liveFiles()
+    if (live.files.isEmpty) return Some((0L, None, None))
+    coveredZoneRows(live).map { zones =>
       (zones.map(_._2).sum, Some(zones.map(_._3).min), Some(zones.map(_._4).max))
     }
   }
@@ -1681,13 +1660,14 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * derivable because `uploaded` IS the partition directory). Same
     * exactness refusals; one output row per NON-EMPTY partition (SQL
     * GROUP BY emits no row for an empty group). None when it cannot
-    * be exact.
+    * be exact. `live` is the snapshot consulted (a scan passes the one
+    * it plans over).
     */
-  def manifestAggregatesGrouped(): Option[Seq[(Boolean, Long, Option[Long], Option[Long])]] = {
-    val live = liveDataFiles()
-    if (live.isEmpty) return Some(Seq.empty)
-    coveredZoneRows(live.map(_._1).toSet).map { zones =>
-      val uploadedOf = live.map(f => f._1 -> f._3).toMap
+  def manifestAggregatesGrouped(live: LiveFiles = liveFiles())
+      : Option[Seq[(Boolean, Long, Option[Long], Option[Long])]] = {
+    if (live.files.isEmpty) return Some(Seq.empty)
+    coveredZoneRows(live).map { zones =>
+      val uploadedOf = live.files.map(f => f._1 -> f._3).toMap
       zones.groupBy(z => uploadedOf(z._1)).toSeq.map { case (u, zs) =>
         (u, zs.map(_._2).sum, Some(zs.map(_._3).min), Some(zs.map(_._4).max))
       }.sortBy(_._1)
@@ -1703,14 +1683,12 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * null-skipping semantics), so a group whose files are all-null
     * serves the honest NULL extrema.
     */
-  def manifestEvolvedExtremaGrouped(physCol: String)
+  def manifestEvolvedExtremaGrouped(physCol: String, live: LiveFiles = liveFiles())
       : Option[Seq[(Boolean, Option[Long], Option[Long])]] = {
-    val live = liveDataFiles()
-    if (live.isEmpty) return Some(Seq.empty)
-    val (_, liveVectors) = deletionVectorStats()
-    if (liveVectors > 0L) return None
+    if (live.files.isEmpty) return Some(Seq.empty)
+    if (live.tombstones.nonEmpty) return None
     val stats = manifest.current()
-    val extrema = live.map(f => (f._3, stats.get(f._1).flatMap(_.evolved.get(physCol))))
+    val extrema = live.files.map(f => (f._3, stats.get(f._1).flatMap(_.evolved.get(physCol))))
     if (extrema.exists(_._2.isEmpty)) return None
     Some(extrema.groupBy(_._1).toSeq.map { case (u, es) =>
       (u, es.flatMap(_._2.get._1).minOption, es.flatMap(_._2.get._2).maxOption)
@@ -1724,15 +1702,13 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * zone rows are may-contain metadata under deletes) or a live file
     * without complete non-null coverage.
     */
-  private def coveredZoneRows(names: Set[String])
-      : Option[Seq[(String, Long, Long, Long)]] = {
-    val (_, liveVectors) = deletionVectorStats()
-    if (liveVectors > 0L) return None
+  private def coveredZoneRows(live: LiveFiles): Option[Seq[(String, Long, Long, Long)]] = {
+    if (live.tombstones.nonEmpty) return None
     // Demand complete non-null coverage of the live set.
     val stats = manifest.current()
-    val zones = names.toSeq.flatMap(n => stats.get(n).flatMap(s =>
-      for (r <- s.nRows; mn <- s.minId; mx <- s.maxId) yield (n, r, mn, mx)))
-    if (zones.size != names.size) None // a live file lacks coverage
+    val zones = live.files.flatMap { case (n, _, _) => stats.get(n).flatMap(s =>
+      for (r <- s.nRows; mn <- s.minId; mx <- s.maxId) yield (n, r, mn, mx)) }
+    if (zones.size != live.files.size) None // a live file lacks coverage
     else Some(zones)
   }
 
@@ -1784,19 +1760,10 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     }
   }
 
-  /** Bloom-consulted selection of the pending files that may contain
-    * any of `emails` (see [[bloomKeepFiles]]). Returns (paths to open,
-    * total live).
-    */
-  private def prunePendingByBloom(emails: Seq[String]): (Seq[String], Int) = {
-    val files = livePendingFiles()
-    (bloomKeepFiles(files, emails), files.size)
-  }
-
   /** Bloom-manifest file pruning for an email IN-list over an
-    * arbitrary live-file list (the generic core of
-    * [[pendingPointLookup]]'s consult, also the DSv2 planner's email
-    * prune). Returns the paths that MAY contain any of `emails`:
+    * arbitrary live-file list (the scan's email prune, behind
+    * [[pendingPointLookup]] and the ack's candidate read). Returns the
+    * paths that MAY contain any of `emails`:
     * each covered file's latest filter is probed on the driver at the
     * bit positions [[CustomerStore.bloomPositions]] computes — the
     * very expression [[stageStats]] set them with, per file geometry,
@@ -1815,27 +1782,13 @@ class CustomerStore(protected val spark: SparkSession, path: String,
   }
 
   /** Email point lookup over the pending partition THROUGH the
-    * per-commit bloom manifest: open only may-contain files, re-apply
-    * the exact IN predicate. Returns (rows, filesRead, filesTotal) so
-    * callers can assert the skip actually happened — the store-native
-    * point-read the work-queue's ack path uses.
+    * per-commit bloom manifest: the scan opens only may-contain files
+    * and re-applies the exact IN predicate. Returns (rows, filesRead,
+    * filesTotal) so callers can assert the skip actually happened — the
+    * store-native point-read the work-queue's ack path uses.
     */
-  def pendingPointLookup(emails: Seq[String]): (DataFrame, Int, Int) = {
-    recover()
-    val (keep, total) = prunePendingByBloom(emails)
-    val rows =
-      if (keep.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-      else
-        withVectorsApplied(
-          readPhysical(dataLogicalSchema, keep)
-            .filter(col("email").isin(emails: _*))
-            .withColumn("uploaded", lit(false))
-            .withColumn("_file", input_file_name()))
-          .select(tableSchema.fieldNames.map(col): _*)
-    (rows, keep.size, total)
-  }
+  def pendingPointLookup(emails: Seq[String]): (DataFrame, Int, Int) =
+    pendingRead(col("email").isin(emails: _*))
 
   /** Post-ack state transition (S7, database.go:176-198): flip
     * uploaded=true for the given emails and touch modified_ts — the
@@ -1843,12 +1796,11 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * (init-db.sh:28-36). A FILE-LEVEL commit: only the pending files
     * that actually contain acked emails are rewritten (their survivors
     * as replacement files, the flipped rows appended to the done
-    * partition); every untouched pending file stays in place. Point-
-    * lookup-sized ack batches (≤ PointLookupMax) select the touched
-    * files through the per-commit bloom manifest — only may-contain
-    * files are ever OPENED, the index consult the reference's
-    * upload_idx does in Postgres — while larger batches fall back to
-    * the pending scan + semi-join (they touch most files anyway).
+    * partition); every untouched pending file stays in place. The
+    * acked emails reach the candidate read as an IN filter, so the scan
+    * opens only the pending files their blooms may contain — the index
+    * consult the reference's upload_idx does in Postgres (a set past
+    * the scan's bloom-probe cap reads the pending partition).
     *
     * Commit protocol (the analog of the reference's BEGIN/COMMIT,
     * database.go:131-153): all outputs are first written to an
@@ -1872,34 +1824,14 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * to stop at the commit point.
     */
   private[pipeline] def ackCommit(ackedEmails: DataFrame): Commit = {
-    val acked = ackedEmails.select(col("email").as("_ack")).distinct()
-      .localCheckpoint(true)
-    // Candidate pending rows, tagged with their physical file. The
-    // bloom path reads ONLY may-contain files; missing manifest
-    // coverage or a batch past the point-lookup gate reads the
-    // pending partition (still pruned to one partition).
-    val candidates: DataFrame =
-      if (acked.count() <= PointLookupMax) {
-        val emails = acked.collect().map(_.getString(0)).toSeq
-        val (keep, _) = prunePendingByBloom(emails)
-        if (keep.isEmpty)
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              dataLogicalSchema)
-            .withColumn("uploaded", lit(false))
-            .withColumn("_file", lit(""))
-        else
-          withVectorsApplied(
-            readPhysical(dataLogicalSchema, keep)
-              .withColumn("uploaded", lit(false))
-              .withColumn("_file", input_file_name()))
-      } else
-        allWithFile().filter(!col("uploaded"))
-    // Pre-image first (the rows about to flip), pinned before any file
-    // moves; the post-image derives from it so both reflect ONE scan.
+    val emails = ackedEmails.select(col("email")).distinct().collect()
+      .flatMap(r => Option(r.getString(0))).toSeq
+    // Pre-image first (the rows about to flip, tagged with their file),
+    // pinned before any file moves; the post-image derives from it so
+    // both reflect ONE scan.
     val (movedPre, touched, moved) = graft.util.Labeled(spark, "store: ack preimage") {
-      val pre = candidates.join(acked, col("email") === col("_ack"), "left_semi")
-        .select(col("_file") +: tableSchema.fieldNames.map(col): _*)
+      val pre = liveRead(withFile = true)
+        .filter(!col("uploaded") && col("email").isInCollection(emails))
         .localCheckpoint(true)
       (pre,
         pre.select(col("_file")).distinct()
@@ -1910,13 +1842,9 @@ class CustomerStore(protected val spark: SparkSession, path: String,
           .select(tableSchema.fieldNames.map(col): _*)
           .localCheckpoint(true)) // one evaluation feeds both the commit and its changelog
     }
-    val survivors =
-      if (touched.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-      else candidates.filter(col("_file").isInCollection(touched))
-        .join(acked, col("email") === col("_ack"), "left_anti")
-        .select(tableSchema.fieldNames.map(col): _*)
+    // Survivors: the touched files' live rows minus the acked emails.
+    val survivors = liveRead(Some(touched.map(baseName)))
+      .filter(!col("email").isInCollection(emails))
     Commit("UPDATE", pending = Some(survivors), done = Some(moved), remove = touched.toSeq,
       changes = Some(changeRows(movedPre.drop("_file"), "ack_pre")
         .unionByName(changeRows(moved, "ack"))))
@@ -2066,7 +1994,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * commit — the transactional-format shape (Delta/Iceberg MERGE)
     * rather than a table rewrite. The matched emails first select the
     * TOUCHED physical files (one manifest-sized semi-join + distinct
-    * on `input_file_name`); only those files are rewritten (their
+    * on the scan's `_file`); only those files are rewritten (their
     * surviving rows + the updated rows + the inserts, staged as
     * commit-unique replacement files alongside a remove-list of the
     * touched file names), and every untouched file is left in place —
@@ -2106,23 +2034,19 @@ class CustomerStore(protected val spark: SparkSession, path: String,
     * it to stop at the commit point.
     */
   private[pipeline] def mergeCommit(updates: DataFrame, inserts: DataFrame): Commit = {
-    val withFile = allWithFile()
+    val updated = updates.select(col("email").as("_ue"))
     // Pre-image: the stored rows the updates replace, pinned before
     // the staged rewrite starts moving the files they live in.
     val (updatesPre, touched) = graft.util.Labeled(spark, "store: merge preimage") {
-      val pre = withFile
-        .join(updates.select(col("email").as("_ue")), col("email") === col("_ue"), "left_semi")
-        .select(col("_file") +: tableSchema.fieldNames.map(col): _*)
+      val pre = liveRead(withFile = true)
+        .join(updated, col("email") === col("_ue"), "left_semi")
         .localCheckpoint(true)
       (pre, pre.select(col("_file")).distinct()
         .collect().map(_.getString(0)).toSet)
     }
-    val survivors =
-      if (touched.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-      else withFile.filter(col("_file").isInCollection(touched))
-        .join(updates.select(col("email").as("_ue")), col("email") === col("_ue"), "left_anti")
-        .select(tableSchema.fieldNames.map(col): _*)
+    // Survivors: the touched files' live rows the updates do not replace.
+    val survivors = liveRead(Some(touched.map(baseName)))
+      .join(updated, col("email") === col("_ue"), "left_anti")
     Commit.partitioned("MERGE", survivors.unionByName(updates).unionByName(inserts))
       .copy(remove = touched.toSeq, changes = Some(
         changeRows(updatesPre.drop("_file"), "update_pre")
@@ -2178,7 +2102,7 @@ class CustomerStore(protected val spark: SparkSession, path: String,
         val names =
           if (c.replaceAll) graft.sources.ParquetGroups.parquetFilesIn(
             new java.io.File(path, dir).toString).map(new java.io.File(_).getName)
-          else c.remove.filter(_.contains(s"/$dir/")).map(u => u.substring(u.lastIndexOf('/') + 1))
+          else c.remove.filter(_.contains(s"/$dir/")).map(baseName)
         if (names.nonEmpty) writeText(new java.io.File(tmp, s"remove-$name"), names.mkString("\n"))
         name -> names.size
       }.toMap
@@ -2539,7 +2463,8 @@ class CustomerStore(protected val spark: SparkSession, path: String,
           missing.take(5).mkString(", "))
     val chg = new java.io.File(tmp, "changelog")
     if (chg.isDirectory) {
-      val mine = readPhysical(changeSchema, Seq(chg.toString))
+      // `id` and `email` are structural, so their physical names are theirs.
+      val mine = graft.sources.ParquetGroups.read(spark, chg.toString)
         .select(col("id"), col("email")).distinct().localCheckpoint(true)
       if (mine.limit(1).count() > 0) {
         // The connector plans a feed read from the store's files alone
@@ -2804,6 +2729,13 @@ object CustomerStore {
     */
   private final case class Staged(tmp: java.io.File, version: Long, dataRows: Long)
 
+  /** One read's view of the current snapshot: the live data files as
+    * (basename, absolute path, uploaded partition value), and for each
+    * live file with deletion-vector rows the emails they tombstone.
+    */
+  final case class LiveFiles(files: Seq[(String, String, Boolean)],
+      tombstones: Map[String, Set[UTF8String]])
+
   /** The change-feed write's fold: rows per `change_type`. */
   private object ChangeKinds extends StagedWrite.FileFold[mutable.Map[String, Long]] {
     def zero(): mutable.Map[String, Long] = mutable.HashMap.empty
@@ -2983,14 +2915,6 @@ object CustomerStore {
     if (interrupted) throw new InterruptedException("staging chains interrupted")
   }
 
-  /** Ack/update batches at or below this size consult the per-file
-    * bloom manifest to open only may-contain files; larger batches
-    * touch most files anyway, so the full pending scan + semi-join is
-    * the better plan (the same planner choice a format's metadata
-    * index makes between point lookups and batch scans).
-    */
-  private[pipeline] val PointLookupMax = 256
-
   /** Table-sample size for the ANALYZE-style selectivity stats: each
     * file's commit stages its bottom-SampleK KMV rows, and the
     * table-level estimate re-trims the live union to SampleK (exact
@@ -3020,6 +2944,9 @@ object CustomerStore {
     */
   def hashBucket(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(pmod(pmod(c, lit(65537L)) * lit(48271L), lit(65537L)), lit(HashShards))
+
+  /** The file name a path or URI ends in. */
+  private def baseName(p: String): String = p.substring(p.lastIndexOf('/') + 1)
 
   private[pipeline] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(deleteRecursively)

@@ -469,8 +469,8 @@ object TextAnalysis extends QueryGroup {
     // INDEX LIFECYCLE UNDER DELETION, merge-on-read leg: the persisted
     // positional postings keep serving after documents are deleted —
     // WITHOUT a rebuild — by anti-joining the tombstone set at probe
-    // time (the same pattern the store's deletion vectors use:
-    // CustomerStore.withVectorsApplied). The tombstone set (every 7th
+    // time (the same pattern as the store's deletion vectors, which
+    // its scan applies per file). The tombstone set (every 7th
     // doc) is a TABLE, not a pushed filter: at 100 TB it is the
     // deleted-doc manifest, joined against the two RETRIEVED posting
     // lists — one anti-join on the pa side suffices because the

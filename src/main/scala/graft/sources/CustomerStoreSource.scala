@@ -44,9 +44,15 @@ import graft.pipeline.{CustomerSchema, CustomerStore}
   *    files are never opened.
   *  - COLUMN PRUNE: the projected schema reaches the parquet page
   *    level (unrequested columns are not decoded).
-  *  - DELETION VECTORS: each data-file reader anti-joins its file's
-  *    committed (file, email) tombstones — merge-on-read, identical
-  *    to the API path's [[CustomerStore.all]].
+  *  - DELETION VECTORS: planning reads the committed (file, email)
+  *    tombstones once on the driver and hands each data-file reader
+  *    its own file's emails to skip — merge-on-read.
+  *
+  * This current-snapshot scan is the store's one live-row reader:
+  * [[CustomerStore.all]], `pending()`, the pending point/range/rect
+  * reads and the commits' probes plan it over the calling store
+  * ([[StoreRead]]), and read each row's data file from its `_file`
+  * metadata column.
   *
   * History is served here and only here: [[CustomerStore.asOf]],
   * [[CustomerStore.asOfTimestamp]], [[CustomerStore.changeFeed]] and
@@ -548,21 +554,46 @@ object StoreMetaReaderFactory extends PartitionReaderFactory {
     }
 }
 
+/** A current-snapshot read a [[CustomerStore]] plans over itself
+  * ([[CustomerStore.all]] and the store's pending reads and commit
+  * probes): the live files pinned when the read was defined, and the
+  * data files (basenames) the store's own consult restricts it to. No
+  * second store is built and no recovery runs while it plans.
+  */
+final case class StoreRead(store: CustomerStore, live: CustomerStore.LiveFiles,
+    only: Option[Set[String]])
+
+/** The store as a DSv2 table. A provider or catalog load builds one
+  * [[CustomerStore]] for the table (at its first use); the store's own
+  * reads pass themselves in `own`. A current-snapshot table serves each
+  * row's data file as the `_file` metadata column (Iceberg's `_file`
+  * contract): hidden from `SELECT *`, resolved when referenced.
+  */
 class CustomerStoreTable(val path: String, val versionAsOf: Option[Long],
-    val timestampAsOf: Option[Long]) extends Table with SupportsRead with SupportsWrite
-    with SupportsDelete {
+    val timestampAsOf: Option[Long], own: Option[StoreRead] = None)
+    extends Table with SupportsRead with SupportsWrite with SupportsDelete
+    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
+  private lazy val store: CustomerStore =
+    own.fold(new CustomerStore(SparkSession.active, path))(_.store)
   /** The time-travel target, resolved and validated once, at load: a
     * version the retained history cannot reconstruct (or a timestamp a
     * registry-less store cannot date) fails when the read is defined.
     */
   private val travel: Option[TimeTravel] =
     if (versionAsOf.isEmpty && timestampAsOf.isEmpty) None
-    else {
-      val store = new CustomerStore(SparkSession.active, path)
-      Some(TimeTravel(store, versionAsOf.getOrElse(store.versionAt(timestampAsOf.get))))
-    }
+    else Some(TimeTravel(store, versionAsOf.getOrElse(store.versionAt(timestampAsOf.get))))
   override def name(): String = s"graft_store($path)"
-  override def schema(): StructType = CustomerStore.schemaAt(path)
+  /** The store's schema; the store's own reads present their rows the
+    * way its data files read back, every column nullable and free of
+    * field metadata, so rows they write back keep the files' schemas.
+    */
+  override def schema(): StructType = {
+    val s = CustomerStore.schemaAt(path)
+    if (own.isEmpty) s
+    else StructType(s.fields.map(f => StructField(f.name, f.dataType, nullable = true)))
+  }
+  override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    if (travel.isEmpty) Array(CustomerStoreTable.FileMetadata) else Array.empty
   // AUTOMATIC_SCHEMA_EVOLUTION gates `MERGE WITH SCHEMA EVOLUTION`:
   // Spark's MergeIntoTable.schemaEvolutionEnabled is the AND of the
   // statement keyword and this capability (keyword alone does nothing,
@@ -573,7 +604,7 @@ class CustomerStoreTable(val path: String, val versionAsOf: Option[Long],
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CustomerStoreScanBuilder(path, travel)
+    new CustomerStoreScanBuilder(store, travel, own)
 
   /** SQL `DELETE FROM graft_store.\`path\` WHERE …` — the row-level
     * mutation face of the same merge-on-read machinery the API's
@@ -594,14 +625,12 @@ class CustomerStoreTable(val path: String, val versionAsOf: Option[Long],
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(travel.isEmpty,
       "graft-store: a time-travel table is read-only")
-    val s = SparkSession.active
     val cond = filters.iterator
       .map(f => CustomerStoreDelete.toColumn(f).getOrElse(
         throw new UnsupportedOperationException(
           s"graft-store DELETE: unsupported predicate $f")))
       .reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true))
-    val store = new CustomerStore(s, path)
     store.delete(store.all().filter(cond)
       .select(org.apache.spark.sql.functions.col("email"))): Unit
   }
@@ -628,12 +657,23 @@ class CustomerStoreTable(val path: String, val versionAsOf: Option[Long],
               require(!overwrite,
                 "graft-store: overwrite is not supported — the store is an " +
                   "append/merge/delete commit log (use delete + insert, or RESTORE)")
-              new CustomerStore(data.sparkSession, path)
-                .insertNew(data): Unit
+              store.insertNew(data): Unit
             }
           }
       }
     }
+  }
+}
+
+object CustomerStoreTable {
+  /** The metadata column carrying each row's data file (absolute path). */
+  val FileColumn = "_file"
+
+  private[sources] object FileMetadata extends org.apache.spark.sql.connector.catalog.MetadataColumn {
+    override def name(): String = FileColumn
+    override def dataType(): DataType = StringType
+    override def isNullable(): Boolean = false
+    override def comment(): String = "the data file holding the row"
   }
 }
 
@@ -815,10 +855,12 @@ private[sources] object CustomerStoreDelete {
   }
 }
 
-class CustomerStoreScanBuilder(path: String, travel: Option[TimeTravel]) extends ScanBuilder
+class CustomerStoreScanBuilder(store: CustomerStore, travel: Option[TimeTravel],
+    own: Option[StoreRead] = None) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with SupportsPushDownAggregates {
 
+  private val path = store.path
   private var required: StructType = CustomerStore.schemaAt(path)
   private var pushed: Array[Filter] = Array.empty
   private var aggPush: Option[StoreAggPush] = None
@@ -884,7 +926,8 @@ class CustomerStoreScanBuilder(path: String, travel: Option[TimeTravel]) extends
   }
 
   private def doResolve(aggregation: Aggregation): Option[StoreAggPush] = {
-    if (travel.nonEmpty) return None
+    // The manifest answers for the whole live table, not a file subset.
+    if (travel.nonEmpty || own.exists(_.only.nonEmpty)) return None
     // The one pushed-filter shape that stays manifest-exact: the
     // partition predicate. Anything else refuses to the data path.
     val partitionOnly = pushed.forall {
@@ -929,10 +972,10 @@ class CustomerStoreScanBuilder(path: String, travel: Option[TimeTravel]) extends
       case _ => false
     }
     if (!ok) return None
-    val store = new CustomerStore(SparkSession.active, path)
+    val live = own.fold(store.liveFiles())(_.live)
     val phys = CustomerStore.physicalMapAt(path)
     // Resolve every consult ONCE per referenced surface.
-    val idAggs = store.manifestAggregatesGrouped().getOrElse(return None)
+    val idAggs = store.manifestAggregatesGrouped(live).getOrElse(return None)
     val evoCols: Seq[String] = funcs.flatMap {
       case m: Min => colName(m.column()).filter(evoNumCols)
       case m: Max => colName(m.column()).filter(evoNumCols)
@@ -940,7 +983,7 @@ class CustomerStoreScanBuilder(path: String, travel: Option[TimeTravel]) extends
     }.distinct
     val evoExtrema: Map[String, Seq[(Boolean, Option[Long], Option[Long])]] =
       evoCols.map { c =>
-        c -> store.manifestEvolvedExtremaGrouped(phys(c)).getOrElse(return None)
+        c -> store.manifestEvolvedExtremaGrouped(phys(c), live).getOrElse(return None)
       }.toMap
     val groups: Seq[Boolean] = {
       val gs = idAggs.map(_._1)
@@ -976,7 +1019,7 @@ class CustomerStoreScanBuilder(path: String, travel: Option[TimeTravel]) extends
   override def build(): Scan = aggPush match {
     case Some(p) => new CustomerStoreAggScan(path, p)
     case None =>
-      new CustomerStoreScan(path, travel, required, pushed)
+      new CustomerStoreScan(store, travel, required, pushed, own)
   }
 }
 
@@ -1060,6 +1103,13 @@ object StoreAggReaderFactory extends PartitionReaderFactory {
 }
 
 object CustomerStoreScan {
+  /** A planned file set: the input partitions, the files they open,
+    * the live files of the partitions the read addresses (its
+    * partition predicate, before every other prune) and all live files.
+    */
+  private final case class Planned(parts: Array[InputPartition], kept: Int,
+      inPartition: Int, total: Int)
+
   /** Above this, a runtime email IN-set skips the per-value bloom
     * probe (the id zone envelope still prunes) — the probe costs
     * manifest-rows × set-size on the driver, and a huge set rarely
@@ -1188,12 +1238,22 @@ object CustomerStoreScan {
     }
 }
 
-class CustomerStoreScan(path: String, travel: Option[TimeTravel],
-    required: StructType, filters: Array[Filter])
+/** The store's one live-row reader (and its time-travel reader). A
+  * current-snapshot scan plans from the live-file listing — the one a
+  * [[StoreRead]] pinned, or the store's listing at planning — in one
+  * file-pruning pass: partition directory, the store's own file
+  * restriction, id zone, evolved-column zones, email bloom. Each kept
+  * file is one input partition carrying that file's tombstoned emails,
+  * read once on the driver per planning.
+  */
+class CustomerStoreScan(store: CustomerStore, travel: Option[TimeTravel],
+    required: StructType, filters: Array[Filter], own: Option[StoreRead] = None)
     extends Scan with Batch with SupportsRuntimeV2Filtering
     with SupportsReportStatistics {
 
   import CustomerStoreScan._
+
+  private val path = store.path
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -1210,7 +1270,7 @@ class CustomerStoreScan(path: String, travel: Option[TimeTravel],
   // email IN-sets skip the per-value bloom probe (the zone envelope
   // still applies); time-travel scans advertise no filter attributes.
   @volatile private var runtimeFilters: Array[Filter] = Array.empty
-  @volatile private var cache: Option[(Array[InputPartition], Int, Int)] = None
+  @volatile private var cache: Option[Planned] = None
 
   // Only columns that SURVIVED pruning may be advertised: Spark
   // resolves these against the scan's output, and a pruned-away
@@ -1229,26 +1289,31 @@ class CustomerStoreScan(path: String, travel: Option[TimeTravel],
     cache = None // re-plan with the runtime conjuncts
   }
 
-  // (partitions, files kept, files total) — driver-side manifest
-  // consult, no data file opened; recomputed if a runtime filter
-  // arrives after an explain already forced the plan.
-  private def planned: (Array[InputPartition], Int, Int) = cache.getOrElse {
-    val p = travel.fold(planCurrent(new CustomerStore(SparkSession.active, path)))(planTimeTravel)
+  // Driver-side manifest consult, no data file opened; recomputed if a
+  // runtime filter arrives after an explain already forced the plan.
+  private def planned: Planned = cache.getOrElse {
+    val p = travel.fold(planCurrent())(planTimeTravel)
     cache = Some(p)
     p
   }
 
-  private def planCurrent(store: CustomerStore): (Array[InputPartition], Int, Int) = {
+  /** (files kept, live files of the addressed partitions) — the skip a
+    * pending read reports, from this scan's own planning.
+    */
+  private[graft] def filesKept: (Int, Int) = (planned.kept, planned.inPartition)
+
+  private def planCurrent(): Planned = {
     val pruning = filters ++ runtimeFilters
-    val all = store.liveDataFiles()
+    val live = own.fold(store.liveFiles())(_.live)
     val partPruned = uploadedEq(pruning) match {
-      case Some(u) => all.filter(_._3 == u)
-      case None => all
+      case Some(u) => live.files.filter(_._3 == u)
+      case None => live.files
     }
+    val restricted = own.flatMap(_.only).fold(partPruned)(o => partPruned.filter(f => o(f._1)))
     val (lo, hi) = idBounds(pruning)
     val zonePruned =
-      if (lo == Long.MinValue && hi == Long.MaxValue) partPruned
-      else store.zoneKeepFiles(partPruned.map(f => (f._1, f)), lo, hi).map(_._2)
+      if (lo == Long.MinValue && hi == Long.MaxValue) restricted
+      else store.zoneKeepFiles(restricted.map(f => (f._1, f)), lo, hi).map(_._2)
     // EVOLVED-column zone pruning (kind='e' manifest, physical-name
     // keyed): one consult per filtered evolved column; files without
     // coverage for the column are kept.
@@ -1269,14 +1334,13 @@ class CustomerStoreScan(path: String, travel: Option[TimeTravel],
         evoPruned.filter(f => keep(f._2))
       case None => evoPruned
     }
-    val dv = store.deletionVectorFiles()
     val parts = bloomPruned.map { case (name, p, uploaded) =>
-      StoreDataPartition(p, name, uploaded, dv): InputPartition
+      StoreFilePartition(p, Some(uploaded), live.tombstones.getOrElse(name, Set.empty)): InputPartition
     }.toArray
-    (parts, bloomPruned.size, all.size)
+    Planned(parts, bloomPruned.size, partPruned.size, live.files.size)
   }
 
-  private def planTimeTravel(t: TimeTravel): (Array[InputPartition], Int, Int) = {
+  private def planTimeTravel(t: TimeTravel): Planned = {
     // Emails the delta touches (post-images and delete tombstones): any
     // delta row outranks every snapshot row for its email, so snapshot
     // readers drop these outright. Delta-scale (retention-bounded).
@@ -1290,16 +1354,16 @@ class CustomerStoreScan(path: String, travel: Option[TimeTravel],
       }
     }.toSet
     val snapParts = t.snapshot.toSeq.flatMap(_._2).map { f =>
-      StoreSnapshotPartition(f, touched): InputPartition
+      StoreFilePartition(f, None, touched): InputPartition
     }
     val deltaParts =
       if (t.feedDirs.isEmpty) Seq.empty
       else Seq(StoreDeltaPartition(t.feedDirs): InputPartition)
     val parts = (snapParts ++ deltaParts).toArray
-    (parts, parts.length, parts.length)
+    Planned(parts, parts.length, parts.length, parts.length)
   }
 
-  override def planInputPartitions(): Array[InputPartition] = planned._1
+  override def planInputPartitions(): Array[InputPartition] = planned.parts
 
   /** CBO/AQE statistics from the SAME consult as planning. A current
     * read reports the kept files' on-disk bytes and their zone row
@@ -1309,23 +1373,21 @@ class CustomerStoreScan(path: String, travel: Option[TimeTravel],
     * snapshot files and feed files it opens (an upper bound too: the
     * replay drops superseded rows).
     */
-  override def estimateStatistics(): Statistics =
-    if (travel.nonEmpty)
-      StoreScanStats(planned._1.toSeq.flatMap {
-        case p: StoreSnapshotPartition => Seq(p.file)
-        case p: StoreDeltaPartition => p.feedDirs.flatMap(ParquetGroups.parquetFilesIn)
-        case _ => Nil
-      })
+  override def estimateStatistics(): Statistics = {
+    val files = planned.parts.toSeq.flatMap {
+      case p: StoreFilePartition => Seq(p.file)
+      case p: StoreDeltaPartition => p.feedDirs.flatMap(ParquetGroups.parquetFilesIn)
+      case _ => Nil
+    }
+    if (travel.nonEmpty) StoreScanStats(files)
     else new Statistics {
-      private val kept: Seq[StoreDataPartition] =
-        planned._1.toSeq.collect { case p: StoreDataPartition => p }
       override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(kept.map(p => new java.io.File(p.file).length()).sum)
+        java.util.OptionalLong.of(files.map(f => new java.io.File(f).length()).sum)
       override def numRows(): java.util.OptionalLong =
-        new CustomerStore(SparkSession.active, path)
-          .manifestRowCount(kept.map(_.basename).toSet)
+        store.manifestRowCount(files.map(f => new java.io.File(f).getName).toSet)
           .fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
     }
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     StoreReaderFactory(required.fieldNames, filters,
@@ -1334,11 +1396,11 @@ class CustomerStoreScan(path: String, travel: Option[TimeTravel],
         .map(f => f.name -> f.dataType).toMap)
 
   override def description(): String = {
-    val (_, kept, total) = planned
+    val p = planned
     val tt = travel.fold("")(t => s", versionAsOf=${t.version}")
     val rt = if (runtimeFilters.isEmpty) ""
       else s", RuntimeFilters: [${runtimeFilters.mkString(", ")}]"
-    s"GraftStore path=$path$tt, files=$kept/$total, " +
+    s"GraftStore path=$path$tt, files=${p.kept}/${p.total}, " +
       s"ReadSchema: ${required.simpleString}, " +
       s"PushedFilters: [${filters.mkString(", ")}]$rt"
   }
@@ -1384,18 +1446,13 @@ object TimeTravel {
     }
 }
 
-/** One live data file of the current snapshot: `uploaded` carried by
-  * its partition directory, tombstones in the table's deletion-vector
-  * files (filtered to this file's basename by the reader).
+/** One file a scan reads whole: a live data file (its `uploaded`
+  * carried by the partition directory, its deletion-vector tombstones
+  * skipped) or a time-travel snapshot file (`uploaded` stored as a
+  * column, the emails the feed delta touches skipped — the delta
+  * outranks the snapshot).
   */
-case class StoreDataPartition(file: String, basename: String,
-    uploaded: Boolean, dvFiles: Seq[String]) extends InputPartition
-
-/** One snapshot-checkpoint file of a time-travel scan; rows whose
-  * email the feed delta touches are dropped (the delta outranks the
-  * snapshot).
-  */
-case class StoreSnapshotPartition(file: String,
+case class StoreFilePartition(file: String, uploaded: Option[Boolean],
     skipEmails: Set[UTF8String]) extends InputPartition
 
 /** The feed delta of a time-travel scan: per-email last-writer-wins
@@ -1410,17 +1467,8 @@ case class StoreReaderFactory(required: Array[String],
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case p: StoreDataPartition =>
-        val name = UTF8String.fromString(p.basename)
-        val tombstones = p.dvFiles.iterator.flatMap { f =>
-          ParquetGroups.readAll(f, Seq("file", "email")).collect {
-            case Array(fn: UTF8String, email: UTF8String) if fn == name => email
-          }
-        }.toSet
-        new StoreFileReader(p.file, Some(p.uploaded), tombstones, required,
-          filters, phys, types)
-      case p: StoreSnapshotPartition =>
-        new StoreFileReader(p.file, None, p.skipEmails, required, filters, phys, types)
+      case p: StoreFilePartition =>
+        new StoreFileReader(p.file, p.uploaded, p.skipEmails, required, filters, phys, types)
       case p: StoreDeltaPartition =>
         new StoreDeltaReader(p, required, filters, phys, types)
     }
@@ -1509,6 +1557,7 @@ private[sources] abstract class StoreRowReader(required: Array[String],
   * carries `uploaded` in its directory (`uploaded` is Some) and skips
   * its deletion-vector tombstones; a snapshot file stores `uploaded`
   * as a column and skips the emails the time-travel delta touches.
+  * The `_file` metadata column is the file's path.
   */
 class StoreFileReader(file: String, uploaded: Option[Boolean],
     skipEmails: Set[UTF8String], required: Array[String],
@@ -1520,7 +1569,8 @@ class StoreFileReader(file: String, uploaded: Option[Boolean],
   // skip check); a directory-constant `uploaded` is never physical.
   private val readCols: Seq[String] =
     (required ++ filters.flatMap(_.references) ++ Seq("id", "email"))
-      .distinct.filter(c => uploaded.isEmpty || c != "uploaded").toSeq
+      .distinct.filter(c => (uploaded.isEmpty || c != "uploaded") &&
+        c != CustomerStoreTable.FileColumn).toSeq
   // Files store PHYSICAL names (column mapping) — translate at the
   // cursor boundary, logical everywhere above.
   private def pn(c: String): String = phys.getOrElse(c, c)
@@ -1531,12 +1581,11 @@ class StoreFileReader(file: String, uploaded: Option[Boolean],
 
   private val cursor =
     new ParquetGroups.VectorizedFileRows(file, readCols.map(pn), pnTypes)
-  private val valueOf: String => Any = uploaded match {
-    case Some(u) => {
-      case "uploaded" => u
-      case c => cursor.value(pn(c))
-    }
-    case None => c => cursor.value(pn(c))
+  private val fileName = UTF8String.fromString(file)
+  private val valueOf: String => Any = {
+    case "uploaded" if uploaded.nonEmpty => uploaded.get
+    case CustomerStoreTable.FileColumn => fileName
+    case c => cursor.value(pn(c))
   }
   private var current: InternalRow = _
 

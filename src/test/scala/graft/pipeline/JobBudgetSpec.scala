@@ -79,8 +79,8 @@ class JobBudgetSpec extends SparkSpec {
       "delete" -> (() => store.delete(Seq("user11@example.com").toDF("email"))),
       "compact" -> (() => store.compact()))
     val counts = budgets.map { case (kind, op) => kind -> jobsOf(op())._2.size }
-    val pinned = Map("insert" -> 11, "ack" -> 13, "merge" -> 27, "delete" -> 6,
-      "compact" -> 5)
+    val pinned = Map("insert" -> 11, "ack" -> 7, "merge" -> 27, "delete" -> 6,
+      "compact" -> 4)
     counts.foreach { case (kind, n) =>
       assert(n <= pinned(kind), s"$kind commit ran $n Spark jobs; budget ${pinned(kind)}")
     }

@@ -67,7 +67,7 @@ class StoreStatsSpec extends SparkSpec {
     val path = tmpDir("stats") + "/z"
     val store = seed(path, 80)
     val actual = store.all()
-      .select(element_at(split(input_file_name(), "/"), -1).as("file"), col("id"))
+      .select(element_at(split(col("_file"), "/"), -1).as("file"), col("id"))
       .groupBy("file")
       .agg(count(lit(1)).as("n"), min("id").as("mn"), max("id").as("mx"))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
@@ -146,7 +146,7 @@ class StoreStatsSpec extends SparkSpec {
     val path = tmpDir("stats") + "/sm"
     val store = seed(path, 300, commits = 3)
     val actual = store.all()
-      .select(element_at(split(input_file_name(), "/"), -1).as("file"),
+      .select(element_at(split(col("_file"), "/"), -1).as("file"),
         conv(substring(md5(col("id").cast("string")), 1, 8), 16, 10)
           .cast("long").as("h"),
         col("id"))

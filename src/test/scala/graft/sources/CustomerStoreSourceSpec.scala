@@ -7,12 +7,13 @@ import org.apache.spark.sql.types.{StructField, StructType}
 import graft.SparkSpec
 import graft.pipeline.{CustomerStore, Ingest}
 
-/** The graft-store DSv2 connector against the API it mirrors: every
-  * read path (current state with deletion vectors, manifest pruning,
-  * column pruning, pushed filters, time travel by version and
-  * timestamp) must be row-identical to the corresponding
-  * [[CustomerStore]] call, and the plan must SHOW the pushdown
-  * (PushedFilters + files=kept/total in the scan description).
+/** The graft-store DSv2 connector — the store's one reader — against
+  * the Spark-side reads it replaced: every read path (current state
+  * with deletion vectors, manifest pruning, column pruning, pushed
+  * filters, time travel by version and timestamp, the change feed)
+  * must be row-identical to [[SparkLiveModel]] or [[SparkHistoryModel]],
+  * and the plan must SHOW the pushdown (PushedFilters + files=kept/total
+  * in the scan description).
   */
 class CustomerStoreSourceSpec extends SparkSpec {
 
@@ -52,14 +53,14 @@ class CustomerStoreSourceSpec extends SparkSpec {
 
   test("full read is row-identical to the API read (deletion vectors applied)") {
     val path = tmpDir("dsv2-full") + "/store"
-    val store = buildStore(path)
-    assert(key(cat(path)) === key(store.all()))
+    buildStore(path)
+    assert(key(cat(path)) === key(new SparkLiveModel(spark, path).all()))
     assert(cat(path).count() === 118L) // 120 inserted − 2 tombstoned
   }
 
   test("id-range filter is pushed and zone-prunes files") {
     val path = tmpDir("dsv2-zone") + "/store"
-    val store = buildStore(path)
+    buildStore(path)
     val q = cat(path).filter(col("id").between(1001L, 1040L))
     val plan = q.queryExecution.executedPlan.toString()
     assert(plan.contains("PushedFilters: ["), plan)
@@ -68,7 +69,8 @@ class CustomerStoreSourceSpec extends SparkSpec {
     val m = filesRe.findFirstMatchIn(plan).getOrElse(fail(s"no files=k/n in:\n$plan"))
     assert(m.group(1).toInt < m.group(2).toInt,
       s"zone manifest skipped nothing: ${m.matched}")
-    assert(key(q) === key(store.all().filter(col("id").between(1001L, 1040L))))
+    assert(key(q) === key(new SparkLiveModel(spark, path).all()
+      .filter(col("id").between(1001L, 1040L))))
   }
 
   test("email equality is pushed and bloom-prunes files") {
@@ -132,29 +134,31 @@ class CustomerStoreSourceSpec extends SparkSpec {
 
   test("uploaded filter prunes the other partition directory") {
     val path = tmpDir("dsv2-part") + "/store"
-    val store = buildStore(path)
+    buildStore(path)
     val q = cat(path).filter(col("uploaded") === true)
     val plan = q.queryExecution.executedPlan.toString()
     val filesRe = """files=(\d+)/(\d+)""".r
     val m = filesRe.findFirstMatchIn(plan).get
     assert(m.group(1).toInt < m.group(2).toInt, m.matched)
-    assert(q.count() === store.all().filter(col("uploaded")).count())
+    val model = new SparkLiveModel(spark, path)
+    assert(q.count() === model.all().filter(col("uploaded")).count())
     // The negated form arrives as Not(uploaded = true) after Catalyst's
     // boolean simplification — it must prune the DONE partition too.
     val qn = cat(path).filter(col("uploaded") === false)
     val mn = filesRe.findFirstMatchIn(qn.queryExecution.executedPlan.toString()).get
     assert(mn.group(1).toInt < mn.group(2).toInt,
       s"uploaded=false did not prune: ${mn.matched}")
-    assert(qn.count() === store.all().filter(!col("uploaded")).count())
+    assert(qn.count() === model.all().filter(!col("uploaded")).count())
   }
 
   test("column pruning serves narrow projections and COUNT(*)") {
     val path = tmpDir("dsv2-prune") + "/store"
-    val store = buildStore(path)
+    buildStore(path)
+    val model = new SparkLiveModel(spark, path)
     val two = cat(path).select(col("email"), col("phone"))
     assert(two.columns.toSeq === Seq("email", "phone"))
-    assert(two.count() === store.all().count())
-    assert(cat(path).groupBy().count().head().getLong(0) === store.all().count())
+    assert(two.count() === model.all().count())
+    assert(cat(path).groupBy().count().head().getLong(0) === model.all().count())
   }
 
   test("versionAsOf matches asOf at every version, including delete and genesis replay") {
@@ -214,7 +218,7 @@ class CustomerStoreSourceSpec extends SparkSpec {
     assert(store.currentVersion() === 2L, "the write must be one staged commit")
     assert(store.all().count() === 30L,
       "UNIQUE(id)/UNIQUE(email) semantics must hold through the connector write")
-    assert(key(cat(path)) === key(store.all()))
+    assert(key(cat(path)) === key(new SparkLiveModel(spark, path).all()))
   }
 
   test("overwrite mode and time-travel writes are rejected") {
@@ -237,7 +241,8 @@ class CustomerStoreSourceSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.graft_store", "graft.sources.GraftStoreCatalog")
     val path = tmpDir("dsv2-cat") + "/store"
     val store = buildStore(path)
-    assert(key(spark.sql(s"SELECT * FROM graft_store.`$path`")) === key(store.all()))
+    assert(key(spark.sql(s"SELECT * FROM graft_store.`$path`")) ===
+      key(new SparkLiveModel(spark, path).all()))
     assert(key(spark.sql(s"SELECT * FROM graft_store.`$path` VERSION AS OF 2")) ===
       key(new SparkHistoryModel(spark, store, path).asOf(2L)))
     val before = store.all().count()
@@ -274,7 +279,8 @@ class CustomerStoreSourceSpec extends SparkSpec {
       !cols.contains("tier"))
     // renamed column serves the historical values through SQL
     assert(spark.sql(s"SELECT count(*) FROM graft_store.`$path` " +
-      "WHERE phone_e164 IS NOT NULL").head().getLong(0) === store.all().count())
+      "WHERE phone_e164 IS NOT NULL").head().getLong(0) ===
+      new SparkLiveModel(spark, path).all().count())
     // structural renames/retypes stay loudly rejected from SQL too
     intercept[Exception] {
       spark.sql(s"ALTER TABLE graft_store.`$path` RENAME COLUMN email TO em")
@@ -539,9 +545,9 @@ class CustomerStoreSourceSpec extends SparkSpec {
     import org.apache.spark.sql.connector.expressions.Expressions
     import org.apache.spark.sql.connector.expressions.filter.Predicate
     val path = tmpDir("dsv2-rtf") + "/store"
-    buildStore(path)
+    val store = buildStore(path)
     def scan(): CustomerStoreScan =
-      new CustomerStoreScanBuilder(path, None).build()
+      new CustomerStoreScanBuilder(store, None).build()
         .asInstanceOf[CustomerStoreScan]
     val all = scan().planInputPartitions().length
     assert(all >= 3, "fixture must span several files")
@@ -564,8 +570,8 @@ class CustomerStoreSourceSpec extends SparkSpec {
     val keptBloom = s2.planInputPartitions().length
     assert(keptBloom < all && keptBloom > 0, s"bloom runtime prune kept $keptBloom of $all")
     // Time-travel scans advertise no runtime-filter attributes.
-    assert(new CustomerStoreScanBuilder(path,
-        Some(TimeTravel(new CustomerStore(spark, path), 2L))).build()
+    assert(new CustomerStoreScanBuilder(store,
+        Some(TimeTravel(store, 2L))).build()
       .asInstanceOf[CustomerStoreScan].filterAttributes().isEmpty)
   }
 
@@ -1186,6 +1192,44 @@ class CustomerStoreSourceSpec extends SparkSpec {
     assert(CustomerStoreDelete.toColumn(exotic).isDefined)
   }
 
+  test("all() and its _file column equal the Spark-side live model at every step") {
+    val path = tmpDir("dsv2-live-steps") + "/store"
+    val store = new CustomerStore(spark, path)
+    val model = new SparkLiveModel(spark, path)
+    def same(step: String): Unit = {
+      val cols = store.tableSchema.fieldNames.toSeq :+ "_file"
+      val got = store.all().select(cols.map(col): _*).collect().toSeq.map(_.toSeq)
+      val want = model.all().select(cols.map(col): _*).collect().toSeq.map(_.toSeq)
+      assert(got.size === want.size, s"[$step] row count")
+      assert(got.groupBy(identity).view.mapValues(_.size).toMap ===
+        want.groupBy(identity).view.mapValues(_.size).toMap, s"[$step] rows")
+    }
+    store.insertNew(block(1L, 40L)): Unit
+    store.insertNew(block(1001L, 1040L)): Unit
+    same("insert")
+    store.markUploaded((1001L to 1010L).map(i => s"u$i@example.com").toDF("email"))
+    same("ack")
+    store.merge(rows((5L, "M", "M", "u5@example.com", "999"),
+      (1020L, "N", "N", "u1020@example.com", "998"),
+      (3001L, "I", "I", "u3001@example.com", "997"))): Unit
+    same("merge")
+    store.delete(Seq("u7@example.com", "u1005@example.com", "u1030@example.com").toDF("email")): Unit
+    assert(store.deletionVectorStats()._2 === 3L, "the delete must leave live vectors")
+    same("delete with live vectors")
+    store.compact()
+    same("compact")
+    store.addColumn("tier", org.apache.spark.sql.types.IntegerType): Unit
+    store.insertNew(block(4001L, 4010L).withColumn("tier", (col("id") % 3).cast("int"))): Unit
+    same("addColumn")
+    store.renameColumn("tier", "level"): Unit
+    store.renameColumn("phone", "phone_e164"): Unit
+    same("rename")
+    store.widenColumn("level", org.apache.spark.sql.types.LongType): Unit
+    same("widen")
+    store.dropColumn("level"): Unit
+    same("drop")
+  }
+
   test("change-feed and time-travel scans report the bytes and rows of the files they open") {
     val path = tmpDir("dsv2-stats") + "/store"
     val store = buildStore(path)
@@ -1202,6 +1246,39 @@ class CustomerStoreSourceSpec extends SparkSpec {
     val travelFiles = files("_snapshots/v-000000005") ++ files("_changelog/commit-000000006")
     assert(travel.sizeInBytes === bytes(travelFiles))
     assert(travel.rowCount === Some(BigInt(store.asOf(5L).count() + store.feedSince(5L, 6L).count())))
+  }
+}
+
+/** The Spark-side live read the store ran before the connector became
+  * its one live-row reader, verbatim over the store's files — the
+  * reference model [[CustomerStoreSourceSpec]] holds the connector's
+  * current-snapshot scan (and so [[CustomerStore.all]]) to: Spark's
+  * parquet reader over the partition directories under the physical
+  * schema, each row's `input_file_name()`, and a shuffle anti-join
+  * against the deletion vectors on (file basename, email).
+  */
+final class SparkLiveModel(spark: SparkSession, path: String) {
+
+  private def physName(f: StructField): String =
+    if (f.metadata.contains("physical")) f.metadata.getString("physical") else f.name
+
+  /** The live rows, each with its data file's path in `_file`. */
+  def all(): DataFrame = {
+    val tableSchema = CustomerStore.schemaAt(path)
+    val phys = spark.read.schema(StructType(tableSchema.fields.map(f =>
+        StructField(physName(f), f.dataType, f.nullable)))).parquet(path)
+      .withColumn("_file", regexp_replace(input_file_name(), "^file:(//)?", ""))
+      .select(col("_file") +:
+        tableSchema.fields.map(f => col(physName(f)).as(f.name)).toIndexedSeq: _*)
+      .select(tableSchema.fieldNames.map(col) :+ col("_file"): _*)
+    val dvFiles = ParquetGroups.parquetFilesIn(new java.io.File(path, "_deletes").toString)
+    if (dvFiles.isEmpty) phys
+    else phys.join(
+      spark.read.schema(StructType(Seq(StructField("file", org.apache.spark.sql.types.StringType),
+          StructField("email", org.apache.spark.sql.types.StringType))))
+        .parquet(dvFiles: _*).select(col("file").as("_dvf"), col("email").as("_dve")),
+      element_at(split(col("_file"), "/"), -1) === col("_dvf") &&
+        col("email") === col("_dve"), "left_anti")
   }
 }
 
