@@ -15,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * flag as a partition column.
   *
   * Reads: every live-row read — [[all]], `pending()`, the pending
-  * point/range/rectangle reads and the commits' probes — is the
-  * `graft-store` connector's current-snapshot scan
+  * point/range/rectangle reads and the commits' probes, purge's too —
+  * is the `graft-store` connector's current-snapshot scan
   * ([[graft.sources.CustomerStoreScan]]) planned over THIS store: its
   * live-file listing, its driver-resident [[StatsSnapshot]] and one
   * driver read of the deletion vectors, with no second store and no
@@ -26,7 +26,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * rows); `pending()`'s `uploaded = false` filter prunes to the
   * pending partition exactly like the reference's upload_idx index
   * scan (init-db.sh:25, database.go:18). Each row's data file is the
-  * scan's `_file` metadata column.
+  * scan's `_file` metadata column. Purge's probe passes the scan an
+  * empty tombstone map, so it sees every physical row. The other
+  * artifacts have one reader each too: `_stats` [[StatsSnapshot]],
+  * `_deletes` [[tombstoneRows]], `_changelog` the connector's
+  * change-feed and time-travel scans; only purge's history excision
+  * ([[exciseParquet]]) probes feed, snapshot and vector files with
+  * Spark, since no scan serves them.
   *
   * Scale: partitioning by a boolean splits the table into hot (pending)
   * and cold (done) halves; the hot half is what the uploader rescans,
@@ -47,6 +53,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * loop. Exclusivity (a replace or a metadata change conflicts with
   * any interleaved commit) and deletion-vector truncation (a replace
   * removes every vector file) derive from the value, not from flags.
+  * The writer, [[org.apache.spark.sql.graft.StagedWrite]], drops every
+  * 0-row part, so a target no row reached stages no file; a
+  * feed-silent data commit (compaction, purge) leaves its
+  * `_changelog/commit-<v>` dir empty.
   *
   * Concurrency: writers stage into writer-unique `_staging.tmp-<id>`
   * dirs and contend only at the commit point (the atomic rename onto
@@ -65,7 +75,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * instance consults them through one driver-
   * resident [[StatsSnapshot]] — bloom, zone and sample lookups run no
   * Spark job. The snapshot holds one entry per file basename in the
-  * manifest history (the set the `_stats` views read), up to ~18 KiB
+  * manifest history, up to ~18 KiB
   * per entry at the default 2^17 bloom bits: 16 KiB of bloom words
   * plus the 128-entry sample.
   */
@@ -89,7 +99,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     * Spark job.
     */
   private val manifest = new StatsSnapshot(new java.io.File(path, StatsManifest),
-    () => currentVersion(), readParquetRows(_, statsSchema))
+    () => currentVersion())
   /** `_stats` rows computed by [[stageStats]], keyed by staging dir until
     * the commit point, then by final version until promotion hands them
     * to [[manifest]].
@@ -111,15 +121,17 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
 
   /** The live table through the connector's current-snapshot scan,
     * planned over this store (see the class doc): the files it may open
-    * are pinned here, when the read is defined, and `only` restricts them
-    * to the named data files (basenames) — a file set the store's own
+    * are pinned here, when the read is defined (`live`, by default this
+    * store's listing and tombstones now), and `only` restricts them to
+    * the named data files (basenames) — a file set the store's own
     * consult chose (the touched files of a commit, a Z-order delta, a
     * hash-shard zone). With `withFile` each row also carries its data
     * file's absolute path in `_file`, the connector's metadata column.
     */
-  private def liveRead(only: Option[Set[String]] = None, withFile: Boolean = false): DataFrame = {
+  private def liveRead(only: Option[Set[String]] = None, withFile: Boolean = false,
+      live: LiveFiles = liveFiles()): DataFrame = {
     val table = new graft.sources.CustomerStoreTable(path, None, None,
-      Some(graft.sources.StoreRead(this, liveFiles(), only)))
+      Some(graft.sources.StoreRead(this, live, only)))
     val rows = org.apache.spark.sql.graft.PlanDataFrame.ofRows(spark,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(table, None, None))
     if (withFile) rows.select(col("*"), col(graft.sources.CustomerStoreTable.FileColumn))
@@ -127,37 +139,24 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
   }
 
   // ---- Merge-on-read deletion vectors --------------------------------
+  //
+  // A deletion vector is a `_deletes` file of (data-file BASENAME, email)
+  // rows naming tombstoned rows. FILE-scoped, not key-scoped — a later
+  // insert of the same email lands in a NEW file and is untouched, and
+  // any commit that rewrites a file makes its vector rows inert (the
+  // basename no longer exists), so vectors never have to be rewritten
+  // on data commits.
 
-  private def dvSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("file",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("email",
-      org.apache.spark.sql.types.StringType, nullable = false)))
-
-  /** The committed deletion vectors: (data-file BASENAME, email) rows
-    * naming tombstoned rows. FILE-scoped, not key-scoped — a later
-    * insert of the same email lands in a NEW file and is untouched,
-    * and any commit that rewrites a file makes its vector rows inert
-    * (the basename no longer exists), so vectors never have to be
-    * rewritten on data commits.
+  /** Every deletion-vector row of `files` (by default the committed
+    * ones) as data-file basename → the emails it tombstones there, read
+    * on the driver (vectors are metadata-scale, like the manifest), no
+    * job — the one reader of vector files: each scan's tombstone sets
+    * ([[liveFiles]]), [[deletionVectorStats]] and the commit point's
+    * check of a staged delete ([[checkNoConflict]]).
     */
-  def deletionVectors(): DataFrame = {
-    val files = deletionVectorFiles()
-    if (files.nonEmpty)
-      spark.read.schema(dvSchema).parquet(files: _*)
-        .select(col("file"), col("email"))
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dvSchema)
-  }
-
-  /** Every committed deletion-vector row as data-file basename → the
-    * emails it tombstones there, read on the driver (vectors are
-    * metadata-scale, like the manifest), no job — the one read behind
-    * each scan's tombstone sets ([[liveFiles]]) and
-    * [[deletionVectorStats]].
-    */
-  private def tombstoneRows(): Map[String, Seq[UTF8String]] =
-    deletionVectorFiles().flatMap(f =>
+  private def tombstoneRows(files: Seq[String] = deletionVectorFiles())
+      : Map[String, Seq[UTF8String]] =
+    files.flatMap(f =>
       graft.sources.ParquetGroups.readAll(f, Seq("file", "email")).collect {
         case Array(file: UTF8String, email: UTF8String) => file.toString -> email
       }).groupMap(_._1)(_._2)
@@ -307,21 +306,12 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     * before an evolution lack the column physically and read as typed NULLs
     * (the Iceberg/Delta additive-evolution read contract).
     */
-  override def tableSchema: org.apache.spark.sql.types.StructType = {
-    val f = new java.io.File(path, SchemaFile)
-    if (!f.exists()) CustomerSchema.tableSchema
-    else org.apache.spark.sql.types.DataType.fromJson(
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-  }
+  override def tableSchema: org.apache.spark.sql.types.StructType = schemaAt(path)
 
   /** The feed-row schema tracks the evolved table schema (old feed
     * files null-fill the evolved columns on read).
     */
-  private def changeSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      CustomerSchema.changeSchema.fields.take(2) ++ tableSchema.fields)
+  private def changeSchema: org.apache.spark.sql.types.StructType = changeSchemaAt(path)
 
   // ---- Column mapping (rename/drop evolution) -------------------------
   //
@@ -338,17 +328,6 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
   // from old files — the Delta column-mapping / Iceberg field-id
   // contract, expressed with names.
 
-  /** Logical→physical name for one field of an evolved schema. */
-  private def physName(f: org.apache.spark.sql.types.StructField): String =
-    if (f.metadata.contains("physical")) f.metadata.getString("physical")
-    else f.name
-
-  /** The schema as stored in data files: physical names, no metadata. */
-  private def physicalize(s: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(s.fields.map(f =>
-      org.apache.spark.sql.types.StructField(physName(f), f.dataType, f.nullable)))
-
   /** Rename a logical-named frame's columns to physical for writing
     * (columns not in `logical` — none today — would be dropped; the
     * write choke points all pass exactly the logical column set).
@@ -356,7 +335,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
   private def toPhysical(df: DataFrame,
       logical: org.apache.spark.sql.types.StructType): DataFrame =
     df.select(logical.fields.filter(f => df.columns.contains(f.name))
-      .map(f => col(f.name).as(physName(f))).toIndexedSeq: _*)
+      .map(f => col(f.name).as(physicalNameOf(f))).toIndexedSeq: _*)
 
   /** The table's data-file schema: every column but the partition
     * directory's `uploaded`.
@@ -546,7 +525,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     // Pin the physical name (= the current one) so the widened field
     // keeps reading every historical file, like a rename does.
     val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .withMetadata(f.metadata).putString("physical", physName(f)).build()
+      .withMetadata(f.metadata).putString("physical", physicalNameOf(f)).build()
     val next = org.apache.spark.sql.types.StructType(
       cur.fields.updated(i, f.copy(dataType = to, metadata = meta)))
     commit(Commit("ALTER COLUMN", manifest = Some(SchemaFile -> next.json)))
@@ -576,7 +555,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     // Pin the physical name (= the current one) so the rename is
     // durable even for base/legacy columns that had no mapping entry.
     val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .withMetadata(f.metadata).putString("physical", physName(f)).build()
+      .withMetadata(f.metadata).putString("physical", physicalNameOf(f)).build()
     val next = org.apache.spark.sql.types.StructType(
       cur.fields.updated(i, f.copy(name = to, metadata = meta)))
     commit(Commit("RENAME COLUMN", manifest = Some(SchemaFile -> next.json)))
@@ -808,14 +787,9 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     val live = liveDataFiles()
     val sizeBytes = live.map(f => new java.io.File(f._2).length()).sum
     val (dvTotal, dvLive) = deletionVectorStats()
-    val snaps = {
-      val d = new java.io.File(path, Snapshots)
-      if (!d.isDirectory) 0L
-      else d.listFiles().count(f => f.isDirectory && !f.getName.startsWith(".tmp")).toLong
-    }
     val row = org.apache.spark.sql.Row(
       currentVersion(), live.size.toLong, sizeBytes, dvTotal, dvLive,
-      checkConstraints().size.toLong, snaps, feedLowWatermark(),
+      checkConstraints().size.toLong, snapshotVersions().size.toLong, feedLowWatermark(),
       tableSchema.size.toLong)
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(Seq(row).asJava, CustomerStore.detailSchema)
@@ -1028,12 +1002,13 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     *   1. feed + snapshot surgery (no effect on live reads);
     *   2. the live-data excision as a feed-SILENT file-level "PURGE"
     *      commit — erasure must not re-emit the keys' rows into the
-    *      feed as delete_pre retractions; touched files are found on
-    *      the PHYSICAL rows (deletion vectors NOT applied), so a row
-    *      the key had merely tombstoned is rewritten away too and the
-    *      key's vector rows all become inert BEFORE step 3 removes
-    *      them (excising a still-live vector row first would
-    *      resurrect the row it tombstones);
+    *      feed as delete_pre retractions; touched files are found by
+    *      the current-snapshot scan with its tombstones emptied (every
+    *      physical row of the live files), so a row the key had merely
+    *      tombstoned is rewritten away too and the key's vector rows
+    *      all become inert BEFORE step 3 removes them (excising a
+    *      still-live vector row first would resurrect the row it
+    *      tombstones);
     *   3. deletion-vector excision (all inert for the key by now).
     * The commit lands only when steps 1-2 excised something, so
     * re-running a completed purge is version-stable. History row
@@ -1042,8 +1017,8 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     * what later erasure removed.
     *
     * Scale: one metadata-light probe scan per artifact family finds
-    * the touched files (at 100 TB the live-data probe rides the same
-    * bloom/zone manifests as any point read); rewrite cost ∝ files
+    * the touched files (the live-data probe's pushed `email IN keys`
+    * filter bloom-prunes it like any point read); rewrite cost ∝ files
     * actually containing the keys. Returns (physical live rows
     * excised, feed rows excised, snapshot rows excised, deletion-
     * vector rows excised).
@@ -1056,27 +1031,19 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
       require(keys.nonEmpty, "purge: no keys given")
       require(keys.size <= 1000,
         s"purge is a point operation (got ${keys.size} keys); run batches of <= 1000")
-      val emailPhys = physName(tableSchema("email"))
+      val emailPhys = physicalNameOf(tableSchema("email"))
 
       // 1. Retained feed commits, then snapshots.
-      val feedFiles = commitDirsAt(path).flatMap { case (_, d) =>
-        Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(_.getName.endsWith(".parquet"))
-      }
-      val nFeed = exciseParquet(feedFiles, emailPhys, keys)
-      val snapFiles = snapshotVersions().flatMap { v =>
-        Option(snapshotDir(v).listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(_.getName.endsWith(".parquet"))
-      }
-      val nSnap = exciseParquet(snapFiles, emailPhys, keys)
+      val nFeed = exciseParquet(commitDirsAt(path).flatMap(d =>
+        graft.sources.ParquetGroups.parquetFilesIn(d._2.toString)), emailPhys, keys)
+      val nSnap = exciseParquet(snapshotVersions().flatMap(v =>
+        graft.sources.ParquetGroups.parquetFilesIn(snapshotDir(v).toString)), emailPhys, keys)
 
-      // 2. Live data: physical probe (vectors NOT applied), file-level
-      // feed-silent PURGE commit rewriting exactly the touched files.
-      val phys = spark.read.schema(physicalize(tableSchema)).parquet(path)
-        .withColumn("_file", input_file_name())
-        .select(col("_file") +:
-          tableSchema.fields.map(f => col(physName(f)).as(f.name)).toIndexedSeq: _*)
-      val hit = phys.filter(col("email").isInCollection(keys))
+      // 2. Live data: the scan over every physical row (tombstones
+      // emptied), then a file-level feed-silent PURGE commit rewriting
+      // exactly the touched files.
+      val hit = liveRead(withFile = true, live = liveFiles().copy(tombstones = Map.empty))
+        .filter(col("email").isInCollection(keys))
         .localCheckpoint(true)
       val nLive = hit.count()
       if (nLive > 0) {
@@ -1093,10 +1060,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
 
       // 3. Deletion vectors (plain `email` column; all the purged
       // keys' rows are inert now).
-      val dvFiles = Option(new java.io.File(path, Deletes).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.endsWith(".parquet")).toSeq
-      val nDv = exciseParquet(dvFiles, "email", keys)
+      val nDv = exciseParquet(deletionVectorFiles(), "email", keys)
       (nLive, nFeed, nSnap, nDv)
     }
 
@@ -1108,7 +1072,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     * per-file so each file's own (possibly evolved) schema is
     * preserved verbatim. Returns rows excised.
     */
-  private def exciseParquet(files: Seq[java.io.File], emailCol: String,
+  private def exciseParquet(files: Seq[String], emailCol: String,
       keys: Seq[String]): Long = {
     if (files.isEmpty) return 0L
     val probe = org.apache.spark.sql.types.StructType(Seq(
@@ -1120,7 +1084,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     // probe aggregate already answers, with "fully excised" decided
     // from the file's footer row count (driver-side, no job).
     val touched = spark.read.schema(probe)
-      .parquet(files.map(_.getAbsolutePath).toIndexedSeq: _*)
+      .parquet(files: _*)
       .withColumn("_f", input_file_name())
       .filter(col(emailCol).isInCollection(keys))
       .groupBy(col("_f")).agg(count(lit(1)).as("_n")).collect()
@@ -1185,7 +1149,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     * data-only rewrite commit as [[compact]], but each partition's
     * rows are range-partitioned by `id` into `filesPerPartition`
     * files with DISJOINT id ranges — which is what turns the
-    * per-commit zone maps ([[zonesManifest]]) from descriptive
+    * per-commit zone maps ([[zoneKeepFiles]]) from descriptive
     * metadata into a pruning index: an id-range read
     * ([[pendingRangeRead]]) then opens only intersecting files. The
     * Delta OPTIMIZE ZORDER / liquid-clustering maintenance shape,
@@ -1200,7 +1164,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     * bit-interleaved key over (64-bucket scaled id, 64-way hash shard
     * of id), so every output file covers a contiguous segment of the
     * z-curve — a TIGHT rectangle in BOTH dimensions — and the
-    * per-commit zone maps ([[zonesManifest]]: min/max id AND min/max
+    * per-commit zone maps ([[zoneKeepFiles]]: min/max id AND min/max
     * shard, staged and promoted with this commit like any other)
     * prune id-range reads, shard reads, and rectangle reads
     * ([[pendingRectRead]]) alike. The id scaling normalizes the key
@@ -1396,97 +1360,6 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
       .map(_.getName.stripPrefix("v-").toLong)
   }
 
-  private def statsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("file",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("kind",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("w",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("bits",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("nbits",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_rows",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("min_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("max_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("min_hb",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("max_hb",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("s_h",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("s_id",
-      org.apache.spark.sql.types.LongType),
-    // kind='e' rows (round 15): per-file min/max of an EVOLVED numeric
-    // column, keyed by its PHYSICAL name (stable under renames).
-    // Nullable by construction — stats files written before the fields
-    // existed read as NULL under this declared schema, which pruning
-    // treats as no coverage (the file is read, never skipped).
-    org.apache.spark.sql.types.StructField("ecol",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("min_v",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("max_v",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("commit_version",
-      org.apache.spark.sql.types.LongType, nullable = false)))
-
-  /** The per-commit skipping-stats manifest, reduced to the LATEST
-    * entry set per file (a defence against basename reuse; data files
-    * are immutable, so in practice each file has exactly one commit's
-    * entries). At 100 TB this is kilobytes per file against gigabytes
-    * of data — the manifest the planner consults before any file is
-    * opened. This DataFrame backs the public manifest views; the
-    * pruning consults read the same rule from [[manifest]] instead.
-    */
-  private def statsManifest(): DataFrame = {
-    val files = StatsSnapshot.commitDirs(new java.io.File(path, StatsManifest)).values
-      .flatMap(d => graft.sources.ParquetGroups.parquetFilesIn(d.toString)).toSeq
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], statsSchema)
-    val m = spark.read.schema(statsSchema).parquet(files: _*)
-      .select(statsSchema.fieldNames.map(col): _*)
-    val latest = m.groupBy(col("file"))
-      .agg(max(col("commit_version")).as("commit_version"))
-    m.join(latest, Seq("file", "commit_version"))
-  }
-
-  /** The email bloom manifest: one row per (file, 64-bit word with ≥1
-    * bit set) plus the file's filter geometry.
-    */
-  def bloomManifest(): DataFrame =
-    statsManifest().filter(col("kind") === "b")
-      .select(col("file"), col("w"), col("bits"), col("nbits"),
-        col("commit_version"))
-
-  /** The zone-map manifest (per-file row count, id min/max, and
-    * hash-shard min/max — the store's two clustering dimensions),
-    * maintained per commit like [[bloomManifest]]. `min_hb`/`max_hb`
-    * may be null for files whose commit predates shard stats; pruning
-    * treats that as no coverage (the file is read, never skipped).
-    */
-  def zonesManifest(): DataFrame =
-    statsManifest().filter(col("kind") === "z")
-      .select(col("file"), col("n_rows"), col("min_id"), col("max_id"),
-        col("min_hb"), col("max_hb"), col("commit_version"))
-
-  /** The EVOLVED-column zone manifest (kind='e'): per-file min/max of
-    * each evolved numeric column under its PHYSICAL name — stats
-    * follow the schema, so data skipping works on columns that did not
-    * exist at table creation. Files committed before a column's
-    * evolution (or stats rows written before this manifest generation)
-    * simply have no row for it — pruning keeps such files.
-    */
-  def evolvedZonesManifest(): DataFrame =
-    statsManifest().filter(col("kind") === "e")
-      .select(col("file"), col("ecol"), col("min_v"), col("max_v"),
-        col("commit_version"))
-
   /** Zone-map pruning on an EVOLVED numeric column (physical name):
     * keep files whose [min_v, max_v] intersects [lo, hi]; a file with
     * no coverage for the column — pre-evolution commits, pre-'e'-stats
@@ -1503,14 +1376,6 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
       }
     }
   }
-
-  /** The per-file KMV sample manifest (kind='s'): each live file's
-    * bottom-[[CustomerStore.SampleK]] (md5-word hash, id) pairs,
-    * maintained per commit like the zones and blooms.
-    */
-  def sampleManifest(): DataFrame =
-    statsManifest().filter(col("kind") === "s")
-      .select(col("file"), col("s_h"), col("s_id"), col("commit_version"))
 
   /** ANALYZE-style selectivity estimate for `id BETWEEN lo AND hi`
     * over the pending partition, FROM THE STATS MANIFEST ALONE — no
@@ -1737,8 +1602,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     */
   def snapshotFilesFor(version: Long): Option[(Long, Seq[String])] =
     snapshotVersions().filter(_ <= version).sorted.lastOption.map { v0 =>
-      v0 -> snapshotDir(v0).listFiles().toSeq
-        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
+      v0 -> graft.sources.ParquetGroups.parquetFilesIn(snapshotDir(v0).toString)
     }
 
   /** Feed commit directories with fromExclusive < version ≤
@@ -2117,11 +1981,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
           val w = graft.util.Labeled(spark, "store: stage data") {
             StagedWrite(phys, dir, prefix, Some(fold.columns(phys.columns.toSet) -> fold))
           }
-          // A partition side no row reached still leaves the part Spark
-          // writes for an empty job; such a file only adds an open.
-          w.files.filter(_.rows == 0L).foreach(f => require(new java.io.File(dir, f.name).delete(),
-            s"could not drop empty staged part ${f.name}"))
-          synchronized { data = data ++ w.files.filter(_.rows > 0L) }
+          synchronized { data = data ++ w.files }
         }
       }
       val chains: Seq[() => Unit] =
@@ -2181,19 +2041,6 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
   private[graft] def parquetRowCount(files: Seq[String]): Long =
     graft.sources.ParquetGroups.rowCount(spark, files)
 
-  /** Every row of a metadata-scale parquet file (manifest, deletion
-    * vectors), read on the driver without a job: `schema`'s columns in
-    * order, null where the file lacks one.
-    */
-  private def readParquetRows(file: String, schema: org.apache.spark.sql.types.StructType)
-      : Iterator[org.apache.spark.sql.Row] =
-    graft.sources.ParquetGroups.readAll(file, schema.fieldNames.toSeq,
-        schema.fields.map(f => f.name -> f.dataType).toMap).map(a =>
-      org.apache.spark.sql.Row.fromSeq(a.toSeq.map {
-        case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-        case x => x
-      }))
-
   /** The skipping-stats fold of this commit's partition writes: per
     * staged file, the row count, id and hash-shard zones, the
     * bottom-[[SampleK]] KMV sample of the md5-word hash, the email bloom
@@ -2232,7 +2079,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     graft.util.Labeled(spark, "store: stage stats") {
       val rows = fold.rows(files.flatMap(f => f.state.map(f.name -> _)), v)
       if (rows.nonEmpty) {
-        StagedWrite.local(spark, statsSchema, rows, new java.io.File(tmp, "stats"),
+        StagedWrite.local(spark, StatsSnapshot.statsSchema, rows, new java.io.File(tmp, "stats"),
           "sts-" + java.util.UUID.randomUUID().toString.take(8)): Unit
         stagedStats.put(tmp.getAbsolutePath, rows)
       }
@@ -2450,21 +2297,17 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
       if (!f.exists()) Nil
       else readText(f).split("\n").toSeq.filter(_.nonEmpty).filter(gone(dir, _)).map(n => s"$dir/$n")
     }
-    val dvDir = new java.io.File(tmp, "deletes")
-    val missingVectored =
-      if (!dvDir.isDirectory) Nil
-      else graft.sources.ParquetGroups.read(spark, dvDir.toString).select("file").distinct()
-        .collect().toSeq.map(_.getString(0))
-        .filter(n => gone("uploaded=false", n) && gone("uploaded=true", n))
+    val missingVectored = tombstoneRows(stagedFiles(tmp, "deletes")).keys.toSeq
+      .filter(n => gone("uploaded=false", n) && gone("uploaded=true", n))
     val missing = missingListed ++ missingVectored
     if (missing.nonEmpty)
       throw new ConcurrentCommitException(
         s"staged commit removes files an interleaved commit already rewrote: " +
           missing.take(5).mkString(", "))
-    val chg = new java.io.File(tmp, "changelog")
-    if (chg.isDirectory) {
+    val chg = stagedFiles(tmp, "changelog")
+    if (chg.nonEmpty) {
       // `id` and `email` are structural, so their physical names are theirs.
-      val mine = graft.sources.ParquetGroups.read(spark, chg.toString)
+      val mine = graft.sources.ParquetGroups.read(spark, chg: _*)
         .select(col("id"), col("email")).distinct().localCheckpoint(true)
       if (mine.limit(1).count() > 0) {
         // The connector plans a feed read from the store's files alone
@@ -2494,10 +2337,11 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
   private def renumberStaged(tmp: java.io.File, newV: Long,
       stats: Option[Seq[org.apache.spark.sql.Row]]): Option[Seq[org.apache.spark.sql.Row]] = {
     val changelog = new java.io.File(tmp, "changelog")
-    if (changelog.isDirectory) {
+    val staged = stagedFiles(tmp, "changelog")
+    if (staged.nonEmpty) {
       val out = new java.io.File(tmp, "changelog.renum")
       deleteRecursively(out)
-      StagedWrite(graft.sources.ParquetGroups.read(spark, changelog.toString)
+      StagedWrite(graft.sources.ParquetGroups.read(spark, staged: _*)
         .withColumn("commit_version", lit(newV)).coalesce(1), out, "chg"): Unit
       deleteRecursively(changelog)
       require(out.renameTo(changelog), s"renumber swap $out -> $changelog failed")
@@ -2506,13 +2350,19 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     restamped.foreach { rows =>
       val dir = new java.io.File(tmp, "stats")
       deleteRecursively(dir)
-      StagedWrite.local(spark, statsSchema, rows, dir,
+      StagedWrite.local(spark, StatsSnapshot.statsSchema, rows, dir,
         "sts-" + java.util.UUID.randomUUID().toString.take(8)): Unit
     }
     writeText(new java.io.File(tmp, "version"), newV.toString)
     writeText(new java.io.File(tmp, "commit_ts"), nextCommitTs().toString)
     restamped
   }
+
+  /** The parquet files a staged target holds: none when its write
+    * reached no row, or when the commit has no such target.
+    */
+  private def stagedFiles(tmp: java.io.File, name: String): Seq[String] =
+    graft.sources.ParquetGroups.parquetFilesIn(new java.io.File(tmp, name).toString)
 
   private def writeText(f: java.io.File, s: String): Unit =
     java.nio.file.Files.write(f.toPath, s.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit

@@ -36,10 +36,10 @@ private[pipeline] final class BloomFilterWords(val nbits: Long, val words: Array
     })
 }
 
-/** The driver-resident snapshot of a store's `_stats` manifest: per
-  * file basename, the newest entry across every `_stats/commit-<v>`
-  * directory — the same rule the `statsManifest()` DataFrame view
-  * applies (rows at each file's greatest `commit_version`). Lookups
+/** The driver-resident snapshot of a store's `_stats` manifest, and the
+  * manifest's only reader: per file basename, the newest entry across
+  * every `_stats/commit-<v>` directory (the rows at each file's
+  * greatest `commit_version`). Lookups
   * call [[current]], which lists `_stats`, folds in only directories it
   * has not seen, rebuilds from disk when a folded directory has
   * disappeared, and never caches a directory above the promoted version
@@ -52,8 +52,7 @@ private[pipeline] final class BloomFilterWords(val nbits: Long, val words: Array
   * default 2^17 bloom bits an entry is at most ~18 KiB (16 KiB of
   * dense bloom words plus the 128-pair sample).
   */
-private[pipeline] final class StatsSnapshot(root: java.io.File, headVersion: () => Long,
-    readRows: String => Iterator[Row]) {
+private[pipeline] final class StatsSnapshot(root: java.io.File, headVersion: () => Long) {
   import StatsSnapshot._
 
   private val accs = mutable.HashMap.empty[String, Acc]
@@ -99,13 +98,40 @@ private[pipeline] final class StatsSnapshot(root: java.io.File, headVersion: () 
     }
   }
 
+  /** Every `_stats` row of one commit dir, read on the driver under
+    * [[StatsSnapshot.statsSchema]] (null where a file lacks a column).
+    */
   private def dirRows(d: java.io.File): Iterator[Row] =
-    graft.sources.ParquetGroups.parquetFilesIn(d.toString).iterator
-      .flatMap(readRows)
+    graft.sources.ParquetGroups.parquetFilesIn(d.toString).iterator.flatMap(f =>
+      graft.sources.ParquetGroups.readAll(f, statsSchema.fieldNames.toSeq,
+        statsSchema.fields.map(c => c.name -> c.dataType).toMap).map(a =>
+        Row.fromSeq(a.toSeq.map {
+          case u: org.apache.spark.unsafe.types.UTF8String => u.toString
+          case x => x
+        })))
 }
 
 private[pipeline] object StatsSnapshot {
-  // Column ordinals of the `_stats` row schema (CustomerStore.statsSchema).
+  import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+  /** The `_stats` row schema, written by the store's stats staging and
+    * read by [[StatsSnapshot]]: one row per file and kind — a zone
+    * (`z`: row count, id and hash-shard extrema), a KMV sample pair
+    * (`s`), a bloom word with a set bit (`b`) or an evolved column's
+    * extrema (`e`, keyed by the column's PHYSICAL name, so renames
+    * cannot detach it) — stamped with the version that wrote it. The
+    * `e` fields are nullable: stats files written before they existed
+    * read as NULL, which pruning treats as no coverage.
+    */
+  val statsSchema: StructType = StructType(
+    Seq(StructField("file", StringType, nullable = false),
+      StructField("kind", StringType, nullable = false)) ++
+      Seq("w", "bits", "nbits", "n_rows", "min_id", "max_id", "min_hb", "max_hb", "s_h", "s_id")
+        .map(StructField(_, LongType)) ++
+      Seq(StructField("ecol", StringType), StructField("min_v", LongType),
+        StructField("max_v", LongType), StructField("commit_version", LongType, nullable = false)))
+
+  // Column ordinals of statsSchema.
   private val File = 0; private val Kind = 1; private val W = 2; private val Bits = 3
   private val NBits = 4; private val NRows = 5; private val MinId = 6; private val MaxId = 7
   private val MinHb = 8; private val MaxHb = 9; private val SH = 10; private val SId = 11

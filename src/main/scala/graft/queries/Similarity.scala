@@ -140,21 +140,19 @@ object Similarity extends QueryGroup {
   // BETTER than the 10% random sample (entries start in the query's
   // own lists) while cutting the entry term from n/10 scores per
   // query to ≤48. ≥0.9 pinned in QueryContractsSpec.
-  // The three beam dials are env-overridable (GRAFT_BEAM_W/_HOPS/
-  // _DEGREE) for SCALING.md frontier measurements ONLY — the defaults
-  // are the pinned config, and the oracle SQL interpolates the same
-  // vals, so an overridden run stays internally hash-consistent while
-  // never changing what the driver measures.
-  private val BEAM_W = sys.env.get("GRAFT_BEAM_W").map(_.toInt).getOrElse(48)
-  private val BEAM_HOPS = sys.env.get("GRAFT_BEAM_HOPS").map(_.toInt).getOrElse(4)
+  // The three beam dials (BEAM_W, BEAM_HOPS, BEAM_GRAPH_K) are the
+  // pinned config. A frontier measurement (SCALING.md) edits them here
+  // in source; the oracle SQL interpolates the same vals, so an edited
+  // build stays hash-consistent with its own oracle.
+  private val BEAM_W = 48
+  private val BEAM_HOPS = 4
   private val ENTRY_PROBES = 8
   private val ENTRY_PER_LIST = 6
   // Out-degree of the navigable graph (deliberately ABOVE the serving
   // k: denser links are the degree half of HNSW's navigability, and on
   // these near-orthogonal synthetics degree is the effective recall
   // dial — see the measured sweep in SCALING.md).
-  private val BEAM_GRAPH_K =
-    sys.env.get("GRAFT_BEAM_DEGREE").map(_.toInt).getOrElse(10)
+  private val BEAM_GRAPH_K = 10
   // Embedding dimensionality of the `embeddings` table — used only
   // where SQL needs an explicit per-position range; the Spark side is
   // length-generic.

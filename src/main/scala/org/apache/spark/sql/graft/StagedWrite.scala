@@ -23,8 +23,11 @@ import org.apache.spark.sql.types.StructType
   * the directory ([[StagedCommitProtocol]]: no `_temporary` dir, no
   * task or job rename, no `_SUCCESS` file), and a stats tracker counts
   * each file's rows and folds them into a caller-defined per-file
-  * state while they are written. [[local]] writes a metadata-scale row
-  * set as one file on the driver, with no job. Both go through Spark's
+  * state while they are written. A part no row reached (Spark's first
+  * task writes one even when its partition is empty, so that an empty
+  * job still leaves a file) is deleted with its checksum and never
+  * reported: no written directory holds a 0-row file. [[local]] writes
+  * a metadata-scale row set as one file on the driver, with no job. Both go through Spark's
   * own `ParquetFileFormat` write support, so the footer (schema,
   * nullability, row-metadata key, codec) is what `df.write.parquet`
   * writes.
@@ -59,8 +62,10 @@ object StagedWrite {
   /** Write `df` into `dir` (created if missing) as parquet files named
     * `<prefix>-<commitId>-…`, in the frame's own SQL execution (so
     * listeners and SQL metrics see it), folding `fold`'s columns per
-    * file. Returns each written file's rows, bytes and state. A failed
-    * write removes what it wrote and rethrows.
+    * file. Returns each written file's rows, bytes and state; 0-row
+    * parts are deleted and left out, so a write no row reached leaves
+    * `dir` without a file. A failed write removes what it wrote and
+    * rethrows.
     */
   def apply[S](df: DataFrame, dir: java.io.File, prefix: String,
       fold: Option[(Seq[Column], FileFold[S])] = None): Written[S] = {
@@ -76,7 +81,9 @@ object StagedWrite {
       FileFormatWriter.write(session, plan, new ParquetFileFormat, protocol,
         FileFormatWriter.OutputSpec(dir.getAbsolutePath, Map.empty, plan.output),
         session.sessionState.newHadoopConf(), Nil, None, Seq(tracker), Map.empty)
-      Written(tracker.result.toSeq.sortBy(_._1).map { case (name, (rows, state)) =>
+      val (kept, empty) = tracker.result.toSeq.sortBy(_._1).partition(_._2._1 > 0L)
+      empty.foreach { case (name, _) => StagedCommitProtocol.drop(new java.io.File(dir, name)) }
+      Written(kept.map { case (name, (rows, state)) =>
         WrittenFile(name, rows, new java.io.File(dir, name).length(), state)
       })
     }
@@ -235,7 +242,7 @@ object StagedCommitProtocol {
       .filter(f => f.isFile && !f.getName.startsWith("."))
 
   /** Delete `f` and its `.<name>.crc` sidecar, if present. */
-  private def drop(f: java.io.File): Unit = {
+  private[graft] def drop(f: java.io.File): Unit = {
     val crc = new java.io.File(f.getParentFile, s".${f.getName}.crc")
     if (crc.exists()) crc.delete(): Unit
     if (f.exists()) require(f.delete(), s"staged write: could not delete $f")

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.LongType
 
@@ -17,20 +17,11 @@ import graft.SparkSpec.jobsOf
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
-  private def batch(ids: Seq[Long]): DataFrame =
-    Ingest.enrich(ids.map(i => (i, s"F$i", s"L$i", s"user$i@example.com", s"555-$i"))
-      .toDF("id", "first_name", "last_name", "email", "phone"))
-      .withColumn("score", $"id" % 10)
+  private def batch(ids: Seq[Long]): DataFrame = JobBudgetSpec.batch(spark, ids)
 
-  /** The budget fixture: an evolved numeric column plus three
-    * 100-row insert commits.
-    */
   private def fixture(): (CustomerStore, String) = {
     val path = tmpDir("budget") + "/s"
-    val store = new CustomerStore(spark, path)
-    store.addColumn("score", LongType)
-    for (c <- 0 until 3) store.insertNew(batch((1 + c * 100).toLong to ((c + 1) * 100).toLong))
-    (store, path)
+    (JobBudgetSpec.fixture(spark, path), path)
   }
 
   test("manifest consults run no Spark job; a commit's stats phase runs at most two") {
@@ -72,15 +63,11 @@ class JobBudgetSpec extends SparkSpec {
     */
   test("each commit kind stays within its total job budget") {
     val (store, _) = fixture()
-    val budgets = Seq[(String, () => Any)](
-      "insert" -> (() => store.insertNew(batch(401L to 500L))),
-      "ack" -> (() => store.markUploaded(Seq("user7@example.com").toDF("email"))),
-      "merge" -> (() => store.merge(batch(Seq(8L, 9L, 601L)).withColumn("phone", lit("999")))),
-      "delete" -> (() => store.delete(Seq("user11@example.com").toDF("email"))),
-      "compact" -> (() => store.compact()))
-    val counts = budgets.map { case (kind, op) => kind -> jobsOf(op())._2.size }
+    val counts = JobBudgetSpec.commitKinds(spark, store).map { case (kind, op) =>
+      kind -> jobsOf(op())._2.size
+    }
     val pinned = Map("insert" -> 11, "ack" -> 7, "merge" -> 27, "delete" -> 6,
-      "compact" -> 4)
+      "compact" -> 4, "purge" -> 11, "restore" -> 9)
     counts.foreach { case (kind, n) =>
       assert(n <= pinned(kind), s"$kind commit ran $n Spark jobs; budget ${pinned(kind)}")
     }
@@ -94,16 +81,11 @@ class JobBudgetSpec extends SparkSpec {
     def sizeBytes(): Long = store.detail().head().getLong(2)
     def metrics(v: Long): Map[String, Long] =
       store.history().filter(col("commit_version") === v).head().getMap[String, Long](4).toMap
-    val ops = Seq[(String, () => Any)](
-      "insert" -> (() => store.insertNew(batch(401L to 500L))),
-      "ack" -> (() => store.markUploaded(Seq("user7@example.com").toDF("email"))),
-      "merge" -> (() => store.merge(batch(Seq(8L, 9L, 601L)).withColumn("phone", lit("999")))),
-      "delete" -> (() => store.delete(Seq("user11@example.com").toDF("email"))),
-      "compact" -> (() => store.compact()))
-    val seen = ops.map { case (kind, op) =>
+    val seen = JobBudgetSpec.commitKinds(spark, store).map { case (kind, op) =>
       val before = sizeBytes()
       op()
-      kind -> ((metrics(store.currentVersion()), sizeBytes() - before))
+      val after = sizeBytes()
+      kind -> ((metrics(store.currentVersion()), after - before, after))
     }.toMap
     def counts(kind: String): Map[String, Long] =
       seen(kind)._1.removedAll(Seq("stage_ms", "bytes_added"))
@@ -115,11 +97,48 @@ class JobBudgetSpec extends SparkSpec {
     assert(counts("merge") === rows(1, 0, 2, 3, 1))
     assert(counts("delete") === rows(0, 1, 0, 0, 0))     // a deletion vector, no data file
     assert(counts("compact") === rows(0, 0, 0, 2, 7))    // one file per partition
-    // bytes_added is the added data files' size on disk
+    assert(counts("purge") === rows(0, 0, 0, 1, 1))      // feed-silent: the touched file rewritten
+    // restore to v5: user11 back, user601 gone, user7-9 reverted
+    assert(counts("restore") === rows(1, 1, 3, 1, 2))
+    // bytes_added is the added data files' size on disk; a replace's
+    // files are the whole table after it
     assert(seen("insert")._1("bytes_added") === seen("insert")._2)
-    assert(seen("compact")._1("bytes_added") === sizeBytes())
+    assert(Seq("compact", "restore").forall(k => seen(k)._1("bytes_added") === seen(k)._3), s"$seen")
     assert(seen("delete")._1("bytes_added") === 0L)
-    assert(Seq("ack", "merge").forall(seen(_)._1("bytes_added") > 0L), s"$seen")
+    assert(Seq("ack", "merge", "purge").forall(seen(_)._1("bytes_added") > 0L), s"$seen")
     assert(seen.values.forall(_._1.get("stage_ms").exists(_ >= 0L)), s"stage_ms: $seen")
+  }
+}
+
+object JobBudgetSpec {
+  /** A batch of the fixture's rows, with the evolved `score` column. */
+  def batch(spark: SparkSession, ids: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    Ingest.enrich(ids.map(i => (i, s"F$i", s"L$i", s"user$i@example.com", s"555-$i"))
+      .toDF("id", "first_name", "last_name", "email", "phone"))
+      .withColumn("score", $"id" % 10)
+  }
+
+  /** The budget fixture: an evolved numeric column (v1) plus three
+    * 100-row insert commits (v2-v4).
+    */
+  def fixture(spark: SparkSession, path: String): CustomerStore = {
+    val store = new CustomerStore(spark, path)
+    store.addColumn("score", LongType)
+    for (c <- 0 until 3) store.insertNew(batch(spark, (1 + c * 100).toLong to ((c + 1) * 100).toLong))
+    store
+  }
+
+  /** One commit of each kind, to run in order on the fixture (v5-v11). */
+  def commitKinds(spark: SparkSession, store: CustomerStore): Seq[(String, () => Any)] = {
+    import spark.implicits._
+    Seq(
+      "insert" -> (() => store.insertNew(batch(spark, 401L to 500L))),
+      "ack" -> (() => store.markUploaded(Seq("user7@example.com").toDF("email"))),
+      "merge" -> (() => store.merge(batch(spark, Seq(8L, 9L, 601L)).withColumn("phone", lit("999")))),
+      "delete" -> (() => store.delete(Seq("user11@example.com").toDF("email"))),
+      "compact" -> (() => store.compact()),
+      "purge" -> (() => store.purgeEmails(Seq("user12@example.com"))),
+      "restore" -> (() => store.restore(5L)))
   }
 }

@@ -61,17 +61,50 @@ class LiveReadSpec extends SparkSpec {
     assert(store.currentVersion() === 3L && store.all().count() === 90L)
   }
 
-  test("CustomerStore names a row's file only through the scan, bar purge's raw probes") {
-    val src = new File("src/main/scala/graft/pipeline/CustomerStore.scala")
-    assert(src.isFile, s"run from the repository root (cwd ${new File(".").getAbsolutePath})")
-    val lines = scala.io.Source.fromFile(src, "UTF-8").getLines().toIndexedSeq
-    val definer = """^\s*(?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r
-    // Each input_file_name( call, by the method it sits in.
-    val callers = lines.indices.filter(i => lines(i).contains("input_file_name(")).map { i =>
+  /** A member definition of a top-level class or object (two-space
+    * indent): the method a line sits in, not a local helper.
+    */
+  private val definer = """^  (?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r
+
+  private def sourceLines(f: File): IndexedSeq[String] = {
+    assert(f.isFile, s"run from the repository root (cwd ${new File(".").getAbsolutePath})")
+    scala.io.Source.fromFile(f, "UTF-8").getLines().toIndexedSeq
+  }
+
+  /** The method each line matching `hit` sits in. */
+  private def callers(lines: IndexedSeq[String], hit: String => Boolean): Seq[String] =
+    lines.indices.filter(i => hit(lines(i))).map { i =>
       (i to 0 by -1).iterator.flatMap(j => definer.findFirstMatchIn(lines(j)).map(_.group(1)))
         .nextOption().getOrElse(s"line ${i + 1}")
     }
-    assert(callers.sorted === Seq("exciseParquet", "purgeEmails"),
-      s"input_file_name( outside purge's raw probes: $callers")
+
+  test("CustomerStore names a row's file only through the scan, bar purge's raw probes") {
+    val lines = sourceLines(new File("src/main/scala/graft/pipeline/CustomerStore.scala"))
+    val found = callers(lines, _.contains("input_file_name("))
+    assert(found === Seq("exciseParquet"), s"input_file_name( outside exciseParquet: $found")
+  }
+
+  test("no main file reads `_stats` or `_deletes` with Spark") {
+    val sparkRead = """spark\.read\b|\.read\.parquet|ParquetGroups\.read\(|readStream""".r
+    val storeMeta = """_stats|_deletes|StatsManifest|\bDeletes\b|deletionVectorFiles|statsSchema|dvSchema|"stats"|"deletes"""".r
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f).filter(_.getName.endsWith(".scala"))
+    val main = walk(new File("src/main/scala"))
+    assert(main.nonEmpty, s"run from the repository root (cwd ${new File(".").getAbsolutePath})")
+    val hits = main.flatMap { f =>
+      sourceLines(f).zipWithIndex.collect {
+        case (l, i) if sparkRead.findFirstIn(l).nonEmpty && storeMeta.findFirstIn(l).nonEmpty =>
+          s"${f.getName}:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty, s"Spark reads of the store's manifest or vectors: $hits")
+    assert(sparkRead.findFirstIn(sourceLines(
+      new File("src/main/scala/graft/pipeline/StatsSnapshot.scala")).mkString("\n")).isEmpty)
+    // CustomerStore's Spark reads, bar the connector's own: the staged
+    // change rows at the commit point, and purge's history excision.
+    val store = sourceLines(new File("src/main/scala/graft/pipeline/CustomerStore.scala"))
+    val found = callers(store, l => sparkRead.findFirstIn(l).nonEmpty && !l.contains("\"graft-store\""))
+    assert(found.distinct.sorted === Seq("checkNoConflict", "exciseParquet", "renumberStaged"),
+      s"Spark reads in CustomerStore: $found")
   }
 }

@@ -11,7 +11,8 @@ import graft.SparkSpec
 /** The driver-resident manifest snapshot against its reference model:
   * the Spark-side consults the store ran before the snapshot existed
   * (kept here, and only here, in [[SparkManifestModel]]), evaluated
-  * over the public manifest views. On a seeded store every snapshot
+  * over the model's Spark reads of the `_stats` and `_deletes` files.
+  * On a seeded store every snapshot
   * lookup must return exactly the model's answer after every kind of
   * commit, a commit by a second instance, a lost `_stats` dir and a
   * crash between the stats promotion and the version-counter advance —
@@ -190,19 +191,59 @@ class ManifestSnapshotSpec extends SparkSpec {
 }
 
 /** The Spark-side manifest consults the store ran before its manifest
-  * moved to the driver, verbatim over the public manifest views — the
-  * reference model of [[ManifestSnapshotSpec]].
+  * moved to the driver, verbatim over the manifest views the store used
+  * to serve — the reference model of [[ManifestSnapshotSpec]], and the
+  * Spark reader of `_stats` and `_deletes` the other store specs check
+  * the driver-side readers against.
   */
 final class SparkManifestModel(spark: SparkSession, store: CustomerStore, path: String) {
   import spark.implicits._
 
   private val BloomSeeds = 3
 
+  /** The `_stats` rows at each file's newest `commit_version`, by Spark. */
+  def statsManifest(): DataFrame = {
+    val schema = StatsSnapshot.statsSchema
+    val files = StatsSnapshot.commitDirs(new File(path, CustomerStore.StatsManifest)).values
+      .flatMap(d => graft.sources.ParquetGroups.parquetFilesIn(d.toString)).toSeq
+    if (files.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    val m = spark.read.schema(schema).parquet(files: _*)
+      .select(schema.fieldNames.map(col): _*)
+    val latest = m.groupBy(col("file"))
+      .agg(max(col("commit_version")).as("commit_version"))
+    m.join(latest, Seq("file", "commit_version"))
+  }
+
+  /** One row per (file, 64-bit bloom word with ≥1 bit set), with geometry. */
+  def bloomManifest(): DataFrame =
+    statsManifest().filter(col("kind") === "b")
+      .select(col("file"), col("w"), col("bits"), col("nbits"), col("commit_version"))
+
+  /** Per-file row count, id and hash-shard min/max. */
+  def zonesManifest(): DataFrame =
+    statsManifest().filter(col("kind") === "z")
+      .select(col("file"), col("n_rows"), col("min_id"), col("max_id"),
+        col("min_hb"), col("max_hb"), col("commit_version"))
+
+  /** Per-file min/max of each evolved numeric column, by physical name. */
+  def evolvedZonesManifest(): DataFrame =
+    statsManifest().filter(col("kind") === "e")
+      .select(col("file"), col("ecol"), col("min_v"), col("max_v"), col("commit_version"))
+
+  /** Each file's bottom-k (md5-word hash, id) KMV sample pairs. */
+  def sampleManifest(): DataFrame =
+    statsManifest().filter(col("kind") === "s")
+      .select(col("file"), col("s_h"), col("s_id"), col("commit_version"))
+
+  /** The committed deletion vectors as (data-file basename, email) rows, by Spark. */
+  def deletionVectors(): DataFrame = SparkManifestModel.deletionVectors(spark, path)
+
   def scorePhys: Option[String] = CustomerStore.physicalMapAt(path).get("score")
 
   def bloomKeepFiles(files: Seq[(String, String)], emails: Seq[String]): Seq[String] = {
     if (files.isEmpty || emails.isEmpty) return Seq.empty
-    val bloom = store.bloomManifest()
+    val bloom = bloomManifest()
     val covered = bloom.select(col("file")).distinct()
       .collect().map(_.getString(0)).toSet
     val coveredLive = files.filter { case (name, _) => covered(name) }
@@ -230,7 +271,7 @@ final class SparkManifestModel(spark: SparkSession, store: CustomerStore, path: 
   }
 
   def zoneKeepFiles[A](files: Seq[(String, A)], lo: Long, hi: Long): Seq[(String, A)] = {
-    val zones = store.zonesManifest()
+    val zones = zonesManifest()
       .select(col("file"), col("min_id"), col("max_id"))
       .collect().flatMap { r =>
         if (r.isNullAt(1) || r.isNullAt(2)) None
@@ -243,7 +284,7 @@ final class SparkManifestModel(spark: SparkSession, store: CustomerStore, path: 
 
   def evolvedZoneKeepFiles[A](files: Seq[(String, A)], physCol: String,
       lo: Long, hi: Long): Seq[(String, A)] = {
-    val zones = store.evolvedZonesManifest()
+    val zones = evolvedZonesManifest()
       .filter(col("ecol") === physCol)
       .select(col("file"), col("min_v"), col("max_v"))
       .collect().flatMap { r =>
@@ -258,7 +299,7 @@ final class SparkManifestModel(spark: SparkSession, store: CustomerStore, path: 
   /** Files the zone-pruned pending read keeps. */
   def zoneKept(files: Seq[String], idKeep: Option[(Long, Long)] => Boolean,
       hbKeep: Option[(Long, Long)] => Boolean): Int = {
-    val zones = store.zonesManifest()
+    val zones = zonesManifest()
       .select(col("file"), col("min_id"), col("max_id"), col("min_hb"), col("max_hb"))
       .collect().map { r =>
         r.getString(0) -> ((
@@ -272,14 +313,14 @@ final class SparkManifestModel(spark: SparkSession, store: CustomerStore, path: 
   }
 
   private def liveVectors(): Long = {
-    val dv = store.deletionVectors()
+    val dv = deletionVectors()
     val liveNames = store.liveDataFiles().map(_._1)
     dv.join(liveNames.toDF("file"), Seq("file"), "left_semi").count()
   }
 
   private def coveredZoneRows(names: Set[String]): Option[Seq[(String, Long, Long, Long)]] = {
     if (liveVectors() > 0L) return None
-    val zones = store.zonesManifest()
+    val zones = zonesManifest()
       .select(col("file"), col("n_rows"), col("min_id"), col("max_id"),
         col("commit_version"))
       .collect()
@@ -316,7 +357,7 @@ final class SparkManifestModel(spark: SparkSession, store: CustomerStore, path: 
     if (live.isEmpty) return Some(Seq.empty)
     if (liveVectors() > 0L) return None
     val names = live.map(_._1).toSet
-    val rows = store.evolvedZonesManifest()
+    val rows = evolvedZonesManifest()
       .filter(col("ecol") === physCol)
       .select(col("file"), col("min_v"), col("max_v"), col("commit_version"))
       .collect()
@@ -336,9 +377,9 @@ final class SparkManifestModel(spark: SparkSession, store: CustomerStore, path: 
     val live = store.pendingDataFiles()
     if (live.isEmpty) return (0L, 0L, 0L)
     val liveDf = live.toDF("file")
-    val total = store.zonesManifest().join(liveDf, Seq("file"))
+    val total = zonesManifest().join(liveDf, Seq("file"))
       .agg(coalesce(sum(col("n_rows")), lit(0L))).head().getLong(0)
-    val sample = store.sampleManifest().join(liveDf, Seq("file"))
+    val sample = sampleManifest().join(liveDf, Seq("file"))
       .orderBy(col("s_h"), col("s_id")).limit(CustomerStore.SampleK)
       .select(col("s_id")).collect().map(_.getLong(0))
     if (sample.isEmpty) return (total, total, 0L)
@@ -349,7 +390,7 @@ final class SparkManifestModel(spark: SparkSession, store: CustomerStore, path: 
   def estimateJoinOnId(batchIds: DataFrame): (Long, Long, Long) = {
     val SampleK = CustomerStore.SampleK
     val live = store.liveDataFiles().map(_._1).toDF("file")
-    val storeSample = store.sampleManifest().join(live, Seq("file"))
+    val storeSample = sampleManifest().join(live, Seq("file"))
       .orderBy(col("s_h"), col("s_id")).limit(SampleK)
       .select(col("s_h"), col("s_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -374,22 +415,15 @@ final class SparkManifestModel(spark: SparkSession, store: CustomerStore, path: 
   }
 
   def rowCount(names: Set[String]): Option[Long] = {
-    val rows = store.zonesManifest().select(col("file"), col("n_rows"))
+    val rows = zonesManifest().select(col("file"), col("n_rows"))
       .collect().filter(r => !r.isNullAt(1) && names(r.getString(0)))
       .map(r => (r.getString(0), r.getLong(1))).toMap
     if (rows.keySet == names) Some(rows.values.sum) else None
   }
 
-  private val statsCols = Seq("file" -> "string", "kind" -> "string", "w" -> "long",
-    "bits" -> "long", "nbits" -> "long", "n_rows" -> "long", "min_id" -> "long",
-    "max_id" -> "long", "min_hb" -> "long", "max_hb" -> "long", "s_h" -> "long",
-    "s_id" -> "long", "ecol" -> "string", "min_v" -> "long", "max_v" -> "long",
-    "commit_version" -> "long")
-
   private def asStatsRows(df: DataFrame): DataFrame =
-    df.select(statsCols.map { case (c, t) =>
-      (if (df.columns.contains(c)) col(c) else lit(null)).cast(t).as(c)
-    }: _*)
+    df.select(StatsSnapshot.statsSchema.fields.toSeq.map(f =>
+      (if (df.columns.contains(f.name)) col(f.name) else lit(null)).cast(f.dataType).as(f.name)): _*)
 
   /** The rows of one `_stats/commit-<v>` dir as written. */
   def statsFileRows(dir: File): DataFrame =
@@ -449,5 +483,16 @@ final class SparkManifestModel(spark: SparkSession, store: CustomerStore, path: 
     }
     (Seq(zones, sample, bloom) ++ evo).map(asStatsRows).reduce(_ unionByName _)
       .withColumn("commit_version", lit(v))
+  }
+}
+
+object SparkManifestModel {
+  /** The deletion vectors of the store at `path` as (file, email) rows, by Spark. */
+  def deletionVectors(spark: SparkSession, path: String): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType(Seq("file", "email").map(n =>
+      org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType)))
+    val files = graft.sources.ParquetGroups.parquetFilesIn(new File(path, CustomerStore.Deletes).toString)
+    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).parquet(files: _*)
   }
 }

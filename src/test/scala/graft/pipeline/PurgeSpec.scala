@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** PURGE (right-to-be-forgotten): `purgeEmails` physically excises a
@@ -39,7 +40,7 @@ class PurgeSpec extends SparkSpec {
   }
 
   test("purge erases a key from live data, feed, snapshots, time travel, vectors") {
-    val (st, _) = build()
+    val (st, path) = build()
     val keys = Seq(key(4), key(5), key(6))
     val expectedSurvivors = st.all()
       .filter(!col("email").isInCollection(keys)).localCheckpoint(true)
@@ -60,7 +61,8 @@ class PurgeSpec extends SparkSpec {
       assert(st.asOf(v).filter(col("email").isInCollection(keys)).count() === 0L,
         s"purged key visible at version $v")
     }
-    assert(st.deletionVectors().filter(col("email").isInCollection(keys)).count() === 0L)
+    assert(new SparkManifestModel(spark, st, path).deletionVectors()
+      .filter(col("email").isInCollection(keys)).count() === 0L)
     // The purge commit: version advanced, PURGE label, feed-silent.
     assert(st.currentVersion() === 4L)
     assert(st.history().orderBy(col("commit_version").desc).head().getString(2) === "PURGE")
@@ -70,6 +72,34 @@ class PurgeSpec extends SparkSpec {
     assert(st.changeFeed().filter(col("change_type") === "insert").count() === 17L)
     assert(st.changeFeed().filter(col("change_type") === "ack").count() === 8L)
     assert(st.changeFeed().filter(col("change_type") === "delete_pre").count() === 0L)
+  }
+
+  test("purge under column mapping: an added and a renamed column, a live and a tombstoned key") {
+    val path = s"${tmpDir("graft-purge-")}/mapped"
+    val st = new CustomerStore(spark, path)
+    st.insertNew(Ingest.enrich(rows(1L to 20L))): Unit                        // v1
+    st.addColumn("score", org.apache.spark.sql.types.LongType): Unit          // v2
+    st.insertNew(Ingest.enrich(rows(21L to 30L)).withColumn("score", col("id") % 7)): Unit // v3
+    st.renameColumn("phone", "tel"): Unit                                     // v4
+    assert(st.delete(emails(Seq(5L))) === 1L)                                 // v5
+    st.writeSnapshot(): Unit
+    // u22 is live (in the file that carries `score`), u5 only tombstoned.
+    val keys = Seq(key(22), key(5))
+    val model = st.all().filter(!col("email").isInCollection(keys)).localCheckpoint(true)
+    // Physical live rows 2, feed u22 insert + u5 insert/delete_pre 3,
+    // snapshot at v5 u22 1, vectors u5 1.
+    assert(st.purgeEmails(keys) === ((2L, 3L, 1L, 1L)))
+    val after = st.all()
+    assert(after.columns.contains("tel") && !after.columns.contains("phone"))
+    assert(after.count() === 28L)
+    assert(after.exceptAll(model).isEmpty && model.exceptAll(after).isEmpty,
+      "survivors must equal the model row for row")
+    assert(after.filter(col("id") === 23L).select("tel", "score").head() === Row("555-23", 2L))
+    (1L to 5L).foreach { v =>
+      assert(st.asOf(v).filter(col("email").isInCollection(keys)).count() === 0L,
+        s"purged key visible at version $v")
+    }
+    assert(st.asOf(4L).count() === 28L)
   }
 
   test("purge is idempotent and version-stable when nothing is left to erase") {

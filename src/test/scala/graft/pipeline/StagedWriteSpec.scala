@@ -15,9 +15,9 @@ import graft.sources.ParquetGroups
 
 /** Failure paths and on-disk format of the store's staged writer: the
   * job commit removes what no task committed, a failing write leaves
-  * the table as it was, every staged file kind keeps the schema the
-  * store has always written, and CustomerStore has no other way to
-  * write parquet.
+  * the table as it was, no write leaves a 0-row file, every staged file
+  * kind keeps the schema the store has always written, and
+  * CustomerStore has no other way to write parquet.
   */
 class StagedWriteSpec extends SparkSpec {
   import spark.implicits._
@@ -46,6 +46,89 @@ class StagedWriteSpec extends SparkSpec {
     assert(!dir.listFiles().exists(f => f.getName.startsWith("_")),
       "a staged write leaves no _temporary dir or _SUCCESS file")
     assert(ParquetGroups.read(spark, dir.toString).count() === 40L)
+  }
+
+  test("a part no row reached is deleted with its checksum and left out of the result") {
+    val dir = new File(tmpDir("staged-empty"), "t")
+    // Four partitions, two of them empty, the first among them.
+    val df = spark.range(0, 20, 1, 4).toDF("id").filter(col("id") >= 10L)
+    val w = StagedWrite(df, dir, "ins")
+    assert(w.rows === 10L && w.files.forall(_.rows > 0L) && w.files.size === 2, s"$w")
+    assert(parquetNames(dir) === w.files.map(_.name).toSet)
+    assert(dir.listFiles().count(_.getName.endsWith(".crc")) === 2)
+    // A job no row reached leaves the directory without a file.
+    val none = new File(tmpDir("staged-none"), "t")
+    assert(StagedWrite(spark.range(0).toDF("id"), none, "ins").files.isEmpty)
+    assert(Option(none.listFiles()).toSeq.flatten.isEmpty)
+  }
+
+  /** Each staged target's parquet files, by target, for a captured staging dir. */
+  private def stagedParts(dir: File): Map[String, Seq[String]] =
+    dir.listFiles().filter(_.isDirectory).map(d =>
+      d.getName -> ParquetGroups.parquetFilesIn(d.toString)).toMap.filter(_._2.nonEmpty)
+
+  test("a one-email delete on a 4-file store writes one vector file and one change part") {
+    val path = tmpDir("staged-delete") + "/s"
+    val store = new CustomerStore(spark, path)
+    for (c <- 0 until 4) store.insertNew(batch((1 + c * 50).toLong to ((c + 1) * 50).toLong)): Unit
+    assert(store.liveDataFiles().size === 4)
+    val captured = new File(tmpDir("staged-delete-cap"), "c")
+    store.commitPointHook = () => copyTree(new File(path, CustomerStore.Staging), captured)
+    try assert(store.delete(Seq("user60@example.com").toDF("email")) === 1L)
+    finally store.commitPointHook = () => ()
+    val parts = stagedParts(captured)
+    assert(parts.keySet === Set("deletes", "changelog"), s"$parts")
+    parts.foreach { case (target, files) =>
+      assert(files.size === 1 && ParquetGroups.rowCount(spark, files) === 1L, s"$target: $files")
+    }
+  }
+
+  test("no staged target holds a 0-row file after any commit kind") {
+    val path = tmpDir("staged-kinds") + "/s"
+    val store = JobBudgetSpec.fixture(spark, path)
+    val captured = new File(tmpDir("staged-kinds-cap"), "c")
+    var n = 0
+    store.commitPointHook = () => {
+      n += 1
+      copyTree(new File(path, CustomerStore.Staging), new File(captured, s"c$n"))
+    }
+    val kinds = JobBudgetSpec.commitKinds(spark, store)
+    try kinds.foreach(_._2())
+    finally store.commitPointHook = () => ()
+    assert(n === kinds.size)
+    val empty = (1 to n).flatMap(i => stagedParts(new File(captured, s"c$i")).toSeq.flatMap {
+      case (target, files) => files.filter(f => ParquetGroups.rowCount(spark, Seq(f)) == 0L)
+        .map(f => s"${kinds(i - 1)._1}/$target/${new File(f).getName}")
+    })
+    assert(empty.isEmpty, s"0-row staged parts: $empty")
+  }
+
+  test("a feed-silent commit leaves an empty _changelog dir; history reads across it") {
+    val path = tmpDir("staged-silent") + "/s"
+    val store = new CustomerStore(spark, path)
+    store.insertNew(batch(1L to 20L)): Unit                              // v1
+    store.delete(Seq("user3@example.com").toDF("email")): Unit          // v2
+    store.compact()                                                      // v3, feed-silent
+    store.insertNew(batch(21L to 30L)): Unit                             // v4
+    def feedDir(v: Long) = new File(path, f"_changelog/commit-$v%09d")
+    assert(Seq(1L, 2L, 3L, 4L).forall(feedDir(_).isDirectory))
+    assert(ParquetGroups.parquetFilesIn(feedDir(3L).toString).isEmpty,
+      "compaction stages no change part, so its feed dir holds no file")
+    assert(store.history().filter(col("commit_version") === 3L).head().getLong(3) === 0L)
+    assert(Seq(1L, 2L, 3L, 4L).map(store.asOf(_).count()) === Seq(20L, 19L, 19L, 29L))
+    assert(store.feedSince(1L, 4L).groupBy("commit_version").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === Map(2L -> 1L, 4L -> 10L))
+    assert(store.feedSince(2L, 3L).count() === 0L)
+    // The micro-batch stream: one commit per trigger, the silent one empty.
+    val sink = tmpDir("staged-silent-sink")
+    val q = spark.readStream.format("graft-store").option("path", path)
+      .option("feedFrom", 0).option("maxCommitsPerTrigger", 1).load()
+      .writeStream.format("parquet").option("path", sink)
+      .option("checkpointLocation", tmpDir("staged-silent-ckpt")).outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(q.recentProgress.map(_.numInputRows).filter(_ > 0L).toSeq === Seq(20L, 1L, 10L))
+    assert(spark.read.schema(store.changeFeed().schema).parquet(sink).count() === 31L)
   }
 
   test("a write that throws mid-job leaves the table at its prior version, nothing staged") {

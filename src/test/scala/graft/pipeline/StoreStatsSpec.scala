@@ -53,9 +53,10 @@ class StoreStatsSpec extends SparkSpec {
     for (v <- 1L to 3L; root <- Seq("_stats"))
       assert(new File(path, f"$root%s/commit-$v%09d").exists(),
         s"$root manifest missing for commit $v")
-    val bloomFiles = store.bloomManifest().select("file")
+    val model = new SparkManifestModel(spark, store, path)
+    val bloomFiles = model.bloomManifest().select("file")
       .distinct().collect().map(_.getString(0)).toSet
-    val zoneFiles = store.zonesManifest().select("file")
+    val zoneFiles = model.zonesManifest().select("file")
       .collect().map(_.getString(0)).toSet
     val live = liveFiles(path)
     assert(live.nonEmpty)
@@ -72,7 +73,7 @@ class StoreStatsSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), min("id").as("mn"), max("id").as("mx"))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
-    val zoned = store.zonesManifest()
+    val zoned = new SparkManifestModel(spark, store, path).zonesManifest()
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     for ((f, stats) <- actual)
@@ -155,7 +156,7 @@ class StoreStatsSpec extends SparkSpec {
         f -> rs.map(r => (r.getLong(1), r.getLong(2))).sorted
           .take(CustomerStore.SampleK).toSeq
       }
-    val manifest = store.sampleManifest()
+    val manifest = new SparkManifestModel(spark, store, path).sampleManifest()
       .collect().groupBy(_.getString(0))
       .map { case (f, rs) =>
         f -> rs.map(r => (r.getLong(1), r.getLong(2))).sorted.toSeq
@@ -284,7 +285,7 @@ class StoreStatsSpec extends SparkSpec {
     assert(new File(path, f"_stats/commit-${2L}%09d").exists())
     assert(new File(path, f"_stats/commit-${2L}%09d").exists())
     val live = liveFiles(path)
-    val covered = reopened.bloomManifest().select("file")
+    val covered = new SparkManifestModel(spark, reopened, path).bloomManifest().select("file")
       .distinct().collect().map(_.getString(0)).toSet
     assert(live.subsetOf(covered), s"uncovered after recovery: ${live -- covered}")
   }

@@ -1271,12 +1271,8 @@ final class SparkLiveModel(spark: SparkSession, path: String) {
       .select(col("_file") +:
         tableSchema.fields.map(f => col(physName(f)).as(f.name)).toIndexedSeq: _*)
       .select(tableSchema.fieldNames.map(col) :+ col("_file"): _*)
-    val dvFiles = ParquetGroups.parquetFilesIn(new java.io.File(path, "_deletes").toString)
-    if (dvFiles.isEmpty) phys
-    else phys.join(
-      spark.read.schema(StructType(Seq(StructField("file", org.apache.spark.sql.types.StringType),
-          StructField("email", org.apache.spark.sql.types.StringType))))
-        .parquet(dvFiles: _*).select(col("file").as("_dvf"), col("email").as("_dve")),
+    phys.join(graft.pipeline.SparkManifestModel.deletionVectors(spark, path)
+        .select(col("file").as("_dvf"), col("email").as("_dve")),
       element_at(split(col("_file"), "/"), -1) === col("_dvf") &&
         col("email") === col("_dve"), "left_anti")
   }
