@@ -2,7 +2,7 @@ package graft.pipeline
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.StagedWrite
 import org.apache.spark.unsafe.types.UTF8String
@@ -199,13 +199,11 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     */
   private[pipeline] def deleteCommit(emails: DataFrame): (Long, Option[Commit]) = {
     val keys = emails.select(col("email").as("_del")).distinct()
-    val hit = graft.util.Labeled(spark, "store: delete probe") {
-      liveRead(withFile = true)
-        .join(keys, col("email") === col("_del"), "left_semi")
-        .withColumn("_file", element_at(split(col("_file"), "/"), -1))
-        .localCheckpoint(true)
-    }
-    val n = hit.count()
+    val (hit, m) = pinObserved("store: delete probe", liveRead(withFile = true)
+      .join(keys, col("email") === col("_del"), "left_semi")
+      .withColumn("_file", element_at(split(col("_file"), "/"), -1)),
+      count(lit(1)))
+    val n = m.getLong(0)
     (n, Option.when(n > 0)(Commit("DELETE",
       vectors = Some(hit.select(col("_file").as("file"), col("email"))),
       changes = Some(changeRows(hit.drop("_file", "_del"), "delete_pre")))))
@@ -244,13 +242,6 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
   /** Change-feed projection: the full row plus the change kind. */
   private def changeRows(rows: DataFrame, kind: String): DataFrame =
     rows.select(lit(kind).as("change_type") +: tableSchema.fieldNames.map(col): _*)
-
-  /** The change rows of a feed-silent data commit (layout only). */
-  private def noChanges: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("change_type",
-          org.apache.spark.sql.types.StringType, nullable = false) +: tableSchema.fields))
 
   /** The store's change data feed — every mutation the store has
     * committed, as full rows tagged `insert` / `update` / `ack`
@@ -1024,7 +1015,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     * vector rows excised).
     */
   def purgeEmails(emails: Seq[String]): (Long, Long, Long, Long) =
-    promotionLock.synchronized {
+    promotionLock.synchronized(graft.util.Labeled(spark, "store: purge") {
       recover()
       require(tableExists, s"purge: table at $path does not exist")
       val keys = emails.map(_.trim).filter(_.nonEmpty).distinct
@@ -1041,28 +1032,27 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
 
       // 2. Live data: the scan over every physical row (tombstones
       // emptied), then a file-level feed-silent PURGE commit rewriting
-      // exactly the touched files.
-      val hit = liveRead(withFile = true, live = liveFiles().copy(tombstones = Map.empty))
+      // exactly the touched files. The probe returns each hit row's file
+      // name, in one job: a few rows per key.
+      val hitFiles = liveRead(withFile = true, live = liveFiles().copy(tombstones = Map.empty))
         .filter(col("email").isInCollection(keys))
-        .localCheckpoint(true)
-      val nLive = hit.count()
+        .select(col("_file")).collect().map(_.getString(0)).toSeq
+      val nLive = hitFiles.size.toLong
       if (nLive > 0) {
-        val touched = hit.select(col("_file")).distinct()
-          .collect().map(_.getString(0)).toSeq
+        val touched = hitFiles.distinct
         // Survivors: the touched files' live rows (OTHER keys' vectors
         // applied — the replacement files make those vectors inert too),
         // minus the purged keys.
         val survivors = liveRead(Some(touched.map(baseName).toSet))
           .filter(!col("email").isInCollection(keys))
-        commit(Commit.partitioned("PURGE", survivors)
-          .copy(remove = touched, changes = Some(noChanges)))
+        commit(Commit.partitioned("PURGE", survivors).copy(remove = touched))
       }
 
       // 3. Deletion vectors (plain `email` column; all the purged
       // keys' rows are inert now).
       val nDv = exciseParquet(deletionVectorFiles(), "email", keys)
       (nLive, nFeed, nSnap, nDv)
-    }
+    })
 
   /** Rewrite every file in `files` that contains a purged key, without
     * those rows, atomically swapped under the ORIGINAL name (readers
@@ -1240,8 +1230,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     val zkey = graft.util.DataSkipping.zorderKey(
       idBucket, CustomerStore.hashBucket(col("id")), 6)
     val rows = liveRead(Some(delta.map(_._1).toSet)).repartitionByRange(filesPerDelta, zkey)
-    commit(Commit.partitioned("OPTIMIZE", rows)
-      .copy(remove = delta.map(_._2), changes = Some(noChanges)))
+    commit(Commit.partitioned("OPTIMIZE", rows).copy(remove = delta.map(_._2)))
   }
 
   /** Shared data-only rewrite commit (compaction / clustering): the
@@ -1255,9 +1244,8 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
   private def rewriteTable(shape: DataFrame => DataFrame): Unit = {
     if (!tableExists) return
     recover()
-    val cur = all().localCheckpoint(true) // deletion vectors applied
-    commit(Commit.partitioned("OPTIMIZE", cur, shape)
-      .copy(replaceAll = true, changes = Some(noChanges)))
+    val cur = graft.util.Labeled(spark, "store: rewrite read")(all().localCheckpoint(true)) // vectors applied
+    commit(Commit.partitioned("OPTIMIZE", cur, shape).copy(replaceAll = true))
   }
 
   /** RESTORE to an earlier committed version (the Delta RESTORE shape):
@@ -1272,7 +1260,7 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     * The restore is a NEW commit: history is never rewritten, and time
     * travel to pre-restore versions still works.
     */
-  def restore(version: Long): Unit = {
+  def restore(version: Long): Unit = graft.util.Labeled(spark, "store: restore") {
     recover()
     // A nonexistent target must error (the Delta RESTORE contract),
     // not silently commit a no-change full replace and advance the
@@ -1283,19 +1271,20 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     require(version >= 1 && version <= headV,
       s"RESTORE: version $version does not exist (current version is $headV)")
     val target = asOf(version).localCheckpoint(true)
-    val current = all().localCheckpoint(true)
     val rowS = struct(tableSchema.fieldNames.map(col): _*)
-    val cur = current.select(col("email").as("_e"), rowS.as("_c"))
-    val tgt = target.select(col("email").as("_e"), rowS.as("_t"))
-    val diff = cur.join(tgt, Seq("_e"), "full_outer").localCheckpoint(true)
-    val ins = changeRows(diff.filter(col("_c").isNull).select(col("_t.*")), "insert")
-    val del = changeRows(diff.filter(col("_t").isNull).select(col("_c.*")), "delete_pre")
-    val changed = diff.filter(col("_c").isNotNull && col("_t").isNotNull &&
-      !(col("_c") <=> col("_t"))).localCheckpoint(true)
-    val updPre = changeRows(changed.select(col("_c.*")), "update_pre")
-    val upd = changeRows(changed.select(col("_t.*")), "update")
+    val diff = all().select(col("email").as("_e"), rowS.as("_c"))
+      .join(target.select(col("email").as("_e"), rowS.as("_t")), Seq("_e"), "full_outer")
+      .localCheckpoint(true)
+    // One projection over the diff: `insert` / `delete_pre` for a key on
+    // one side only, an `update_pre` + `update` pair for a changed row.
+    def change(kind: String, side: String, cond: Column): Column =
+      when(cond, struct(lit(kind).as("change_type"), col(side).as("_r")))
+    val changed = col("_c").isNotNull && col("_t").isNotNull && !(col("_c") <=> col("_t"))
     commit(Commit.partitioned("RESTORE", target).copy(replaceAll = true,
-      changes = Some(ins.unionByName(del).unionByName(updPre).unionByName(upd))))
+      changes = Some(diff.select(inline(array_compact(array(
+        change("insert", "_t", col("_c").isNull), change("delete_pre", "_c", col("_t").isNull),
+        change("update_pre", "_c", changed), change("update", "_t", changed)))))
+        .select(col("change_type"), col("_r.*")))))
   }
 
   /** Zone-pruned id-range read over the pending partition: the scan
@@ -1693,19 +1682,14 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     // Pre-image first (the rows about to flip, tagged with their file),
     // pinned before any file moves; the post-image derives from it so
     // both reflect ONE scan.
-    val (movedPre, touched, moved) = graft.util.Labeled(spark, "store: ack preimage") {
-      val pre = liveRead(withFile = true)
-        .filter(!col("uploaded") && col("email").isInCollection(emails))
-        .localCheckpoint(true)
-      (pre,
-        pre.select(col("_file")).distinct()
-          .collect().map(_.getString(0)).toSet,
-        pre.drop("_file")
-          .withColumn("uploaded", lit(true))
-          .withColumn("modified_ts", current_timestamp())
-          .select(tableSchema.fieldNames.map(col): _*)
-          .localCheckpoint(true)) // one evaluation feeds both the commit and its changelog
-    }
+    val (movedPre, m) = pinObserved("store: ack preimage", liveRead(withFile = true)
+      .filter(!col("uploaded") && col("email").isInCollection(emails)), collect_set(col("_file")))
+    val touched = m.getSeq[String](0).toSet
+    val moved = graft.util.Labeled(spark, "store: ack preimage")(movedPre.drop("_file")
+      .withColumn("uploaded", lit(true))
+      .withColumn("modified_ts", current_timestamp())
+      .select(tableSchema.fieldNames.map(col): _*)
+      .localCheckpoint(true)) // one evaluation feeds both the commit and its changelog
     // Survivors: the touched files' live rows minus the acked emails.
     val survivors = liveRead(Some(touched.map(baseName)))
       .filter(!col("email").isInCollection(emails))
@@ -1856,9 +1840,9 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
 
   /** MERGE apply (see [[CustomerStoreApi.merge]]): a FILE-LEVEL merge
     * commit — the transactional-format shape (Delta/Iceberg MERGE)
-    * rather than a table rewrite. The matched emails first select the
-    * TOUCHED physical files (one manifest-sized semi-join + distinct
-    * on the scan's `_file`); only those files are rewritten (their
+    * rather than a table rewrite. The updated emails first select the
+    * TOUCHED physical files (the pre-image pin's own job observes its
+    * rows' `_file` set); only those files are rewritten (their
     * surviving rows + the updated rows + the inserts, staged as
     * commit-unique replacement files alongside a remove-list of the
     * touched file names), and every untouched file is left in place —
@@ -1875,15 +1859,14 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     * Scale: merge cost is O(touched files + inserts), not O(table) —
     * with email-clustered file layout (compact after a z-order on the
     * merge key) touched-file count tracks the batch, and the
-    * touched-file selection itself is the manifest pattern
-    * (at 100 TB the semi-join probe becomes a min/max-stats or bloom
-    * consult instead of a scan, but the commit shape is identical).
+    * touched-file selection itself is the manifest pattern: the
+    * updated emails reach the scan as a pushed `email IN` filter, which
+    * the email blooms prune like any point read (the ack's shape).
     * Updates never cross partitions (classification retains the
     * stored `uploaded`), so each partition's removals and
     * replacements pair off independently.
     */
   protected def applyMerge(updates: DataFrame, inserts: DataFrame): Unit = {
-    if (updates.isEmpty && inserts.isEmpty) return
     // Inserts are re-checked by appendCommit on the table-doesn't-exist
     // path; here one scan covers both legs.
     enforceCheckConstraints(updates.unionByName(inserts), "merge")
@@ -1898,19 +1881,18 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
     * it to stop at the commit point.
     */
   private[pipeline] def mergeCommit(updates: DataFrame, inserts: DataFrame): Commit = {
-    val updated = updates.select(col("email").as("_ue"))
+    // The updated emails, one per updated row: at most the batch's size.
+    val emails = graft.util.Labeled(spark, "store: merge preimage") {
+      updates.select(col("email")).collect().map(_.getString(0)).toSeq
+    }
     // Pre-image: the stored rows the updates replace, pinned before
     // the staged rewrite starts moving the files they live in.
-    val (updatesPre, touched) = graft.util.Labeled(spark, "store: merge preimage") {
-      val pre = liveRead(withFile = true)
-        .join(updated, col("email") === col("_ue"), "left_semi")
-        .localCheckpoint(true)
-      (pre, pre.select(col("_file")).distinct()
-        .collect().map(_.getString(0)).toSet)
-    }
+    val (updatesPre, m) = pinObserved("store: merge preimage", liveRead(withFile = true)
+      .filter(col("email").isInCollection(emails)), collect_set(col("_file")))
+    val touched = m.getSeq[String](0).toSet
     // Survivors: the touched files' live rows the updates do not replace.
     val survivors = liveRead(Some(touched.map(baseName)))
-      .join(updated, col("email") === col("_ue"), "left_anti")
+      .filter(!col("email").isInCollection(emails))
     Commit.partitioned("MERGE", survivors.unionByName(updates).unionByName(inserts))
       .copy(remove = touched.toSeq, changes = Some(
         changeRows(updatesPre.drop("_file"), "update_pre")
@@ -1998,6 +1980,9 @@ class CustomerStore(protected val spark: SparkSession, private[graft] val path: 
               new java.io.File(tmp, "changelog"), "chg", Some(Seq(col("change_type")) -> ChangeKinds))
           })
       if (chains.nonEmpty) stageConcurrently(chains: _*)
+      // A feed-silent data commit still leaves its (empty) feed dir,
+      // made here with no job: [[vacuumFeed]] counts one per commit.
+      if (writes.nonEmpty && c.changes.isEmpty) new java.io.File(tmp, "changelog").mkdirs(): Unit
       c.manifest.foreach { case (file, body) => writeText(new java.io.File(tmp, file), body) }
       activeTxn.get.foreach { case (app, ver) => writeText(new java.io.File(tmp, "txn"), s"$app\n$ver") }
       activeIngest.get.foreach(names =>

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -145,6 +145,16 @@ trait CustomerStoreApi {
   def pending(): DataFrame =
     all().filter(!col("uploaded")).select(uploadColumns.map(wireCol): _*)
 
+  /** Eagerly checkpoint `df` in the phase `label`; that one job also
+    * observes the aggregates `metrics` over its rows (awaited after it ran).
+    */
+  protected def pinObserved(label: String, df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+    val obs = Observation()
+    val pinned = graft.util.Labeled(spark, label)(
+      df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint(true))
+    (pinned, scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration.Inf))
+  }
+
   /** Batched insert honoring the UNIQUE(id), UNIQUE(email) contract
     * with the reference's exact sequential semantics: row i survives
     * iff no stored row and no EARLIER SURVIVOR shares its id or email
@@ -159,10 +169,14 @@ trait CustomerStoreApi {
     * round's winners (a naive id-dedup-then-email-dedup pass gets this
     * wrong when constraints interact; caught by DedupPropertySpec).
     * Each round resolves at least the global-min row, and in practice
-    * conflict chains are 1-2 links, so 2 rounds cover real batches;
-    * each round is two key-partitioned windows + two anti-joins, all
-    * shuffle-partitioned by the key. Returns the number of rows
-    * actually inserted.
+    * conflict chains are 1-2 links, so 2 rounds cover real batches.
+    *
+    * Each round is ONE pin carrying `_win`, whose job observes the
+    * round's row and loser counts; a batch with no conflicts ends after
+    * it: 5 jobs on JobBudgetSpec's fixture, as under AQE each exchange
+    * is a job (store-id and store-email broadcasts, id- and email-window
+    * shuffles, the pin), so the insert's floor there is 7 with its two
+    * writes. Returns the rows inserted; no winner commits nothing.
     */
   def insertNew(batch: DataFrame): Long = {
     // A caller-provided _seq (Ingest.sequenced — file-order pinning for
@@ -172,49 +186,39 @@ trait CustomerStoreApi {
       if (batch.columns.contains("_seq")) batch
       else batch.withColumn("_seq", monotonically_increasing_id())
     val existing = all().select(col("id").as("_eid"), col("email").as("_eemail"))
-    var remaining = graft.util.Labeled(spark, "store: insert classify") {
-      seqd
-        .join(existing.select("_eid"), col("id") === col("_eid"), "left_anti")
-        .join(existing.select("_eemail"), col("email") === col("_eemail"), "left_anti")
-        .localCheckpoint(true)
-    }
     val byId = Window.partitionBy(col("id"))
     val byEmail = Window.partitionBy(col("email"))
-    var survivors: DataFrame = null
-    var remainingCount = remaining.count()
-    while (remainingCount > 0) graft.util.Labeled(spark, "store: insert classify") {
-      // ONE checkpoint per round carries the win flag (r16; guide
-      // §1.2): winners and losers are both cheap filters of it, so the
-      // window evaluates once, and the common no-conflict batch (zero
-      // losers) ends the fixpoint without ever paying the anti-join
-      // the old shape ran just to discover it had nothing to remove.
-      val marked = remaining
+    var remaining = seqd
+      .join(existing.select("_eid"), col("id") === col("_eid"), "left_anti")
+      .join(existing.select("_eemail"), col("email") === col("_eemail"), "left_anti")
+    var survivors = Seq.empty[DataFrame]
+    var nWon = 0L
+    var nLost = 1L
+    while (nLost > 0) {
+      val (marked, m) = pinObserved("store: insert classify", remaining
         .withColumn("_mi", min(col("_seq")).over(byId))
         .withColumn("_me", min(col("_seq")).over(byEmail))
         .withColumn("_win", col("_seq") === col("_mi") && col("_seq") === col("_me"))
-        .drop("_mi", "_me")
-        .localCheckpoint(true)
+        .drop("_mi", "_me"),
+        count(lit(1)).as("rows"), count(when(!col("_win"), true)).as("losers"))
+      nLost = m.getAs[Long]("losers")
+      nWon += m.getAs[Long]("rows") - nLost
       val winners = marked.filter(col("_win")).drop("_win")
-      survivors = if (survivors == null) winners else survivors.unionByName(winners)
-      val losers = marked.filter(!col("_win")).drop("_win")
-      if (losers.isEmpty) remainingCount = 0
-      else {
-        remaining = losers
-          .join(winners.select(col("id").as("_wid")), col("id") === col("_wid"), "left_anti")
-          .join(winners.select(col("email").as("_wem")), col("email") === col("_wem"), "left_anti")
-          .localCheckpoint(true)
-        remainingCount = remaining.count()
-      }
+      survivors :+= winners
+      remaining = marked.filter(!col("_win")).drop("_win")
+        .join(winners.select(col("id").as("_wid")), col("id") === col("_wid"), "left_anti")
+        .join(winners.select(col("email").as("_wem")), col("email") === col("_wem"), "left_anti")
     }
-    if (survivors == null) return 0 // empty batch: reference panics here (SURVEY §2.1 S3)
-    appendRows(aligned(survivors.drop("_seq")))
+    if (nWon == 0) return 0 // empty batch: reference panics here (SURVEY §2.1 S3)
+    appendRows(aligned(survivors.reduce(_ unionByName _).drop("_seq")))
   }
 
   /** Apply a classified merge: rewrite the payload of `updates` rows
     * (keyed by email, full table rows with the retained id/uploaded/
     * created_ts and a fresh modified_ts) and append `inserts`. Both
     * frames arrive materialized (localCheckpoint) so backends may
-    * rewrite the underlying storage while holding them.
+    * rewrite the underlying storage while holding them; [[merge]]
+    * calls this only when one of them holds a row.
     */
   protected def applyMerge(updates: DataFrame, inserts: DataFrame): Unit
 
@@ -246,55 +250,55 @@ trait CustomerStoreApi {
     * Plan shape: one email-keyed window over the batch, one email
     * equi-join against the store, two anti-joins — all shuffle-
     * partitioned by the key, no driver-side row handling; at 100 TB
-    * the store side is the big side and stays partitioned.
+    * the store side is the big side and stays partitioned. The counts
+    * are the classify pins' own row counts (emails, matched, updated,
+    * inserted): whoever is neither matched nor inserted was salvaged
+    * away on an id conflict — counted, never silent. A merge that
+    * neither updates nor inserts writes nothing.
     */
   def merge(batch: DataFrame): MergeResult = {
-    val (latest, matched, updates, inserts) = classifyMergeStages(batch)
-    val (nMatched, nUpdated, nInserted) =
-      graft.util.Labeled(spark, "store: merge counts") {
-        (matched.count(), updates.count(), inserts.count())
-      }
-    // One normalized row per email — counted from the already-pinned
-    // `latest` stage, NOT a second pass over the raw batch (round-14
-    // ADVICE: batch.select(email).distinct().count() re-ran the whole
-    // upstream plan solely for this figure). Whoever is neither
-    // matched nor inserted was salvaged away on an id conflict —
-    // counted, never silent.
-    val nEmails = graft.util.Labeled(spark, "store: merge counts") {
-      latest.count()
-    }
-    applyMerge(updates, inserts)
-    MergeResult(nUpdated, nInserted, nMatched - nUpdated,
-      nEmails - nMatched - nInserted)
+    val (_, updates, inserts, r) = classifyMergeStages(batch, materialize = true)
+    if (r.nUpdated + r.nInserted > 0) applyMerge(updates, inserts)
+    r
   }
 
-  /** Spec surface: [[classifyMergeStages]] minus the `latest` stage. */
+  /** Spec surface: the lazy or pinned plans behind [[merge]] (matched,
+    * updates, inserts).
+    */
   private[pipeline] def classifyMerge(batch: DataFrame,
       materialize: Boolean = true): (DataFrame, DataFrame, DataFrame) = {
-    val (_, matched, updates, inserts) = classifyMergeStages(batch, materialize)
+    val (matched, updates, inserts, _) = classifyMergeStages(batch, materialize)
     (matched, updates, inserts)
   }
 
-  /** The classification plans behind [[merge]]: (latest, matched,
-    * updates, inserts). With `materialize` (the merge path) each stage is
-    * eagerly checkpointed — classification must be pinned BEFORE the
-    * backend rewrites storage, and the chain reuses each stage once.
-    * `materialize = false` returns the lazy plans so MergeSpec can pin
-    * their physical shapes (keyed equi-joins + one email window — a
-    * lost join key would compile to a cross product and only fail at
-    * scale).
+  /** The classification behind [[merge]]: (matched, updates, inserts,
+    * counts). With `materialize` (the merge path) each stage, `latest`
+    * (one row per email) included, is pinned BEFORE the backend rewrites
+    * storage and its job observes its row count; `latest` thus evaluates
+    * `monotonically_increasing_id()` once and `updates` its
+    * `current_timestamp()` once (the data and change-feed writes both
+    * read it). `materialize = false` returns the lazy plans (zero
+    * counts) so MergeSpec can pin their physical shapes (keyed
+    * equi-joins + one email window — a lost join key would compile to a
+    * cross product and only fail at scale). The 4 pins cost 9 jobs on
+    * JobBudgetSpec's fixture, one per exchange under AQE plus the pin:
+    * `latest` 2 (email-window shuffle), `matched` 2 (broadcast of
+    * `latest`), `updates` 1, `inserts` 4 (store-email and store-id
+    * broadcasts, id-window shuffle).
     */
-  private[pipeline] def classifyMergeStages(batch: DataFrame,
-      materialize: Boolean = true): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    def pin(df: DataFrame): DataFrame =
-      if (materialize)
-        graft.util.Labeled(spark, "store: merge classify")(df.localCheckpoint(true))
-      else df
+  private def classifyMergeStages(batch: DataFrame, materialize: Boolean)
+      : (DataFrame, DataFrame, DataFrame, MergeResult) = {
+    def pin(df: DataFrame): (DataFrame, Long) =
+      if (!materialize) (df, 0L)
+      else {
+        val (pinned, m) = pinObserved("store: merge classify", df, count(lit(1)))
+        (pinned, m.getLong(0))
+      }
     val seqd =
       if (batch.columns.contains("_seq")) batch
       else batch.withColumn("_seq", monotonically_increasing_id())
     val byEmailLast = Window.partitionBy(col("email")).orderBy(col("_seq").desc)
-    val latest = pin(seqd.withColumn("_rn", row_number().over(byEmailLast))
+    val (latest, nEmails) = pin(seqd.withColumn("_rn", row_number().over(byEmailLast))
       .filter(col("_rn") === 1).drop("_rn"))
     val stored = all()
     // Payload columns (base payload + evolved alike) ride the
@@ -307,18 +311,17 @@ trait CustomerStoreApi {
     // names: a batch-carried difference in any assignable column (null
     // included) marks the row updated and its value wins; a column the
     // batch does not carry can neither trigger an update nor lose
-    // stored data. (Until round 15 evolved columns were excluded from
-    // detection; with SQL MERGE WITH SCHEMA EVOLUTION assigning them,
-    // an evolved-only difference must land, or the merge silently
-    // drops assigned values.) Everything here keys on PHYSICAL
-    // identity so logical renames cannot change merge behavior.
+    // stored data (SQL MERGE WITH SCHEMA EVOLUTION assigns evolved
+    // columns, so an evolved-only difference must land). Everything here
+    // keys on PHYSICAL identity so logical renames cannot change merge
+    // behavior.
     val payload = tableSchema.fields.filterNot(f =>
       Set("id", "email", "uploaded", "created_ts",
         "modified_ts")(physicalNameOf(f))).toSeq
     val storedK = stored.select(Seq(col("id").as("_sid"), col("email").as("_semail"),
       col("uploaded").as("_sup"), col("created_ts").as("_sct")) ++
       payload.map(f => col(f.name).as("_sx_" + f.name)): _*)
-    val matched = pin(latest.join(storedK, col("email") === col("_semail")))
+    val (matched, nMatched) = pin(latest.join(storedK, col("email") === col("_semail")))
     val detect = payload.map(_.name).filter(seqd.columns.contains)
     val changed = detect.map(n => !(col(n) <=> col("_sx_" + n)))
       .reduceOption(_ || _).getOrElse(lit(false))
@@ -328,7 +331,7 @@ trait CustomerStoreApi {
     // could be stale — they null out here and withGenerated RECOMPUTES
     // them from the post-image. A batch-carried generated value rides
     // like any payload value and answers to its auto constraint.
-    val updates = pin(withGenerated(matched
+    val (updates, nUpdated) = pin(withGenerated(matched
       .filter(changed)
       .select(Seq(col("_sid").as("id"), col("email"),
         col("_sup").as("uploaded"), col("_sct").as("created_ts"),
@@ -340,11 +343,12 @@ trait CustomerStoreApi {
            else col("_sx_" + f.name).cast(f.dataType)).as(f.name)): _*)
       .select(tableSchema.fieldNames.map(col).toIndexedSeq: _*)))
     val byIdFirst = Window.partitionBy(col("id")).orderBy(col("_seq"))
-    val inserts = pin(aligned(latest
+    val (inserts, nInserted) = pin(aligned(latest
       .join(storedK.select("_semail"), col("email") === col("_semail"), "left_anti")
       .join(stored.select(col("id").as("_eid")), col("id") === col("_eid"), "left_anti")
       .withColumn("_rn", row_number().over(byIdFirst))
       .filter(col("_rn") === 1)))
-    (latest, matched, updates, inserts)
+    (matched, updates, inserts,
+      MergeResult(nUpdated, nInserted, nMatched - nUpdated, nEmails - nMatched - nInserted))
   }
 }

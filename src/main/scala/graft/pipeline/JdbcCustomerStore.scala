@@ -145,7 +145,6 @@ class JdbcCustomerStore(protected val spark: SparkSession, url: String,
       .select(col("first_name"), col("last_name"), col("phone"), col("email"))
       .collect()
     val ins = inserts.select(tableSchema.fieldNames.map(col): _*).collect()
-    if (upd.isEmpty && ins.isEmpty) return
     withConnection(url) { conn =>
       if (upd.nonEmpty) {
         val ps = conn.prepareStatement(

@@ -59,18 +59,23 @@ class JobBudgetSpec extends SparkSpec {
 
   /** Total Spark jobs per commit kind on the fixture, pinned as upper
     * bounds: a commit path that adds a job (an empty-side write, an
-    * extra count) fails here.
+    * extra count) fails here. Every job carries its `Labeled` phase, and
+    * merge takes its counts from its classify pins' own jobs, with no
+    * counting phase.
     */
   test("each commit kind stays within its total job budget") {
     val (store, _) = fixture()
-    val counts = JobBudgetSpec.commitKinds(spark, store).map { case (kind, op) =>
-      kind -> jobsOf(op())._2.size
+    val jobs = JobBudgetSpec.commitKinds(spark, store).map { case (kind, op) =>
+      kind -> jobsOf(op())._2
     }
-    val pinned = Map("insert" -> 11, "ack" -> 7, "merge" -> 27, "delete" -> 6,
-      "compact" -> 4, "purge" -> 11, "restore" -> 9)
-    counts.foreach { case (kind, n) =>
-      assert(n <= pinned(kind), s"$kind commit ran $n Spark jobs; budget ${pinned(kind)}")
+    val pinned = Map("insert" -> 7, "ack" -> 5, "merge" -> 14, "delete" -> 4,
+      "compact" -> 3, "purge" -> 6, "restore" -> 7)
+    jobs.foreach { case (kind, js) =>
+      assert(js.size <= pinned(kind), s"$kind commit ran ${js.size} Spark jobs; budget ${pinned(kind)}")
+      assert(!js.contains(""), s"$kind commit ran a job with no phase label: $js")
     }
+    val merge = jobs.toMap.apply("merge")
+    assert(merge.count(_ == "store: merge counts") === 0, s"merge counting phase: $merge")
   }
 
   /** Each commit kind's `operation_metrics` on the fixture, pinned: the

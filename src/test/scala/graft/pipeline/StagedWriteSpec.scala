@@ -103,6 +103,23 @@ class StagedWriteSpec extends SparkSpec {
     assert(empty.isEmpty, s"0-row staged parts: $empty")
   }
 
+  test("a restore stages its change rows from one projection, in one part") {
+    val path = tmpDir("staged-restore") + "/s"
+    val store = JobBudgetSpec.fixture(spark, path)
+    val kinds = JobBudgetSpec.commitKinds(spark, store)
+    kinds.init.foreach(_._2())
+    val captured = new File(tmpDir("staged-restore-cap"), "c")
+    store.commitPointHook = () => copyTree(new File(path, CustomerStore.Staging), captured)
+    try kinds.last._2()
+    finally store.commitPointHook = () => ()
+    // user11 back, user601 gone, user7-9 reverted: 8 change rows.
+    val parts = stagedParts(captured)("changelog")
+    assert(parts.size === 1, s"$parts")
+    assert(ParquetGroups.read(spark, parts.head).groupBy("change_type").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap ===
+      Map("insert" -> 1L, "delete_pre" -> 1L, "update_pre" -> 3L, "update" -> 3L))
+  }
+
   test("a feed-silent commit leaves an empty _changelog dir; history reads across it") {
     val path = tmpDir("staged-silent") + "/s"
     val store = new CustomerStore(spark, path)
